@@ -302,18 +302,6 @@ object Bench {
 
     val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
     println(json)
-    // Guaranteed-short headline line, printed LAST (round-14 verdict item 2):
-    // the full line above is ~3KB with 161 queries plus retime pairs, and a
-    // bounded stdout-tail capture window can truncate it mid-map (that is how
-    // the r13 artifact became unparseable and the r14 round-over-round
-    // comparison went blind). This line carries the verdict-critical scalars
-    // in <1KB so ANY tail window ends on a complete, parseable record. It
-    // deliberately does NOT contain the substring "metric": consumers that
-    // `grep '"metric"' | tail -1` (tools/finalize_round.sh, and the driver's
-    // own extraction as far as the artifacts show) must keep selecting the
-    // full per-query line above, which also still lands verbatim in
-    // tools/last_bench_<sf>.json below.
-    println(s"""{"bench_headline":1,"total_sec":${r3(total)},"n_queries":${finalTimes.size},"failed":$failed,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}""")
     // the SAME line to a file (round-12 verdict item 8): the driver's 2KB
     // stdout tail truncates the per-query map, so downstream consumers
     // (finalize script, judge) read the full artifact from here. Name keyed
