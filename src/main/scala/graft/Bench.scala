@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import Harness.{dropStrayBlocks, runFully}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.parquet carries ns ts
-      .config("spark.scheduler.mode", "FAIR") // concurrent branches share cores fairly
-      // respect the advisory partition size when coalescing instead of
-      // maximising partition count: small post-shuffle stages collapse to a
-      // handful of tasks (less scheduling overhead here, right-sized
-      // partitions on a real cluster)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // Steady-state measurement: touch every table and exercise the scan /
     // shuffle / window / codegen machinery once before timing, so the first
@@ -50,20 +37,19 @@ object Bench {
         def dsum(c: org.apache.spark.sql.Column) =
           round(sum(c.cast("decimal(28,8)")).cast("double"), 2)
         for (_ <- 1 to 2)
-          li.filter(col("l_shipdate") <= lit("1995-01-01").cast("timestamp"))
+          runFully(li.filter(col("l_shipdate") <= lit("1995-01-01").cast("timestamp"))
             .groupBy(col("l_returnflag"), col("l_linestatus"))
             .agg(dsum(col("l_quantity")).as("a"),
               dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("b"),
               dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
                 * (lit(1.0) + col("l_tax"))).as("c"),
               round(avg(col("l_quantity")), 4).as("d"), count(lit(1)).as("e"))
-            .orderBy(col("l_returnflag"))
-            .queryExecution.toRdd.count()
+            .orderBy(col("l_returnflag")))
       }
-      spark.range(10000).select((col("id") % 7).as("k"), col("id").as("v"))
+      runFully(spark.range(10000).select((col("id") % 7).as("k"), col("id").as("v"))
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("k")).orderBy(col("v"))))
-        .where(col("rn") === 1).queryExecution.toRdd.count()
+        .where(col("rn") === 1))
       // persisted-ANN gate indexes (q134–q136) build here, outside the timed
       // region, so those rows measure SEARCH cost — probe + ADC / re-rank —
       // not k-means training + encode (round-8 verdict: build dominated).
@@ -99,38 +85,13 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }.getOrElse(Map.empty)
 
-    // local-iteration filter (the driver sets no SPARK_GRAFT_ONLY): time a
+    // optional filters, both unset for a full run: SPARK_GRAFT_ONLY times a
     // comma-separated subset of query-name prefixes, same contract as
-    // Verify's optional 3rd arg
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    // exclusion twin (driver sets neither): the sf1 slope run skips the one
-    // documented output-quadratic query (q70; its bounded twin q147 stays)
-    // the same way the sf1 correctness sweep does
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet)
-      .getOrElse(Set.empty[String])
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .filterNot { case (name, _) => skip.exists(name.startsWith) }
-    // Execute the FULL physical plan, not `count()`: Catalyst prunes unused
-    // projections (and drops sorts) under a count, so a map-only query like
-    // a fingerprint pass would be timed as a bare scan — q19's actual
-    // simhash cost was invisible to every earlier round's numbers. `toRdd`
-    // runs the plan exactly as a sink would consume it. (Methodology change
-    // in round 7: map-heavy query times RISE vs earlier artifacts because
-    // they now measure the work.)
-    def runFully(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    // Between serial queries, drop persistent blocks the finished query left
-    // behind (localCheckpoint materializations persist their RDD and only
-    // free on GC — across ~120 queries they accumulate into executor-memory
-    // pressure that inflated late queries ~2x before this existed). Each
-    // query starts from the same clean block manager, like a fresh job
-    // submission on a shared cluster would.
-    def dropStrayBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(r =>
-        scala.util.Try(r.unpersist(blocking = false)))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    // Verify's optional 3rd arg; SPARK_GRAFT_SKIP excludes prefixes (the sf1
+    // slope run skips the one documented output-quadratic query, q70; its
+    // bounded twin q147 stays) the same way the sf1 correctness sweep does
+    val selected = Harness.select(SparkEntry.queries.keys,
+      sys.env.get("SPARK_GRAFT_ONLY"), sys.env.get("SPARK_GRAFT_SKIP"))
     // Fixed canary, timed first and last (round-12 verdict item 1): the same
     // query on the same data must cost the same at both ends of the suite —
     // a drifting ratio means the MACHINE changed under us mid-run, and a
@@ -138,48 +99,20 @@ object Bench {
     // a loaded machine (the failure mode the r11 driver artifact could not
     // flag about itself).
     val canaryName = "q01_pricing_summary"
-    def timeCanary(): Double = {
+    // One timed execution on a block-clean JVM. Failures really do report -1
+    // (not their time-to-crash: a 30s OOM must not masquerade as a valid 30s
+    // measurement in the artifact)
+    def timeQuery(name: String): Double = {
       val t0 = System.nanoTime()
-      val ok = try { runFully(SparkEntry.queries(canaryName)(spark, sfDir)); true }
+      val ok = try { runFully(SparkEntry.queries(name)(spark, sfDir)); true }
         catch { case _: Throwable => false }
       val sec = (System.nanoTime() - t0) / 1e9
-      dropStrayBlocks()
+      dropStrayBlocks(spark)
       if (ok) sec else -1.0
     }
-    val canaryFirst = timeCanary()
+    val canaryFirst = timeQuery(canaryName)
 
-    val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { runFully(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
-      // failures really do report -1 (not their time-to-crash: a 30s OOM
-      // must not masquerade as a valid 30s measurement in the artifact)
-      val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      dropStrayBlocks()
-      name -> sec
-    }
-
-    // The engine's parallel-scheduling story, measured: the same suite run
-    // as concurrent branches (Spark FAIR pools, like the flow executor
-    // does) — wall clock is a fraction of the serial sum because small
-    // stages interleave. Reported alongside, not instead of, the serial
-    // total so rounds stay comparable.
-    val wallParallel = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val t0 = System.nanoTime()
-      val futures = selected.map { case (name, fn) =>
-        scala.concurrent.Future {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-          try runFully(fn(spark, sfDir)) catch { case _: Throwable => -1L }
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
-      pool.shutdown()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val results = selected.map(name => name -> timeQuery(name))
 
     // Contention-proofing (round-9 verdict: the artifact showed q110 at
     // 3.2x its true cost from in-JVM interference — JIT/GC spillover from
@@ -212,24 +145,19 @@ object Bench {
       .take(24) // bounded: re-times are ~the suite tail's cost, and the
                 // one-line JSON must stay inside the driver's capture window
       .flatMap { case (name, _) =>
-        // The retime slot sits at the end of the suite, right after the
-        // parallel wall, and inherits its heap/GC debris — in round 10 that
-        // made 2 of 3 retimes SLOWER than their contended first pass, so a
-        // retime could clear a phantom but never confirm a real cost. Clear
-        // the slot first: full GC, then a throwaway warm-up execution of the
-        // same query (faults pages back in, re-JITs anything deoptimised)
-        // whose blocks are dropped before the timed run.
+        // The retime slot sits at the end of the suite and inherits its
+        // heap/GC debris — in round 10 that made 2 of 3 retimes SLOWER than
+        // their contended first pass, so a retime could clear a phantom but
+        // never confirm a real cost. Clear the slot first: full GC, then a
+        // throwaway warm-up execution of the same query (faults pages back
+        // in, re-JITs anything deoptimised) whose blocks are dropped before
+        // the timed run.
         System.gc()
         scala.util.Try(runFully(SparkEntry.queries(name)(spark, sfDir)))
-        dropStrayBlocks()
-        val t0 = System.nanoTime()
+        dropStrayBlocks(spark)
         // a FAILED rerun must not produce a bogus fast time for min() to
         // pick — only successful re-executions count
-        val ok = try { runFully(SparkEntry.queries(name)(spark, sfDir)); true }
-          catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
-        dropStrayBlocks()
-        if (ok) Some(name -> sec) else None
+        Some(name -> timeQuery(name)).filter(_._2 >= 0)
       }.toMap
     val finalTimes = results.map { case (name, first) =>
       name -> retimed.get(name).map(math.min(first, _)).getOrElse(first)
@@ -264,7 +192,7 @@ object Bench {
     // ratio (last/first) catches load that CHANGED during the run in either
     // direction; vs_ref (best canary pass over the previous round's clean
     // time) catches a UNIFORMLY loaded machine, which leaves ratio at ~1.
-    val canaryLast = timeCanary()
+    val canaryLast = timeQuery(canaryName)
     val canaryRatio =
       if (canaryFirst > 0 && canaryLast > 0) canaryLast / canaryFirst else -1.0
     // -1.0 when NEITHER canary pass succeeded (ADVICE r12: Double.MaxValue
@@ -300,7 +228,7 @@ object Bench {
       p.waitFor(); if (out.matches("[0-9a-f]{6,40}")) Some(out) else None
     }.toOption.flatten).getOrElse("unknown")
 
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"wall_parallel_sec":${r3(wallParallel)},"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
     println(json)
     // the SAME line to a file (round-12 verdict item 8): the driver's 2KB
     // stdout tail truncates the per-query map, so downstream consumers

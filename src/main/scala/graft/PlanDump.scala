@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Writes PLANS.md: the formatted physical plan of each headline query —
@@ -7,10 +6,8 @@ import org.apache.spark.sql.execution.FormattedMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 8 cores: the plan text (partition counts) must not depend on the machine
+    val spark = Harness.session(8)
     val headline = Seq(
       "q01_pricing_summary", "q02_revenue_by_nation", "q03_top_orders",
       "q05_events_between", "q17_ngram_jaccard_pairs", "q18_minhash_lsh_pairs",

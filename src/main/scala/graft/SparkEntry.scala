@@ -136,40 +136,35 @@ object SparkEntry {
     // round-14 scaling block: q150–q155 all ran FASTER at 8 cores than 32 —
     // the blanket repartition(defaultParallelism) over-split this payload
     // count and the extra concurrent decoders only contend on allocation).
-    // Partition count = on-disk frame bytes / decodeTargetBytes, read from
-    // driver-side file metadata (no extra scan in the timed region) — the
+    // Partition count = on-disk frame bytes / MediaDecodeTargetBytes, read
+    // from a driver-side listing (no extra scan in the timed region) — the
     // same rule that sizes Multimodal.repartitionForDecode yields thousands
     // of right-sized decode tasks on a 100 TB corpus and a handful here.
-    // Parameterised, not pinned: spark.graft.media.decodeTargetBytes
-    // (default 4 MiB of parquet-compressed payload per task — the sf0.1
-    // sweep in plans/r15/media_partition_sweep.txt: per-query optimum is
-    // flat between 2–8 MiB and every kind beats both repartition(32) and
-    // repartition(8); production codecs with higher per-byte decode cost
-    // lower it, I/O-bound codecs raise it toward the 128 MiB scan default).
-    val frameBytes = {
-      val d = new java.io.File(path + "/frame")
-      Option(d.listFiles)
-        .map(_.filter(_.getName.endsWith(".parquet")).map(_.length).sum)
-        .getOrElse(0L)
-    }
-    val targetBytes = s.conf.get("spark.graft.media.decodeTargetBytes",
-      (4L << 20).toString).toLong
-    val parts = math.max(1, math.ceil(frameBytes.toDouble / targetBytes).toInt)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[media] $kind frameBytes=$frameBytes parts=$parts")
-    s.read.parquet(path + "/frame").repartition(parts)
+    // A listing failure throws: a frame must never read as 0 bytes.
+    val frame = new org.apache.hadoop.fs.Path(path, "frame")
+    val frameBytes = frame.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(frame).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val parts = math.max(1, math.ceil(frameBytes.toDouble / MediaDecodeTargetBytes).toInt)
+    s.read.parquet(frame.toString).repartition(parts)
   }
+
+  /** 4 MiB of parquet-compressed payload per decode task: the sf0.1 sweep in
+    * plans/r15/media_partition_sweep.txt found each media query's optimum
+    * flat between 2 and 8 MiB, beating both repartition(32) and
+    * repartition(8). Production codecs with a higher per-byte decode cost
+    * want less, I/O-bound ones more (toward the 128 MiB scan default). */
+  private val MediaDecodeTargetBytes = 4L << 20
 
   /** Bench warmup hook: synthesize + persist the q150–q155 payload frames
     * outside the timed region so those rows measure decode, not encode. */
   def prewarmMediaFrames(s: SparkSession, dir: String): Unit =
-    mediaPayloads.values.foreach(_(s, dir).queryExecution.toRdd.count(): Unit)
+    mediaPayloads.values.foreach(f => Harness.runFully(f(s, dir)): Unit)
 
   /** The six synthesized payload frames (deterministic given sfDir), one
-    * per media gate query. Each returns (doc_id, content[, …]) already
-    * spread across defaultParallelism partitions, reading from the per-JVM
-    * parquet materialization so the encode side never lands in a timed
-    * region. */
+    * per media gate query. Each returns (doc_id, content[, …]) read back
+    * from the per-JVM parquet materialization, so the encode side never
+    * lands in a timed region, and split into one partition per
+    * MediaDecodeTargetBytes of on-disk payload (see `mediaFrame`). */
   private lazy val mediaPayloads: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q150" -> ((s, dir) => mediaFrame(s, dir, "q150") {
       import graft.operators.Multimodal

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,40 +12,24 @@ object Verify {
     // exclude it and exact-check it at smaller sf instead — mirrors
     // tools/compare.py's 4th arg.
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Seq[String]] =
-      if (args.length > 2 && args(2) != "-") Some(args(2).split(",").toSeq)
-      else None
-    val skip: Seq[String] =
-      if (args.length > 3) args(3).split(",").toSeq else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark's default parquet timestamp output (INT96) surfaces as
-      // timestamp[ns] in the driver's reader — matching the oracle side.
-      // Do NOT pin outputTimestampType here: the round-4 TIMESTAMP_MICROS pin
-      // flipped every timestamp-emitting query to schema_match=false.
-      // ns-overflow is instead handled at the source: far-future sentinels
-      // use 2200-01-01 (< the 2262 ns ceiling) — see SparkEntry q48.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(SparkEntry.queries.keys, args.lift(2), args.lift(3))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .filterNot { case (name, _) => skip.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = selected.count { name =>
+      try {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        false
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        true
       }
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${escapeJson(k)}: ${escapeJson(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] attempted=${selected.size} failed=$failed")
     spark.stop()
   }
 

@@ -30,6 +30,9 @@ class SparkAction(
   */
 object actions {
 
+  private def saveMode(overwrite: Boolean): SaveMode =
+    if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
+
   implicit class SparkFlowOps(val flow: SparkDataFlow) extends AnyVal {
 
     // ------------------------------------------------------------- opens ---
@@ -262,7 +265,7 @@ object actions {
     def writeParquet(basePath: String, overwrite: Boolean = false)(labels: String*): SparkDataFlow =
       labels.foldLeft(flow) { (fl, label) =>
         new SparkFlowOps(fl).writeAction(label, "writeParquet") { (df, _) =>
-          df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          df.write.mode(saveMode(overwrite))
             .parquet(s"$basePath/$label")
         }
       }
@@ -274,7 +277,7 @@ object actions {
       writeAction(label, "writePartitionedParquet") { (df, _) =>
         df.repartition(partitionCols.map(df.col): _*)
           .write.partitionBy(partitionCols: _*)
-          .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          .mode(saveMode(overwrite))
           .parquet(s"$basePath/$label")
       }
 
@@ -283,7 +286,7 @@ object actions {
         overwrite: Boolean = false)(label: String): SparkDataFlow =
       writeAction(label, "writeRepartitionedParquet") { (df, _) =>
         df.repartition(numFiles)
-          .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          .write.mode(saveMode(overwrite))
           .parquet(s"$basePath/$label")
       }
 
@@ -297,7 +300,7 @@ object actions {
         overwrite: Boolean = false)(label: String, zCols: String*): SparkDataFlow =
       writeAction(label, "writeZOrderedParquet") { (df, _) =>
         graft.operators.Layout.clusterByZOrder(df, zCols, bits, numFiles)
-          .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          .write.mode(saveMode(overwrite))
           .parquet(s"$basePath/$label")
       }
 
@@ -308,7 +311,7 @@ object actions {
         new SparkFlowOps(fl).writeAction(label, "writeCSV") { (df, _) =>
           val repart = numFiles.fold(df)(df.repartition)
           repart.write.options(options)
-            .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+            .mode(saveMode(overwrite))
             .csv(s"$basePath/$label")
         }
       }
@@ -319,7 +322,7 @@ object actions {
       writeAction(label, "writePartitionedCSV") { (df, _) =>
         df.repartition(partitionCols.map(df.col): _*)
           .write.options(options).partitionBy(partitionCols: _*)
-          .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          .mode(saveMode(overwrite))
           .csv(s"$basePath/$label")
       }
 
@@ -327,7 +330,7 @@ object actions {
         labels: String*): SparkDataFlow =
       labels.foldLeft(flow) { (fl, label) =>
         new SparkFlowOps(fl).writeAction(label, "writeORC") { (df, _) =>
-          df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          df.write.mode(saveMode(overwrite))
             .orc(s"$basePath/$label")
         }
       }
@@ -339,7 +342,7 @@ object actions {
         new SparkFlowOps(fl).writeAction(label, "writeJSON") { (df, _) =>
           val repart = numFiles.fold(df)(df.repartition)
           repart.write.options(options)
-            .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+            .mode(saveMode(overwrite))
             .json(s"$basePath/$label")
         }
       }
@@ -348,7 +351,7 @@ object actions {
         labels: String*): SparkDataFlow =
       labels.foldLeft(flow) { (fl, label) =>
         new SparkFlowOps(fl).writeAction(label, "writeHiveManagedTable") { (df, _) =>
-          df.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          df.write.mode(saveMode(overwrite))
             .saveAsTable(s"$database.$label")
         }
       }
@@ -369,7 +372,7 @@ object actions {
           // IDENTICAL HashPartitioning as the bucket-id derivation, so each
           // task holds exactly one bucket -> one file per bucket
           val writer = df.repartition(numBuckets, bucketCols.map(df.col): _*)
-            .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+            .write.mode(saveMode(overwrite))
             .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
           (if (sortCols.nonEmpty) writer.sortBy(sortCols.head, sortCols.tail: _*)
            else writer).saveAsTable(s"$database.$label")
@@ -416,25 +419,33 @@ object actions {
 
     // ------------------------------------------------------------ caches ---
 
+    /** Interceptor skeleton: wrap the action that produces `label`, run it,
+      * and pass only that label's dataset through `rewrite`; every other
+      * output of the action is returned unchanged. */
+    private def interceptLabel(label: String, kind: String)(
+        rewrite: (Dataset[_], SparkFlowContext) => Dataset[_]): SparkDataFlow =
+      flow.interceptPostOutput(label) { original =>
+        new SparkAction(original.inputLabels, original.outputLabels,
+          s"$kind:${original.actionName}", original.requiresAllInputs) ({ (entities, ctx) =>
+          val results = original.performAction(entities, ctx).get
+          original.outputLabels.zip(results).map {
+            case (l, Some(ds: Dataset[_])) if l == label => Some(rewrite(ds, ctx))
+            case (_, other) => other
+          }
+        })
+      }
+
     /** Checkpoint the label to the flow temp folder as parquet and replace
       * the in-flight dataset with the re-opened copy: cuts lineage, safe for
       * cross-thread reuse. Reference: SparkInterceptors.scala:48-65. */
     def cacheAsParquet(labels: String*): SparkDataFlow =
       labels.foldLeft(flow) { (fl, label) =>
-        fl.interceptPostOutput(label) { original =>
-          new SparkAction(original.inputLabels, original.outputLabels,
-            s"cacheAsParquet:${original.actionName}", original.requiresAllInputs) ({ (entities, ctx) =>
-            val results = original.performAction(entities, ctx).get
-            original.outputLabels.zip(results).map {
-              case (l, Some(ds: Dataset[_])) if l == label =>
-                val tmpRoot = ctx.tempFolder.getOrElse(
-                  throw new FlowException("cacheAsParquet needs a flow temp folder"))
-                val path = new Path(tmpRoot, l).toString
-                ds.write.mode(SaveMode.Overwrite).parquet(path)
-                Some(ctx.spark.read.parquet(path))
-              case (_, other) => other
-            }
-          })
+        new SparkFlowOps(fl).interceptLabel(label, "cacheAsParquet") { (ds, ctx) =>
+          val tmpRoot = ctx.tempFolder.getOrElse(
+            throw new FlowException("cacheAsParquet needs a flow temp folder"))
+          val path = new Path(tmpRoot, label).toString
+          ds.write.mode(SaveMode.Overwrite).parquet(path)
+          ctx.spark.read.parquet(path)
         }
       }
 
@@ -454,46 +465,37 @@ object actions {
       if (partitions.isEmpty)
         throw new FlowException("cacheAsPartitionedParquet needs at least one partition column")
       labels.foldLeft(flow) { (fl, label) =>
-        fl.interceptPostOutput(label) { original =>
-          new SparkAction(original.inputLabels, original.outputLabels,
-            s"cacheAsPartitionedParquet:${original.actionName}", original.requiresAllInputs) ({ (entities, ctx) =>
-            val results = original.performAction(entities, ctx).get
-            original.outputLabels.zip(results).map {
-              case (l, Some(ds: Dataset[_])) if l == label =>
-                val tmpRoot = ctx.tempFolder.getOrElse(
-                  throw new FlowException("cacheAsPartitionedParquet needs a flow temp folder"))
-                val path = new Path(tmpRoot, l)
-                val laidOut =
-                  if (repartition) ds.repartition(partitions.map(ds.col): _*)
-                  else ds.toDF()
-                laidOut.write.mode(SaveMode.Overwrite)
-                  .partitionBy(partitions: _*).parquet(path.toString)
-                // a partitioned write of 0 rows emits no footers at all, so
-                // the empty case passes through uncached (the reference's
-                // documented behaviour). Detected from the WRITTEN tree —
-                // a driver-side listing — not from a pre-write isEmpty,
-                // which would execute the whole upstream plan a second
-                // time (limit(1) still runs every upstream map stage)
-                val fs = path.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-                val files = fs.listFiles(path, true)
-                var hasData = false
-                while (!hasData && files.hasNext)
-                  hasData = files.next().getPath.getName.endsWith(".parquet")
-                if (!hasData) Some(ds)
-                else {
-                  // re-open with the ORIGINAL schema and column order:
-                  // without it the partition columns come back type-INFERRED
-                  // from directory names ('01' -> int 1, date-like strings ->
-                  // DATE) and move to the end of the schema — silent drift
-                  // every downstream consumer of the cached label would eat
-                  val reopened = ctx.spark.read.schema(ds.schema).parquet(path.toString)
-                    .select(ds.schema.fieldNames.toIndexedSeq.map(
-                      org.apache.spark.sql.functions.col): _*)
-                  Some(reopened)
-                }
-              case (_, other) => other
-            }
-          })
+        new SparkFlowOps(fl).interceptLabel(label, "cacheAsPartitionedParquet") { (ds, ctx) =>
+          val tmpRoot = ctx.tempFolder.getOrElse(
+            throw new FlowException("cacheAsPartitionedParquet needs a flow temp folder"))
+          val path = new Path(tmpRoot, label)
+          val laidOut =
+            if (repartition) ds.repartition(partitions.map(ds.col): _*)
+            else ds.toDF()
+          laidOut.write.mode(SaveMode.Overwrite)
+            .partitionBy(partitions: _*).parquet(path.toString)
+          // a partitioned write of 0 rows emits no footers at all, so
+          // the empty case passes through uncached (the reference's
+          // documented behaviour). Detected from the WRITTEN tree —
+          // a driver-side listing — not from a pre-write isEmpty,
+          // which would execute the whole upstream plan a second
+          // time (limit(1) still runs every upstream map stage)
+          val fs = path.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
+          val files = fs.listFiles(path, true)
+          var hasData = false
+          while (!hasData && files.hasNext)
+            hasData = files.next().getPath.getName.endsWith(".parquet")
+          if (!hasData) ds
+          else {
+            // re-open with the ORIGINAL schema and column order:
+            // without it the partition columns come back type-INFERRED
+            // from directory names ('01' -> int 1, date-like strings ->
+            // DATE) and move to the end of the schema — silent drift
+            // every downstream consumer of the cached label would eat
+            ctx.spark.read.schema(ds.schema).parquet(path.toString)
+              .select(ds.schema.fieldNames.toIndexedSeq.map(
+                org.apache.spark.sql.functions.col): _*)
+          }
         }
       }
     }
@@ -503,35 +505,18 @@ object actions {
       * Reference: SparkInterceptors.scala:31-46. */
     def sparkCache(label: String,
         storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): SparkDataFlow =
-      flow.interceptPostOutput(label) { original =>
-        new SparkAction(original.inputLabels, original.outputLabels,
-          s"sparkCache:${original.actionName}", original.requiresAllInputs) ({ (entities, ctx) =>
-          val results = original.performAction(entities, ctx).get
-          original.outputLabels.zip(results).map {
-            case (l, Some(ds: Dataset[_])) if l == label =>
-              val cached = ds.persist(storageLevel)
-              // count(), not isEmpty: isEmpty evaluates only the first
-              // partition, leaving the rest uncached — parallel consumers
-              // would still race the computation
-              cached.count()
-              Some(cached)
-            case (_, other) => other
-          }
-        })
+      interceptLabel(label, "sparkCache") { (ds, _) =>
+        val cached = ds.persist(storageLevel)
+        // count(), not isEmpty: isEmpty evaluates only the first
+        // partition, leaving the rest uncached — parallel consumers
+        // would still race the computation
+        cached.count()
+        cached
       }
 
     /** Post-transform a produced label in place (interceptor).
       * Reference: spark/package.scala:743. */
     def inPlaceTransform(label: String)(f: DataFrame => DataFrame): SparkDataFlow =
-      flow.interceptPostOutput(label) { original =>
-        new SparkAction(original.inputLabels, original.outputLabels,
-          s"inPlaceTransform:${original.actionName}", original.requiresAllInputs) ({ (entities, ctx) =>
-          val results = original.performAction(entities, ctx).get
-          original.outputLabels.zip(results).map {
-            case (l, Some(ds: Dataset[_])) if l == label => Some(f(ds.toDF()))
-            case (_, other) => other
-          }
-        })
-      }
+      interceptLabel(label, "inPlaceTransform")((ds, _) => f(ds.toDF()))
   }
 }

@@ -31,12 +31,7 @@ object AsofShapeProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-asof-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     graft.plans.AsOf.ensureStrategy(spark)
 
     val ev = events(spark, dir).select(col("event_id"), col("user_id"), col("ts"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Local-iteration probe: where does a warm learnBpe spend its time?
@@ -8,12 +7,7 @@ import org.apache.spark.sql.functions._
 object BpeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def timed[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

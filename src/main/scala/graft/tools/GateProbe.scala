@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import org.apache.spark.sql.functions._
 
 /** Local-iteration probe for the round-12 collapse duplication gate: where
@@ -10,22 +10,15 @@ import org.apache.spark.sql.functions._
 object GateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def timed[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"PROBE $tag ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
     }
     def run(tag: String): Unit = timed(tag) {
-      graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          Seq(col("lang"), floor(col("n_chars") / lit(200)).as("len_bucket")), 3, 0.7)
-        .queryExecution.toRdd.count()
+      Harness.runFully(graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+        Seq(col("lang"), floor(col("n_chars") / lit(200)).as("len_bucket")), 3, 0.7))
     }
     // stage split: prepare+materialize, gate agg, then full run per mode
     val prepped = timed("prepare+materialize") {

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.Multimodal
 import graft.ingestion.Warc
 
@@ -20,13 +20,8 @@ object MediaScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 20000
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = Harness.cpus
+    val spark = Harness.session(cores)
     import spark.implicits._
 
     def timed(f: => Long): (Double, Long) = {
@@ -34,8 +29,6 @@ object MediaScaleProbe {
       val rows = f
       ((System.nanoTime() - t0) / 1e9, rows)
     }
-    def fullCount(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     def report(kernel: String, shape: String, sec: Double, payloads: Long): Unit =
@@ -48,7 +41,7 @@ object MediaScaleProbe {
         .apply(col("id")).as("content"))
       .persist()
     imgs.count()
-    val (imgSec, imgRows) = timed(fullCount(
+    val (imgSec, imgRows) = timed(Harness.runFully(
       Multimodal.imageProfiles(imgs, "id", "content")))
     report("imageProfile (decode+pHash)", "60x60 BMP", imgSec, imgRows)
     imgs.unpersist()
@@ -83,7 +76,7 @@ object MediaScaleProbe {
       }).apply(col("id")).as("content"))
       .persist()
     jpegs.count()
-    val (jpgSec, jpgRows) = timed(fullCount(
+    val (jpgSec, jpgRows) = timed(Harness.runFully(
       Multimodal.imageProfiles(jpegs, "id", "content")))
     report("imageProfile (decode+pHash)", "~1MP JPEG", jpgSec, jpgRows)
     jpegs.unpersist()
@@ -95,7 +88,7 @@ object MediaScaleProbe {
         8000)).apply(col("id")).as("content"))
       .persist()
     wavs.count()
-    val (wavSec, wavRows) = timed(fullCount(
+    val (wavSec, wavRows) = timed(Harness.runFully(
       Multimodal.audioProfiles(wavs, "id", "content")))
     report("audioProfile (PCM decode)", "2000-sample WAV", wavSec, wavRows)
     wavs.unpersist()
@@ -108,7 +101,7 @@ object MediaScaleProbe {
         .apply(col("id")).as("content"))
       .persist()
     gifs.count()
-    val (gifSec, gifFrameRows) = timed(fullCount(
+    val (gifSec, gifFrameRows) = timed(Harness.runFully(
       Multimodal.frameSampleHashes(gifs, "id", "content", n = 3)))
     report("frameSample (GIF, 3 of 5)", "5-frame 60x60 GIF", gifSec, gifFrameRows / 3)
     gifs.unpersist()
@@ -122,7 +115,7 @@ object MediaScaleProbe {
       }).apply(col("id")).as("content"))
       .persist()
     packed.count()
-    val (zSec, zRows) = timed(fullCount(
+    val (zSec, zRows) = timed(Harness.runFully(
       Multimodal.decompressTexts(packed, "id", "content")))
     report("decompressText (sniffed)", "~2KB gzip|zstd", zSec, zRows)
     packed.unpersist()
@@ -135,7 +128,7 @@ object MediaScaleProbe {
         .apply(col("id")).as("content"))
       .persist()
     warcs.count()
-    val (wSec, wRecRows) = timed(fullCount(
+    val (wSec, wRecRows) = timed(Harness.runFully(
       Warc.warcRecords(warcs, "id", "content").toDF()))
     report("warcRecords (parse)", "2-record WARC", wSec, wRecRows / 2)
     warcs.unpersist()

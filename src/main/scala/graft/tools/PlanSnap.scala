@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Harness, SparkEntry}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `explain("formatted")` for a named list of gate queries to
@@ -16,26 +16,22 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanSnap <sfDir> <outDir> <suffix> <prefix>...")
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val prefixes = args.drop(3).toSeq
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = Harness.select(SparkEntry.queries.keys,
+      Some(args.drop(3).mkString(",")), None)
+    // fixed 8 cores: the plan text (partition counts) must not depend on the machine
+    val spark = Harness.session(8)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
-        val txt = scala.util.Try(
-          fn(spark, sfDir).queryExecution.explainString(FormattedMode))
-          .recover { case e => s"FAILED to plan: $e" }.get
-        val short = name.takeWhile(_ != '_')
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"${short}_$suffix.txt"),
-          (s"== $name ($suffix) ==\n" + txt)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"[plansnap] wrote $short ($name)")
-      }
+    selected.foreach { name =>
+      val txt = scala.util.Try(
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
+        .recover { case e => s"FAILED to plan: $e" }.get
+      val short = name.takeWhile(_ != '_')
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"${short}_$suffix.txt"),
+        (s"== $name ($suffix) ==\n" + txt)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"[plansnap] wrote $short ($name)")
+    }
     spark.stop()
   }
 }

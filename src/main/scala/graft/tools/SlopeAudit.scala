@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Output-cardinality audit for the sf0.1→sf1 bench-slope flags
   * (`tools/bench_slope.py` → BENCH_SF1_r{N}.json): for each named gate
   * query, count result rows at both scale factors. A pair-generating
@@ -25,14 +23,7 @@ object SlopeAudit {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val dirs = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val counts = for (n <- names; d <- dirs) yield {
       val c = graft.SparkEntry.queries(n)(spark, d).count()
       println(s"[slope-audit] $n $d rows=$c")

@@ -37,8 +37,19 @@ python3 tools/compare.py /root/testdata/sf0.01 "/tmp/verify_out_r$RND"
 run_bench() { # $1 = env assignments (string), $2 = out prefix
   local attempt
   for attempt in 1 2; do
-    env $1 sbt -batch "runMain graft.Bench" | tee "$2.txt"
-    grep '"metric"' "$2.txt" | tail -1 > "$2.json"
+    env $1 sbt -batch -Dsbt.log.noformat=true "runMain graft.Bench" | tee "$2.txt"
+    # Contract: the LAST stdout line of the Bench run is the full "metric"
+    # record. Drop only sbt's own [info]/[success]/... framing around the
+    # run, then take the last line. Never grep for the record: that is how
+    # a trailing non-record line once slipped past unnoticed.
+    grep -Ev '^\[(info|warn|error|success)\] ' "$2.txt" | tail -n 1 > "$2.json" || true
+    if ! python3 -c "import json,sys; sys.exit('metric' not in json.load(open(sys.argv[1])))" \
+        "$2.json" 2>/dev/null; then
+      echo "[finalize] the last stdout line of the Bench run is not a" \
+           "\"metric\" record — the bench contract is broken:" >&2
+      cat "$2.json" >&2
+      exit 1
+    fi
     local contended
     contended="$(python3 -c "import json;print(json.load(open('$2.json')).get('contended'))")"
     if [ "$contended" != "True" ] && [ "$contended" != "true" ]; then
