@@ -101,11 +101,17 @@ object Bench {
     val canaryName = "q01_pricing_summary"
     // One timed execution on a block-clean JVM. Failures really do report -1
     // (not their time-to-crash: a 30s OOM must not masquerade as a valid 30s
-    // measurement in the artifact)
+    // measurement in the artifact); the exception class is kept per query
+    // for the record's `failed_cause`
+    val failCause = scala.collection.mutable.Map[String, String]()
     def timeQuery(name: String): Double = {
       val t0 = System.nanoTime()
       val ok = try { runFully(SparkEntry.queries(name)(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          failCause(name) = e.getClass.getName
+          false
+        }
       val sec = (System.nanoTime() - t0) / 1e9
       dropStrayBlocks(spark)
       if (ok) sec else -1.0
@@ -186,6 +192,9 @@ object Bench {
     val total = finalTimes.map(_._2).filter(_ >= 0).sum
     val failed = finalTimes.filter(_._2 < 0).map(p => "\"" + short(p._1) + "\"")
       .mkString("[", ",", "]")
+    val failedCause = finalTimes.filter(_._2 < 0)
+      .map(p => "\"" + short(p._1) + "\":\"" + failCause(p._1) + "\"")
+      .mkString("{", ",", "}")
     val unrel = retimeUnreliable.map(k => "\"" + short(k) + "\"").mkString("[", ",", "]")
 
     // Canary close-out + verdict on the artifact's own trustworthiness.
@@ -228,7 +237,7 @@ object Bench {
       p.waitFor(); if (out.matches("[0-9a-f]{6,40}")) Some(out) else None
     }.toOption.flatten).getOrElse("unknown")
 
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"failed_cause":$failedCause,"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
     println(json)
     // the SAME line to a file (round-12 verdict item 8): the driver's 2KB
     // stdout tail truncates the per-query map, so downstream consumers

@@ -1,290 +1,51 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
-import graft.operators.{Dedup, Similarity}
+import graft.gate._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each entry in [[queries]] exercises one operator family from SURVEY.md §2
-  * (or a beyond-parity training-data operator); [[oracleSql]] holds the
-  * DuckDB-equivalent SQL the driver hash-compares against at sf0.01.
-  * Column names and result types are aligned between both sides.
+  * [[registry]] holds every gate query once, as a [[graft.gate.GateQuery]]:
+  * its Spark build beside the DuckDB SQL its result is hash-compared against
+  * at sf0.01. The queries live in `graft.gate`, one file per operator
+  * family: a query goes with the operator object that produces its result,
+  * and queries built from relational operators alone go in
+  * `RelationalQueries`. [[queries]] and [[oracleSql]] are the name-keyed
+  * views Bench, Verify, the specs and flowbench read.
   */
 object SparkEntry {
 
-  /** Whole-stage codegen cap raised above the d=64 embedding aggregates:
-    * the no-explode dimension stats (64 avg / 64 min+max buffers, q22/q113/
-    * q120 Lloyd rounds) carry >100 aggregate buffer fields, and Spark's
-    * default `spark.sql.codegen.maxFields=100` silently drops such plans
-    * out of WholeStageCodegen (measured 2× slower warm on the centroid
-    * aggregate). 300 keeps every current wide-aggregate shape fused;
-    * oversized generated methods still split / fall back gracefully. */
-  private def tune(s: SparkSession): SparkSession = {
-    s.conf.set("spark.sql.codegen.maxFields", "300")
-    // idempotent: TextFunctions' fused word-set counting (and any other
-    // native expression reached from a pure-Column helper) resolves at
-    // analysis time against this session's registry
-    graft.sql.functions.ensureRegistered(s)
-    s
-  }
+  lazy val registry: Seq[GateQuery] = GateQuery.registry(
+    RelationalQueries.queries, AnnIndexQueries.queries,
+    AsOfQueries.queries, BinningQueries.queries, BloomQueries.queries,
+    BoilerplateQueries.queries, BpeQueries.queries,
+    ChunkingQueries.queries, ClassifierQueries.queries,
+    CurationQueries.queries, DedupQueries.queries,
+    DedupIndexQueries.queries, DomainsQueries.queries,
+    DriftQueries.queries, ExportQueries.queries, FuzzyQueries.queries,
+    GraphsQueries.queries, IntervalJoinQueries.queries,
+    LayoutQueries.queries, MultimodalQueries.queries,
+    OutliersQueries.queries, PackingQueries.queries, PcaQueries.queries,
+    ProfileQueries.queries, QuantizationQueries.queries,
+    RankingQueries.queries, SamplingQueries.queries, ScdQueries.queries,
+    SemistructuredQueries.queries, SimilarityQueries.queries,
+    SketchesQueries.queries, SkewQueries.queries,
+    StorageQueries.queries, TemporalQueries.queries,
+    TextFunctionsQueries.queries, TrendQueries.queries,
+    UrlsQueries.queries)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    tune(s).read.parquet(s"$dir/$name.parquet")
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.map(q => q.name -> q.build).toMap
+  lazy val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
 
-  /** events.parquet has shipped with two physical layouts for `ts`:
-    * nanosecond int64 (rounds 1–5) and native timestamp[us] without a tz
-    * annotation, which Spark reads as TIMESTAMP_NTZ (round 6+). Adapt on the
-    * observed schema so both layouts yield the same canonical frame:
-    * columns (event_id, ts_ns, user_id, event_type, value, props, ts) with
-    * `ts_ns` = epoch-nanos long and `ts` = µs TimestampType (session is UTC,
-    * so the NTZ→instant cast preserves the wall-clock the oracle sees).
-    * Integer `div` avoids the double-precision loss of `/` on epoch-ns. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    canonicalEvents(t(s, dir, "events"))
-  }
-
-  private def canonicalEvents(raw: DataFrame): DataFrame =
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // legacy ns-long layout
-        raw.withColumnRenamed("ts", "ts_ns") // raw column: filters push down
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      case _ => // native µs layout (NTZ or instant)
-        val ts = col("ts").cast(org.apache.spark.sql.types.TimestampType)
-        raw.select(col("event_id"), (unix_micros(ts) * lit(1000L)).as("ts_ns"),
-          col("user_id"), col("event_type"), col("value"), col("props"),
-          ts.as("ts"))
-    }
-
-  /** Time-windowed events read. The range predicate is applied to the RAW
-    * `ts` column in its physical type — epoch-ns long or µs timestamp —
-    * so it reaches the parquet scan as a PushedFilter (row-group pruning)
-    * in every layout; at cluster scale this is what makes a narrow time
-    * window on a years-long event log cheap. Bounds are epoch-ns UTC and
-    * must be whole µs so the truncated-µs and raw-ns windows agree. */
-  private def eventsBetween(s: SparkSession, dir: String,
-                            fromNs: Long, untilNs: Long): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(s, dir, "events")
-    val filtered = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.filter(col("ts") >= lit(fromNs) && col("ts") < lit(untilNs))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        def ldt(ns: Long) = java.time.LocalDateTime.ofEpochSecond(
-          ns / 1000000000L, (ns % 1000000000L).toInt, java.time.ZoneOffset.UTC)
-        raw.filter(col("ts") >= lit(ldt(fromNs)) && col("ts") < lit(ldt(untilNs)))
-      case _ => // instant µs
-        raw.filter(col("ts") >= timestamp_micros(lit(fromNs / 1000L)) &&
-          col("ts") < timestamp_micros(lit(untilNs / 1000L)))
-    }
-    canonicalEvents(filtered)
-  }
-
-  /** Persisted-ANN gate indexes (q134/q135/q136), built ONCE per (kind,
-    * sfDir) in this JVM and reused by every later invocation. Build+ingest
-    * is deterministic given the input dir, so reuse never changes results;
-    * it makes the bench honest — the round-8 verdict measured q135/q136 at
-    * ~4s of which nearly all was k-means training + encode, not the search
-    * the query name claims to measure. Bench pre-builds both indexes in its
-    * warmup via [[prewarmPersistedIndexes]]; Verify's single pass builds on
-    * first touch (still inside the gate — the oracle replays the build). */
-  private val annIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Temp scratch dir for gate artifacts (persisted indexes, synthesized
-    * media frames, storage round-trips), deleted recursively on JVM exit.
-    * Verify + bench call some queries several times and every invocation's
-    * lazy plan reads the directory until it is consumed, so eager per-call
-    * deletion is impossible — the shutdown hook bounds the /tmp footprint
-    * to one JVM's lifetime instead of accumulating across rounds. */
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }
-    p.toString
-  }
-
-  /** Synthesized media payload frames for q150–q155, materialized to
-    * parquet ONCE per (kind, sfDir) in this JVM. Production media bytes
-    * arrive FROM storage — the synth UDFs exist only because the container
-    * ships no real crawl corpus — so the gate should time scan + decode,
-    * not payload ENCODING (round-10 verdict: q151's bench number was
-    * dominated by the WAV-writer synthesis inside the timed region).
-    * Synthesis is deterministic given the input dir, so reuse never changes
-    * results; Bench prebuilds via [[prewarmMediaFrames]], Verify's single
-    * pass builds on first touch. */
-  private val mediaFrameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def mediaFrame(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val path = mediaFrameCache.computeIfAbsent(kind + ":" + dir, _ => {
-      val p = scratchDir(s"graft-media-$kind")
-      build.write.mode("overwrite").parquet(p + "/frame")
-      p
-    })
-    // Decode partitioning follows payload VOLUME, not core count (guide §6;
-    // round-14 scaling block: q150–q155 all ran FASTER at 8 cores than 32 —
-    // the blanket repartition(defaultParallelism) over-split this payload
-    // count and the extra concurrent decoders only contend on allocation).
-    // Partition count = on-disk frame bytes / MediaDecodeTargetBytes, read
-    // from a driver-side listing (no extra scan in the timed region) — the
-    // same rule that sizes Multimodal.repartitionForDecode yields thousands
-    // of right-sized decode tasks on a 100 TB corpus and a handful here.
-    // A listing failure throws: a frame must never read as 0 bytes.
-    val frame = new org.apache.hadoop.fs.Path(path, "frame")
-    val frameBytes = frame.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .listStatus(frame).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-    val parts = math.max(1, math.ceil(frameBytes.toDouble / MediaDecodeTargetBytes).toInt)
-    s.read.parquet(frame.toString).repartition(parts)
-  }
-
-  /** 4 MiB of parquet-compressed payload per decode task: the sf0.1 sweep in
-    * plans/r15/media_partition_sweep.txt found each media query's optimum
-    * flat between 2 and 8 MiB, beating both repartition(32) and
-    * repartition(8). Production codecs with a higher per-byte decode cost
-    * want less, I/O-bound ones more (toward the 128 MiB scan default). */
-  private val MediaDecodeTargetBytes = 4L << 20
-
-  /** Bench warmup hook: synthesize + persist the q150–q155 payload frames
-    * outside the timed region so those rows measure decode, not encode. */
+  /** Bench warmup hook: the q150–q155 payload frames, outside the timed region. */
   def prewarmMediaFrames(s: SparkSession, dir: String): Unit =
-    mediaPayloads.values.foreach(f => Harness.runFully(f(s, dir)): Unit)
+    MultimodalQueries.prewarmMediaFrames(s, dir)
 
-  /** The six synthesized payload frames (deterministic given sfDir), one
-    * per media gate query. Each returns (doc_id, content[, …]) read back
-    * from the per-JVM parquet materialization, so the encode side never
-    * lands in a timed region, and split into one partition per
-    * MediaDecodeTargetBytes of on-disk payload (see `mediaFrame`). */
-  private lazy val mediaPayloads: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q150" -> ((s, dir) => mediaFrame(s, dir, "q150") {
-      import graft.operators.Multimodal
-      val cellVals = transform(sequence(lit(0), lit(59)), k =>
-        pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-          lit("_cell_"), k.cast("string"))), 1, 15), 16, 10).cast("long"),
-          lit(256L)).cast("int"))
-      val synth = udf((vals: Seq[Int]) =>
-        Multimodal.blockImageBytes(vals.toArray, cellW = 6, cellH = 10,
-          gridX = 10, gridY = 6))
-      t(s, dir, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("content", synth(cellVals))
-    }),
-    "q151" -> ((s, dir) => mediaFrame(s, dir, "q151") {
-      import graft.operators.Multimodal
-      val nSamples = 2000
-      val seedCol = pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit("_wav"))), 1, 15), 16, 10).cast("long"), lit(65536L))
-      val synth = udf((seed: Long) => Multimodal.pcmWavBytes(
-        Array.tabulate(nSamples)(i =>
-          (((seed + i.toLong * 2657L) % 65536L) - 32768L).toShort),
-        sampleRate = 8000))
-      t(s, dir, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("content", synth(seedCol))
-    }),
-    "q152" -> ((s, dir) => mediaFrame(s, dir, "q152") {
-      import graft.operators.Multimodal
-      val synth = udf { (docId: Long, nFrames: Int) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def cell(f: Int, k: Int): Int = {
-          val d = md.digest(s"${docId}_f${f}_c$k".getBytes("UTF-8"))
-          md.reset()
-          // first 15 hex chars = big-endian first 8 bytes >>> 4 — straight
-          // byte math, not 16 string formats per digest (the formatting was
-          // most of the synth CPU at 360 digests/doc)
-          var h = 0L
-          var i = 0
-          while (i < 8) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
-          ((h >>> 4) % 256L).toInt
-        }
-        Multimodal.gifBytes(
-          (0 until nFrames).map(f => Array.tabulate(60)(cell(f, _))),
-          cellW = 6, cellH = 10, gridX = 10, gridY = 6)
-      }
-      t(s, dir, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("content",
-          synth(col("doc_id"), (col("doc_id") % 3 + 4).cast("int")))
-    }),
-    "q153" -> ((s, dir) => mediaFrame(s, dir, "q153") {
-      import graft.operators.Multimodal
-      val pack = udf { (docId: Long, text: String) =>
-        val raw = text.getBytes("UTF-8")
-        if (docId % 2 == 0) Multimodal.gzipBytes(raw)
-        else Multimodal.zstdBytes(raw)
-      }
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), pack(col("doc_id"), col("text")).as("content"))
-    }),
-    "q154" -> ((s, dir) => mediaFrame(s, dir, "q154") {
-      import graft.ingestion.Warc
-      val pack = udf { (docId: Long, text: String) =>
-        Warc.warcBytes(Seq(
-          ("warcinfo", "", "engine=graft"),
-          ("response", s"https://example.org/doc/$docId", text)))
-      }
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), pack(col("doc_id"), col("text")).as("content"))
-    }),
-    "q155" -> ((s, dir) => mediaFrame(s, dir, "q155") {
-      import graft.operators.Multimodal
-      import graft.ingestion.Warc
-      val pack = udf { (docId: Long, text: String) =>
-        Multimodal.gzipBytes(Warc.warcBytes(Seq(
-          ("warcinfo", "", "engine=graft"),
-          ("response", s"https://example.org/doc/$docId", text))))
-      }
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), pack(col("doc_id"), col("text")).as("content"))
-    }))
-
-  private def ts0(v: String) = java.sql.Timestamp.valueOf(v)
-
-  private def ivfIndexDir(s: SparkSession, dir: String): String =
-    annIndexCache.computeIfAbsent("ivf:" + dir, _ => {
-      import graft.operators.AnnIndex
-      val base = scratchDir("graft-q134")
-      val emb = t(s, dir, "embeddings")
-      AnnIndex.buildIvf(s, base, emb.where(col("vec_id") < 1500),
-        "vec_id", "embedding", nLists = 8, lloydIters = 2,
-        ts0("2024-01-01 00:00:00"))
-      AnnIndex.appendVectors(s, base, emb.where(col("vec_id") >= 1500),
-        "vec_id", "embedding", ts0("2024-01-02 00:00:00"))
-      base
-    })
-
-  private def ivfPqIndexDir(s: SparkSession, dir: String): String =
-    annIndexCache.computeIfAbsent("ivfpq:" + dir, _ => {
-      import graft.operators.AnnIndex
-      val base = scratchDir("graft-q135")
-      val emb = t(s, dir, "embeddings")
-      AnnIndex.buildIvfPq(s, base, emb.where(col("vec_id") < 250),
-        "vec_id", "embedding", nLists = 8, lloydIters = 2,
-        m = 4, codesPerSubspace = 8, pqIters = 1, ts0("2024-01-01 00:00:00"))
-      AnnIndex.appendVectorsPq(s, base, emb.where(col("vec_id") >= 250),
-        "vec_id", "embedding", ts0("2024-01-02 00:00:00"))
-      base
-    })
-
-  /** Bench warmup hook: build the persisted gate indexes outside the timed
-    * region so q134–q136 time SEARCH (probe + ADC / re-rank), not
-    * training + ingest. */
-  def prewarmPersistedIndexes(s: SparkSession, dir: String): Unit = {
-    ivfIndexDir(s, dir); ivfPqIndexDir(s, dir)
-  }
+  /** Bench warmup hook: the q134–q136 persisted indexes, outside the timed region. */
+  def prewarmPersistedIndexes(s: SparkSession, dir: String): Unit =
+    AnnIndexQueries.prewarmPersistedIndexes(s, dir)
 
   /** Flagship: revenue-by-nation executed through the dataflow framework —
     * DAG build, validation, parallel scheduling, temp-view SQL, the lot.
@@ -312,6426 +73,4 @@ object SparkEntry {
     val (_, done) = G.sparkExecutor(8).execute(flow)
     done.inputs.get[org.apache.spark.sql.Dataset[_]]("by_nation").toDF()
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -------------------------------------------------- relational core ---
-    // rounded SUMS accumulate exactly in decimal: per-row values/products
-    // are deterministic doubles in both engines, but a double SUM depends on
-    // partition order and can flip the final cent; decimal addition cannot.
-    // Averages stay double (4-decimal rounding has huge slack vs sum error).
-    "q01_pricing_summary" -> ((s, dir) => {
-      def dsum(c: Column) = round(sum(c.cast("decimal(28,8)")).cast("double"), 2)
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_extendedprice")), 4).as("avg_price"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q02_revenue_by_nation" -> ((s, dir) => {
-      val customer = t(s, dir, "customer")
-      val orders   = t(s, dir, "orders")
-      val lineitem = t(s, dir, "lineitem")
-      val nation   = t(s, dir, "nation")
-      // r14 NOTE: a pre-aggregation of the fact side (revenue/count per
-      // order before the join chain — textbook shuffle-bytes reduction)
-      // was implemented, oracle-verified identical, and MEASURED WORSE
-      // here: sf1 warm 3.1-3.6s (this shape) vs 5.1s (pre-agg) — locally
-      // the 1.5M-group hash aggregate costs more CPU than the 4:1 shuffle
-      // volume saves, since a local "shuffle" is just memory/disk. On a
-      // network-shuffled cluster the trade reverses; revisit with
-      // cluster-shaped evidence, not local numbers (OPTIMIZATION_r14.md).
-      lineitem
-        .join(orders, col("l_orderkey") === col("o_orderkey"))
-        .join(customer, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          // exact decimal accumulation: join/partition order must not move the cent
-          round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(28,8)")).cast("double"), 2).as("revenue"),
-          count(lit(1)).as("n_lineitems"))
-        .orderBy(col("n_name"))
-    }),
-
-    "q03_top_orders" -> ((s, dir) => {
-      val cutoff = lit("1998-01-01").cast("timestamp")
-      t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") < cutoff)
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > cutoff)
-        .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey").asc)
-        .limit(10)
-    }),
-
-    // window dedup — the audit-table snapshot primitive (SURVEY §2.7)
-    "q04_latest_event_per_user" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      events(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // time-range read — audit-table allBetween semantics (SURVEY §2.7)
-    "q05_events_between" -> ((s, dir) => {
-      // range bounds reach the parquet scan as PushedFilters (eventsBetween
-      // filters the raw column in its physical type before canonicalizing)
-      eventsBetween(s, dir,
-          1704844800000000000L, // 2024-01-10 UTC
-          1705708800000000000L) // 2024-01-20 UTC
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q06_top_events_by_value" -> ((s, dir) => {
-      events(s, dir)
-        .orderBy(col("value").desc, col("event_id").asc)
-        .limit(20)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    }),
-
-    "q07_entity_union" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      val sup = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-      c.unionAll(sup)
-        .groupBy(col("nationkey"))
-        .agg(count(lit(1)).as("n_entities"))
-        .orderBy(col("nationkey"))
-    }),
-
-    "q08_distinct_users_per_type" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"), count(lit(1)).as("n_events"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q09_rollup_sales" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q10_orders_by_month" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("total_price"))
-        .orderBy(col("month"))
-    }),
-
-    "q11_sessionization" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val gapUs = unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w)
-      events(s, dir)
-        .withColumn("new_session",
-          when(gapUs.isNull || gapUs > lit(1800L * 1000000L), 1).otherwise(0))
-        .withColumn("session_id",
-          sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"))
-        .agg(max(col("session_id")).cast("long").as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q12_running_total" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, dir)
-        .withColumn("running_value", round(sum(col("value")).over(w), 6))
-        .select(col("user_id"), col("event_id"), col("running_value"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    // ------------------------------------------------- dedup operators ---
-    "q13_dedup_exact" -> ((s, dir) => {
-      Dedup.exactGroups(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("content_md5"))
-    }),
-
-    "q14_text_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q17_ngram_jaccard_pairs" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(
-        t(s, dir, "documents"), "doc_id", "text",
-        blockCols = Seq(col("lang"), floor(col("n_chars") / lit(50)).as("len_bucket")),
-        n = 3, threshold = 0.7)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q18_minhash_lsh_pairs" -> ((s, dir) => {
-      Dedup.minHashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        bands = 8, rowsPerBand = 8, shingleWords = 3, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q19_simhash_fingerprints" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simHash("text").as("simhash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // --------------------------------------------------- text analysis ---
-    "q15_text_stats" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.tokenCount(txt).as("n_tokens"),
-        TextFunctions.charCount(txt).as("n_chars_m"),
-        TextFunctions.meanTokenLength(txt).as("mean_tok_len"),
-        TextFunctions.punctRatio(txt).as("punct_ratio"),
-        TextFunctions.stopwordRatio(txt).as("stop_ratio"),
-        TextFunctions.qualityScore(txt).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // all four marker counts come from ONE fused text pass (langCounts —
-    // round 13: this projection used to pay ~10 full regex scans per row);
-    // langScore/languageId share the identical counts subtree, which
-    // subexpression elimination evaluates once per row
-    "q16_language_id" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.langScore(txt, "en").as("en_n"),
-        TextFunctions.langScore(txt, "de").as("de_n"),
-        TextFunctions.langScore(txt, "fr").as("fr_n"),
-        TextFunctions.langScore(txt, "es").as("es_n"),
-        TextFunctions.cjkCount(txt).as("zh_n"),
-        TextFunctions.languageId(txt).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ------------------------------------------------ similarity search ---
-    "q20_embed_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q21_embed_ann_srp" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // probeRadius pinned: round-2 switched the default to multi-probe
-      // (recall fix) — pinning keeps this query's series deliberate
-      Similarity.srpAnnTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-        k = 5, nPlanes = 8, dim = 64, probeRadius = 1)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    "q22_embed_centroids" -> ((s, dir) => {
-      Similarity.centroids(t(s, dir, "embeddings"), "label", "embedding")
-        .orderBy(col("label"), col("pos"))
-    }),
-
-    // --------------------------------------------- multimodal plumbing ---
-    "q23_media_manifest" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          encode(col("text"), "utf-8").as("content"))
-        .select(
-          col("doc_id"),
-          octet_length(col("content")).cast("long").as("n_bytes"),
-          sha2(col("content"), 256).as("sha256_hex"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // full media pipeline: wrap → decode (stub) → frame-sample → featurize;
-    // md5-based stubs make every derived value DuckDB-recomputable, and the
-    // feature vector folds to a scalar checksum (array-free output hashes
-    // cleanly in the gate)
-    "q26_media_pipeline" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val media = Multimodal.withContent(t(s, dir, "documents"), "text", "text/plain")
-      media.select(
-        col("doc_id"),
-        col("meta.n_bytes").as("n_bytes"),
-        Multimodal.decodeImageStub(col("content")).as("img"),
-        size(Multimodal.frameSampleStub(col("content"), 4)).cast("long").as("n_frames"),
-        Multimodal.embedStub(col("content"), 8).as("features"))
-        .select(col("doc_id"), col("n_bytes"), col("img.width").as("width"),
-          col("img.height").as("height"), col("n_frames"),
-          size(col("features")).cast("long").as("feat_dim"),
-          round(aggregate(col("features"), lit(0.0), (acc, v) => acc + v.cast("double")), 6)
-            .as("feat_checksum"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ------------------------------------ storage layer through the gate ---
-    // Audit-table upsert semantics verified against a relational oracle:
-    // batch1 = one signup row per user, batch2 = latest purchase per user,
-    // snapshot(after both) = batch2 where present else batch1.
-    "q24_storage_snapshot" -> ((s, dir) => storageRoundTrip(s, dir, compactFirst = false)),
-    "q25_storage_compact" -> ((s, dir) => storageRoundTrip(s, dir, compactFirst = true)),
-    // bloom-pruned PK point lookup over the z-compacted table: sidecar
-    // region pruning + snapshotPoint, answer identical to the full
-    // snapshot restricted to the probed keys (storage/AuditTable.scala)
-    "q139_point_lookup" -> ((s, dir) =>
-      storageRoundTrip(s, dir, compactFirst = true, pointLookup = true)),
-
-    // ------------------------------------------- more relational shapes ---
-    "q27_customers_without_orders" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q28_customer_order_stats" -> ((s, dir) => {
-      val agg = t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("spend"))
-      t(s, dir, "customer")
-        .join(agg, col("c_custkey") === col("o_custkey"), "left")
-        .select(
-          col("c_custkey"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-          coalesce(col("spend"), lit(0.0)).as("spend"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q29_pivot_events" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy(col("user_id"))
-    }),
-
-    // dedup clusters: near-dup pairs -> connected components -> keep flags,
-    // oracle-checked against a recursive-CTE transitive closure in DuckDB
-    "q32_dup_clusters" -> ((s, dir) => {
-      import graft.operators.Graphs
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq(col("lang"), floor(col("n_chars") / lit(50)).as("len_bucket")),
-        n = 3, threshold = 0.7)
-      Graphs.dedupClusters(docs, "doc_id", pairs, "id_a", "id_b")
-        .orderBy(col("doc_id"))
-    }),
-
-    // IVF ANN (k-means cells + nProbe search): fully oracle-checked — the
-    // k-means is deterministic (init = first nLists vectors by id, 2 Lloyd
-    // rounds, strict-< argmin) so the oracle unrolls both rounds in SQL
-    "q33_embed_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-        k = 5, nLists = 8, lloydIters = 2, nProbe = 2)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // sketch aggregates (HLL++): the estimate itself has no DuckDB analogue
-    // (sketch families differ), so the gate checks the exact count by hash
-    // and the HLL error BOUND end-to-end as a boolean — if the estimator
-    // drifted past 5x its configured rsd the hash would break. The tight
-    // numeric bound is asserted in OperatorsSpec.
-    // TWO single-distinct aggregates joined on the group key, NOT one agg
-    // mixing countDistinct with approx_count_distinct: the mix plans an
-    // Expand that multiplies the input (round-12 measurement: 1.8s vs 0.3s
-    // on 5k rows; this was the slowest pure-relational bench entry at
-    // 3.6s sf0.1). Split, each side is a plain partially-aggregated hash
-    // agg and the join is group-cardinality-sized (AQE broadcasts it).
-    // PlanSpec's Expand guard now fails the mixed form suite-wide.
-    "q31_approx_distinct" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_type"), col("user_id"))
-      val exact = ev.groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      val approx = ev.groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users"))
-      // null-SAFE join on the group key: a null event_type group appears on
-      // both sides and a plain equi-join would silently drop it (r14)
-      exact.join(approx, exact("event_type") <=> approx("event_type"))
-        .select(
-          exact("event_type"),
-          col("exact_users"),
-          (abs(col("approx_users") - col("exact_users")).cast("double")
-            / col("exact_users").cast("double") <= lit(0.05)).as("approx_within_5pct"))
-        .orderBy(col("event_type"))
-    }),
-
-    // as-of join: attach each user's most recent order to every event.
-    // Round 14: routed through the native sort-merge AsOfJoinExec (one
-    // exchange + sort per side, O(1) merge state) — measured at sf1
-    // against the union-carry-forward composition on this exact
-    // many-events-per-user shape: 1.8s vs 2.7s warm, 2.7s vs 7.0s cold,
-    // identical row checksums (tools/AsofShapeProbe). Temporal.asofJoin
-    // remains the strategy-free composition (and q141's salted twin the
-    // skew regime).
-    "q34_asof_join" -> ((s, dir) => {
-      import graft.plans.AsOf
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("ts"))
-      val w = Window.partitionBy(col("o_custkey"), col("o_orderdate"))
-        .orderBy(col("o_orderkey").desc)
-      val ord = t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("o_custkey").as("r_user"),
-          col("o_orderdate").cast("timestamp").as("r_ts"),
-          col("o_orderkey"), col("o_totalprice"))
-      AsOf.asOfJoin(ev, ord, Seq("user_id"), Seq("r_user"), "ts", "r_ts",
-          broadcastRight = Some(false))
-        .select(col("event_id"), col("user_id"), col("ts"), col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("o_totalprice"))
-        .orderBy(col("event_id"))
-    }),
-
-    // interval (range) join without an equi key: time-bucketed equi-join
-    // under the hood (operators.Temporal.intervalJoin)
-    "q35_interval_join" -> ((s, dir) => {
-      import graft.operators.Temporal
-      val ev = events(s, dir).select(col("event_id"), col("ts"))
-      val windows = events(s, dir)
-        .select(date_trunc("day", col("ts")).as("w_start"))
-        .distinct()
-        .withColumn("w_end", col("w_start") + expr("INTERVAL 36 HOURS"))
-      Temporal.intervalJoin(ev, "ts", windows, "w_start", "w_end", bucketWidthSec = 86400L)
-        .select(col("event_id"), col("w_start"))
-        .orderBy(col("event_id"), col("w_start"))
-    }),
-
-    // embedding-cosine near-dup pairs, blocked on the label column
-    "q36_embed_neardup" -> ((s, dir) => {
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-        blockCol = col("label"), threshold = 0.3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // salted skew join: the salt spreads hot user_ids over n reducers and is
-    // invisible in the result — oracle is the plain join
-    "q37_skew_join" -> ((s, dir) => {
-      import graft.operators.Skew
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      Skew.saltedJoin(ev, dim, Seq("user_id"), saltBuckets = 8)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // deterministic stratified sampling: membership from a content hash, so
-    // the sample is reproducible across engines/partitionings (oracle
-    // recomputes the identical md5 bucket)
-    "q38_stratified_sample" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.stratifiedHashSample(t(s, dir, "documents"),
-        key = col("doc_id"), stratum = col("lang"),
-        rates = Map("en" -> 0.2), defaultRate = 0.5)
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // tokenization with a LEARNED subword table: train 8 BPE merges on the
-    // corpus (operators.Bpe.learnBpe — vocab-sized iteration frame, 1-row
-    // driver argmax per merge), then tokenize every document via the final
-    // symbolized vocab (one equi-join + map-combined rollup; the merge fold
-    // never re-runs over the corpus). Oracle unrolls the identical 8
-    // training iterations in DuckDB list SQL and joins the same way.
-    "q39_bpe_tokens" -> ((s, dir) => {
-      import graft.operators.Bpe
-      val docs = t(s, dir, "documents")
-      val (_, vocab) = Bpe.learnBpe(docs, col("text"), numMerges = 8)
-      // the returned frame joins the vocab lazily, AFTER this body exits —
-      // swap learnBpe's persist for a localCheckpoint (blocks free on GC)
-      // so the session never accumulates unreleasable cache entries
-      val flat = vocab.localCheckpoint(true)
-      vocab.unpersist()
-      // no floor on this train => nothing is OOV; keep the pre-round-13
-      // 4-column shape (q161 gates the OOV/floor path with its mass column)
-      Bpe.tokenizeWithVocab(docs, col("doc_id"), col("text"), flat)
-        .select(col("doc_id"), col("n_tok"), col("n_words"), col("fertility"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // left-semi: customers with at least one urgent order (no row explosion)
-    "q40_semi_join" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // RANGE window frame: per-event sum of same-user values in the
-    // preceding 10 minutes (value-based frame, not row-based)
-    "q41_range_window" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(unix_micros(col("ts")))
-        .rangeBetween(-600L * 1000000L, Window.currentRow)
-      events(s, dir)
-        .withColumn("sum_10m", round(sum(col("value")).over(w), 6))
-        .select(col("event_id"), col("user_id"), col("sum_10m"))
-        .orderBy(col("event_id"))
-    }),
-
-    // the grand-total row sums the whole table: accumulate EXACTLY in
-    // decimal (double sums vary by partition order and can round-flip at a
-    // cent boundary), then surface as double for schema parity
-    "q42_cube_sales" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double"), 2).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
-    }),
-
-    // BM25 relevance for a query-term bag: corpus stats (N, total length,
-    // per-term df) reduce in one bounded pass; the score is then map-side
-    // only — no shuffle of document data (operators.Ranking)
-    "q43_bm25" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.bm25(t(s, dir, "documents"), "doc_id", "text",
-        terms = Seq("spark", "window", "join"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher-style repetition signals (token-level variant): distinct-token
-    // ratio, top-token fraction, top-bigram fraction
-    "q44_repetition" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.distinctTokenRatio(txt).as("distinct_ratio"),
-        TextFunctions.topTokenFrac(txt).as("top_token_frac"),
-        TextFunctions.topBigramFrac(txt).as("top_bigram_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // product quantization: 4 subspaces x 8 centroids, 1 Lloyd round —
-    // integer codes are exactly reproducible by replaying the training
-    // recurrence (operators.Quantization)
-    "q45_pq_codes" -> ((s, dir) => {
-      import graft.operators.Quantization
-      val emb = t(s, dir, "embeddings")
-      val model = Quantization.train(emb, "vec_id", "embedding",
-        dim = 64, m = 4, k = 8, lloydIters = 1)
-      Quantization.encode(emb, "vec_id", "embedding", model)
-        .orderBy(col("vec_id"))
-    }),
-
-    // asymmetric-distance (ADC) top-k over the PQ codes: per-query distance
-    // tables on the broadcast side, m lookups per corpus vector
-    "q46_pq_adc" -> ((s, dir) => {
-      import graft.operators.Quantization
-      val emb = t(s, dir, "embeddings")
-      val model = Quantization.train(emb, "vec_id", "embedding",
-        dim = 64, m = 4, k = 8, lloydIters = 1)
-      val coded = Quantization.encode(emb, "vec_id", "embedding", model)
-      Quantization.adcTopK(coded, emb.filter(col("vec_id") < 20),
-        "vec_id", "embedding", model, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // bloom-pruned join: the large side (lineitem) is filtered by a compact
-    // Bloom sketch of the selective small side's keys BEFORE its shuffle —
-    // false positives are removed by the real join, so the oracle is the
-    // plain join (operators.Bloom)
-    "q47_bloom_join" -> ((s, dir) => {
-      import graft.operators.Bloom
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000)
-        .select(col("o_orderkey"), col("o_orderdate"))
-      Bloom.bloomPrunedJoin(
-        t(s, dir, "lineitem"), Seq("l_orderkey"),
-        urgent, Seq("o_orderkey"), fpp = 0.01)
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(count(lit(1)).as("n_items"),
-          // round in the DECIMAL domain, cast to double LAST: rounding the
-          // double instead diverges cross-engine at exact .005 ties (Spark
-          // rounds the shortest decimal rendering, DuckDB the binary
-          // multiply — sf1 surfaced two such groups)
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(28,8)")).cast("decimal(28,2)").cast("double")
-            .as("revenue"))
-        .orderBy(col("month"))
-    }),
-
-    // SCD2 history build: per-user event_type intervals with run
-    // compression — lag-filter, lead and version share ONE window shuffle
-    // (operators.Scd)
-    "q48_scd2" -> ((s, dir) => {
-      import graft.operators.Scd
-      Scd.scd2FromChanges(
-        events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type")),
-        keys = Seq("user_id"), tsCol = "ts",
-        trackedCols = Seq("event_type"), tieBreak = Seq("event_id"))
-        // the driver's compare can't equate null timestamps (NaT != NaT in
-        // numpy) — close the open interval with a sentinel. Must be ns-safe:
-        // 9999-12-31 overflows parquet timestamp[ns] int64 (Spark 4 writes ns
-        // by default) and silently wraps to 1816-03-29, so use 2200-01-01.
-        .select(col("user_id"), col("event_type"), col("valid_from"),
-          coalesce(col("valid_to"), lit("2200-01-01 00:00:00").cast("timestamp"))
-            .as("valid_to"),
-          col("is_current"), col("version"))
-        .orderBy(col("user_id"), col("version"))
-    }),
-
-    // Z-order layout key: Morton interleave of (user bucket, value bucket)
-    // — pure shift/mask codegen arithmetic, bit-identical in any engine
-    // (operators.Layout; the write path is spec-tested for file-skipping)
-    "q49_zorder_key" -> ((s, dir) => {
-      import graft.operators.Layout
-      val x = pmod(col("user_id"), lit(256L))
-      val y = Layout.rangeBucket(col("value"), 0.0, 512.0, bits = 8)
-      events(s, dir).select(
-        col("event_id"), x.as("zx"), y.as("zy"),
-        Layout.mortonKey(Seq(x, y), bits = 8).as("zkey"))
-        .orderBy(col("event_id"))
-    }),
-
-    // full Gopher document-filter rule set (Rae et al. 2021 §A1.1) — every
-    // signal + the combined verdict, all codegen'd regex/arithmetic
-    "q50_gopher_filter" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.tokenCount(txt).as("n_words"),
-        TextFunctions.meanTokenLength(txt).as("mean_word_len"),
-        TextFunctions.symbolToWordRatio(txt).as("symbol_ratio"),
-        TextFunctions.bulletLineFrac(txt).as("bullet_frac"),
-        TextFunctions.ellipsisLineFrac(txt).as("ellipsis_frac"),
-        TextFunctions.alphaWordFrac(txt).as("alpha_frac"),
-        TextFunctions.stopwordPresence(txt).as("n_stopwords"),
-        TextFunctions.gopherPass(txt).as("pass"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // whole-vocabulary TF-IDF, top-3 terms per doc: map-combined tf shuffle,
-    // df as a window count (no vocab self-join), top-k window
-    // (operators.Ranking.tfIdfTopTerms)
-    "q51_tfidf" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.tfIdfTopTerms(t(s, dir, "documents"), "doc_id", "text", topK = 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // benchmark decontamination: word-3-gram overlap of every doc against a
-    // benchmark set (docs 0-9); bench gram hashes broadcast, corpus-side
-    // explode hits them with no corpus-wide shuffle (Dedup.decontaminate)
-    "q52_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.decontaminate(docs, "doc_id", "text",
-        benchmark = docs.filter(col("doc_id") < 10), benchTextCol = "text",
-        n = 3, maxHits = 0L)
-        .orderBy(col("doc_id"))
-    }),
-
-    // deterministic per-key cap: at most 5 events per user, chosen by a
-    // content-hash ranking — stable under re-runs/repartitioning, unlike
-    // head-N of file order (operators.Sampling.cappedPerKey)
-    "q53_capped_per_key" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.cappedPerKey(
-        events(s, dir).select(col("event_id"), col("user_id"), col("event_type")),
-        keys = Seq(col("user_id")), rankKey = col("event_id"), maxPerKey = 5)
-        .orderBy(col("event_id"))
-    }),
-
-    // one-pass column profiling: row/null/distinct counts + ranges for four
-    // orders columns in a single aggregation (operators.Profile); string
-    // rendering keeps min/max comparable across engines for the long and
-    // string columns profiled here
-    "q54_profile" -> ((s, dir) => {
-      import graft.operators.Profile
-      Profile.profile(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
-        .orderBy(col("col_name"))
-    }),
-
-    // quality-weighted deterministic sampling: each doc kept with its own
-    // probability (= its quality score), content-hash decided
-    "q55_weighted_sample" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.weightedHashSample(t(s, dir, "documents"),
-        key = col("doc_id"), weight = TextFunctions.qualityScore(col("text")))
-        .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // sequence packing: per-language token streams split into 512-token
-    // training windows (operators.Packing)
-    "q56_packing" -> ((s, dir) => {
-      import graft.operators.Packing
-      Packing.packSequences(
-        t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text")),
-        shardCols = Seq(col("lang")), orderCol = col("doc_id"),
-        tokenCol = TextFunctions.tokenCount(col("text")), windowTokens = 512L)
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("start_offset"), col("chunk_id"), col("spans_boundary"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // equi-depth binning: quartile boundaries reduce once to the driver,
-    // assignment is map-side comparisons (operators.Binning)
-    "q57_equidepth_bins" -> ((s, dir) => {
-      import graft.operators.Binning
-      Binning.equiDepth(
-        events(s, dir).select(col("event_id"), col("value")), "value", nBins = 4)
-        .select(col("event_id"), col("value"), col("bin"))
-        .orderBy(col("event_id"))
-    }),
-
-    // typed extraction from the semi-structured props column: ONE from_json
-    // parse per row feeds every field + the aggregate (operators
-    // .Semistructured) — not a get_json_object per field per row
-    "q58_json_extract" -> ((s, dir) => {
-      import graft.operators.Semistructured
-      import org.apache.spark.sql.types.{LongType, StructField}
-      Semistructured.extractJson(
-        events(s, dir).select(col("event_id"), col("event_type"), col("props")),
-        "props", Seq(StructField("k", LongType)))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("k")).as("sum_k"),
-          round(sum(col("k")).cast("double") / count(lit(1)), 6).as("avg_k"),
-          min(col("k")).as("min_k"),
-          max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // token-window chunking into overlapping context windows — pure narrow
-    // map (sequence+explode+slice), chunk ids derived arithmetically so
-    // results are partitioning-independent (operators.Chunking)
-    "q59_chunk_tokens" -> ((s, dir) => {
-      import graft.operators.Chunking
-      Chunking.chunkTokens(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        Seq("doc_id"), "text", windowTokens = 32, strideTokens = 24)
-        .orderBy(col("doc_id"), col("chunk_ix"))
-    }),
-
-    // canonical + aggressive text normalization (codegen'd regexp chain)
-    "q60_normalize" -> ((s, dir) => {
-      val txt = col("text")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.normalizeText(txt).as("norm_text"),
-        length(TextFunctions.normalizeText(txt)).cast("long").as("n_norm"),
-        length(TextFunctions.normalizeAggressive(txt)).cast("long").as("n_aggr"),
-        md5(TextFunctions.normalizeAggressive(txt)).as("aggr_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // exact-substring duplication profile: distinct 8-token windows per doc,
-    // shared iff the window occurs in another doc (Dedup.substringDupProfile;
-    // window strings never shuffle — only 64-bit hashes do)
-    "q61_substring_dup" -> ((s, dir) => {
-      Dedup.substringDupProfile(t(s, dir, "documents"), "doc_id", "text",
-        windowTokens = 8, minShare = 0.25)
-        .orderBy(col("doc_id"))
-    }),
-
-    // PII scrub over synthesized contact lines (the corpus itself carries no
-    // PII, so the patterns are planted deterministically from doc_id — the
-    // redaction regexes then have real matches to erase)
-    "q62_pii_redact" -> ((s, dir) => {
-      val synth = concat(
-        substring(col("text"), 1, 40),
-        lit(" contact u"), col("doc_id").cast("string"),
-        lit("@example.com via 10.1."), (col("doc_id") % 200).cast("string"),
-        lit(".7 call +1 555-00"), (col("doc_id") % 90 + 10).cast("string"))
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.piiEmailCount(synth).as("n_emails"),
-        TextFunctions.piiIpCount(synth).as("n_ips"),
-        TextFunctions.piiPhoneCount(synth).as("n_phones"),
-        TextFunctions.redactPii(synth).as("redacted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // robust per-group outlier flags (median/MAD z-score): group stats
-    // reduce twice to a tiny broadcast relation, the flagging pass is
-    // map-side (operators.Outliers)
-    "q63_outliers" -> ((s, dir) => {
-      import graft.operators.Outliers
-      Outliers.robustZ(
-        events(s, dir).select(col("event_id"), col("event_type"), col("value")),
-        Seq("event_type"), "value", k = 3.0)
-        .orderBy(col("event_id"))
-    }),
-
-    // corpus vocabulary with cumulative coverage: distributed TopK prunes
-    // the vocab BEFORE the single-partition prefix-sum window
-    // (operators.Ranking.vocabulary)
-    "q64_vocabulary" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.vocabulary(t(s, dir, "documents"), "text", topN = 100)
-        .orderBy(col("rank"))
-    }),
-
-    // data-mixture sampling: largest en:2/de:1/fr:1 corpus achievable
-    // without upsampling, per-source caps filled by content-hash rank
-    // (operators.Sampling.mixtureSample); es/zh are unweighted -> dropped
-    "q65_mixture_sample" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.mixtureSample(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang", Map("en" -> 2.0, "de" -> 1.0, "fr" -> 1.0),
-        rankKey = col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // CDC diff between the latest-event-per-user snapshot at Jan-15 and at
-    // Jan-25: one PK-shuffled full outer join classifies added/changed
-    // (removals can't occur on append-only events; ScdSpec covers them)
-    "q66_snapshot_diff" -> ((s, dir) => {
-      import graft.operators.Scd
-      val ev = events(s, dir)
-      def snap(cut: String) = {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        ev.where(col("ts") < lit(cut).cast("timestamp"))
-          .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-          .select(col("user_id"), col("event_id"), col("event_type"))
-      }
-      Scd.snapshotDiff(snap("2024-01-15 00:00:00"), snap("2024-01-25 00:00:00"),
-        Seq("user_id"), Seq("event_id", "event_type"))
-        .orderBy(col("user_id"))
-    }),
-
-    // semantic dedup (SemDeDup-style): k-means cells bound the pairwise
-    // search; a row is a duplicate when an EARLIER same-cell row has cosine
-    // >= 0.3. Same deterministic k-means as q33 (first-8-by-id init, 2
-    // Lloyd rounds), so the oracle reuses the unrolled-Lloyd SQL prefix
-    "q67_semdedup" -> ((s, dir) => {
-      Similarity.semDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.3, nCells = 8, lloydIters = 2)
-        // kept rows have no dup_of; -1 sentinel keeps the gate column
-        // null-free (null == null is not "equal" to a bitwise differ)
-        .withColumn("dup_of", coalesce(col("dup_of"), lit(-1L)))
-        .orderBy(col("vec_id"))
-    }),
-
-    // equi-width histogram, explicit [0, 500) bounds, 20 interior bins +
-    // under/overflow, zero-filled empty bins (operators.Binning.histogram)
-    "q68_histogram" -> ((s, dir) => {
-      import graft.operators.Binning
-      Binning.histogram(events(s, dir), "value", lo = 0.0, hi = 500.0, nBins = 20)
-        // empty bins carry null min/max; sentinel for a null-free gate frame
-        .withColumn("bin_min", coalesce(col("bin_min"), lit(-1.0)))
-        .withColumn("bin_max", coalesce(col("bin_max"), lit(-1.0)))
-        .orderBy(col("bin"))
-    }),
-
-    // deterministic train/val/test split: md5-bucket assignment, stable
-    // under corpus growth (a doc's split never changes when others come or
-    // go) — the leak-free eval-set property
-    "q69_split_assign" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.splitByHash(t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        col("doc_id"), Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy(col("doc_id"))
-    }),
-
-    // fuzzy dup pairs (record linkage): token-blocked candidates (equi-join
-    // on a shared lowercase word — never all-pairs), Levenshtein <= 2.
-    // maxTokenFreq caps blocking-bucket occupancy: tokens carried by more
-    // than 1000 DISTINCT values are dropped from candidate generation (the
-    // Zipfian-stopword scale guard; mirrored in the oracle, since capping
-    // changes match semantics). Never binds on this corpus (8 distinct
-    // names/token) — the cap is the 100-TB posture, not a tuning hack.
-    "q70_fuzzy_dups" -> ((s, dir) => {
-      import graft.operators.Fuzzy
-      Fuzzy.fuzzyDupPairs(t(s, dir, "part"), "p_partkey", "p_name", maxDist = 2,
-        maxTokenFreq = Some(1000L))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // q70 with BOUNDED output: only the 3 smallest ids per distinct name
-    // expand into pairs (WindowGroupLimit top-k, map-side partial), so dup
-    // groups emit <= 9 pairs instead of |group|^2 — the variant that stays
-    // result-feasible at any replication factor; q70's unbounded twin is the
-    // lone documented sf1 oracle exclusion (operators.Fuzzy
-    // .fuzzyDupPairsBounded)
-    "q147_fuzzy_dups_bounded" -> ((s, dir) => {
-      import graft.operators.Fuzzy
-      Fuzzy.fuzzyDupPairsBounded(t(s, dir, "part"), "p_partkey", "p_name",
-        maxDist = 2, maxTokenFreq = Some(1000L), maxIdsPerName = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // weighted sampling WITHOUT replacement: 100 docs with probability
-    // ∝ n_chars via Gumbel top-k — the EXECUTION half of importance
-    // resampling (q126 computes DSIR weights; this selects with them).
-    // One map pass + TakeOrderedAndProject (per-partition heads, k-row
-    // driver merge; no global sort). Noise u = (h+0.5)/2^20 from md5 is an
-    // exact binary rational, so the oracle recomputes every key
-    // bit-identically (operators.Sampling.gumbelTopK)
-    "q148_gumbel_sample" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.gumbelTopK(
-          t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-          col("doc_id"), log(col("n_chars").cast("double")), k = 100)
-        .select(col("doc_id"), col("n_chars"),
-          round(col("gumbel_key"), 6).as("gumbel_key"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // event log → regular weekly time series per user (LOCF): epoch-
-    // aligned ticks generated distributively (per-key min/max +
-    // sequence()), the carry-forward match through the NATIVE as-of join —
-    // the log shuffles once, the tiny grid side rides the join's regime.
-    // Oracle is DuckDB's own ASOF JOIN over the same generated grid
-    // (operators.Temporal.resampleLocf)
-    "q149_locf_resample" -> ((s, dir) => {
-      import graft.operators.Temporal
-      val obs = events(s, dir).where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(round(max(col("value")), 6).as("v"))
-      Temporal.resampleLocf(obs, Seq("user_id"), "ts", "v",
-          intervalSec = 7L * 86400)
-        .select(col("user_id"), col("tick"), col("obs_ts"),
-          col("v").as("value"))
-        .orderBy(col("user_id"), col("tick"))
-    }),
-
-    // REAL image decode end-to-end (no stubs anywhere on this path): per
-    // doc a 60x60 BMP of 10x6 constant-gray cells (cell values md5-derived
-    // so DuckDB can replay them) is ENCODED through the real ImageIO BMP
-    // writer, then DECODED back through the real reader — dims/channels
-    // from the decoded pixels, pHash from decoded luminance (blockhash over
-    // the 10x6 grid). Constant gray cells make integer luminance exact
-    // (=v), so the oracle replays the hash from the cell-value formula
-    // alone, while Spark's numbers only match if the full encode->decode->
-    // pixel->luminance path is correct (operators.Multimodal.imageKernel /
-    // pHashImageKernel / blockImageBytes)
-    "q150_real_image_phash" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      // payloads come from the per-JVM parquet materialization (see
-      // mediaPayloads) — production media arrives from storage, so the
-      // measured region is scan + decode, not the synth UDF
-      val media = mediaPayloads("q150")(s, dir)
-      // ONE decode pass for dims + hash (imageProfiles) — profiling and
-      // hashing separately would decode every image twice
-      Multimodal.imageProfiles(media, "doc_id", "content")
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL audio decode end-to-end (javax.sound.sampled — the audio twin
-    // of q150): per doc a 2000-sample 16-bit PCM mono WAV (sample i =
-    // ((seed + i*2657) mod 65536) - 32768, seed md5-derived) is ENCODED
-    // through the JDK's real RIFF writer, DECODED back through the real
-    // reader, and profiled with ALL-INTEGER features (Σs², sign flips,
-    // peak) so the oracle replays them hash-exactly from the sample
-    // formula — Spark's numbers only match if the container round trip
-    // and 16-bit LE decode are correct (operators.Multimodal
-    // .audioProfileKernel / pcmWavBytes)
-    "q151_audio_profile" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      Multimodal.audioProfiles(mediaPayloads("q151")(s, dir), "doc_id", "content")
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL multi-frame sampling (the video-shaped pipeline, on the one
-    // multi-frame format the JDK ships a codec for): per doc an animated
-    // GIF of 4-6 constant-gray-cell frames is ENCODED through the real
-    // sequence writer, then 3 evenly-spaced frames (k*total/3) DECODE
-    // on demand through a real ImageReader and perceptual-hash in pixel
-    // space. GIF's 256-color palette makes gray cells lossless, so the
-    // oracle replays every sampled frame's hash from the cell formula —
-    // Spark only matches if the container, the sampling arithmetic and
-    // the per-frame decode are all right (operators.Multimodal
-    // .frameSamplePHashKernel / gifBytes)
-    "q152_gif_frame_sample" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      Multimodal.frameSampleHashes(mediaPayloads("q152")(s, dir),
-          "doc_id", "content", n = 3)
-        .orderBy(col("doc_id"), col("frame_idx"))
-    }),
-
-    // REAL mixed-codec compressed ingestion (the WARC-crawl shape): each
-    // doc's text is compressed through a REAL encoder — gzip (JDK) for
-    // even ids, zstd (Spark's own zstd-jni) for odd — then the kernel
-    // sniffs magic bytes per payload and decompresses through the real
-    // codec streams in one pass. Output pins codec detection, exact
-    // decompressed byte counts and the md5 of the round-tripped text; the
-    // oracle computes all three from the PLAIN text (it never sees a
-    // compressed byte), so any codec/charset corruption mismatches
-    // (operators.Multimodal.decompressTextKernel / gzipBytes / zstdBytes)
-    "q153_compressed_ingest" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      Multimodal.decompressTexts(mediaPayloads("q153")(s, dir), "doc_id", "content")
-        .select(col("doc_id"), col("codec"), col("n_bytes"),
-          md5(col("text")).as("text_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL WARC (ISO 28500) ingestion: per doc a spec-compliant two-record
-    // WARC payload (warcinfo + response carrying the doc text) is BUILT by
-    // the real writer, then parsed back byte-exactly — headers at the
-    // first CRLFCRLF, body = exactly Content-Length BYTES — through the
-    // kernel seam. The oracle derives every field from the plain columns
-    // (it never sees a WARC byte), so any offset/length/charset slip in
-    // the parser mismatches (ingestion.Warc)
-    "q154_warc_ingest" -> ((s, dir) => {
-      import graft.ingestion.Warc
-      Warc.warcRecords(mediaPayloads("q154")(s, dir), "doc_id", "content")
-        .toDF("doc_id", "rec_idx", "warc_type", "target_uri",
-          "content_length", "body")
-        .select(col("doc_id"), col("rec_idx"), col("warc_type"),
-          col("target_uri"), col("content_length"),
-          md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"), col("rec_idx"))
-    }),
-
-    // the full crawl-ingestion CHAIN, three real decoders deep: each doc
-    // becomes a gzip-compressed WARC payload (real encoders), then
-    // gunzip (magic-sniffed, ISO-8859-1 intermediate so bytes round-trip
-    // exactly) -> byte-exact WARC parse -> response bodies with their
-    // UTF-8 byte counts and hashes. One wrong offset/charset anywhere in
-    // the chain mismatches the oracle, which reads only plain columns
-    "q155_crawl_pipeline" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      import graft.ingestion.Warc
-      import org.apache.spark.sql.Encoders
-      val media = mediaPayloads("q155")(s, dir)
-      // ISO-8859-1 is byte-bijective: the decompressed WARC OCTETS survive
-      // the String hop intact; the WARC parser then slices bodies by
-      // Content-Length BYTES and decodes them as UTF-8
-      val unzipped = Multimodal.decodePartitioned(media, "doc_id", "content",
-          Multimodal.decompressTextKernel("ISO-8859-1"))(
-          Encoders.product[Multimodal.DecodedText])
-        .toDF("doc_id", "codec", "n_bytes", "wtext")
-        .select(col("doc_id"), encode(col("wtext"), "ISO-8859-1").as("content"))
-      Warc.warcRecords(unzipped, "doc_id", "content")
-        .toDF("doc_id", "rec_idx", "warc_type", "target_uri",
-          "content_length", "body")
-        .where(col("warc_type") === "response")
-        .select(col("doc_id"), col("target_uri"), col("content_length"),
-          md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // margin-based parallel-pair mining (Artetxe & Schwenk ratio margin):
-    // two fixed-id embedding slices as the "languages", mutual best matches
-    // scored by cosine over the mean of both endpoints' top-4 neighbourhood
-    // averages; all sums ride exact integer micro-units so any engine
-    // replays the margin bit-for-bit (Similarity.marginMinePairs)
-    "q156_margin_mine" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.marginMinePairs(
-        emb.where(col("vec_id") < 150),
-        emb.where(col("vec_id") >= 150 && col("vec_id") < 300),
-        "vec_id", "embedding", k = 4, threshold = 1.02)
-        .orderBy(col("x_id"))
-    }),
-
-    // mixture WITH upsampling: the most over-supplied language anchors the
-    // scale, smaller ones replicate toward equal shares (epoch column),
-    // capped at 4 repetitions; fractional epochs are md5-hash draws in
-    // integer micro-units, so the oracle recomputes counts -> rates ->
-    // replication exactly (operators.Sampling.mixtureSampleWithReplacement)
-    "q160_mixture_upsample" -> ((s, dir) => {
-      graft.operators.Sampling.mixtureSampleWithReplacement(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        "lang",
-        Map("en" -> 0.25, "de" -> 0.25, "fr" -> 0.25, "zh" -> 0.25),
-        key = col("doc_id"), maxEpochs = 4)
-        .select(col("doc_id"), col("lang"), col("epoch"))
-        .orderBy(col("doc_id"), col("epoch"))
-    }),
-
-    // BPE serving with a FLOOR-TRUNCATED vocab — the recommended 100 TB
-    // train path (minCount tail truncation). floor = doc count puts the
-    // corpus's rare word(s) out-of-vocab, so tokenization MUST take the
-    // OOV fallback (the applyMerges fold over the DISTINCT unseen words —
-    // vocab-sized work) instead of silently dropping the tail, and report
-    // the OOV token mass per doc. Oracle replays the same 8 training
-    // iterations with pair COUNTING restricted to retained words while
-    // merge APPLICATION covers every word — for sub-floor words that per-
-    // iteration application is exactly the rank-order applyMerges fold
-    "q161_bpe_oov" -> ((s, dir) => {
-      import graft.operators.Bpe
-      val docs = t(s, dir, "documents")
-      val floor = docs.count()
-      val (merges, vocab) = Bpe.learnBpeLocalFromCounts(
-        Bpe.wordCounts(docs, col("text")), numMerges = 8, minCount = floor)
-      val flat = vocab.localCheckpoint(true)
-      vocab.unpersist()
-      Bpe.tokenizeWithVocab(docs, col("doc_id"), col("text"), flat, merges)
-        .orderBy(col("doc_id"))
-    }),
-
-    // persisted BM25 postings index over the audit-table storage layer:
-    // two ingest days (day 2 re-ingests docs 0-49 with an extra token —
-    // the PK snapshot must serve the REPLACED posting lists), retrieval
-    // derives contributions from stored postings without re-tokenizing
-    // (operators.SparseIndex + Ranking.bm25Retrieve)
-    "q159_sparse_index_retrieval" -> ((s, dir) => {
-      import s.implicits._
-      import graft.operators.SparseIndex
-      val base = scratchDir("graft-q159")
-      val docs = t(s, dir, "documents").where(col("doc_id") < 500)
-        .select(col("doc_id"), col("text"))
-      val ts = java.sql.Timestamp.valueOf(_: String)
-      val t0 = SparseIndex.openOrCreate(s, base)
-      val t1 = SparseIndex.indexBatch(t0, docs.where(col("doc_id") < 250),
-        "doc_id", "text", ts("2024-01-01 00:00:00"))
-      val t2 = SparseIndex.indexBatch(t1,
-        docs.where(col("doc_id") >= 250).unionByName(
-          docs.where(col("doc_id") < 50)
-            .withColumn("text", concat(col("text"), lit(" spark")))),
-        "doc_id", "text", ts("2024-01-02 00:00:00"))
-      val idx = SparseIndex.bm25IndexAsOf(t2, ts("2024-01-03 00:00:00"))
-      val qs = Seq(
-        (1L, "spark window join"),
-        (2L, "data quality pipeline"),
-        (3L, "the and of")).toDF("query_id", "qtext")
-      graft.operators.Ranking.bm25Retrieve(idx, qs, "query_id", "qtext", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // the celled margin-mining scale path, oracle-gated end to end: Y
-    // k-means-celled (2 unrolled Lloyd rounds in the oracle), each x probes
-    // its 2 nearest of 4 cells, the ratio-margin arithmetic runs over the
-    // surviving candidates only (Similarity.marginMinePairsCelled)
-    "q158_margin_mine_celled" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.marginMinePairsCelled(
-        emb.where(col("vec_id") < 150),
-        emb.where(col("vec_id") >= 150 && col("vec_id") < 300),
-        "vec_id", "embedding", k = 4, threshold = 1.0,
-        nCells = 4, nProbe = 2, lloydIters = 2)
-        .orderBy(col("x_id"))
-    }),
-
-    // multi-query BM25 retrieval through an inverted-index plan: postings
-    // build in one map-combined shuffle, the query-term idf frame
-    // broadcasts, per-term contributions sum as exact integer micro-units,
-    // per-query top-5 rides the k-bounded graft_topk aggregate
-    // (operators.Ranking.bm25TopK)
-    "q157_bm25_retrieval" -> ((s, dir) => {
-      import s.implicits._
-      val qs = Seq(
-        (1L, "spark window join"),
-        (2L, "data quality pipeline"),
-        (3L, "the and of")).toDF("query_id", "qtext")
-      graft.operators.Ranking.bm25TopK(
-        t(s, dir, "documents"), "doc_id", "text", qs, "query_id", "qtext", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // trailing-window anomaly detection: per-user 24h RANGE frame, prior-
-    // point stats by self-subtraction, explicit-variance z-score >= 3
-    "q71_rolling_z" -> ((s, dir) => {
-      import graft.operators.Temporal
-      Temporal.rollingZScore(
-        events(s, dir).select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "value",
-        windowSec = 86400L, minPrior = 5, zThreshold = 3.0)
-        .where(col("is_anomaly"))
-        .select(col("event_id"), col("user_id"), col("n_prior"),
-          col("mean_prior"), col("z"))
-        .orderBy(col("event_id"))
-    }),
-
-    // winsorization: clip values to per-group [p5, p95] exact percentiles —
-    // broadcast-stats map-side clipping (operators.Outliers.winsorize)
-    "q72_winsorize" -> ((s, dir) => {
-      import graft.operators.Outliers
-      Outliers.winsorize(
-        events(s, dir).select(col("event_id"), col("event_type"), col("value")),
-        Seq("event_type"), "value", pLo = 0.05, pHi = 0.95)
-        .select(col("event_id"), col("event_type"), col("value_w"), col("clipped"))
-        .orderBy(col("event_id"))
-    }),
-
-    // unigram-LM surprisal quality signal: corpus-fitted token frequencies,
-    // mean -ln p(token) per doc (operators.Ranking.unigramSurprisal)
-    "q73_unigram_surprisal" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.unigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
-        // token-less docs carry a null score; sentinel keeps the gate frame
-        // null-free
-        .withColumn("avg_surprisal", coalesce(col("avg_surprisal"), lit(-1.0)))
-        .orderBy(col("doc_id"))
-    }),
-
-    // fixed-iteration PageRank on the customer->supplier purchase graph:
-    // 3 power iterations, per-round rounding pins cross-engine floats;
-    // the oracle unrolls the same 3 rounds in SQL
-    "q74_pagerank" -> ((s, dir) => {
-      import graft.operators.Graphs
-      // key spaces overlap numerically; parity-encode so customer 5 and
-      // supplier 5 stay distinct vertices. LONG vertices, not the oracle's
-      // "c5"/"s5" strings: every iteration joins and aggregates on the
-      // vertex, and 8-byte keys beat strings in the shuffle, the broadcast
-      // map, and the checkpoint blocks at any scale — the string form is
-      // reconstructed only in the final projection (grouping is identical,
-      // so every per-vertex double matches the string-keyed unroll bit for
-      // bit)
-      val edges = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      Graphs.pageRank(edges, "src", "dst", iterations = 3)
-        .select(
-          when(pmod(col("vertex"), lit(2)) === 0,
-            concat(lit("c"), expr("vertex div 2").cast("string")))
-            .otherwise(concat(lit("s"), expr("(vertex - 1) div 2").cast("string")))
-            .as("vertex"),
-          col("pagerank"))
-        .orderBy(col("vertex"))
-    }),
-
-    // exactly-100 deterministic sample: distributed TopK on the content
-    // hash — exact size AND content-determined membership
-    "q75_sample_exact_k" -> ((s, dir) => {
-      import graft.operators.Sampling
-      Sampling.sampleExactK(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
-        col("doc_id"), k = 100)
-        .orderBy(col("doc_id"))
-    }),
-
-    // JL random projection 64 -> 8 dims: md5-derived directions are exact
-    // multiples of 2^-10, so the oracle recomputes the identical matrix
-    "q76_random_projection" -> ((s, dir) => {
-      Similarity.randomProjection(t(s, dir, "embeddings"), "embedding",
-        outDim = 8, dim = 64)
-        .select(col("vec_id"), posexplode(col("projected")).as(Seq("pos", "component")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"), col("component"))
-        .orderBy(col("vec_id"), col("pos"))
-    }),
-
-    // categorical drift between the first and second half of the event
-    // stream: per-category smoothed probabilities + pointwise KL/PSI terms
-    "q77_category_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      val ev = events(s, dir)
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp")
-      Drift.categoryDrift(ev.where(col("ts") < cut), ev.where(col("ts") >= cut),
-        col("event_type"))
-        .orderBy(col("category"))
-    }),
-
-    // token-distribution drift between the en and de sub-corpora: KL both
-    // ways, Jensen-Shannon, PSI — one summary row
-    "q78_token_drift" -> ((s, dir) => {
-      import graft.operators.Drift
-      val docs = t(s, dir, "documents")
-      Drift.tokenDrift(docs.where(col("lang") === "en"),
-        docs.where(col("lang") === "de"), "text")
-    }),
-
-    // HTML -> text preprocessing: wrap each doc in deterministic markup
-    // (script/style bodies, attributes, comments, entities), strip, hash.
-    // Every pass is an RE2-safe regexp the oracle replays verbatim
-    "q79_strip_html" -> ((s, dir) => {
-      val html = concat(
-        lit("<html><head><style>p{color:red}</style></head><body onload=\"f()\"><p>"),
-        col("text"),
-        lit("</p><br>&amp;lt;<script>var x = 1 < 2;</script><!-- tail --></body></html>"))
-      val stripped = TextFunctions.stripHtml(html)
-      t(s, dir, "documents")
-        .select(col("doc_id"), md5(stripped).as("stripped_md5"),
-          length(stripped).cast("long").as("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // per-document token-distribution entropy (quality signal): fused
-    // one-pass count; oracle recomputes via group-by
-    "q80_token_entropy" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextFunctions.tokenEntropy(col("text")).as("token_entropy"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // one-call per-source curation report; the gate checks the oracle-
-    // expressible columns (gopher/entropy components are gated on their
-    // own as q50/q80 — Catalyst prunes their aggregates out of this plan)
-    "q81_curation_report" -> ((s, dir) => {
-      import graft.operators.Curation
-      Curation.report(t(s, dir, "documents"), "source", "text")
-        .select(col("source"), col("docs"), col("total_tokens"),
-          col("mean_tokens"), col("mean_quality"), col("exact_dup_rate"))
-        .orderBy(col("source"))
-    }),
-
-    // pairwise Pearson correlations in one aggregation pass, explicit
-    // raw-moment formula (no engine-specific streaming estimator)
-    "q82_correlations" -> ((s, dir) => {
-      import graft.operators.Profile
-      Profile.correlations(
-        events(s, dir).withColumn("ts_us", unix_micros(col("ts")).cast("double")),
-        Seq("user_id", "value", "ts_us"))
-        .withColumn("corr", coalesce(col("corr"), lit(-99.0))) // null-free gate
-        .orderBy(col("col_a"), col("col_b"))
-    }),
-
-    // per-group equi-width histogram: one aggregation + a group x bin spine
-    "q83_histogram_by" -> ((s, dir) => {
-      import graft.operators.Binning
-      Binning.histogramBy(events(s, dir), "event_type", "value",
-        lo = 0.0, hi = 500.0, nBins = 10)
-        .orderBy(col("group"), col("bin"))
-    }),
-
-    // mutual information between event type and a user cohort (categorical
-    // feature-selection signal; observed-cells-only, so every log is finite)
-    "q84_mutual_info" -> ((s, dir) => {
-      import graft.operators.Drift
-      Drift.mutualInformation(events(s, dir),
-        col("event_type"), pmod(col("user_id"), lit(10L)))
-        // nmi is defined here (both entropies positive); coalesce anyway to
-        // keep the gate frame null-free under data changes
-        .withColumn("nmi", coalesce(col("nmi"), lit(-1.0)))
-    }),
-
-    // boilerplate-line removal on deterministically synthesized multi-line
-    // docs (corpus texts carry no newlines): per-source nav + copyright
-    // lines appear in 100% of a source's docs -> stripped; a PROMO line on
-    // even doc_ids sits at exactly 50% -> kept (boundary is strict >)
-    "q85_strip_boilerplate" -> ((s, dir) => {
-      import graft.operators.Boilerplate
-      val ml = t(s, dir, "documents").withColumn("ml_text",
-        concat(lit("NAV BAR\n"), col("text"), lit("\nCOPYRIGHT "), col("source"),
-          when(pmod(col("doc_id"), lit(2L)) === 0, lit("\nPROMO")).otherwise(lit(""))))
-      Boilerplate.stripBoilerplate(ml.select(col("doc_id"), col("source"), col("ml_text")),
-        "doc_id", "source", "ml_text", maxDocFrac = 0.5, minDocs = 5L)
-        .select(col("doc_id"), col("source"), md5(col("ml_text")).as("clean_md5"),
-          size(split(col("ml_text"), "\n")).cast("long").as("n_lines"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // personalized PageRank from three seed customers: proximity-to-seed
-    // scores, same deterministic unroll contract as q74
-    "q86_personalized_pagerank" -> ((s, dir) => {
-      import graft.operators.Graphs
-      // same parity-encoded long vertices as q74 (see there); seeds c1/c2/c3
-      // become 2/4/6 in the encoded space
-      val edges = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      Graphs.personalizedPageRank(edges, "src", "dst",
-        seeds = Seq("2", "4", "6"), iterations = 3)
-        .select(
-          when(pmod(col("vertex"), lit(2)) === 0,
-            concat(lit("c"), expr("vertex div 2").cast("string")))
-            .otherwise(concat(lit("s"), expr("(vertex - 1) div 2").cast("string")))
-            .as("vertex"),
-          col("pagerank"))
-        .orderBy(col("vertex"))
-    }),
-
-    // funnel progression signup -> click -> purchase (strictly ordered
-    // first-occurrence times per user), aggregated to the stage histogram
-    "q87_funnel" -> ((s, dir) => {
-      import graft.operators.Temporal
-      Temporal.funnel(events(s, dir), "user_id", "ts", "event_type",
-        stages = Seq("signup", "click", "purchase"))
-        .groupBy(col("stages_reached"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy(col("stages_reached"))
-    }),
-
-    // top-50 adjacent-token collocations by PMI (BPE merge-candidate
-    // scoring); PMI rounds BEFORE ranking so libm last-ulp differences
-    // cannot flip near-equal ranks
-    "q88_collocations" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.collocations(t(s, dir, "documents"), "text",
-        minCount = 5L, topK = 50)
-        .orderBy(col("rank"))
-    }),
-
-    // URL canonicalization + registrable domain — the first dedup key of a
-    // web corpus. The corpus has no URL column, so each doc gets a
-    // deterministically synthesized MESSY url (mixed-case host, default
-    // port, tracking params in leading AND interior positions, trailing
-    // slash, fragment) exercising every normalization rule; pure map-side
-    // codegen (operators.Urls)
-    "q89_url_canonicalize" -> ((s, dir) => {
-      import graft.operators.Urls
-      val url = concat(
-        lit("HTTPS://WWW."), upper(substring(col("source"), 1, 1)),
-        substring(col("source"), 2, 100), lit(".Example.COM:443/docs/"),
-        pmod(col("doc_id"), lit(7L)).cast("string"), lit("/page/"),
-        when(pmod(col("doc_id"), lit(2L)) === 0,
-          concat(lit("?id="), col("doc_id").cast("string"),
-            lit("&utm_source=feed&ref=abc&keep=1")))
-          .otherwise(concat(lit("?utm_source=feed&id="), col("doc_id").cast("string"))),
-        lit("#frag"))
-      t(s, dir, "documents").select(col("doc_id"), url.as("raw_url"))
-        .select(col("doc_id"),
-          Urls.canonicalizeUrl(col("raw_url")).as("canonical_url"),
-          Urls.registrableDomain(col("raw_url")).as("domain"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // shard manifest: deterministic hash-bucketed shard assignment (no
-    // global row_number — one count job sizes the shard space, assignment
-    // is map-side) + per-shard counts and an order-insensitive xor
-    // fingerprint (operators.Export)
-    "q93_shard_manifest" -> ((s, dir) => {
-      import graft.operators.Export
-      Export.shardManifest(
-        Export.shardAssignment(t(s, dir, "documents").select(col("doc_id")),
-          col("doc_id"), docsPerShard = 128L),
-        col("doc_id"))
-        .orderBy(col("shard"))
-    }),
-
-    // corpus-level overlap: per-source MinHash signature (component-wise
-    // min over the source's docs — minwise hashing is a union
-    // homomorphism), pairwise estimated 3-gram Jaccard between sources;
-    // the shuffle carries only (group, component, min) cells
-    // (operators.Dedup.corpusOverlap)
-    "q92_corpus_overlap" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.corpusOverlap(t(s, dir, "documents"), "source", "text",
-        shingleWords = 3, k = 64)
-        .orderBy(col("group_a"), col("group_b"))
-    }),
-
-    // cross-document duplicate-paragraph profile (the corpus-wide twin of
-    // q90's within-doc dedup): same deterministic synthesis — NAV blocks
-    // shared by every doc of a source, mostly-unique leads/bodies; dup =
-    // paragraph text present in >1 distinct doc. Hash-keyed shuffles only
-    // (operators.Dedup.paragraphDupStats)
-    "q94_paragraph_dup_ratio" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val lead = substring(col("text"), 1, 60)
-      val nav = concat(lit("NAV "), col("source"))
-      val body = substring(col("text"), 61, 80)
-      val doc = concat_ws("\n\n", lead, nav, lead, body, nav)
-      val synth = t(s, dir, "documents").select(col("doc_id"), doc.as("text"))
-      Dedup.paragraphDupStats(synth, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    // bigram-LM surprisal (CCNet-style perplexity filtering, one step past
-    // q73's unigram): add-1-smoothed P(b|a) fitted on the corpus itself;
-    // token-less/1-token docs carry the -1 sentinel
-    // (operators.Ranking.bigramSurprisal)
-    "q95_bigram_surprisal" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
-        .withColumn("avg_surprisal", coalesce(col("avg_surprisal"), lit(-1.0)))
-        .orderBy(col("doc_id"))
-    }),
-
-    // canonical-doc selection: q32's near-dup clusters, but the keep policy
-    // is highest-quality-member (n_chars here; ties -> lowest id) instead
-    // of smallest-id — one window shuffle on the cluster key
-    // (operators.Dedup.selectCanonical)
-    "q97_canonical_docs" -> ((s, dir) => {
-      import graft.operators.{Dedup, Graphs}
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq(col("lang"), floor(col("n_chars") / lit(50)).as("len_bucket")),
-        n = 3, threshold = 0.7)
-      val clustered = Graphs.dedupClusters(docs, "doc_id", pairs, "id_a", "id_b")
-        .drop("keep")
-        .join(docs.select(col("doc_id"), col("n_chars").as("quality")), Seq("doc_id"))
-      Dedup.selectCanonical(clustered, "doc_id", "cluster_id", col("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // per-source score calibration: percent-rank of n_chars WITHIN each
-    // source, so one global threshold cuts every source at the same
-    // quantile — one keyed window shuffle, no global sort
-    // (operators.Ranking.calibrateWithinGroup)
-    "q98_calibrated_quality" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.calibrateWithinGroup(
-        t(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars")),
-        groupCols = Seq("source"), score = col("n_chars"), tieBreak = col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // content-defined chunking: boundaries where an 8-char rolling hash
-    // ≡ 0 mod 64 — chunk hashes survive insertions/deletions upstream in
-    // the doc (fixed-offset chunks shift), enabling sub-document dedup
-    // across corpus versions; pure narrow map
-    // (operators.Chunking.contentDefinedChunks)
-    "q99_cdc_chunks" -> ((s, dir) => {
-      import graft.operators.Chunking
-      Chunking.contentDefinedChunks(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // chunk-level cross-version diff — the payoff of q99's content-defined
-    // boundaries: after an edit (every 3rd doc gets a prefix insertion),
-    // what fraction of a doc's chunks survive byte-identical? CDC keeps
-    // all but the insertion-absorbing chunk; fixed-offset chunking would
-    // shift every chunk and share nothing. Hash-keyed join + map-combined
-    // rollup (operators.Chunking.contentDefinedChunks composition)
-    "q100_chunk_version_diff" -> ((s, dir) => {
-      import graft.operators.Chunking
-      // r14: union + one (doc, hash) aggregation instead of distinct +
-      // (doc, hash) equi-join — a v2 chunk instance is "shared" iff its
-      // hash also appears as a v1 chunk of the same doc, so tagging the
-      // two exploded streams and grouping once replaces the old h1
-      // DISTINCT exchange AND the instance-level join shuffle with a
-      // single map-combined aggregation (row-identical: __n2 counts v2
-      // instances per (doc, hash), __in1 flags v1 membership — exactly
-      // the old left-join __m semantics)
-      val docs = t(s, dir, "documents")
-      val v2 = docs.select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, concat(lit("EDIT v2 "), col("text")))
-          .otherwise(col("text")).as("text"))
-      val h1 = Chunking.contentDefinedChunks(docs, "doc_id", "text")
-        .select(col("doc_id"), col("chunk_hash"), lit(0L).as("__w"))
-      val c2 = Chunking.contentDefinedChunks(v2, "doc_id", "text")
-        .select(col("doc_id"), col("chunk_hash"), lit(1L).as("__w"))
-      h1.unionByName(c2)
-        .groupBy(col("doc_id"), col("chunk_hash"))
-        .agg(sum(col("__w")).as("__n2"),
-          max(lit(1L) - col("__w")).as("__in1"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("__n2")).as("n_chunks_v2"),
-          sum(col("__n2") * col("__in1")).as("n_shared"))
-        .where(col("n_chunks_v2") > 0)
-        .withColumn("share_ratio",
-          round(col("n_shared").cast("double") / col("n_chunks_v2"), 4))
-        .orderBy(col("doc_id"))
-    }),
-
-    // count-min sketch: md5-derived hash family, so the oracle recomputes
-    // the IDENTICAL depth×width sketch and the gate hash-compares the
-    // estimates themselves (not just bounds, unlike HLL q31); width 32 on
-    // a 31-token vocab forces real collisions, min-over-depth resolves
-    // them; one-sided estimate >= exact asserted per token
-    // (operators.Sketches)
-    "q101_count_min" -> ((s, dir) => {
-      import graft.operators.Sketches
-      val toks = t(s, dir, "documents")
-        .select(explode(graft.functions.TextFunctions.tokens(lower(col("text"))))
-          .as("token"))
-      // one corpus pass: the exact frequency frame feeds the weighted sketch
-      // construction (linear sketch — bit-identical to hashing every token
-      // instance, but md5 runs over the 31-token vocab, not ~1M instances).
-      // The vocab frame is materialized to the driver (31 rows) rather than
-      // persist()ed: the caller evaluates the returned frame AFTER this
-      // body exits, so a persist here could never be released and would
-      // hold cached blocks for the rest of a 149-query session.
-      val exactDist = toks.groupBy(col("token"))
-        .agg(count(lit(1)).as("exact_count"))
-      val exactRows = java.util.Arrays.asList(exactDist.collect(): _*)
-      val exact = s.createDataFrame(exactRows, exactDist.schema)
-      val sketch = Sketches.countMinSketchWeighted(exact, "token", "exact_count",
-        depth = 4, width = 32)
-      Sketches.countMinEstimate(exact, "token", sketch, depth = 4, width = 32)
-        .withColumn("one_sided_ok", col("cm_estimate") >= col("exact_count"))
-        .orderBy(col("token"))
-    }),
-
-    // BPE merge LEARNING (the training half of a subword tokenizer): 8
-    // iterations of map-combined adjacent-pair counting over the vocab-sized
-    // word frame + a 1-row driver argmax each — driver state is the 8-entry
-    // merge list. Deterministic tie-break (count DESC, lhs ASC, rhs ASC);
-    // the oracle replays the same iterations with relational run-parity
-    // greedy merge application (operators.Bpe.learnBpe)
-    "q102_bpe_learn" -> ((s, dir) => {
-      import graft.operators.Bpe
-      val (merges, vocab) = Bpe.learnBpe(t(s, dir, "documents"), col("text"), numMerges = 8)
-      vocab.unpersist()
-      Bpe.mergesDf(s, merges).orderBy(col("rank"))
-    }),
-
-    // persisted dedup index — the daily-crawl loop: MinHash signatures of
-    // docs 0-399 stored in an audit table over TWO append cycles (PK =
-    // doc_id), then docs 400+ deduped against snapshot(ts) WITHOUT
-    // re-shingling the indexed corpus: banded batch x index equi-join, only
-    // (id, band, bucket) rows through the shuffle. Oracle recomputes the
-    // same md5-affine signatures and restricts the q18 pair SQL to
-    // batch-vs-index pairs (operators.DedupIndex over storage.AuditTable)
-    "q103_incremental_dedup" -> ((s, dir) => {
-      import graft.operators.DedupIndex
-      val base = scratchDir("graft-q103")
-      val docs = t(s, dir, "documents")
-      val ts = java.sql.Timestamp.valueOf(_: String)
-      val t0 = DedupIndex.openOrCreate(s, base)
-      val t1 = DedupIndex.indexBatch(t0, docs.where(col("doc_id") < 200),
-        "doc_id", "text", ts("2024-01-01 00:00:00"))
-      val t2 = DedupIndex.indexBatch(t1,
-        docs.where(col("doc_id") >= 200 && col("doc_id") < 400),
-        "doc_id", "text", ts("2024-01-02 00:00:00"))
-      DedupIndex.dedupAgainst(t2, ts("2024-06-01 00:00:00"),
-        docs.where(col("doc_id") >= 400), "doc_id", "text")
-        .orderBy(col("id_new"), col("id_idx"))
-    }),
-
-    // media perceptual near-dup — the media twin of simhash: blockhash-style
-    // 60-bit pHash (stub kernel over the decoded codepoint stream; integer
-    // seg*60>total bit rule so DuckDB replays it bit-exactly) computed via
-    // the per-partition MediaKernel path, then quadrant-blocked pairing
-    // (Dedup.fingerprintPairs — lossless at hamming<=3, never all-pairs).
-    // Twins = each doc re-encoded with a 4-char in-place edit; most land
-    // within hamming 3 of their original, some drift past it (realistic)
-    "q104_media_phash" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val docs = t(s, dir, "documents")
-      val twins = docs.select((col("doc_id") + 10000L).as("doc_id"),
-        concat(substring(col("text"), 1, 4), lit("zzzz"),
-          expr("substring(text, 9)")).as("text"))
-      val media = docs.select(col("doc_id"), col("text")).unionByName(twins)
-        .select(col("doc_id"), encode(col("text"), "utf-8").as("content"))
-      val hashed = Multimodal.perceptualHashes(media, "doc_id", "content")
-      Dedup.fingerprintPairs(hashed.select(col("doc_id"), col("phash").as("sh")),
-        maxHamming = 3)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // in-engine classifier training + scoring (fastText-style model-based
-    // quality filtering): 3 rounds of full-batch GD on IEEE-exact features
-    // (rational sigmoid, fixed-point gradient sums), then a map-side scoring
-    // pass with the learned weights; the oracle unrolls the identical 3
-    // rounds in SQL (operators.Classifier.trainLinear/score)
-    "q105_quality_classifier" -> ((s, dir) => {
-      import graft.operators.Classifier
-      val docs = t(s, dir, "documents")
-      val ntok = size(split(col("text"), " ")).cast("double")
-      val feats = Seq(
-        col("n_chars").cast("double") / lit(1000.0),
-        ntok / lit(100.0),
-        col("n_chars").cast("double") / ntok / lit(10.0))
-      val label = when(col("lang") === "en", 1.0).otherwise(0.0)
-      val model = Classifier.trainLinear(docs, feats, label,
-        iterations = 3, learningRate = 0.5)
-      Classifier.score(docs, feats, model)
-        .select(col("doc_id"), (col("lang") === "en").as("is_en"),
-          col("quality_score"),
-          (col("quality_score") >= 0.5).as("predicted"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // hard-negative mining for contrastive training: per query vector the
-    // top-5 most-similar corpus vectors with a DIFFERENT label (queries
-    // broadcast, corpus streams; operators.Similarity.hardNegatives)
-    "q106_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(emb, emb.filter(col("vec_id") < 20),
-        "vec_id", "embedding", "label", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // deterministic training-epoch shuffle: reproducible (shard, pos)
-    // address per doc with NO global sort — hash sharding is map-side, the
-    // only shuffle windows within shards (operators.Export.shuffleShard)
-    "q107_shuffle_shard" -> ((s, dir) => {
-      import graft.operators.Export
-      Export.shuffleShard(t(s, dir, "documents").select(col("doc_id")),
-        col("doc_id"), nShards = 8, epoch = 0)
-        .orderBy(col("doc_id"))
-    }),
-
-    // source/domain reputation rollup: per-source doc count, mean length,
-    // short-doc and corpus-wide exact-dup shares, composite health score —
-    // the judge-whole-providers stage (operators.Domains.sourceStats)
-    "q108_source_scores" -> ((s, dir) => {
-      import graft.operators.Domains
-      Domains.sourceStats(t(s, dir, "documents"), "doc_id", "text", "source")
-        .orderBy(col("source"))
-    }),
-
-    // greedy token-budget corpus selection WITHOUT a global sort: priority
-    // bands cumulate on a bands-sized frame, per-row running totals come
-    // from band offset + within-band window (operators.Sampling
-    // .budgetSelect); semantically identical to the oracle's single global
-    // window cumsum
-    "q109_budget_select" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      Sampling.budgetSelect(d, col("doc_id"), col("n_tokens"),
-        col("n_chars").cast("double"), budget = 12000L,
-        minPriority = 0.0, maxPriority = 1000.0, nBands = 20)
-        .select(col("doc_id"), col("n_chars"), col("n_tokens"), col("cum_cost"))
-        .orderBy(col("cum_cost"))
-    }),
-
-    // two-pass heavy hitters: count-min sketch (pass 1, bounded driver
-    // state) filters the instance stream MAP-SIDE — only candidate-token
-    // instances reach the exact-count shuffle (pass 2). One-sidedness makes
-    // candidates a superset of the true heavy set; width 32 on a 31-token
-    // vocab forces collisions, so some candidates arrive un`confirmed` —
-    // the false-positive mechanics the oracle replays exactly
-    // (operators.Sketches.heavyHitters)
-    "q110_heavy_hitters" -> ((s, dir) => {
-      import graft.operators.Sketches
-      val toks = t(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(lower(col("text")))).as("token"))
-      Sketches.heavyHitters(toks, "token", threshold = 900L, depth = 4, width = 32)
-        .orderBy(col("token"))
-    }),
-
-    // winnowing fingerprints (MOSS): rolling 16-gram hashes, rightmost-min
-    // per 16-hash window via the native graft_winnow expression — pure
-    // narrow map + explode, no shuffle; any ≥31-codepoint shared substring
-    // between two docs shares a fingerprint. The oracle replays the hash
-    // family and the rightmost-min selection in DuckDB list SQL
-    // (operators.Dedup.winnowFingerprints)
-    "q111_winnow_fingerprints" -> ((s, dir) => {
-      Dedup.winnowFingerprints(t(s, dir, "documents"), "doc_id", "text",
-        k = 16, w = 16)
-        .orderBy(col("doc_id"), col("pos"))
-    }),
-
-    // temperature (α=0.5) token-budget mixing across sources: weights are
-    // floor(sqrt(mass·10⁶)) — integers — and shares are largest-remainder
-    // apportionment, so allocations sum to exactly the budget and every
-    // step after the map-combined per-source mass rollup is bit-exact in
-    // any engine (operators.Sampling.temperatureAllocate)
-    "q112_mixture_allocate" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val d = t(s, dir, "documents").select(col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      Sampling.temperatureAllocate(d, "source", col("n_tokens"), budget = 20000L)
-        .orderBy(col("source"))
-    }),
-
-    // per-dimension scalar int8 quantization of the embedding corpus +
-    // per-vector reconstruction MSE: dimension ranges are one map-combined
-    // 64-group aggregation packed into a 1-row broadcast; coding is a
-    // narrow map. float→double promotion before every subtraction and an
-    // element-order fold keep codes AND mse engine-exact
-    // (operators.Quantization.int8Quantize). Gate contract: NO raw array
-    // column may reach the driver's pandas comparator (round-7 red:
-    // array<int> is unhashable in sort_values) — the codes array is
-    // flattened to a csv string, full-value-checked against the oracle's
-    // identical flattening
-    "q113_int8_quant" -> ((s, dir) => {
-      import graft.operators.Quantization
-      Quantization.int8Quantize(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("id"),
-          array_join(transform(col("codes"), c => c.cast("string")), ",")
-            .as("codes_csv"),
-          col("mse"))
-        .orderBy(col("id"))
-    }),
-
-    // shingle novelty vs the earlier corpus: fraction of a doc's distinct
-    // 5-gram shingles first seen in THIS doc — the crawl-batch prioritizer.
-    // Shingles shuffle as 60-bit hashes, first-seen is map-combined
-    // min(doc_id), nothing quadratic (operators.Dedup.shingleNovelty)
-    "q114_shingle_novelty" -> ((s, dir) => {
-      Dedup.shingleNovelty(t(s, dir, "documents"), "doc_id", "text", n = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // join-key skew profile of events.user_id: top-20 heaviest keys with
-    // share and skew-vs-mean-occupancy — the pre-join diagnosis for a
-    // 100 TB shuffle. Map-combined counts, 1-row totals broadcast,
-    // TakeOrdered top-K (operators.Profile.keySkewProfile)
-    "q115_key_skew" -> ((s, dir) => {
-      import graft.operators.Profile
-      Profile.keySkewProfile(events(s, dir).select(col("user_id")), "user_id",
-        topK = 20)
-    }),
-
-    // mergeable histogram quantiles over events.value: two map-combined
-    // passes (range + 256 bin counts, a linear sketch), interpolation on a
-    // bins-sized frame — constant state where exact percentile_cont sorts
-    // the full multiset; per-day histograms would merge cell-wise
-    // (operators.Binning.approxQuantiles)
-    "q116_approx_quantiles" -> ((s, dir) => {
-      import graft.operators.Binning
-      Binning.approxQuantiles(events(s, dir).select(col("value")), "value",
-        qs = Seq(0.5, 0.9, 0.95, 0.99), nBins = 256)
-        .orderBy(col("q"))
-    }),
-
-    // per-query ANN quality vs exact ground truth: where does each query's
-    // true nearest neighbour land in the SRP top-10? found + reciprocal
-    // rank (MRR when averaged) — the oracle-checked slice of the
-    // RecallProbe sweep (operators.Similarity.annRecallMrr)
-    "q117_ann_mrr" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.annRecallMrr(emb, emb.where(col("vec_id") < 20),
-        "vec_id", "embedding", k = 10, nPlanes = 8, dim = 64,
-        seed = 42L, probeRadius = 1)
-        .orderBy(col("query_id"))
-    }),
-
-    // top-3 events by value per type via the custom bounded graft_topk
-    // AGGREGATE (sql.TopKPairs): <= k pairs of buffer per group, merged
-    // map-side — the hottest key combines before the shuffle where the
-    // row_number window (the oracle's formulation) drags every row of it
-    // through one task (operators.Ranking.topKPerKey)
-    "q118_topk_per_key" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.topKPerKey(events(s, dir), Seq(col("event_type")),
-        col("value"), col("event_id"), k = 3)
-        .orderBy(col("event_type"), col("rank"))
-    }),
-
-    // per-segment OLS drift trend: six map-combined sufficient statistics
-    // per group, closed-form slope/intercept/R² — the shuffle carries
-    // |groups|×6 doubles whatever the corpus size; x centered at the
-    // corpus epoch (days since 2024-01-01) so n·Σx²−(Σx)² keeps precision
-    // (operators.Trend.groupTrend)
-    "q119_value_trend" -> ((s, dir) => {
-      import graft.operators.Trend
-      val x = (expr("ts_ns div 1000") - lit(1704067200000000L)).cast("double") /
-        lit(86400000000.0)
-      Trend.groupTrend(events(s, dir).withColumn("x", x),
-        Seq(col("event_type")), col("x"), col("value"))
-        .orderBy(col("event_type"))
-    }),
-
-    // distributed top principal component: one FLOPs-bound pass builds the
-    // d×d Gramian via map-combined sums (shuffle ≤ d(d+1)/2 rows per
-    // partition), power iteration runs on the driver over O(d²) state —
-    // corpus-size-independent; fixed 4 iterations + per-step rounding make
-    // the eigenvector SQL-reproducible (operators.Pca.principalComponent)
-    "q120_pca_top_component" -> ((s, dir) => {
-      import graft.operators.Pca
-      Pca.principalComponent(t(s, dir, "embeddings"), "embedding",
-        iterations = 4)
-        .orderBy(col("pos"))
-    }),
-
-    // end-to-end entity resolution over dirty string keys: token-blocked
-    // fuzzy pairs at DISTINCT-name level -> connected components -> each row
-    // mapped to (entity_id, canonical_name, n_members); rows only ever
-    // equi-join the entity map (operators.Fuzzy.resolveEntities)
-    "q121_entity_resolution" -> ((s, dir) => {
-      import graft.operators.Fuzzy
-      Fuzzy.resolveEntities(t(s, dir, "part"), "p_partkey", "p_name",
-        maxDist = 2, maxTokenFreq = Some(1000L))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // temperature (count^0.5) source rebalancing: smallest source keeps
-    // all rows, a k×-larger source keeps sqrt(1/k) of its rows by content
-    // hash — map-side filter against two broadcast relations; the uniform
-    // synthetic sources are re-bucketed 60/30/10 so the rule actually binds
-    // (operators.Sampling.temperatureSample)
-    "q122_temperature_sample" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val bucketed = t(s, dir, "documents").withColumn("src_class",
-        when(pmod(col("doc_id"), lit(10L)) < 6, lit("web"))
-          .when(pmod(col("doc_id"), lit(10L)) < 9, lit("books"))
-          .otherwise(lit("code")))
-      Sampling.temperatureSample(bucketed, "src_class", col("doc_id"))
-        .select(col("doc_id"), col("src_class"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // the NATIVE as-of join exec (plans.AsOfJoinExec: custom LogicalPlan +
-    // strategy + sort-merge SparkPlan via SparkSessionExtensions): each
-    // purchase matched to the user's latest click at-or-before it — one
-    // exchange + sort per side, O(1) merge state, vs the union+window
-    // composition q34 uses. Oracle is DuckDB's own ASOF LEFT JOIN.
-    "q124_native_asof_join" -> ((s, dir) => {
-      import graft.plans.AsOf
-      val ev = events(s, dir)
-      val l = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val r = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id").as("r_user"), col("ts").as("click_ts"))
-        .agg(round(max(col("value")), 6).as("click_value"))
-      // SMJ regime forced: q137 covers the broadcast regime, so the gate
-      // deterministically exercises BOTH physical paths of the exec
-      AsOf.asOfJoin(l, r, Seq("user_id"), Seq("r_user"), "ts", "click_ts",
-          broadcastRight = Some(false))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"),
-          // unmatched rows: sentinel instead of null (the gate's row
-          // comparison treats null-vs-null as a difference)
-          coalesce(col("click_ts"), timestamp_micros(lit(0L))).as("click_ts"),
-          coalesce(col("click_value"), lit(-1.0)).as("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // the SALTED fact x fact hot-key path of the native as-of join
-    // (operators.Skew.saltedAsOfJoin): same query as q124, routed through
-    // a 8-way content salt on the fact side with the click side replicated
-    // per salt — the oracle is the SAME plain ASOF JOIN, pinning that the
-    // salt is invisible in the result
-    "q141_salted_asof" -> ((s, dir) => {
-      import graft.operators.Skew
-      val ev = events(s, dir)
-      val l = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val r = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id").as("r_user"), col("ts").as("click_ts"))
-        .agg(round(max(col("value")), 6).as("click_value"))
-      Skew.saltedAsOfJoin(l, r, Seq("user_id"), Seq("r_user"),
-          "ts", "click_ts", saltBuckets = 8)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"),
-          coalesce(col("click_ts"), timestamp_micros(lit(0L))).as("click_ts"),
-          coalesce(col("click_value"), lit(-1.0)).as("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // BROADCAST regime of the native as-of exec (plans.BroadcastAsOfJoinExec,
-    // forced via the hint so the gate covers it deterministically): each
-    // purchase takes the user's latest click within the PRECEDING HOUR —
-    // the grouped click side is dimension-sized, so it broadcasts whole and
-    // the purchase side never shuffles or sorts; per-key time-sorted tables
-    // are probed by binary upper bound, tolerance checked on the candidate
-    "q137_broadcast_asof" -> ((s, dir) => {
-      import graft.plans.AsOf
-      val ev = events(s, dir)
-      val l = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val r = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id").as("r_user"), col("ts").as("click_ts"))
-        .agg(round(max(col("value")), 6).as("click_value"))
-      AsOf.asOfJoin(l, r, Seq("user_id"), Seq("r_user"), "ts", "click_ts",
-          tolerance = Some(3600L * 1000000L), broadcastRight = Some(true))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"),
-          coalesce(col("click_ts"), timestamp_micros(lit(0L))).as("click_ts"),
-          coalesce(col("click_value"), lit(-1.0)).as("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Z-order (Morton) clustering values over (user_id, ts_ns): the
-    // multi-dimensional storage-layout primitive — rows close in BOTH
-    // dimensions share a z-range, so a partition-local sort on z makes
-    // parquet row-group footers selective on EITHER filter column.
-    // Quantization is an exact bit shift (never double division — epoch-ns
-    // exceeds 2^53), interleave is pure codegen'd column arithmetic; the
-    // only non-map work is the 1-row min/max stats agg
-    // (operators.Layout.zValue)
-    "q138_zorder" -> ((s, dir) => {
-      import graft.operators.Layout
-      Layout.zValue(
-          events(s, dir).select(col("event_id"), col("user_id"), col("ts_ns")),
-          Seq("user_id", "ts_ns"), bits = 20)
-        .select(col("event_id"), col("z_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // the full training-data curation pipeline as ONE oracle-checked
-    // composition — the chain a 100-TB pretraining prep actually runs:
-    // Gopher quality filter (relaxed bounds for the short-doc corpus) →
-    // benchmark decontamination (3-gram overlap vs docs 0-4) → exact dedup
-    // (min-doc_id keeper per identical text) → deterministic per-language
-    // cap (content-hash ranked, partitioning-stable) → fixed-window
-    // sequence packing. Each stage is individually gate-checked
-    // (q50/q52/q13/q53/q56); this entry pins their COMPOSITION end to end.
-    // Scale shape: every shuffle keys on doc_id / gram-hash / lang — the
-    // only window is the per-language pack, over the capped (bounded) set
-    "q140_curation_pipeline" -> ((s, dir) => {
-      import graft.operators.{Dedup, Materialize, Packing, Sampling}
-      val docs = t(s, dir, "documents")
-      // materialize the two multiply-consumed intermediates: without them
-      // the composed plan re-scans documents.parquet once per downstream
-      // branch (4 scans measured in the round-8 plan dump) and re-runs the
-      // decontaminate n-gram join per branch. With them the corpus is
-      // scanned exactly twice (gopher pass + the pruned benchmark slice) —
-      // the same cacheAsParquet discipline the flow layer applies between
-      // pipeline stages
-      val filtered = Materialize(docs.where(TextFunctions.gopherPass(col("text"),
-        minWords = 5L, minStopwords = 1L, minAlphaFrac = 0.5)))
-      val flags = Dedup.decontaminate(filtered, "doc_id", "text",
-        benchmark = docs.where(col("doc_id") < 5), benchTextCol = "text",
-        n = 3, maxHits = 0L)
-      val clean = Materialize(filtered.join(
-        flags.where(!col("contaminated")).select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-      val dups = Dedup.exactDuplicates(clean, "doc_id", "text")
-        .select(col("dup_id").as("doc_id"))
-      val deduped = clean.join(dups, Seq("doc_id"), "left_anti")
-      val capped = Sampling.cappedPerKey(deduped, Seq(col("lang")),
-        col("doc_id"), maxPerKey = 50)
-      Packing.packSequences(
-          capped.select(col("doc_id"), col("lang"), col("text")),
-          shardCols = Seq(col("lang")), orderCol = col("doc_id"),
-          tokenCol = TextFunctions.tokenCount(col("text")), windowTokens = 512L)
-        .select(col("doc_id"), col("lang"), col("n_tokens"),
-          col("start_offset"), col("chunk_id"), col("spans_boundary"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // native keyed interval join: purchases inside [click_ts, click_ts+6h)
-    // per user — custom LogicalPlan + strategy + single-sweep exec
-    // (plans/IntervalJoin.scala). The bucketed compose (q35) replicates each
-    // interval once per bucket it spans; this shuffles each side exactly
-    // once and keeps state bounded by per-key interval overlap
-    "q125_native_interval_join" -> ((s, dir) => {
-      import graft.plans.IntervalJoin
-      val ev = events(s, dir)
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val iv = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-        .distinct()
-        .withColumn("click_end", col("click_ts") + expr("INTERVAL 6 HOURS"))
-      IntervalJoin.intervalJoin(p, iv, Seq("user_id"), Seq("c_user"),
-        "ts", "click_ts", "click_end")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"), col("click_ts"))
-        .orderBy(col("event_id"), col("click_ts"))
-    }),
-
-    // retrieval evaluation: nDCG@10 of the exact-cosine system against
-    // deterministic synthetic judgments (rel keyed on id arithmetic so
-    // DuckDB recomputes them) — graded-relevance twin of the q117 MRR
-    // gate. DCG/IDCG are exact long sums of integer discount units
-    // (operators.Ranking.ndcgAtK): no float accumulation order anywhere
-    "q145_ndcg" -> ((s, dir) => {
-      import graft.operators.{Ranking, Similarity}
-      val emb = t(s, dir, "embeddings")
-      val results = Similarity.bruteForceTopK(emb,
-          emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val qrels = emb.select(col("vec_id").as("doc_id"))
-        .crossJoin(broadcast(
-          emb.where(col("vec_id") < 5).select(col("vec_id").as("query_id"))))
-        .select(col("query_id"), col("doc_id"),
-          when((col("doc_id") + col("query_id")) % 7 === 0, lit(3L))
-            .when((col("doc_id") + col("query_id")) % 7 === 1, lit(1L))
-            .otherwise(lit(0L)).as("rel"))
-      Ranking.ndcgAtK(results, qrels, k = 10)
-        .select(col("query_id"), col("dcg_units"), col("idcg_units"),
-          coalesce(col("ndcg"), lit(-1.0)).as("ndcg"))
-        .orderBy(col("query_id"))
-    }),
-
-    // binary-relevance twin of q145: precision/recall@10 of the same
-    // system against the same judgments (rel > 0 = relevant) — pure
-    // integer counting, ratios rounded once
-    // (operators.Ranking.precisionRecallAtK)
-    "q146_precision_recall" -> ((s, dir) => {
-      import graft.operators.{Ranking, Similarity}
-      val emb = t(s, dir, "embeddings")
-      val results = Similarity.bruteForceTopK(emb,
-          emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val qrels = emb.select(col("vec_id").as("doc_id"))
-        .crossJoin(broadcast(
-          emb.where(col("vec_id") < 5).select(col("vec_id").as("query_id"))))
-        .select(col("query_id"), col("doc_id"),
-          when((col("doc_id") + col("query_id")) % 7 === 0, lit(3L))
-            .when((col("doc_id") + col("query_id")) % 7 === 1, lit(1L))
-            .otherwise(lit(0L)).as("rel"))
-      Ranking.precisionRecallAtK(results, qrels, k = 10)
-        .select(col("query_id"), col("n_hits"), col("n_relevant"),
-          col("precision_at_k"),
-          coalesce(col("recall_at_k"), lit(-1.0)).as("recall_at_k"))
-        .orderBy(col("query_id"))
-    }),
-
-    // hybrid retrieval: BM25 lexical top-20 and exact-cosine vector top-20
-    // fused by reciprocal-rank fusion (operators.Ranking.rrfFuse) — the
-    // combiner every hybrid search stack runs. Both lists are k-bounded
-    // retrieval outputs, the fusion sums INTEGER micro-units (no float
-    // accumulation order), docs and embeddings align 1:1 by id
-    "q144_hybrid_rrf" -> ((s, dir) => {
-      import graft.operators.{Ranking, Similarity}
-      val bm = Ranking.bm25(t(s, dir, "documents"), "doc_id", "text",
-        Seq("spark", "window", "join"))
-      val lexical = Ranking.topKPerKey(bm, Seq(lit(1).as("__g")),
-          col("bm25"), col("doc_id"), k = 20)
-        .select(col("id").as("doc_id"), col("rank"))
-      val emb = t(s, dir, "embeddings")
-      val vector = Similarity.bruteForceTopK(emb,
-          emb.where(col("vec_id") === 0), "vec_id", "embedding", k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      Ranking.rrfFuse(Seq(lexical, vector), "doc_id", "rank", topK = 10)
-        .orderBy(col("rank"))
-    }),
-
-    // late-interaction retrieval (ColBERT-style MaxSim with one query
-    // vector): docs are CHUNK SETS (4 consecutive embeddings each);
-    // score(query, doc) = max cosine over the doc's chunks, so one strong
-    // passage retrieves a long document pooled embeddings would dilute.
-    // Queries broadcast; the shuffle carries |queries| x |docs| maxes,
-    // never per-chunk rows; top-k per query is the k-bounded graft_topk
-    // aggregate (operators.Similarity.lateInteractionTopK)
-    "q143_late_interaction" -> ((s, dir) => {
-      import graft.operators.Similarity
-      val emb = t(s, dir, "embeddings")
-      val chunks = emb.select((col("vec_id") / 4).cast("long").as("doc_id"),
-        col("embedding"))
-      val queries = emb.where(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-      Similarity.lateInteractionTopK(chunks, "doc_id", "embedding",
-          queries, "query_id", "q_vec", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // the SALTED hot-key path of the native interval join
-    // (operators.Skew.saltedIntervalJoin) — q141's twin: same query as
-    // q125, routed through an 8-way content salt with the interval side
-    // replicated per salt; the oracle is the SAME plain interval join,
-    // pinning that the salt leaves the pair multiset untouched
-    "q142_salted_interval" -> ((s, dir) => {
-      import graft.operators.Skew
-      val ev = events(s, dir)
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val iv = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-        .distinct()
-        .withColumn("click_end", col("click_ts") + expr("INTERVAL 6 HOURS"))
-      Skew.saltedIntervalJoin(p, iv, Seq("user_id"), Seq("c_user"),
-          "ts", "click_ts", "click_end", saltBuckets = 8)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"), col("click_ts"))
-        .orderBy(col("event_id"), col("click_ts"))
-    }),
-
-    // DSIR importance log-weights: hashed-unigram likelihood ratio of the
-    // English (target) slice vs the raw corpus — resampling ∝ exp(weight)
-    // tilts a crawl toward the target domain with no classifier training.
-    // Bucket counts map-combine to ≤1024 rows, the score table broadcasts,
-    // the only real shuffle keys on doc_id (operators.Ranking.dsirLogWeights)
-    "q126_dsir_weights" -> ((s, dir) => {
-      import graft.operators.Ranking
-      Ranking.dsirLogWeights(t(s, dir, "documents"), "doc_id", "text",
-        isTarget = col("lang") === "en", buckets = 1024)
-        .orderBy(col("doc_id"))
-    }),
-
-    // persisted IVF ANN index: train-once / ingest-daily / query-any-
-    // snapshot over the storage layer — centroids trained on the FIRST
-    // batch only, the second batch ingests against them frozen, queries
-    // probe 2 of 8 cells of the merged snapshot (operators.AnnIndex)
-    "q134_persisted_ann" -> ((s, dir) => {
-      import graft.operators.AnnIndex
-      // index memoized per sfDir (see ivfIndexDir): the timed body is the
-      // SEARCH — probe 2 of 8 cells of the merged snapshot — not training
-      val base = ivfIndexDir(s, dir)
-      val emb = t(s, dir, "embeddings")
-      AnnIndex.queryIvf(s, base, emb.where(col("vec_id") < 20),
-        "vec_id", "embedding", k = 5, nProbe = 2, ts0("2024-06-01 00:00:00"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // PQ-coded persisted ANN index — q134's operational loop with CODES-ONLY
-    // storage (m longs per row instead of dim doubles; the raw-vector table
-    // would be as large as the corpus at 100 TB). Coarse centroids AND
-    // residual codebooks train on the first batch and FREEZE; the second
-    // batch ingests against them (encode is a narrow map); queries probe 2
-    // of 8 cells and score members by asymmetric distance — m table lookups
-    // per candidate, no vector is ever read (operators.AnnIndex.buildIvfPq/
-    // queryIvfPq; exact-cosine re-rank variant spec-covered)
-    "q135_persisted_ivfpq" -> ((s, dir) => {
-      import graft.operators.AnnIndex
-      // index memoized per sfDir (shared with q136): the timed body is the
-      // ADC search — m table lookups per candidate — not PQ training
-      val base = ivfPqIndexDir(s, dir)
-      val emb = t(s, dir, "embeddings")
-      AnnIndex.queryIvfPq(s, base, emb.where(col("vec_id") < 20),
-        "vec_id", "embedding", k = 5, nProbe = 2, ts0("2024-06-01 00:00:00"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ADC shortlist + exact-cosine re-rank from the codes-only index: top-50
-    // candidates per query by ADC (m table lookups each), then ONLY those
-    // 50 rows fetch their raw vector from the source table by id and
-    // re-score exactly — quantization noise never reaches the final order
-    // (operators.AnnIndex.queryIvfPqRerank)
-    "q136_ivfpq_rerank" -> ((s, dir) => {
-      import graft.operators.AnnIndex
-      // same memoized codes-only index as q135: the timed body is ADC
-      // shortlist + exact re-rank of 50 rows, not index construction
-      val base = ivfPqIndexDir(s, dir)
-      val emb = t(s, dir, "embeddings")
-      AnnIndex.queryIvfPqRerank(s, base, emb.where(col("vec_id") < 20), emb,
-        "vec_id", "embedding", k = 5, nProbe = 2, ts0("2024-06-01 00:00:00"),
-        shortlist = 50)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // leakage-safe split: near-dup clusters (q32's detector) hash to ONE
-    // split as a unit, so no near-copy pair straddles the train/test fence
-    // and held-out metrics can't silently measure memorisation
-    // (operators.Sampling.leakageSafeSplit)
-    "q133_leakage_safe_split" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq(col("lang"), floor(col("n_chars") / lit(50)).as("len_bucket")),
-        n = 3, threshold = 0.7)
-      Sampling.leakageSafeSplit(docs, "doc_id", pairs, "id_a", "id_b",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy(col("doc_id"))
-    }),
-
-    // quality-filter ablation matrix: one combination-of-verdicts row per
-    // observed bitmask with its doc count — marginals, unique removals and
-    // survivor counts for every single-filter ablation from ONE corpus
-    // pass; shuffle is <= 2^4 rows (operators.Curation.filterAblation)
-    "q132_filter_ablation" -> ((s, dir) => {
-      import graft.operators.Curation
-      import graft.functions.TextFunctions
-      Curation.filterAblation(t(s, dir, "documents"), Seq(
-        "f_short" -> (col("n_chars") < 200),
-        "f_non_en" -> (col("lang") =!= "en"),
-        "f_few_tokens" -> (TextFunctions.tokenCount(col("text")) < 30),
-        "f_repetitive" -> (TextFunctions.distinctTokenRatio(col("text")) < 0.5)))
-        .orderBy(col("f_short"), col("f_non_en"), col("f_few_tokens"),
-          col("f_repetitive"))
-    }),
-
-    // pre-flight join sizing WITHOUT running the join: count-min inner
-    // product (min over depths of Σ cmA·cmB — one-sided by construction)
-    // estimates |lineitem ⋈ urgent orders|; both sides reduce map-combined
-    // to depth×width cells first (Sketches.cmJoinSizeEstimate). The exact
-    // join runs alongside only to exhibit the bound
-    "q131_cm_join_size" -> ((s, dir) => {
-      import graft.operators.Sketches
-      val li = t(s, dir, "lineitem").select(col("l_orderkey").as("k"))
-      val ord = t(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("k"))
-      val est = Sketches.cmJoinSizeEstimate(
-        Sketches.countMinSketch(li, "k", depth = 4, width = 2048),
-        Sketches.countMinSketch(ord, "k", depth = 4, width = 2048),
-        depth = Some(4))
-      val exact = li.join(ord, Seq("k")).agg(count(lit(1)).as("exact_rows"))
-      est.crossJoin(exact) // 1 row × 1 row
-        .withColumn("one_sided_ok", col("cm_join_estimate") >= col("exact_rows"))
-    }),
-
-    // length-bucketed batching: per-lang shards sort by token count and cut
-    // fixed-count batches — padded-batch waste minimisation (the dynamic-
-    // batching layout for encoder training / batched inference). One window
-    // shuffle per shard + map-combined batch stats (Packing
-    // .lengthBucketedBatches)
-    "q130_length_batches" -> ((s, dir) => {
-      import graft.operators.Packing
-      import graft.functions.TextFunctions
-      Packing.lengthBucketedBatches(t(s, dir, "documents"), Seq(col("lang")),
-          TextFunctions.tokenCount(col("text")), col("doc_id"), batchSize = 16)
-        .select(col("lang"), col("batch_idx"), col("n_docs"), col("max_tokens"),
-          col("sum_tokens"), col("padding_waste"))
-        .orderBy(col("lang"), col("batch_idx"))
-    }),
-
-    // forward as-of with tolerance on the native exec: each purchase's
-    // NEXT click within 2h (attribution lookahead) — pandas merge_asof's
-    // direction/tolerance contract at sort-merge cost (plans.AsOfJoinExec)
-    "q129_native_asof_forward" -> ((s, dir) => {
-      import graft.plans.AsOf
-      val ev = events(s, dir)
-      val l = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          round(col("value"), 6).as("purchase_value"))
-      val r = ev.where(col("event_type") === "click")
-        .groupBy(col("user_id").as("r_user"), col("ts").as("click_ts"))
-        .agg(round(max(col("value")), 6).as("click_value"))
-      AsOf.asOfJoin(l, r, Seq("user_id"), Seq("r_user"), "ts", "click_ts",
-          direction = "forward", tolerance = Some(2L * 3600L * 1000000L))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("purchase_value"),
-          coalesce(col("click_ts"), timestamp_micros(lit(0L))).as("click_ts"),
-          coalesce(col("click_value"), lit(-1.0)).as("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // per-year distinct-partkey cardinality via the bounded graft_kmv
-    // aggregate (sql.KmvSketch): buffer = 128 longs per group regardless of
-    // input size, map-combined; estimate = (k-1)·2^60/kth, exact below k
-    "q127_kmv_distinct" -> ((s, dir) => {
-      import graft.operators.Sketches
-      val sk = Sketches.kmvSketch(t(s, dir, "lineitem"),
-        Seq(year(col("l_shipdate")).cast("long").as("yr")), col("l_partkey"), 128)
-      sk.select(col("yr"), size(col("kmv")).cast("long").as("k_used"),
-          round(Sketches.kmvEstimate(col("kmv"), 128), 4).as("est_distinct"))
-        .orderBy(col("yr"))
-    }),
-
-    // corpus-overlap audit from MERGED sketches: distinct partkeys shipped
-    // in each date half, their union, and the intersection estimate —
-    // computed entirely from two 256-long arrays, the roll-up HLL can't do
-    "q128_kmv_overlap" -> ((s, dir) => {
-      import graft.operators.Sketches
-      val k = 256
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"),
-          (col("l_shipdate") < lit("1997-01-01").cast("timestamp")).as("early"))
-      val sides = Sketches.kmvSketch(li, Seq(col("early")), col("l_partkey"), k)
-      val a = sides.where(col("early")).select(col("kmv").as("kmv_a"))
-      val b = sides.where(!col("early")).select(col("kmv").as("kmv_b"))
-      a.crossJoin(b).select( // 1 row × 1 row
-          round(Sketches.kmvEstimate(col("kmv_a"), k), 4).as("est_early"),
-          round(Sketches.kmvEstimate(col("kmv_b"), k), 4).as("est_late"),
-          round(Sketches.kmvEstimate(
-            Sketches.kmvMerge(col("kmv_a"), col("kmv_b"), k), k), 4).as("est_union"),
-          round(Sketches.kmvIntersectEstimate(col("kmv_a"), col("kmv_b"), k), 4)
-            .as("est_overlap"))
-    }),
-
-    // directional near-containment (boilerplate-wrapped / quoted-in-full
-    // docs): PPJoin-style rarest-first prefix filtering over character
-    // 7-grams — only ⌊0.2·|X|⌋+1 prefix grams join the inverted index,
-    // hot grams (>50 docs) capped out of candidate generation
-    // (operators.Dedup.containmentPairs)
-    "q123_containment_pairs" -> ((s, dir) => {
-      import graft.operators.Dedup
-      Dedup.containmentPairs(
-        t(s, dir, "documents").where(col("lang") === "en"),
-        "doc_id", "text", n = 7, threshold = 0.8, maxGramFreq = 50L)
-        .orderBy(col("id_contained"), col("id_container"))
-    }),
-
-    // code-vs-prose signals (mix curation: route source code and prose to
-    // different pipelines): punct density / semicolons per line / indent
-    // fraction + threshold gate, all map-side codegen; every 7th doc is
-    // synthesized code-like so both branches are exercised
-    // (functions.TextFunctions.codePunctDensity/semicolonPerLine/
-    // indentLineFrac/isCodeLike)
-    "q96_code_signals" -> ((s, dir) => {
-      import graft.functions.TextFunctions
-      val code = concat(lit("def f_"), col("doc_id").cast("string"),
-        lit("(x) {\n    return x + "), col("doc_id").cast("string"),
-        lit(";\n    }\n"), substring(col("text"), 1, 40))
-      val synth = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 7 === 0, code).otherwise(col("text")).as("text"))
-      synth.select(col("doc_id"),
-        TextFunctions.codePunctDensity(col("text")).as("punct_density"),
-        TextFunctions.semicolonPerLine(col("text")).as("semis_per_line"),
-        TextFunctions.indentLineFrac(col("text")).as("indent_frac"),
-        TextFunctions.isCodeLike(col("text")).as("is_code"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // embedding-based decontamination: every 200th vector plays the eval
-    // set (disjoint from the scored corpus), the rest get their max cosine
-    // to it — the semantic twin of q52's n-gram decontamination; eval side
-    // broadcast, |corpus|×|eval| fused-codegen cosines map-side
-    // (operators.Similarity.decontaminateByEmbedding)
-    "q91_embed_decontaminate" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val evalSet = emb.where(pmod(col("vec_id"), lit(200L)) === 0)
-      // spread the scoring work: the embeddings table is one ~10MB input
-      // split locally, which would put the whole map-side cosine loop on a
-      // single task (same production sizing note as the media payloads —
-      // at real scale input splits provide the parallelism natively)
-      val corpus = emb.where(pmod(col("vec_id"), lit(200L)) =!= 0)
-        .repartition(s.sparkContext.defaultParallelism)
-      Similarity.decontaminateByEmbedding(corpus, "vec_id", "embedding",
-        evalSet, "vec_id", "embedding", threshold = 0.3)
-        .orderBy(col("vec_id"))
-    }),
-
-    // within-document paragraph dedup: first occurrence survives, order
-    // preserved. Corpus texts carry no newlines, so docs are synthesized
-    // with a repeated lead paragraph + a repeated nav block (same
-    // deterministic-synthesis pattern as q85); one doc-keyed shuffle
-    // (operators.Dedup.dedupParagraphs)
-    "q90_paragraph_dedup" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val lead = substring(col("text"), 1, 60)
-      val nav = concat(lit("NAV "), col("source"))
-      val body = substring(col("text"), 61, 80)
-      val doc = concat_ws("\n\n", lead, nav, lead, body, nav)
-      val synth = t(s, dir, "documents")
-        .select(col("doc_id"), doc.as("text"))
-      Dedup.dedupParagraphs(synth, "doc_id", "text")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q30_value_percentiles" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(
-          round(expr("percentile(value, 0.5)"), 6).as("p50"),
-          round(expr("percentile(value, 0.9)"), 6).as("p90"),
-          round(min(col("value")), 6).as("vmin"),
-          round(max(col("value")), 6).as("vmax"))
-        .orderBy(col("event_type"))
-    }))
-
-  /** Ingest two event-derived batches into a fresh audit table and snapshot.
-    * Exercises append, hive-partitioned region layout, window dedup and
-    * (optionally) compaction inside the driver's correctness gate. The
-    * `pointLookup` variant (q139) opts into PK bloom sidecars, z-orders
-    * the compacted region, and reads back through `snapshotPoint` — the
-    * bloom-pruned point path — for the 20 lowest user_ids ≡ 0 (mod 7). */
-  private def storageRoundTrip(s: SparkSession, dir: String, compactFirst: Boolean,
-      pointLookup: Boolean = false): DataFrame = {
-    import graft.storage._
-    import org.apache.spark.sql.expressions.Window
-    val base = scratchDir("graft-q24")
-    val ev = events(s, dir)
-    // coalesce the small post-shuffle batches so each appended region is a
-    // handful of right-sized files, not one tiny file per shuffle partition
-    val batch1 = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id"))
-      .agg(min(col("event_id")).as("ref_event"))
-      .withColumn("src", lit("signup"))
-      .coalesce(4)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-    val batch2 = ev.filter(col("event_type") === "purchase")
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("user_id"), col("event_id").as("ref_event"), lit("purchase").as("src"))
-      .coalesce(4)
-
-    val meta = if (pointLookup) Map(AuditTable.PkBloomKey -> "true")
-      else Map.empty[String, String]
-    val t0 = Storage.getOrCreateTable(s, base,
-      AuditTableInfo("user_state", Seq("user_id"), meta, retainHistory = true))
-    val t1 = t0.append(batch1, None, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-    val t2 = t1.append(batch2, None, java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))
-    val t3 = if (compactFirst)
-      t2.compact(java.sql.Timestamp.valueOf("2024-01-03 00:00:00"),
-        partitioner = TotalCellsPartitioner(),
-        zOrderBy = if (pointLookup) Seq("user_id", "ref_event") else Nil)
-    else t2
-    val asOf = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    if (!pointLookup)
-      t3.snapshot(asOf).get
-        .select(col("user_id"), col("ref_event"), col("src"))
-        .orderBy(col("user_id"))
-    else {
-      val keys = t3.snapshot(asOf).get
-        .where(pmod(col("user_id"), lit(7L)) === 0L)
-        .select(col("user_id")).orderBy(col("user_id")).limit(20)
-        .collect().map(_.getLong(0)).toSeq
-      t3.snapshotPoint(asOf, keys.map(Seq(_)))
-        .get
-        .select(col("user_id"), col("ref_event"), col("src"))
-        .orderBy(col("user_id"))
-    }
-  }
-
-  /** One unrolled BPE training iteration for the q39/q102 oracles. Mirrors
-    * [[graft.operators.Bpe]] exactly: pc = map-combined adjacent-pair
-    * counts, b = 1-row argmax (count DESC, pair ASC), s = greedy
-    * left-to-right non-overlapping merge application. The greedy pass is
-    * relational here (run-parity: within a run of consecutive matching
-    * positions only even offsets merge — provably identical to the Scala
-    * side's fold, since a freshly merged symbol can never re-match as the
-    * pair's left element). */
-  private def bpeIterBlock(i: Int, floored: Boolean = false): String = {
-    val prev = s"s${i - 1}"
-    // floored: pair COUNTING sees only retained (cnt >= floor) words —
-    // minCount-truncated training — while merge APPLICATION below still
-    // covers every word, so sub-floor words end up with exactly the
-    // rank-order applyMerges fold (the serving-time OOV fallback)
-    val floorPred = if (floored) " AND cnt >= (SELECT f FROM fl)" else ""
-    s"""
-       |pc$i AS (
-       |  SELECT pr.s1 AS s1, pr.s2 AS s2, CAST(sum(cnt) AS BIGINT) AS pcnt FROM (
-       |    SELECT cnt, unnest(list_transform(generate_series(1, len(syms)-1),
-       |      i -> {'s1': syms[i], 's2': syms[i+1]})) AS pr
-       |    FROM $prev WHERE len(syms) > 1$floorPred
-       |  ) GROUP BY 1, 2
-       |),
-       |b$i AS (SELECT s1 AS l, s2 AS r, pcnt FROM pc$i ORDER BY pcnt DESC, s1, s2 LIMIT 1),
-       |s$i AS (
-       |  SELECT word, cnt,
-       |    list_filter(
-       |      list_transform(generate_series(1, len(syms)), i ->
-       |        CASE WHEN act[i] THEN syms[i] || syms[i+1]
-       |             WHEN i > 1 AND act[i-1] THEN NULL
-       |             ELSE syms[i] END),
-       |      x -> x IS NOT NULL) AS syms
-       |  FROM (
-       |    SELECT word, cnt, syms,
-       |      list_transform(generate_series(1, len(syms)), i ->
-       |        m[i] AND ((i - coalesce(list_max(list_filter(generate_series(1, i-1),
-       |          p -> NOT m[p])), 0) - 1) % 2 = 0)) AS act
-       |    FROM (
-       |      SELECT word, cnt, syms,
-       |        list_transform(generate_series(1, len(syms)), i ->
-       |          i < len(syms) AND syms[i] = b.l AND syms[i+1] = b.r) AS m
-       |      FROM $prev, b$i b
-       |    )
-       |  )
-       |)""".stripMargin
-  }
-
-  /** Shared DuckDB replay of the PQ-coded persisted index up to the
-    * per-(query, neighbor) ADC distance relation `agg` — q135 ranks it
-    * directly, q136 re-ranks an ADC shortlist by exact cosine. */
-  private val ivfPqReplayPrefix: String =
-    """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), eb AS (
-        |  SELECT vec_id, v FROM e WHERE vec_id < 250
-        |), c0 AS (
-        |  SELECT list(v ORDER BY vec_id) AS cs FROM (SELECT vec_id, v FROM eb ORDER BY vec_id LIMIT 8)
-        |), a1 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM eb, c0)
-        |), u1 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a1)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c1 AS (
-        |  SELECT list(coalesce(u1.cent, c0.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c0 LEFT JOIN u1 ON u1.cell = t.i
-        |  GROUP BY c0.cs
-        |), a2 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM eb, c1)
-        |), u2 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a2)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c2 AS (
-        |  SELECT list(coalesce(u2.cent, c1.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c1 LEFT JOIN u2 ON u2.cell = t.i
-        |  GROUP BY c1.cs
-        |), asg AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c2)
-        |), r AS (
-        |  SELECT a.vec_id, a.cell,
-        |    list_transform(range(0, 64), d ->
-        |      a.v[CAST(d AS INT)+1] - cs[CAST(a.cell AS INT)+1][CAST(d AS INT)+1]) AS res
-        |  FROM asg a, c2
-        |), rsub AS (
-        |  SELECT vec_id, cell, CAST(t.j AS INT) AS j,
-        |    res[CAST(t.j*16+1 AS INT):CAST(t.j*16+16 AS INT)] AS sv
-        |  FROM r CROSS JOIN range(0, 4) t(j)
-        |), p0 AS (
-        |  SELECT j, list(sv ORDER BY vec_id) AS cs
-        |  FROM (SELECT vec_id, j, sv FROM rsub WHERE vec_id < 250
-        |        QUALIFY row_number() OVER (PARTITION BY j ORDER BY vec_id) <= 8)
-        |  GROUP BY j
-        |), pa1 AS (
-        |  SELECT vec_id, j, sv, list_position(d, list_min(d)) - 1 AS cell
-        |  FROM (
-        |    SELECT rsub.vec_id, rsub.j AS j, sv,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM rsub JOIN p0 ON rsub.j = p0.j
-        |    WHERE rsub.vec_id < 250)
-        |), pu1 AS (
-        |  SELECT j, cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT j, cell, pos, avg(x) AS m
-        |    FROM (SELECT j, cell, generate_subscripts(sv, 1) AS pos, unnest(sv) AS x FROM pa1)
-        |    GROUP BY j, cell, pos)
-        |  GROUP BY j, cell
-        |), pc1 AS (
-        |  SELECT g.j, list(coalesce(pu1.cent, p0.cs[CAST(g.c AS INT)+1]) ORDER BY g.c) AS cs
-        |  FROM (SELECT CAST(t.j AS INT) AS j, CAST(t2.c AS INT) AS c
-        |        FROM range(0, 4) t(j) CROSS JOIN range(0, 8) t2(c)) g
-        |  JOIN p0 ON p0.j = g.j
-        |  LEFT JOIN pu1 ON pu1.j = g.j AND pu1.cell = g.c
-        |  GROUP BY g.j
-        |), codes AS (
-        |  SELECT vec_id, cell, j, list_position(d, list_min(d)) - 1 AS code
-        |  FROM (
-        |    SELECT rsub.vec_id, rsub.cell, rsub.j AS j,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM rsub JOIN pc1 ON rsub.j = pc1.j)
-        |), probe AS (
-        |  SELECT vec_id, cell,
-        |    list_transform(range(0, 64), d ->
-        |      v[CAST(d AS INT)+1] - cs[CAST(cell AS INT)+1][CAST(d AS INT)+1]) AS qres
-        |  FROM (
-        |    SELECT q.vec_id, q.v, t.i AS cell, cs,
-        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |        list_sum(list_transform(range(0, 64),
-        |          d -> (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1])
-        |             * (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1]))), t.i) AS rn
-        |    FROM (SELECT vec_id, v FROM e WHERE vec_id < 20) q
-        |    CROSS JOIN range(0, 8) t(i) CROSS JOIN c2)
-        |  WHERE rn <= 2
-        |), sc AS (
-        |  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id, c.j,
-        |    list_sum(list_transform(range(0, 16), i ->
-        |      (p.qres[CAST(c.j*16 + i AS INT)+1] - k.cs[CAST(c.code AS INT)+1][CAST(i AS INT)+1])
-        |      * (p.qres[CAST(c.j*16 + i AS INT)+1] - k.cs[CAST(c.code AS INT)+1][CAST(i AS INT)+1]))) AS dj
-        |  FROM probe p
-        |  JOIN codes c ON p.cell = c.cell AND p.vec_id <> c.vec_id
-        |  JOIN pc1 k ON k.j = c.j
-        |), agg AS (
-        |  SELECT query_id, neighbor_id,
-        |    round(sum(dj), 6) AS adc_dist
-        |  FROM sc GROUP BY query_id, neighbor_id
-        |)
-""".stripMargin
-
-  private val bpeNumMerges = 8
-
-  /** Shared CTE prefix: word counts, char symbolisation, 8 unrolled
-    * iterations. `s8` = every distinct word fully tokenised with the
-    * learned table; `b1..b8` = the merge sequence. `floored` trains on the
-    * minCount-truncated corpus (floor = doc count via the `fl` CTE) while
-    * still applying merges to every word — the q161 OOV-serving replay. */
-  private def bpeTrainingCtes(floored: Boolean): String =
-    (if (floored)
-       "WITH fl AS (SELECT CAST(count(*) AS BIGINT) AS f FROM documents),\n"
-     else "WITH ") +
-      """w0 AS (
-      |  SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-      |    SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word FROM documents
-      |  ) GROUP BY word
-      |),
-      |s0 AS (
-      |  SELECT word, cnt,
-      |    list_transform(generate_series(1, len(word)), i -> word[i]) AS syms
-      |  FROM w0
-      |),""".stripMargin +
-      (1 to bpeNumMerges).map(i => bpeIterBlock(i, floored)).mkString(",")
-
-  private val bpeLearnOracle: String =
-    bpeTrainingCtes(floored = false) + "\n" +
-      (1 to bpeNumMerges)
-        .map(i => s"SELECT $i AS rank, l AS lhs, r AS rhs, l || r AS merged, pcnt AS pair_count FROM b$i")
-        .mkString("\nUNION ALL ") +
-      "\nORDER BY rank"
-
-  private val bpeTokenizeOracle: String =
-    bpeTrainingCtes(floored = false) + s""",
-      |dw AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      |  FROM documents
-      |),
-      |bpeagg AS (
-      |  SELECT dw.doc_id AS doc_id, CAST(sum(len(s.syms)) AS BIGINT) AS n_tok,
-      |         CAST(count(*) AS BIGINT) AS n_words
-      |  FROM dw JOIN s$bpeNumMerges s ON dw.word = s.word GROUP BY 1
-      |)
-      |SELECT d.doc_id AS doc_id, coalesce(a.n_tok, 0) AS n_tok,
-      |  coalesce(a.n_words, 0) AS n_words,
-      |  round(CAST(coalesce(a.n_tok, 0) AS DOUBLE)
-      |    / greatest(coalesce(a.n_words, 0), 1), 4) AS fertility
-      |FROM documents d LEFT JOIN bpeagg a ON d.doc_id = a.doc_id
-      |ORDER BY doc_id""".stripMargin
-
-  /** q161: floored training replay (merges learned from retained words
-    * only), then tokenize EVERY word from the shared s8 — sub-floor words
-    * carry the same 8 merges applied in rank order, i.e. the serving-time
-    * applyMerges fallback — and roll up their token mass as n_oov_tok. */
-  private val bpeOovOracle: String =
-    bpeTrainingCtes(floored = true) + s""",
-      |dw AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      |  FROM documents
-      |),
-      |bpeagg AS (
-      |  SELECT dw.doc_id AS doc_id, CAST(sum(len(s.syms)) AS BIGINT) AS n_tok,
-      |         CAST(count(*) AS BIGINT) AS n_words,
-      |         CAST(coalesce(sum(CASE WHEN s.cnt < (SELECT f FROM fl)
-      |           THEN len(s.syms) END), 0) AS BIGINT) AS n_oov_tok
-      |  FROM dw JOIN s$bpeNumMerges s ON dw.word = s.word GROUP BY 1
-      |)
-      |SELECT d.doc_id AS doc_id, coalesce(a.n_tok, 0) AS n_tok,
-      |  coalesce(a.n_words, 0) AS n_words,
-      |  round(CAST(coalesce(a.n_tok, 0) AS DOUBLE)
-      |    / greatest(coalesce(a.n_words, 0), 1), 4) AS fertility,
-      |  coalesce(a.n_oov_tok, 0) AS n_oov_tok
-      |FROM documents d LEFT JOIN bpeagg a ON d.doc_id = a.doc_id
-      |ORDER BY doc_id""".stripMargin
-
-  /** Shared rep-level core of the ngram-jaccard clustering oracles
-    * (q32/q97/q133): the distinct-text collapse (see q17's oracle comment —
-    * identical texts have jaccard exactly 1.0, so pairwise work runs over
-    * DISTINCT (lang, bucket, text) rows and expands back to ids; >1
-    * CPU-hour → ~1s at the sf1 replay's 10× byte-identical corpus,
-    * identical output) + connected components over rep-level near-dup
-    * pairs. The rep of a text group is its MIN doc_id, so the rep-level
-    * component minimum IS the id-level component minimum — `clustered`
-    * carries exactly the per-doc cluster labels the id-level walk yields. */
-  private val jaccardClusterCore: String =
-    """WITH RECURSIVE dt AS (
-      | SELECT lang, floor(n_chars / 50) AS len_bucket, text, min(doc_id) AS rep
-      | FROM documents GROUP BY lang, floor(n_chars / 50), text
-      |), ids AS (
-      | SELECT d.doc_id, t.rep
-      | FROM documents d JOIN dt t ON d.text IS NOT DISTINCT FROM t.text
-      |   AND d.lang IS NOT DISTINCT FROM t.lang
-      |   AND floor(d.n_chars / 50) IS NOT DISTINCT FROM t.len_bucket
-      |), p AS (
-      | SELECT rep, lang, len_bucket,
-      |  list_distinct(list_transform(range(1, greatest(length(text) - 2, 1) + 1),
-      |    i -> ('0x' || substr(md5(substr(text, CAST(i AS INT), 3)), 1, 15))::BIGINT)) AS grams
-      | FROM dt
-      |), idx AS (
-      | SELECT rep, lang, len_bucket, unnest(grams) AS g FROM p
-      |), ixc AS (
-      | SELECT a.rep AS rep_a, b.rep AS rep_b, count(*) AS ix
-      | FROM idx a JOIN idx b
-      |   ON a.g = b.g AND a.lang = b.lang AND a.len_bucket = b.len_bucket
-      |  AND a.rep < b.rep
-      | GROUP BY 1, 2
-      |), pl AS (SELECT rep, len(grams) AS ng FROM p
-      |), rpairs AS (
-      | SELECT rep_a, rep_b FROM ixc
-      | JOIN pl pa ON pa.rep = rep_a JOIN pl pb ON pb.rep = rep_b
-      | WHERE round(CAST(ix AS DOUBLE) / (pa.ng + pb.ng - ix), 4) >= 0.7
-      |), edges AS (
-      | SELECT rep_a AS src, rep_b AS dst FROM rpairs
-      | UNION SELECT rep_b, rep_a FROM rpairs
-      |), walk(v, c) AS (
-      | SELECT src, src FROM edges
-      | UNION
-      | SELECT e.dst, w.c FROM walk w JOIN edges e ON e.src = w.v
-      |), rcl AS (
-      | SELECT t.rep, coalesce(min(w.c), t.rep) AS cluster_id
-      | FROM (SELECT DISTINCT rep FROM dt) t LEFT JOIN walk w ON w.v = t.rep
-      | GROUP BY t.rep
-      |), clustered AS (
-      | SELECT i.doc_id, r.cluster_id FROM ids i JOIN rcl r ON r.rep = i.rep
-      |)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q102_bpe_learn" -> bpeLearnOracle,
-    "q161_bpe_oov" -> bpeOovOracle,
-
-    // distinct-text collapse (see q18's oracle comment), asymmetric delta x
-    // index expansion: rep-level band candidates + estimates, then id pairs
-    // oriented by the 400 split on BOTH rep-pair orientations (replicas of
-    // one text can straddle the split); identical texts est exactly 1.0
-    "q103_incremental_dedup" ->
-      """WITH params AS (
-        |  SELECT
-        |    list_transform(range(0, 64), i ->
-        |      (('0x' || substr(md5('minhash_a_' || i), 1, 8))::BIGINT % 536870912) * 2 + 1) AS pa,
-        |    list_transform(range(0, 64), i ->
-        |      ('0x' || substr(md5('minhash_b_' || i), 1, 8))::BIGINT) AS pb
-        |), dt AS (
-        |  SELECT text, min(doc_id) AS rep FROM documents GROUP BY text
-        |), ids AS (
-        |  SELECT d.doc_id, t.rep FROM documents d
-        |    JOIN dt t ON d.text IS NOT DISTINCT FROM t.text
-        |), sh AS (
-        |  SELECT rep,
-        |    list_transform(range(1, greatest(len(toks) - 2, 1) + 1),
-        |      s -> array_to_string(toks[s:s+2], ' ')) AS shingles
-        |  FROM (SELECT rep, regexp_extract_all(text, '\S+') AS toks FROM dt)
-        |  WHERE len(toks) > 0
-        |), p AS (
-        |  SELECT rep,
-        |    list_transform(range(0, 64), i ->
-        |      list_min(list_transform(xs, x -> (pa[i+1] * x + pb[i+1]) % 2305843009213693951))) AS sig
-        |  FROM (SELECT rep,
-        |          list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS xs
-        |        FROM sh), params
-        |)
-        |, bb AS (
-        |  SELECT rep, CAST(t.b AS INT) AS band,
-        |    array_to_string(sig[CAST(t.b*8+1 AS INT):CAST(t.b*8+8 AS INT)], ',') AS bkey
-        |  FROM p CROSS JOIN range(0, 8) t(b)
-        |), cand AS (
-        |  SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
-        |  FROM bb a JOIN bb b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.rep < b.rep
-        |), rp AS (
-        |  SELECT c.rep_a, c.rep_b,
-        |    round(len(list_filter(range(0, 64), i -> pa.sig[i+1] = pb.sig[i+1])) / 64.0, 4) AS est_jaccard
-        |  FROM cand c JOIN p pa ON pa.rep = c.rep_a JOIN p pb ON pb.rep = c.rep_b
-        |  WHERE round(len(list_filter(range(0, 64), i -> pa.sig[i+1] = pb.sig[i+1])) / 64.0, 4) >= 0.5
-        |)
-        |SELECT id_new, id_idx, est_jaccard FROM (
-        |  SELECT n.doc_id AS id_new, i.doc_id AS id_idx, r.est_jaccard
-        |  FROM rp r JOIN ids n ON n.rep = r.rep_a JOIN ids i ON i.rep = r.rep_b
-        |  WHERE n.doc_id >= 400 AND i.doc_id < 400
-        |  UNION ALL
-        |  SELECT n.doc_id AS id_new, i.doc_id AS id_idx, r.est_jaccard
-        |  FROM rp r JOIN ids n ON n.rep = r.rep_b JOIN ids i ON i.rep = r.rep_a
-        |  WHERE n.doc_id >= 400 AND i.doc_id < 400
-        |  UNION ALL
-        |  SELECT a.doc_id AS id_new, b.doc_id AS id_idx, 1.0 AS est_jaccard
-        |  FROM ids a JOIN ids b ON a.rep = b.rep
-        |  WHERE a.doc_id >= 400 AND b.doc_id < 400 AND a.rep IN (SELECT rep FROM p)
-        |) ORDER BY id_new, id_idx""".stripMargin,
-
-    "q104_media_phash" ->
-      """WITH allm AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000 AS doc_id,
-        |    substr(text, 1, 4) || 'zzzz' || substr(text, 9) AS text FROM documents
-        |), chars AS (
-        |  SELECT doc_id, ((p - 1) * 60) // m AS s, unicode(text[CAST(p AS INT)]) AS v
-        |  FROM (SELECT doc_id, text, len(text) AS m,
-        |        CAST(unnest(generate_series(1, len(text))) AS BIGINT) AS p
-        |        FROM allm WHERE len(text) > 0)
-        |), segsum AS (
-        |  SELECT doc_id, s, CAST(sum(v) AS BIGINT) AS sv FROM chars GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS tv FROM chars GROUP BY 1
-        |), ph AS (
-        |  SELECT b.doc_id AS doc_id, CAST(coalesce(h.h, 0) AS BIGINT) AS phash
-        |  FROM allm b LEFT JOIN (
-        |    SELECT segsum.doc_id AS doc_id,
-        |      CAST(sum(CASE WHEN sv * 60 > tv THEN (1::BIGINT << CAST(s AS INT))
-        |        ELSE 0 END) AS BIGINT) AS h
-        |    FROM segsum JOIN tot USING (doc_id) GROUP BY 1) h ON b.doc_id = h.doc_id
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.phash::BITSTRING, b.phash::BITSTRING)) AS BIGINT) AS hamming
-        |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.phash::BITSTRING, b.phash::BITSTRING)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // 3 unrolled GD rounds; the rational sigmoid uses only + * / abs (no
-    // libm), gradient terms round onto a 1e-6 fixed-point grid summed as
-    // labels ride alongside the q20-style cosine scoring; the label
-    // inequality restricts candidates BEFORE ranking, mirroring
-    // Similarity.hardNegatives
-    "q106_hard_negatives" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, label AS query_label,
-        |         CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id < 20
-        |), c AS (
-        |  SELECT vec_id AS neighbor_id, label AS neighbor_label,
-        |         CAST(embedding AS DOUBLE[]) AS c_vec
-        |  FROM embeddings
-        |), s AS (
-        |  SELECT query_id, query_label, neighbor_id, neighbor_label,
-        |    round(list_dot_product(q_vec, c_vec)
-        |      / (sqrt(list_dot_product(q_vec, q_vec)) * sqrt(list_dot_product(c_vec, c_vec))), 6) AS cos
-        |  FROM q, c WHERE query_label <> neighbor_label
-        |)
-        |SELECT query_id, query_label, neighbor_id, neighbor_label, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s
-        |QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // the 60-bit md5-affine rank is the same primitive as q38/q75; shard =
-    // rank % 8 (rank is positive, so % == pmod), pos = in-shard hash order
-    "q107_shuffle_shard" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || '_epoch_0'), 1, 15))::BIGINT AS rk
-        |  FROM documents
-        |)
-        |SELECT doc_id, rk % 8 AS shard,
-        |  row_number() OVER (PARTITION BY rk % 8 ORDER BY rk, doc_id::VARCHAR) AS pos
-        |FROM r
-        |ORDER BY doc_id""".stripMargin,
-
-    // the composite score is computed from the ROUNDED rollup columns
-    // (exactly as the Spark side does after its agg), so both engines feed
-    // identical 6-decimal inputs into the product
-    "q108_source_scores" ->
-      """WITH d AS (
-        |  SELECT source, length(text)::BIGINT AS len, md5(text) AS th
-        |  FROM documents
-        |), hc AS (
-        |  SELECT th, count(*) AS thc FROM d GROUP BY th
-        |), f AS (
-        |  SELECT source, len,
-        |    CASE WHEN thc > 1 THEN 1 ELSE 0 END AS dup,
-        |    CASE WHEN len < 200 THEN 1 ELSE 0 END AS short
-        |  FROM d JOIN hc USING (th)
-        |), r AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    round(avg(len), 6) AS avg_chars,
-        |    round(avg(short), 6) AS short_frac,
-        |    round(avg(dup), 6) AS dup_frac
-        |  FROM f GROUP BY source
-        |)
-        |SELECT source, n_docs, avg_chars, short_frac, dup_frac,
-        |  round((1.0 - dup_frac) * (1.0 - short_frac)
-        |    * least(1.0, avg_chars / 400.0), 6) AS source_score
-        |FROM r
-        |ORDER BY source""".stripMargin,
-
-    // single global window cumsum — the semantics the banded Spark plan
-    // must reproduce exactly (integer token costs, so no float drift)
-    "q109_budget_select" ->
-      """WITH d AS (
-        |  SELECT doc_id, n_chars,
-        |    len(string_split(text, ' '))::BIGINT AS n_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, n_chars, n_tokens,
-        |  CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cost
-        |FROM d
-        |QUALIFY cum_cost <= 12000
-        |ORDER BY cum_cost""".stripMargin,
-
-    "q110_heavy_hitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS token FROM documents
-        |), cells AS (
-        |  SELECT token, d.range AS d,
-        |    ('0x' || substr(md5('cm_' || d.range || '_' || token), 1, 8))::BIGINT % 32 AS b
-        |  FROM tok, range(0, 4) d
-        |), sk AS (
-        |  SELECT d, b, count(*) AS c FROM cells GROUP BY d, b
-        |), est AS (
-        |  SELECT token, CAST(min(coalesce(c, 0)) AS BIGINT) AS cm_estimate
-        |  FROM (SELECT DISTINCT token, d, b FROM cells) q
-        |  LEFT JOIN sk USING (d, b) GROUP BY token
-        |), exact AS (
-        |  SELECT token, count(*) AS exact_count FROM tok GROUP BY token
-        |)
-        |SELECT e.token, est.cm_estimate, e.exact_count::BIGINT AS exact_count,
-        |  e.exact_count >= 900 AS confirmed
-        |FROM exact e JOIN est USING (token)
-        |WHERE est.cm_estimate >= 900 ORDER BY token""".stripMargin,
-
-    "q111_winnow_fingerprints" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    list_transform(range(1, greatest(length(text) - 15, 0) + 1), p ->
-        |      list_reduce(list_prepend(0::BIGINT, list_transform(range(0, 16), j ->
-        |        ascii(substr(text, CAST(p + j AS INT), 1))::BIGINT)),
-        |        (hh, c) -> (hh * 257 + c) % 2147483647)) AS hs
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, hs, len(hs) AS mm FROM h WHERE len(hs) >= 1
-        |), wins AS (
-        |  SELECT doc_id, hs, mm,
-        |    list_transform(range(1, greatest(mm - 15, 1) + 1), i ->
-        |      list_min(list_slice(hs, CAST(i AS INT), CAST(least(i + 15, mm) AS INT)))) AS wmin
-        |  FROM m
-        |), posl AS (
-        |  SELECT doc_id, wmin,
-        |    list_transform(range(1, len(wmin) + 1), i ->
-        |      list_max(list_filter(range(i, least(i + 16, mm + 1)), j ->
-        |        hs[CAST(j AS INT)] = wmin[CAST(i AS INT)]))) AS wpos
-        |  FROM wins
-        |)
-        |SELECT DISTINCT doc_id, pos, fp_hash FROM (
-        |  SELECT doc_id, unnest(wpos)::BIGINT AS pos, unnest(wmin)::BIGINT AS fp_hash
-        |  FROM posl)
-        |ORDER BY doc_id, pos""".stripMargin,
-
-    "q112_mixture_allocate" ->
-      """WITH d AS (
-        |  SELECT source, len(string_split(text, ' '))::BIGINT AS n_tokens FROM documents
-        |), ws AS (
-        |  SELECT source, sum(n_tokens)::BIGINT AS total_cost,
-        |    CAST(floor(sqrt(CAST(sum(n_tokens)::BIGINT * 1000000 AS DOUBLE))) AS BIGINT) AS weight
-        |  FROM d GROUP BY source
-        |), tot AS (
-        |  SELECT sum(weight)::BIGINT AS w_all FROM ws
-        |), base AS (
-        |  SELECT source, total_cost, weight,
-        |    (20000 * weight) // w_all AS alloc_base,
-        |    (20000 * weight) % w_all AS rem
-        |  FROM ws, tot
-        |), lo AS (
-        |  SELECT 20000 - sum(alloc_base)::BIGINT AS leftover FROM base
-        |), fin AS (
-        |  SELECT source, total_cost, weight,
-        |    (alloc_base + CASE WHEN row_number() OVER (ORDER BY rem DESC, source ASC)
-        |       <= leftover THEN 1 ELSE 0 END)::BIGINT AS alloc
-        |  FROM base, lo
-        |)
-        |SELECT source, total_cost, weight, alloc,
-        |  round(CAST(alloc AS DOUBLE) / total_cost, 6) AS rate
-        |FROM fin ORDER BY source""".stripMargin,
-
-    "q113_int8_quant" ->
-      """WITH ex AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-        |    unnest(embedding) AS v
-        |  FROM embeddings
-        |), st AS (
-        |  SELECT dim, min(v) AS mn, max(v) AS mx FROM ex GROUP BY dim
-        |), arrs AS (
-        |  SELECT list(CAST(mn AS DOUBLE) ORDER BY dim) AS mins,
-        |    list(CAST(mx AS DOUBLE) ORDER BY dim) AS maxs
-        |  FROM st
-        |)
-        |SELECT vec_id AS id,
-        |  array_to_string(list_transform(range(1, len(embedding) + 1), i ->
-        |    CAST(CASE WHEN maxs[CAST(i AS INT)] > mins[CAST(i AS INT)] THEN
-        |      CAST(least(greatest(floor((CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-        |          - mins[CAST(i AS INT)])
-        |        / (maxs[CAST(i AS INT)] - mins[CAST(i AS INT)]) * 255.0), 0.0), 255.0)
-        |        AS INT) - 128
-        |    ELSE 0 END AS VARCHAR)), ',') AS codes_csv,
-        |  round(list_reduce(list_prepend(0.0,
-        |    list_transform(range(1, len(embedding) + 1), i ->
-        |      CASE WHEN maxs[CAST(i AS INT)] > mins[CAST(i AS INT)] THEN
-        |        CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-        |          - (mins[CAST(i AS INT)]
-        |             + (CAST(CAST(least(greatest(floor((CAST(embedding[CAST(i AS INT)] AS DOUBLE)
-        |                  - mins[CAST(i AS INT)])
-        |                / (maxs[CAST(i AS INT)] - mins[CAST(i AS INT)]) * 255.0), 0.0), 255.0)
-        |                AS INT) - 128 AS DOUBLE) + 128.5)
-        |               * (maxs[CAST(i AS INT)] - mins[CAST(i AS INT)]) / 255.0)
-        |      ELSE 0.0 END)),
-        |    (a, d) -> a + d * d) / len(embedding), 9) AS mse
-        |FROM embeddings, arrs
-        |ORDER BY id""".stripMargin,
-
-    "q114_shingle_novelty" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS tk FROM documents
-        |), sh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(tk) - 4, 1) + 1),
-        |    s -> array_to_string(tk[s:s+4], ' ')))) AS s
-        |  FROM toks
-        |), hp AS (
-        |  SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh
-        |), fs AS (
-        |  SELECT h, min(doc_id) AS first_doc FROM hp GROUP BY h
-        |), agg AS (
-        |  SELECT hp.doc_id, count(*)::BIGINT AS n_shingles,
-        |    sum(CASE WHEN fs.first_doc = hp.doc_id THEN 1 ELSE 0 END)::BIGINT AS n_novel
-        |  FROM hp JOIN fs USING (h) GROUP BY hp.doc_id
-        |)
-        |SELECT doc_id, n_shingles, n_novel,
-        |  round(CAST(n_novel AS DOUBLE) / n_shingles, 4) AS novelty
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    "q116_approx_quantiles" ->
-      """WITH st AS (
-        |  SELECT min(value) AS lo, max(value) AS hi, count(value)::BIGINT AS n
-        |  FROM events
-        |), counts AS (
-        |  SELECT CASE WHEN hi > lo THEN
-        |      least(CAST(floor((value - lo) / ((hi - lo) / 256)) AS BIGINT) + 1, 256)
-        |    ELSE 1 END AS bin, count(*)::BIGINT AS cnt
-        |  FROM events, st WHERE value IS NOT NULL GROUP BY 1
-        |), cum AS (
-        |  SELECT bin, cnt, CAST(sum(cnt) OVER (ORDER BY bin) AS BIGINT) AS cum
-        |  FROM counts
-        |), qs AS (
-        |  SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-        |                 CAST(0.95 AS DOUBLE), CAST(0.99 AS DOUBLE)]) AS q
-        |), tgt AS (
-        |  SELECT q, greatest(CAST(ceil(q * n) AS BIGINT), 1) AS target, lo, hi
-        |  FROM qs, st
-        |), picked AS (
-        |  SELECT q, target, lo, hi, min(bin) AS bin
-        |  FROM tgt JOIN cum ON cum >= target GROUP BY q, target, lo, hi
-        |), fin AS (
-        |  SELECT p.q, p.target, p.lo, p.hi, p.bin, c.cnt, c.cum
-        |  FROM picked p JOIN cum c ON p.bin = c.bin
-        |)
-        |SELECT q,
-        |  CASE WHEN hi > lo THEN
-        |    round(lo + (bin - 1) * ((hi - lo) / 256)
-        |      + (CAST(target - (cum - cnt) AS DOUBLE) / cnt) * ((hi - lo) / 256), 6)
-        |  ELSE lo END AS estimate,
-        |  target AS rank, bin
-        |FROM fin ORDER BY q""".stripMargin,
-
-    "q117_ann_mrr" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), truth AS (
-        |  SELECT query_id, neighbor_id AS true_nn FROM (
-        |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |      round(list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos,
-        |      row_number() OVER (PARTITION BY q.vec_id
-        |        ORDER BY round(list_dot_product(q.v, c.v)
-        |          / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) DESC,
-        |        c.vec_id ASC) AS rnk
-        |    FROM e q JOIN e c ON q.vec_id <> c.vec_id
-        |    WHERE q.vec_id < 20)
-        |  WHERE rnk = 1
-        |), b AS (
-        |  SELECT vec_id, v,
-        |    list_sum(list_transform(range(0, 8), p ->
-        |      CASE WHEN list_sum(list_transform(range(0, 64), d ->
-        |          ((('0x' || substr(md5('srp_42_' || p || '_' || d), 1, 15))::BIGINT % 2048 - 1024)
-        |            / 1024.0) * v[CAST(d AS INT) + 1])) >= 0
-        |      THEN 1::BIGINT << (7 - CAST(p AS INT)) ELSE 0 END))::BIGINT AS bucket
-        |  FROM e
-        |), approx AS (
-        |  SELECT query_id, neighbor_id, rank FROM (
-        |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |      round(list_dot_product(q.v, c.v)
-        |        / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos,
-        |      CAST(row_number() OVER (PARTITION BY q.vec_id
-        |        ORDER BY round(list_dot_product(q.v, c.v)
-        |          / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) DESC,
-        |        c.vec_id ASC) AS BIGINT) AS rank
-        |    FROM b q JOIN b c
-        |      ON bit_count(xor(q.bucket, c.bucket)) <= 1 AND q.vec_id <> c.vec_id
-        |    WHERE q.vec_id < 20)
-        |  WHERE rank <= 10
-        |)
-        |SELECT t.query_id, t.true_nn, a.rank IS NOT NULL AS found,
-        |  round(coalesce(CAST(1.0 AS DOUBLE) / a.rank, CAST(0.0 AS DOUBLE)), 6) AS rr
-        |FROM truth t LEFT JOIN approx a
-        |  ON a.query_id = t.query_id AND a.neighbor_id = t.true_nn
-        |ORDER BY t.query_id""".stripMargin,
-
-    "q118_topk_per_key" ->
-      """SELECT event_type, CAST(rn AS BIGINT) AS rank, value AS score,
-        |  event_id AS id
-        |FROM (
-        |  SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id ASC) AS rn
-        |  FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rank""".stripMargin,
-
-    // same closed forms over the same six sufficient statistics; x is
-    // centered days-since-2024-01-01 computed from exact integer µs on
-    // both sides, so the only cross-engine difference is float-sum order
-    // (absorbed by round 6)
-    "q119_value_trend" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(epoch_us(ts) - 1704067200000000 AS DOUBLE)
-        |      / 86400000000.0 AS x,
-        |    value AS y
-        |  FROM events
-        |), a AS (
-        |  SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
-        |    sum(x) AS sx, sum(y) AS sy,
-        |    sum(x*x) AS sxx, sum(y*y) AS syy, sum(x*y) AS sxy
-        |  FROM e GROUP BY event_type
-        |)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN n*sxx - sx*sx > 0
-        |    THEN (n*sxy - sx*sy) / (n*sxx - sx*sx) END, 6) AS slope,
-        |  round(CASE WHEN n*sxx - sx*sx > 0
-        |    THEN (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n END, 6)
-        |    AS intercept,
-        |  round(CASE WHEN n*sxx - sx*sx > 0 AND n*syy - sy*sy > 0
-        |    THEN (n*sxy - sx*sy) * (n*sxy - sx*sy)
-        |      / ((n*sxx - sx*sx) * (n*syy - sy*sy)) END, 6) AS r2
-        |FROM a ORDER BY event_type""".stripMargin,
-
-    // exact mirror of Pca.principalComponent's no-cross-row-float-sum
-    // contract: every aggregated term is quantized to an integer (×1e9
-    // moments, ×1e15 iteration terms) and summed exactly, so engine/order
-    // differences cannot move anything even an ulp. Per-step rounding
-    // alone was measured insufficient — a sum near a round-9 boundary
-    // flipped between DuckDB plans and the flip amplified through the
-    // iterations. MATERIALIZED: the matrix CTE is referenced 6× and DuckDB
-    // would otherwise re-run the d²-explode join for each.
-    "q120_pca_top_component" ->
-      """WITH ex AS MATERIALIZED (
-        |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x
-        |  FROM embeddings
-        |), nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM embeddings),
-        |m AS MATERIALIZED (
-        |  SELECT i, CAST(sum(CAST(round(x * 1000000000.0) AS BIGINT)) AS DOUBLE)
-        |    / 1000000000.0 / (SELECT n FROM nn) AS mx
-        |  FROM ex GROUP BY i
-        |),
-        |cm AS MATERIALIZED (
-        |  SELECT a.i AS i, b.i AS j,
-        |    round(CAST(sum(CAST(round(a.x * b.x * 1000000000.0) AS BIGINT)) AS DOUBLE)
-        |      / 1000000000.0 / (SELECT n FROM nn) - ma.mx * mb.mx, 9) AS c
-        |  FROM ex a JOIN ex b ON a.vec_id = b.vec_id
-        |  JOIN m ma ON ma.i = a.i JOIN m mb ON mb.i = b.i
-        |  GROUP BY a.i, b.i, ma.mx, mb.mx
-        |),
-        |v0 AS (SELECT i, 1.0 / 64 AS v FROM m),
-        |w1 AS (SELECT cm.i AS i, round(CAST(sum(CAST(round(cm.c * v0.v
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0, 9) AS w
-        |  FROM cm JOIN v0 ON v0.i = cm.j GROUP BY cm.i),
-        |v1 AS (SELECT i, round(w / (SELECT sqrt(CAST(sum(CAST(round(w * w
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0)
-        |  FROM w1), 9) AS v FROM w1),
-        |w2 AS (SELECT cm.i AS i, round(CAST(sum(CAST(round(cm.c * v1.v
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0, 9) AS w
-        |  FROM cm JOIN v1 ON v1.i = cm.j GROUP BY cm.i),
-        |v2 AS (SELECT i, round(w / (SELECT sqrt(CAST(sum(CAST(round(w * w
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0)
-        |  FROM w2), 9) AS v FROM w2),
-        |w3 AS (SELECT cm.i AS i, round(CAST(sum(CAST(round(cm.c * v2.v
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0, 9) AS w
-        |  FROM cm JOIN v2 ON v2.i = cm.j GROUP BY cm.i),
-        |v3 AS (SELECT i, round(w / (SELECT sqrt(CAST(sum(CAST(round(w * w
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0)
-        |  FROM w3), 9) AS v FROM w3),
-        |w4 AS (SELECT cm.i AS i, round(CAST(sum(CAST(round(cm.c * v3.v
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0, 9) AS w
-        |  FROM cm JOIN v3 ON v3.i = cm.j GROUP BY cm.i),
-        |v4 AS MATERIALIZED (SELECT i, round(w / (SELECT sqrt(CAST(sum(CAST(round(w * w
-        |    * 1000000000000000.0) AS BIGINT)) AS DOUBLE) / 1000000000000000.0)
-        |  FROM w4), 9) AS v FROM w4),
-        |sgn AS (SELECT CASE WHEN v < 0 THEN -1.0 ELSE 1.0 END AS s
-        |  FROM v4 ORDER BY abs(v) DESC, i ASC LIMIT 1),
-        |ray AS (SELECT sum(CAST(round(va.v * cm.c * vb.v
-        |    * 1000000000000000.0) AS BIGINT)) AS num
-        |  FROM cm JOIN v4 va ON va.i = cm.i JOIN v4 vb ON vb.i = cm.j),
-        |dn AS (SELECT sum(CAST(round(v * v * 1000000000000000.0) AS BIGINT)) AS d
-        |  FROM v4),
-        |tr AS (SELECT sum(CAST(round(c * 1000000000.0) AS BIGINT)) AS t
-        |  FROM cm WHERE i = j)
-        |SELECT CAST(i AS BIGINT) AS pos,
-        |  round((SELECT s FROM sgn) * v, 6) AS loading,
-        |  round(CAST((SELECT num FROM ray) AS DOUBLE)
-        |    / CAST((SELECT d FROM dn) AS DOUBLE)
-        |    / (CAST((SELECT t FROM tr) AS DOUBLE) / 1000000000.0), 6) AS var_share
-        |FROM v4 ORDER BY pos""".stripMargin,
-
-    // name-level fuzzy pairs (q70's blocking + thresholded levenshtein),
-    // recursive min-label walk for components, then every part row mapped
-    // through the entity map
-    "q121_entity_resolution" ->
-      """WITH RECURSIVE names AS (
-        |  SELECT DISTINCT p_name AS name FROM part
-        |), tok AS (
-        |  SELECT name, unnest(list_distinct(string_split_regex(lower(name), '\s+'))) AS t
-        |  FROM names
-        |), tok2 AS (SELECT * FROM tok WHERE len(t) > 0),
-        |hot AS (SELECT t FROM tok2 GROUP BY t HAVING count(*) > 1000),
-        |tokc AS (SELECT * FROM tok2 ANTI JOIN hot USING (t)),
-        |pairs AS (
-        |  SELECT a.name AS name_a, b.name AS name_b
-        |  FROM tokc a JOIN tokc b ON a.t = b.t AND a.name < b.name
-        |  WHERE abs(length(a.name) - length(b.name)) <= 2
-        |    AND levenshtein(a.name, b.name) <= 2
-        |  GROUP BY 1, 2
-        |), edges AS (
-        |  SELECT name_a AS src, name_b AS dst FROM pairs
-        |  UNION SELECT name_b, name_a FROM pairs
-        |), walk(v, c) AS (
-        |  SELECT src, src FROM edges
-        |  UNION SELECT e.dst, w.c FROM walk w JOIN edges e ON e.src = w.v
-        |), comp AS (SELECT v AS name, min(c) AS canon FROM walk GROUP BY v),
-        |mapped AS (
-        |  SELECT p.p_partkey, p.p_name,
-        |    coalesce(comp.canon, p.p_name) AS canonical_name
-        |  FROM part p LEFT JOIN comp ON comp.name = p.p_name
-        |), stats AS (
-        |  SELECT canonical_name, min(p_partkey) AS entity_id,
-        |    count(*) AS n_members
-        |  FROM mapped GROUP BY canonical_name
-        |)
-        |SELECT m.p_partkey, m.p_name, s.entity_id, m.canonical_name,
-        |  s.n_members
-        |FROM mapped m JOIN stats s USING (canonical_name)
-        |ORDER BY m.p_partkey""".stripMargin,
-
-    // keep-rate sqrt(n_min/n) is a correctly-rounded IEEE sqrt of an exact
-    // integer ratio — bit-identical in any engine; membership is the q38
-    // md5 hash-bucket rule
-    "q122_temperature_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 < 6 THEN 'web'
-        |         WHEN doc_id % 10 < 9 THEN 'books'
-        |         ELSE 'code' END AS src_class
-        |  FROM documents
-        |), c AS (SELECT src_class, count(*) AS n FROM d GROUP BY src_class),
-        |mn AS (SELECT min(n) AS nmin FROM c)
-        |SELECT d.doc_id, d.src_class
-        |FROM d JOIN c USING (src_class), mn
-        |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT % 10000
-        |  < round(sqrt(CAST(mn.nmin AS DOUBLE) / n) * 10000)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // DuckDB's native ASOF LEFT JOIN — same backward/left-outer contract
-    // as plans.AsOfJoinExec; the right side is pre-aggregated per
-    // (user, ts) so the match is tie-free and deterministic in both engines
-    "q124_native_asof_join" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), r AS (
-        |  SELECT user_id AS r_user, ts AS click_ts,
-        |    round(max(value), 6) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-        |)
-        |SELECT l.event_id, l.user_id, l.ts, l.purchase_value,
-        |  coalesce(r.click_ts, TIMESTAMP '1970-01-01 00:00:00') AS click_ts,
-        |  coalesce(r.click_value, -1.0) AS click_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.r_user AND l.ts >= r.click_ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    // the salted path must be result-identical to the plain as-of: the
-    // oracle IS q124's plain ASOF JOIN (no salt anywhere in it)
-    "q141_salted_asof" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), r AS (
-        |  SELECT user_id AS r_user, ts AS click_ts,
-        |    round(max(value), 6) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-        |)
-        |SELECT l.event_id, l.user_id, l.ts, l.purchase_value,
-        |  coalesce(r.click_ts, TIMESTAMP '1970-01-01 00:00:00') AS click_ts,
-        |  coalesce(r.click_value, -1.0) AS click_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.r_user AND l.ts >= r.click_ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    // backward as-of with tolerance: DuckDB's ASOF has no tolerance bound,
-    // so the oracle replays it as a windowed join — latest click at-or-
-    // before each purchase, no staler than one hour
-    "q137_broadcast_asof" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), r AS (
-        |  SELECT user_id AS r_user, ts AS click_ts,
-        |    round(max(value), 6) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-        |), j AS (
-        |  SELECT l.event_id AS eid, r.click_ts, r.click_value,
-        |    row_number() OVER (PARTITION BY l.event_id ORDER BY r.click_ts DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.r_user
-        |    AND r.click_ts <= l.ts AND r.click_ts >= l.ts - INTERVAL 1 HOUR
-        |)
-        |SELECT l.event_id, l.user_id, l.ts, l.purchase_value,
-        |  coalesce(j.click_ts, TIMESTAMP '1970-01-01 00:00:00') AS click_ts,
-        |  coalesce(j.click_value, -1.0) AS click_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON l.event_id = j.eid
-        |ORDER BY l.event_id""".stripMargin,
-
-    // z-value replay: identical SIGNED bit-shift quantization (shift =
-    // bitLength(span) - bits, length(bin(x)) IS bitLength; negative shift
-    // = LEFT shift so a narrow dimension still fills its high interleave
-    // lanes) and identical lane convention (bit i of column c lands at
-    // position i*k + c; user_id is lane 0, ts_ns lane 1)
-    "q138_zorder" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS ts_ns FROM events
-        |), st AS (
-        |  SELECT min(user_id) AS mn0, max(user_id) AS mx0,
-        |    min(ts_ns) AS mn1, max(ts_ns) AS mx1
-        |  FROM e
-        |), sh AS (
-        |  SELECT mn0, mn1,
-        |    CASE WHEN mx0 > mn0
-        |      THEN length(bin(mx0 - mn0)) ELSE 0 END - 20 AS s0,
-        |    CASE WHEN mx1 > mn1
-        |      THEN length(bin(mx1 - mn1)) ELSE 0 END - 20 AS s1
-        |  FROM st
-        |), lv AS (
-        |  SELECT event_id,
-        |    CASE WHEN s0 >= 0 THEN (user_id - mn0) >> s0
-        |      ELSE (user_id - mn0) << -s0 END AS l0,
-        |    CASE WHEN s1 >= 0 THEN (ts_ns - mn1) >> s1
-        |      ELSE (ts_ns - mn1) << -s1 END AS l1
-        |  FROM e, sh
-        |)
-        |SELECT event_id,
-        |  sum((((l0 >> i) & 1) << (2 * i)) +
-        |      (((l1 >> i) & 1) << (2 * i + 1)))::BIGINT AS z_value
-        |FROM lv, range(0, 20) t(i)
-        |GROUP BY event_id
-        |ORDER BY event_id""".stripMargin,
-
-    // the composed curation chain: q50's gopher metrics (relaxed bounds) →
-    // q52's 3-gram decontamination (bench = docs 0-4 of the RAW corpus,
-    // grams over the FILTERED survivors) → q13's keep-min-doc_id exact
-    // dedup → q53's md5-ranked per-language cap → q56's packing window
-    "q140_curation_pipeline" ->
-      """WITH m AS (
-        |  SELECT doc_id, lang, text,
-        |    len(regexp_extract_all(text, '\S+')) AS n_words,
-        |    round(CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 4) AS mean_word_len,
-        |    round(CAST(len(regexp_extract_all(text, '#|\.\.\.|…')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) AS symbol_ratio,
-        |    round(CAST(len(regexp_extract_all(text, '(?m)^[ \t]*[-*•]')) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1), 6) AS bullet_frac,
-        |    round(CAST(len(regexp_extract_all(text, '(?m)(\.\.\.|…)$')) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1), 6) AS ellipsis_frac,
-        |    round(CAST(len(regexp_extract_all(text, '\S*\p{L}\S*')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) AS alpha_frac,
-        |    (CASE WHEN regexp_matches(lower(text), '\bthe\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bbe\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bto\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bof\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\band\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bthat\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bhave\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bwith\b') THEN 1 ELSE 0 END
-        |    )::BIGINT AS n_stopwords
-        |  FROM documents
-        |), filtered AS (
-        |  SELECT doc_id, lang, text FROM m
-        |  WHERE n_words >= 5 AND n_words <= 100000
-        |    AND mean_word_len BETWEEN 3.0 AND 10.0
-        |    AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
-        |    AND ellipsis_frac <= 0.3 AND alpha_frac >= 0.5
-        |    AND n_stopwords >= 1
-        |), g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(tk) = 0 THEN []::VARCHAR[]
-        |         ELSE list_distinct(list_transform(range(1, greatest(len(tk) - 2, 1) + 1),
-        |           i -> array_to_string(tk[i:i+2], ' ')))
-        |    END AS grams
-        |  FROM (SELECT doc_id, regexp_extract_all(text, '\S+') AS tk FROM filtered)
-        |), bench AS (
-        |  SELECT DISTINCT unnest(
-        |    CASE WHEN len(tk) = 0 THEN []::VARCHAR[]
-        |         ELSE list_distinct(list_transform(range(1, greatest(len(tk) - 2, 1) + 1),
-        |           i -> array_to_string(tk[i:i+2], ' ')))
-        |    END) AS gram
-        |  FROM (SELECT regexp_extract_all(text, '\S+') AS tk
-        |        FROM documents WHERE doc_id < 5)
-        |), hits AS (
-        |  SELECT ex.doc_id, count(*) AS n_hits
-        |  FROM (SELECT doc_id, unnest(grams) AS gram FROM g) ex
-        |  JOIN bench USING (gram) GROUP BY ex.doc_id
-        |), clean AS (
-        |  SELECT f.doc_id, f.lang, f.text
-        |  FROM filtered f LEFT JOIN hits h USING (doc_id)
-        |  WHERE coalesce(h.n_hits, 0) = 0
-        |), keeper AS (
-        |  SELECT min(doc_id) AS doc_id FROM clean GROUP BY md5(text)
-        |), capped AS (
-        |  SELECT c.doc_id, c.lang, c.text
-        |  FROM clean c JOIN keeper k USING (doc_id)
-        |  QUALIFY row_number() OVER (PARTITION BY c.lang
-        |    ORDER BY ('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |      CAST(c.doc_id AS VARCHAR)) <= 50
-        |), t2 AS (
-        |  SELECT doc_id, lang,
-        |    CAST(coalesce(len(regexp_extract_all(text, '\S+')), 0) AS BIGINT) AS n_tokens
-        |  FROM capped
-        |)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(sum(n_tokens) OVER w - n_tokens AS BIGINT) AS start_offset,
-        |  CAST(floor((sum(n_tokens) OVER w - n_tokens) / 512.0) AS BIGINT) AS chunk_id,
-        |  ((sum(n_tokens) OVER w - n_tokens) % 512 + n_tokens) > 512 AS spans_boundary
-        |FROM t2
-        |WINDOW w AS (PARTITION BY lang ORDER BY doc_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q125_native_interval_join" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), c AS (
-        |  SELECT DISTINCT user_id AS c_user, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'
-        |)
-        |SELECT p.event_id, p.user_id, p.ts, p.purchase_value, c.click_ts
-        |FROM p JOIN c ON p.user_id = c.c_user
-        |  AND p.ts >= c.click_ts AND p.ts < c.click_ts + INTERVAL 6 HOUR
-        |ORDER BY p.event_id, c.click_ts""".stripMargin,
-
-    // same cosine ranks and judgments as q145; hits/relevant counted as
-    // integers, the two ratios rounded once
-    "q146_precision_recall" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id < 5
-        |), s AS (
-        |  SELECT query_id, vec_id AS doc_id,
-        |    round(list_dot_product(CAST(embedding AS DOUBLE[]), q_vec)
-        |      / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                               CAST(embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(q_vec, q_vec))), 6) AS cos
-        |  FROM embeddings, q WHERE vec_id <> query_id
-        |), res AS (
-        |  SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, doc_id ASC) AS rnk
-        |  FROM s QUALIFY rnk <= 10
-        |), rel AS (
-        |  SELECT q.query_id, e.vec_id AS doc_id
-        |  FROM embeddings e, q
-        |  WHERE (e.vec_id + q.query_id) % 7 IN (0, 1)
-        |), h AS (
-        |  SELECT r.query_id, count(*) AS n_hits
-        |  FROM res r JOIN rel j
-        |    ON j.query_id = r.query_id AND j.doc_id = r.doc_id
-        |  GROUP BY r.query_id
-        |), t AS (
-        |  SELECT query_id, count(*) AS n_relevant FROM rel GROUP BY query_id
-        |)
-        |SELECT q.query_id,
-        |  coalesce(h.n_hits, 0) AS n_hits,
-        |  coalesce(t.n_relevant, 0) AS n_relevant,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10, 6) AS precision_at_k,
-        |  CASE WHEN coalesce(t.n_relevant, 0) > 0
-        |    THEN round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / t.n_relevant, 6)
-        |    ELSE -1.0 END AS recall_at_k
-        |FROM q
-        |LEFT JOIN h ON h.query_id = q.query_id
-        |LEFT JOIN t ON t.query_id = q.query_id
-        |ORDER BY q.query_id""".stripMargin,
-
-    // full replay: cosine top-10 ranks, id-arithmetic judgments, and the
-    // SAME hardcoded integer discount units (1e9/log2(rank+1), fixed on
-    // the driver in Ranking.ndcgAtK so neither engine's libm is in play)
-    "q145_ndcg" ->
-      """WITH disc AS (
-        |  SELECT rnk, CAST(units AS BIGINT) AS units FROM (VALUES
-        |    (1, 1000000000), (2, 630929754), (3, 500000000), (4, 430676558),
-        |    (5, 386852807), (6, 356207187), (7, 333333333), (8, 315464877),
-        |    (9, 301029996), (10, 289064826)) AS t(rnk, units)
-        |), q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id < 5
-        |), s AS (
-        |  SELECT query_id, vec_id AS doc_id,
-        |    round(list_dot_product(CAST(embedding AS DOUBLE[]), q_vec)
-        |      / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                               CAST(embedding AS DOUBLE[])))
-        |         * sqrt(list_dot_product(q_vec, q_vec))), 6) AS cos
-        |  FROM embeddings, q WHERE vec_id <> query_id
-        |), res AS (
-        |  SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, doc_id ASC) AS rnk
-        |  FROM s QUALIFY rnk <= 10
-        |), qrels AS (
-        |  SELECT q.query_id, e.vec_id AS doc_id,
-        |    CASE (e.vec_id + q.query_id) % 7 WHEN 0 THEN 3 WHEN 1 THEN 1
-        |      ELSE 0 END AS rel
-        |  FROM embeddings e, q
-        |), dcg AS (
-        |  SELECT r.query_id,
-        |    CAST(sum((CASE coalesce(j.rel, 0) WHEN 3 THEN 7 WHEN 1 THEN 1
-        |      ELSE 0 END) * d.units) AS BIGINT) AS dcg_units
-        |  FROM res r
-        |  JOIN disc d ON d.rnk = r.rnk
-        |  LEFT JOIN qrels j ON j.query_id = r.query_id AND j.doc_id = r.doc_id
-        |  GROUP BY r.query_id
-        |), ideal AS (
-        |  SELECT query_id, rel,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY rel DESC, doc_id ASC) AS ir
-        |  FROM qrels WHERE rel > 0 QUALIFY ir <= 10
-        |), idcg AS (
-        |  SELECT i.query_id,
-        |    CAST(sum((CASE i.rel WHEN 3 THEN 7 WHEN 1 THEN 1 ELSE 0 END)
-        |      * d.units) AS BIGINT) AS idcg_units
-        |  FROM ideal i JOIN disc d ON d.rnk = i.ir
-        |  GROUP BY i.query_id
-        |)
-        |SELECT dcg.query_id, dcg.dcg_units,
-        |  coalesce(idcg.idcg_units, 0) AS idcg_units,
-        |  CASE WHEN coalesce(idcg.idcg_units, 0) > 0
-        |    THEN round(CAST(dcg.dcg_units AS DOUBLE)
-        |      / CAST(idcg.idcg_units AS DOUBLE), 6)
-        |    ELSE -1.0 END AS ndcg
-        |FROM dcg LEFT JOIN idcg ON idcg.query_id = dcg.query_id
-        |ORDER BY dcg.query_id""".stripMargin,
-
-    // full replay: q43's BM25 ranked top-20, q20-style cosine top-20 for
-    // query 0, RRF-fused in integer micro-units with the same tie orders
-    "q144_hybrid_rrf" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks FROM documents
-        |), s AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS BIGINT) AS total,
-        |    sum(CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END) AS df0,
-        |    sum(CASE WHEN list_contains(toks, 'window') THEN 1 ELSE 0 END) AS df1,
-        |    sum(CASE WHEN list_contains(toks, 'join') THEN 1 ELSE 0 END) AS df2
-        |  FROM d
-        |), bmscore AS (
-        |  SELECT doc_id,
-        |    round(
-        |      round(ln((n - df0 + 0.5) / (df0 + 0.5) + 1), 6) * tf0 * 2.2
-        |        / (tf0 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n))))
-        |    + round(ln((n - df1 + 0.5) / (df1 + 0.5) + 1), 6) * tf1 * 2.2
-        |        / (tf1 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n))))
-        |    + round(ln((n - df2 + 0.5) / (df2 + 0.5) + 1), 6) * tf2 * 2.2
-        |        / (tf2 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n)))), 4) AS bm25
-        |  FROM (
-        |    SELECT doc_id, toks,
-        |      CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf0,
-        |      CAST(len(list_filter(toks, x -> x = 'window')) AS DOUBLE) AS tf1,
-        |      CAST(len(list_filter(toks, x -> x = 'join')) AS DOUBLE) AS tf2
-        |    FROM d), s
-        |), lex AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rnk
-        |  FROM bmscore QUALIFY rnk <= 20
-        |), qv AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id = 0
-        |), vec AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS rnk
-        |  FROM (
-        |    SELECT vec_id AS doc_id,
-        |      round(list_dot_product(CAST(embedding AS DOUBLE[]), q_vec)
-        |        / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-        |                                 CAST(embedding AS DOUBLE[])))
-        |           * sqrt(list_dot_product(q_vec, q_vec))), 6) AS cos
-        |    FROM embeddings, qv WHERE vec_id <> 0)
-        |  QUALIFY rnk <= 20
-        |), u AS (
-        |  SELECT doc_id, CAST(round(1e9 / (60 + rnk)) AS BIGINT) AS units FROM lex
-        |  UNION ALL
-        |  SELECT doc_id, CAST(round(1e9 / (60 + rnk)) AS BIGINT) AS units FROM vec
-        |), f AS (
-        |  SELECT doc_id, CAST(sum(units) AS BIGINT) AS rrf_units,
-        |    count(*) AS n_lists
-        |  FROM u GROUP BY doc_id
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY rrf_units DESC, doc_id ASC) AS BIGINT) AS rank,
-        |  doc_id, rrf_units, n_lists
-        |FROM f QUALIFY rank <= 10
-        |ORDER BY rank""".stripMargin,
-
-    // full replay: per-chunk cosines -> per-(query, doc) max -> ranked
-    // top-5 with the same (score desc, doc_id asc) tie order
-    "q143_late_interaction" ->
-      """WITH c AS (
-        |  SELECT vec_id // 4 AS doc_id, CAST(embedding AS DOUBLE[]) AS c_vec
-        |  FROM embeddings
-        |), q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id < 5
-        |), s AS (
-        |  SELECT query_id, doc_id,
-        |    max(round(list_dot_product(c_vec, q_vec)
-        |      / (sqrt(list_dot_product(c_vec, c_vec))
-        |         * sqrt(list_dot_product(q_vec, q_vec))), 6)) AS score
-        |  FROM q, c GROUP BY query_id, doc_id
-        |)
-        |SELECT query_id,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank,
-        |  doc_id, score
-        |FROM s QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // the salted path must be result-identical to the plain interval
-    // join: the oracle IS q125's plain containment join (no salt in it)
-    "q142_salted_interval" ->
-      """WITH p AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), c AS (
-        |  SELECT DISTINCT user_id AS c_user, ts AS click_ts
-        |  FROM events WHERE event_type = 'click'
-        |)
-        |SELECT p.event_id, p.user_id, p.ts, p.purchase_value, c.click_ts
-        |FROM p JOIN c ON p.user_id = c.c_user
-        |  AND p.ts >= c.click_ts AND p.ts < c.click_ts + INTERVAL 6 HOUR
-        |ORDER BY p.event_id, c.click_ts""".stripMargin,
-
-    "q126_dsir_weights" ->
-      """WITH prof AS (
-        |  SELECT doc_id, tgt, bucket, count(*) AS cnt
-        |  FROM (SELECT doc_id, tgt,
-        |          ('0x' || substr(md5(tok), 1, 8))::BIGINT % 1024 AS bucket
-        |        FROM (SELECT doc_id,
-        |                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS tgt,
-        |                unnest(regexp_extract_all(lower(text), '\S+')) AS tok
-        |              FROM documents))
-        |  GROUP BY doc_id, tgt, bucket
-        |), counts AS (
-        |  SELECT bucket, CAST(sum(cnt) AS BIGINT) AS raw_n,
-        |    CAST(sum(tgt * cnt) AS BIGINT) AS tgt_n
-        |  FROM prof GROUP BY bucket
-        |), totals AS (
-        |  SELECT CAST(sum(raw_n) AS DOUBLE) AS raw_t,
-        |    CAST(sum(tgt_n) AS DOUBLE) AS tgt_t FROM counts
-        |), scores AS (
-        |  SELECT bucket,
-        |    ln((tgt_n + 1.0) / (tgt_t + 1024.0))
-        |      - ln((raw_n + 1.0) / (raw_t + 1024.0)) AS sc
-        |  FROM counts, totals
-        |), per_doc AS (
-        |  SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-        |    round(sum(cnt * sc), 4) AS log_weight
-        |  FROM prof JOIN scores USING (bucket) GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
-        |  coalesce(p.log_weight, 0) AS log_weight
-        |FROM documents d LEFT JOIN per_doc p USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q134_persisted_ann" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), eb AS (
-        |  SELECT vec_id, v FROM e WHERE vec_id < 1500
-        |), c0 AS (
-        |  SELECT list(v ORDER BY vec_id) AS cs FROM (SELECT vec_id, v FROM eb ORDER BY vec_id LIMIT 8)
-        |), a1 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM eb, c0)
-        |), u1 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a1)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c1 AS (
-        |  SELECT list(coalesce(u1.cent, c0.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c0 LEFT JOIN u1 ON u1.cell = t.i
-        |  GROUP BY c0.cs
-        |), a2 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM eb, c1)
-        |), u2 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a2)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c2 AS (
-        |  SELECT list(coalesce(u2.cent, c1.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c1 LEFT JOIN u2 ON u2.cell = t.i
-        |  GROUP BY c1.cs
-        |), idx AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c2)
-        |), probe AS (
-        |  SELECT vec_id, v, cell FROM (
-        |    SELECT q.vec_id, q.v, t.i AS cell,
-        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |        list_sum(list_transform(range(0, 64),
-        |          d -> (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1])
-        |             * (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1]))), t.i) AS rn
-        |    FROM (SELECT vec_id, v FROM e WHERE vec_id < 20) q
-        |    CROSS JOIN range(0, 8) t(i) CROSS JOIN c2)
-        |  WHERE rn <= 2
-        |), s AS (
-        |  SELECT p.vec_id AS query_id, i.vec_id AS neighbor_id,
-        |    round(list_dot_product(p.v, i.v)
-        |      / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(i.v, i.v))), 6) AS cos
-        |  FROM probe p JOIN idx i ON p.cell = i.cell AND p.vec_id <> i.vec_id
-        |)
-        |SELECT query_id, neighbor_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // full replay of the PQ-coded persisted index: coarse k-means (first-8
-    // init on the TRAIN batch, 2 Lloyd rounds) -> per-row residual vs the
-    // frozen winning centroid -> residual PQ (first-8 init, 1 round) ->
-    // integer codes for ALL rows -> per-query 2-of-8 probe -> ADC = sum of
-    // per-subspace code-to-residual distances, rounded then ranked
-    "q135_persisted_ivfpq" ->
-      (ivfPqReplayPrefix + "\n" +
-        """SELECT query_id, neighbor_id, adc_dist,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY adc_dist ASC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM agg QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // q135's ADC relation re-ranked by EXACT cosine: the top-50 ADC
-    // shortlist per query fetches raw vectors by id and re-scores — the
-    // production IVFADC + re-rank split, oracle-checked end to end
-    "q136_ivfpq_rerank" ->
-      (ivfPqReplayPrefix + "\n" +
-        """SELECT query_id, neighbor_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM (
-        |  SELECT s.query_id, s.neighbor_id,
-        |    round(list_dot_product(q.v, c.v)
-        |      / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-        |  FROM (
-        |    SELECT query_id, neighbor_id,
-        |      row_number() OVER (PARTITION BY query_id
-        |        ORDER BY adc_dist ASC, neighbor_id ASC) AS srnk
-        |    FROM agg) s
-        |  JOIN e q ON q.vec_id = s.query_id
-        |  JOIN e c ON c.vec_id = s.neighbor_id
-        |  WHERE s.srnk <= 50)
-        |QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    "q133_leakage_safe_split" -> (jaccardClusterCore +
-      """
-        |SELECT doc_id, cluster_id,
-        |  CASE WHEN ('0x' || substr(md5(cluster_id::VARCHAR), 1, 15))::BIGINT % 10000 < 8000 THEN 'train'
-        |       WHEN ('0x' || substr(md5(cluster_id::VARCHAR), 1, 15))::BIGINT % 10000 < 9000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM clustered ORDER BY doc_id""".stripMargin),
-
-    "q132_filter_ablation" ->
-      """WITH f AS (
-        |  SELECT
-        |    n_chars < 200 AS f_short,
-        |    lang <> 'en' AS f_non_en,
-        |    len(regexp_extract_all(text, '\S+')) < 30 AS f_few_tokens,
-        |    round(CAST(len(list_distinct(regexp_extract_all(text, '\S+'))) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 4) < 0.5
-        |      AS f_repetitive
-        |  FROM documents
-        |)
-        |SELECT f_short, f_non_en, f_few_tokens, f_repetitive,
-        |  count(*) AS n_docs,
-        |  CAST(CAST(f_short AS INT) + CAST(f_non_en AS INT)
-        |    + CAST(f_few_tokens AS INT) + CAST(f_repetitive AS INT) AS BIGINT)
-        |    AS n_flagged
-        |FROM f GROUP BY 1, 2, 3, 4
-        |ORDER BY f_short, f_non_en, f_few_tokens, f_repetitive""".stripMargin,
-
-    "q131_cm_join_size" ->
-      """WITH a AS (SELECT l_orderkey AS k FROM lineitem),
-        |b AS (SELECT o_orderkey AS k FROM orders
-        |      WHERE o_orderpriority = '1-URGENT'),
-        |ca AS (
-        |  SELECT d.range AS d,
-        |    ('0x' || substr(md5('cm_' || d.range || '_' || k), 1, 8))::BIGINT % 2048 AS bkt,
-        |    count(*) AS cm_a
-        |  FROM a, range(0, 4) d GROUP BY 1, 2
-        |), cb AS (
-        |  SELECT d.range AS d,
-        |    ('0x' || substr(md5('cm_' || d.range || '_' || k), 1, 8))::BIGINT % 2048 AS bkt,
-        |    count(*) AS cm_b
-        |  FROM b, range(0, 4) d GROUP BY 1, 2
-        |), dotsj AS (
-        |  SELECT d, sum(cm_a * cm_b) AS dot
-        |  FROM ca JOIN cb USING (d, bkt) GROUP BY d
-        |), dots AS (
-        |  -- full depth spine: a depth with NO overlapping cells is dot = 0,
-        |  -- the tightest one-sided bound — the inner join above would drop it
-        |  SELECT dd.range AS d, coalesce(dotsj.dot, 0) AS dot
-        |  FROM range(0, 4) dd LEFT JOIN dotsj ON dotsj.d = dd.range
-        |), est AS (SELECT CAST(coalesce(min(dot), 0) AS BIGINT)
-        |           AS cm_join_estimate FROM dots),
-        |ex AS (SELECT count(*) AS exact_rows FROM a JOIN b USING (k))
-        |SELECT cm_join_estimate, exact_rows,
-        |  cm_join_estimate >= exact_rows AS one_sided_ok
-        |FROM est, ex""".stripMargin,
-
-    "q130_length_batches" ->
-      """WITH d AS (
-        |  SELECT lang, doc_id, len(regexp_extract_all(text, '\S+')) AS tok
-        |  FROM documents
-        |), r AS (
-        |  SELECT lang, tok,
-        |    (row_number() OVER (PARTITION BY lang ORDER BY tok, doc_id) - 1) // 16
-        |      AS batch_idx
-        |  FROM d
-        |)
-        |SELECT lang, batch_idx, count(*) AS n_docs, max(tok) AS max_tokens,
-        |  CAST(sum(tok) AS BIGINT) AS sum_tokens,
-        |  CAST(count(*) * max(tok) - sum(tok) AS BIGINT) AS padding_waste
-        |FROM r GROUP BY lang, batch_idx
-        |ORDER BY lang, batch_idx""".stripMargin,
-
-    "q129_native_asof_forward" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts, round(value, 6) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase'
-        |), r AS (
-        |  SELECT user_id AS r_user, ts AS click_ts,
-        |    round(max(value), 6) AS click_value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-        |), j AS (
-        |  SELECT l.event_id AS eid, r.click_ts, r.click_value,
-        |    row_number() OVER (PARTITION BY l.event_id ORDER BY r.click_ts) AS rn
-        |  FROM l JOIN r ON l.user_id = r.r_user
-        |    AND r.click_ts >= l.ts AND r.click_ts <= l.ts + INTERVAL 2 HOUR
-        |)
-        |SELECT l.event_id, l.user_id, l.ts, l.purchase_value,
-        |  coalesce(j.click_ts, TIMESTAMP '1970-01-01 00:00:00') AS click_ts,
-        |  coalesce(j.click_value, -1.0) AS click_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON l.event_id = j.eid
-        |ORDER BY l.event_id""".stripMargin,
-
-    "q127_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT year(l_shipdate) AS yr,
-        |    ('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15))::BIGINT AS hv
-        |  FROM lineitem
-        |), r AS (
-        |  SELECT yr, hv, row_number() OVER (PARTITION BY yr ORDER BY hv) AS rn,
-        |    count(*) OVER (PARTITION BY yr) AS nd
-        |  FROM h
-        |), s AS (
-        |  SELECT yr, count(*) FILTER (WHERE rn <= 128) AS k_used,
-        |    max(CASE WHEN rn = 128 THEN hv END) AS kth, max(nd) AS nd
-        |  FROM r GROUP BY yr
-        |)
-        |SELECT yr, k_used,
-        |  round(CASE WHEN nd < 128 THEN CAST(nd AS DOUBLE)
-        |    ELSE 127.0 * 1152921504606846976.0 / CAST(kth AS DOUBLE) END, 4)
-        |    AS est_distinct
-        |FROM s ORDER BY yr""".stripMargin,
-
-    "q128_kmv_overlap" ->
-      """WITH d AS (
-        |  SELECT DISTINCT (l_shipdate < TIMESTAMP '1997-01-01') AS early,
-        |    ('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15))::BIGINT AS hv
-        |  FROM lineitem
-        |), r AS (
-        |  SELECT early, hv,
-        |    row_number() OVER (PARTITION BY early ORDER BY hv) AS rn
-        |  FROM d
-        |), ka AS (
-        |  SELECT list_sort(list(hv)) AS kmv FROM r WHERE early AND rn <= 256
-        |), kb AS (
-        |  SELECT list_sort(list(hv)) AS kmv FROM r WHERE NOT early AND rn <= 256
-        |), u AS (
-        |  SELECT list_sort(list_distinct(ka.kmv || kb.kmv))[1:256] AS kmv,
-        |    ka.kmv AS a, kb.kmv AS b
-        |  FROM ka, kb
-        |), est AS (
-        |  SELECT
-        |    CASE WHEN len(a) < 256 THEN CAST(len(a) AS DOUBLE)
-        |      ELSE 255.0 * 1152921504606846976.0 / CAST(a[256] AS DOUBLE) END AS ea,
-        |    CASE WHEN len(b) < 256 THEN CAST(len(b) AS DOUBLE)
-        |      ELSE 255.0 * 1152921504606846976.0 / CAST(b[256] AS DOUBLE) END AS eb,
-        |    CASE WHEN len(kmv) < 256 THEN CAST(len(kmv) AS DOUBLE)
-        |      ELSE 255.0 * 1152921504606846976.0 / CAST(kmv[256] AS DOUBLE) END AS eu,
-        |    CAST(len(list_filter(kmv,
-        |        x -> list_contains(a, x) AND list_contains(b, x))) AS DOUBLE)
-        |      / CAST(len(kmv) AS DOUBLE) AS rho
-        |  FROM u
-        |)
-        |SELECT round(ea, 4) AS est_early, round(eb, 4) AS est_late,
-        |  round(eu, 4) AS est_union, round(rho * eu, 4) AS est_overlap
-        |FROM est""".stripMargin,
-
-    // identical prefix selection (rarest-first (df, gram) rank over the
-    // same sorted distinct 7-grams) and identical verify arithmetic; the
-    // (1 - 0.8) literal subtraction yields the same IEEE double in both
-    // engines, so the prefix lengths agree exactly
-    "q123_containment_pairs" ->
-      """WITH d0 AS (SELECT doc_id, text FROM documents WHERE lang = 'en'),
-        |p AS (
-        |  SELECT doc_id, list_sort(list_distinct(list_transform(
-        |    range(1, greatest(length(text) - 6, 1) + 1),
-        |    i -> ('0x' || substr(md5(substr(text, CAST(i AS INT), 7)), 1, 15))::BIGINT))) AS g
-        |  FROM d0
-        |), sz AS (SELECT doc_id, g, len(g) AS n FROM p),
-        |idx AS (SELECT doc_id, unnest(g) AS gram FROM p),
-        |df AS (SELECT gram, count(*) AS df FROM idx GROUP BY gram),
-        |idx2 AS (
-        |  SELECT doc_id, gram FROM idx JOIN df USING (gram) WHERE df <= 50
-        |), pre AS (
-        |  -- prefix ranked over NON-HOT grams only (PPJoin-with-cap); the
-        |  -- prefix length keeps the FULL gram count n
-        |  SELECT doc_id, gram FROM (
-        |    SELECT i.doc_id, i.gram, d.df, s.n,
-        |      row_number() OVER (PARTITION BY i.doc_id ORDER BY d.df, i.gram) AS rn
-        |    FROM idx i JOIN df d USING (gram) JOIN sz s ON s.doc_id = i.doc_id
-        |    WHERE d.df <= 50)
-        |  WHERE rn <= CAST(floor((1 - 0.8) * n) AS INT) + 1
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_contained, b.doc_id AS id_container
-        |  FROM pre a JOIN idx2 b ON a.gram = b.gram AND a.doc_id <> b.doc_id
-        |)
-        |SELECT c.id_contained, c.id_container,
-        |  round(CAST(len(list_intersect(x.g, y.g)) AS DOUBLE) / x.n, 4)
-        |    AS containment
-        |FROM cand c JOIN sz x ON c.id_contained = x.doc_id
-        |  JOIN sz y ON c.id_container = y.doc_id
-        |WHERE round(CAST(len(list_intersect(x.g, y.g)) AS DOUBLE) / x.n, 4)
-        |  >= 0.8
-        |ORDER BY id_contained, id_container""".stripMargin,
-
-    "q115_key_skew" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS key_value, count(*)::BIGINT AS n_rows
-        |  FROM events GROUP BY user_id
-        |), t AS (
-        |  SELECT sum(n_rows)::BIGINT AS total, count(*)::BIGINT AS nd FROM c
-        |)
-        |SELECT key_value, n_rows,
-        |  round(CAST(n_rows AS DOUBLE) / total, 6) AS share,
-        |  round(CAST(n_rows * nd AS DOUBLE) / total, 6) AS skew_ratio
-        |FROM c, t ORDER BY n_rows DESC, key_value ASC LIMIT 20""".stripMargin,
-
-    // integers (exact ties are binary-unrepresentable at that grid, so
-    // round() cannot diverge between engines), and every literal is cast to
-    // DOUBLE so DuckDB's DECIMAL parsing cannot change the arithmetic
-    "q105_quality_classifier" ->
-      """WITH f AS (
-        |  SELECT doc_id, lang = 'en' AS is_en,
-        |    CASE WHEN lang = 'en' THEN CAST(1.0 AS DOUBLE)
-        |         ELSE CAST(0.0 AS DOUBLE) END AS y,
-        |    CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE) AS x1,
-        |    CAST(len(string_split(text, ' ')) AS DOUBLE) / CAST(100.0 AS DOUBLE) AS x2,
-        |    CAST(n_chars AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE)
-        |      / CAST(10.0 AS DOUBLE) AS x3
-        |  FROM documents
-        |), nn AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n FROM f
-        |), w0 AS (
-        |  SELECT CAST(0.0 AS DOUBLE) AS wb, CAST(0.0 AS DOUBLE) AS w1,
-        |         CAST(0.0 AS DOUBLE) AS w2, CAST(0.0 AS DOUBLE) AS w3
-        |), p1 AS (
-        |  SELECT f.*, CAST(0.5 AS DOUBLE) + z / (CAST(2.0 AS DOUBLE)
-        |    * (CAST(1.0 AS DOUBLE) + abs(z))) AS p
-        |  FROM (SELECT f.*, wb + w1*x1 + w2*x2 + w3*x3 AS z FROM f, w0) f
-        |), g1 AS (
-        |  SELECT
-        |    CAST(sum(CAST(round((p - y) * 1000000.0) AS BIGINT)) AS DOUBLE) AS gb,
-        |    CAST(sum(CAST(round((p - y) * x1 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g1,
-        |    CAST(sum(CAST(round((p - y) * x2 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g2,
-        |    CAST(sum(CAST(round((p - y) * x3 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g3
-        |  FROM p1
-        |), w1c AS (
-        |  SELECT
-        |    round(wb - CAST(0.5 AS DOUBLE) * (gb / CAST(1000000.0 AS DOUBLE) / n), 6) AS wb,
-        |    round(w1 - CAST(0.5 AS DOUBLE) * (g1 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w1,
-        |    round(w2 - CAST(0.5 AS DOUBLE) * (g2 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w2,
-        |    round(w3 - CAST(0.5 AS DOUBLE) * (g3 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w3
-        |  FROM w0, g1, nn
-        |), p2 AS (
-        |  SELECT f.*, CAST(0.5 AS DOUBLE) + z / (CAST(2.0 AS DOUBLE)
-        |    * (CAST(1.0 AS DOUBLE) + abs(z))) AS p
-        |  FROM (SELECT f.*, wb + w1*x1 + w2*x2 + w3*x3 AS z FROM f, w1c) f
-        |), g2c AS (
-        |  SELECT
-        |    CAST(sum(CAST(round((p - y) * 1000000.0) AS BIGINT)) AS DOUBLE) AS gb,
-        |    CAST(sum(CAST(round((p - y) * x1 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g1,
-        |    CAST(sum(CAST(round((p - y) * x2 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g2,
-        |    CAST(sum(CAST(round((p - y) * x3 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g3
-        |  FROM p2
-        |), w2c AS (
-        |  SELECT
-        |    round(wb - CAST(0.5 AS DOUBLE) * (gb / CAST(1000000.0 AS DOUBLE) / n), 6) AS wb,
-        |    round(w1 - CAST(0.5 AS DOUBLE) * (g1 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w1,
-        |    round(w2 - CAST(0.5 AS DOUBLE) * (g2 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w2,
-        |    round(w3 - CAST(0.5 AS DOUBLE) * (g3 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w3
-        |  FROM w1c, g2c, nn
-        |), p3 AS (
-        |  SELECT f.*, CAST(0.5 AS DOUBLE) + z / (CAST(2.0 AS DOUBLE)
-        |    * (CAST(1.0 AS DOUBLE) + abs(z))) AS p
-        |  FROM (SELECT f.*, wb + w1*x1 + w2*x2 + w3*x3 AS z FROM f, w2c) f
-        |), g3c AS (
-        |  SELECT
-        |    CAST(sum(CAST(round((p - y) * 1000000.0) AS BIGINT)) AS DOUBLE) AS gb,
-        |    CAST(sum(CAST(round((p - y) * x1 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g1,
-        |    CAST(sum(CAST(round((p - y) * x2 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g2,
-        |    CAST(sum(CAST(round((p - y) * x3 * 1000000.0) AS BIGINT)) AS DOUBLE) AS g3
-        |  FROM p3
-        |), w3c AS (
-        |  SELECT
-        |    round(wb - CAST(0.5 AS DOUBLE) * (gb / CAST(1000000.0 AS DOUBLE) / n), 6) AS wb,
-        |    round(w1 - CAST(0.5 AS DOUBLE) * (g1 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w1,
-        |    round(w2 - CAST(0.5 AS DOUBLE) * (g2 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w2,
-        |    round(w3 - CAST(0.5 AS DOUBLE) * (g3 / CAST(1000000.0 AS DOUBLE) / n), 6) AS w3
-        |  FROM w2c, g3c, nn
-        |), scored AS (
-        |  SELECT doc_id, is_en, round(CAST(0.5 AS DOUBLE) + z / (CAST(2.0 AS DOUBLE)
-        |    * (CAST(1.0 AS DOUBLE) + abs(z))), 6) AS quality_score
-        |  FROM (SELECT f.*, wb + w1*x1 + w2*x2 + w3*x3 AS z FROM f, w3c) f
-        |)
-        |SELECT doc_id, is_en, quality_score,
-        |  quality_score >= CAST(0.5 AS DOUBLE) AS predicted
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(CAST(sum(CAST(l_quantity AS DECIMAL(28,8))) AS DOUBLE), 2) AS sum_qty,
-        | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,8))) AS DOUBLE), 2) AS sum_base_price,
-        | round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,8))) AS DOUBLE), 2) AS sum_disc_price,
-        | round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(28,8))) AS DOUBLE), 2) AS sum_charge,
-        | round(avg(l_quantity), 4) AS avg_qty,
-        | round(avg(l_extendedprice), 4) AS avg_price,
-        | round(avg(l_discount), 4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_revenue_by_nation" ->
-      """SELECT n_name,
-        | round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,8))) AS DOUBLE), 2) AS revenue,
-        | count(*) AS n_lineitems
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-
-    "q03_top_orders" ->
-      """SELECT o_orderkey, o_orderdate, o_orderpriority,
-        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q04_latest_event_per_user" ->
-      """SELECT user_id, event_id, ts, event_type, value
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id""".stripMargin,
-
-    "q05_events_between" ->
-      """SELECT event_id, ts, user_id, event_type, value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10' AND ts < TIMESTAMP '2024-01-20'
-        |  AND event_type IN ('click', 'purchase')
-        |ORDER BY event_id""".stripMargin,
-
-    "q06_top_events_by_value" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM (SELECT * FROM events ORDER BY value DESC, event_id ASC LIMIT 20)""".stripMargin,
-
-    "q07_entity_union" ->
-      """SELECT nationkey, count(*) AS n_entities FROM (
-        |  SELECT c_nationkey AS nationkey FROM customer
-        |  UNION ALL
-        |  SELECT s_nationkey AS nationkey FROM supplier
-        |) GROUP BY nationkey ORDER BY nationkey""".stripMargin,
-
-    "q08_distinct_users_per_type" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q09_rollup_sales" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity), 2) AS sum_qty, count(*) AS n_rows
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q10_orders_by_month" ->
-      """SELECT date_trunc('month', o_orderdate) AS month,
-        | count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
-        |FROM orders GROUP BY 1 ORDER BY month""".stripMargin,
-
-    "q11_sessionization" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), s AS (
-        |  SELECT user_id,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM g
-        |)
-        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
-        |  count(*) AS n_events
-        |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q12_running_total" ->
-      """SELECT user_id, event_id,
-        | round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS running_value
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "q13_dedup_exact" ->
-      """SELECT md5(text) AS content_md5, min(doc_id) AS keeper_id, count(*) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY content_md5""".stripMargin,
-
-    "q14_text_fingerprint" ->
-      """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q15_text_stats" ->
-      """SELECT doc_id,
-        | len(regexp_extract_all(text, '\S+')) AS n_tokens,
-        | length(text) AS n_chars_m,
-        | round(CAST(list_sum(list_transform(regexp_extract_all(text, '\S+'), t -> length(t))) AS DOUBLE)
-        |   / greatest(len(regexp_extract_all(text, '\S+')), 1), 4) AS mean_tok_len,
-        | round(CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE)
-        |   / greatest(length(text), 1), 6) AS punct_ratio,
-        | round(CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|of|to|in|is|it|that)\b')) AS DOUBLE)
-        |   / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) AS stop_ratio,
-        | round((least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |   + greatest(1.0 - round(CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / greatest(length(text), 1), 6) * 5.0, 0.0)
-        |   + least(round(CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|of|to|in|is|it|that)\b')) AS DOUBLE) / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) * 4.0, 1.0)
-        |  ) / 3.0, 6) AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q16_language_id" ->
-      """WITH sc AS (
-        | SELECT doc_id,
-        |  len(regexp_extract_all(lower(text), '\b(the|and|of|is|a)\b')) AS en_n,
-        |  len(regexp_extract_all(lower(text), '\b(der|die|das|und|nicht)\b')) AS de_n,
-        |  len(regexp_extract_all(lower(text), '\b(le|la|les|et|est)\b')) AS fr_n,
-        |  len(regexp_extract_all(lower(text), '\b(el|los|las|y|es)\b')) AS es_n,
-        |  len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS zh_n
-        | FROM documents
-        |)
-        |SELECT doc_id, en_n, de_n, fr_n, es_n, zh_n,
-        | CASE WHEN zh_n > 0 THEN 'zh'
-        |      WHEN en_n >= de_n AND en_n >= fr_n AND en_n >= es_n THEN 'en'
-        |      WHEN de_n >= fr_n AND de_n >= es_n THEN 'de'
-        |      WHEN fr_n >= es_n THEN 'fr'
-        |      ELSE 'es' END AS lang_pred
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // replays the engine's candidate pipeline, not a naive all-pairs: the
-    // block equi-join AND the size prefilter (min/max gram counts with the
-    // same half-step relaxation) run BEFORE any intersection, and the
-    // jaccard is computed once — the prefilter is lossless (a dropped pair
-    // is provably below threshold), so results are identical while the sf1
-    // replay evaluates ~the same candidate set the engine does
-    // the pairwise work collapses to DISTINCT (lang, bucket, text) rows
-    // first (grams as 60-bit md5 BIGINTs, q123's oracle style; inverted-
-    // index intersection counts), then expands back to doc ids: identical
-    // texts have identical gram sets (jaccard exactly 1.0 >= any
-    // threshold), so a massively-replicated corpus — the sf1 replay is 10
-    // byte-identical copies — costs the distinct-text universe, not the
-    // id universe. Same distinct-first trick the engine's fuzzy matcher
-    // uses; without it the hot-gram equi-join is ~B^2 per block per gram
-    // (measured: >1 CPU-hour at sf1 vs ~1s collapsed, identical output)
-    "q17_ngram_jaccard_pairs" ->
-      """WITH dt AS (
-        | SELECT lang, floor(n_chars / 50) AS len_bucket, text, min(doc_id) AS rep
-        | FROM documents GROUP BY lang, floor(n_chars / 50), text
-        |), ids AS (
-        | SELECT d.doc_id, t.rep
-        | FROM documents d JOIN dt t ON d.text IS NOT DISTINCT FROM t.text
-        |   AND d.lang IS NOT DISTINCT FROM t.lang
-        |   AND floor(d.n_chars / 50) IS NOT DISTINCT FROM t.len_bucket
-        |), p AS (
-        | SELECT rep, lang, len_bucket,
-        |  list_distinct(list_transform(range(1, greatest(length(text) - 2, 1) + 1),
-        |    i -> ('0x' || substr(md5(substr(text, CAST(i AS INT), 3)), 1, 15))::BIGINT)) AS grams
-        | FROM dt
-        |), idx AS (
-        | SELECT rep, lang, len_bucket, unnest(grams) AS g FROM p
-        |), ixc AS (
-        | SELECT a.rep AS rep_a, b.rep AS rep_b, count(*) AS ix
-        | FROM idx a JOIN idx b
-        |   ON a.g = b.g AND a.lang = b.lang AND a.len_bucket = b.len_bucket
-        |  AND a.rep < b.rep
-        | GROUP BY 1, 2
-        |), pl AS (SELECT rep, len(grams) AS ng FROM p
-        |), rp AS (
-        | SELECT rep_a, rep_b,
-        |   round(CAST(ix AS DOUBLE) / (pa.ng + pb.ng - ix), 4) AS jaccard
-        | FROM ixc JOIN pl pa ON pa.rep = rep_a JOIN pl pb ON pb.rep = rep_b
-        | WHERE round(CAST(ix AS DOUBLE) / (pa.ng + pb.ng - ix), 4) >= 0.7
-        |)
-        |SELECT id_a, id_b, jaccard FROM (
-        | SELECT least(ia.doc_id, ib.doc_id) AS id_a,
-        |   greatest(ia.doc_id, ib.doc_id) AS id_b, r.jaccard
-        | FROM rp r JOIN ids ia ON ia.rep = r.rep_a JOIN ids ib ON ib.rep = r.rep_b
-        | UNION ALL
-        | -- identical texts: gram sets equal, jaccard exactly 1.0. NULL-text
-        | -- groups are excluded: they carry no grams, so the pre-collapse
-        | -- formulation never paired them
-        | SELECT a.doc_id, b.doc_id, 1.0 AS jaccard
-        | FROM ids a JOIN ids b ON a.rep = b.rep AND a.doc_id < b.doc_id
-        | WHERE a.rep IN (SELECT rep FROM p WHERE grams IS NOT NULL)
-        |) ORDER BY id_a, id_b""".stripMargin,
-
-    // MinHash+LSH: the md5-affine signature family (Dedup.minHashParams) is
-    // recomputable in any SQL engine; the LSH bucket criterion "xxhash64 of
-    // the band slice collides" is replaced by its semantic equivalent "the
-    // band slices are equal" (a collision without slice equality is ~2^-64)
-    // distinct-text collapse (see q17's oracle comment): identical texts
-    // have identical signatures (est exactly 1.0, always banded together),
-    // so signatures and band pairs run over DISTINCT texts and expand back
-    // to ids; empty-token texts have no signature and thus no pairs
-    "q18_minhash_lsh_pairs" ->
-      """WITH params AS (
-        |  SELECT
-        |    list_transform(range(0, 64), i ->
-        |      (('0x' || substr(md5('minhash_a_' || i), 1, 8))::BIGINT % 536870912) * 2 + 1) AS pa,
-        |    list_transform(range(0, 64), i ->
-        |      ('0x' || substr(md5('minhash_b_' || i), 1, 8))::BIGINT) AS pb
-        |), dt AS (
-        |  SELECT text, min(doc_id) AS rep FROM documents GROUP BY text
-        |), ids AS (
-        |  SELECT d.doc_id, t.rep FROM documents d
-        |    JOIN dt t ON d.text IS NOT DISTINCT FROM t.text
-        |), sh AS (
-        |  SELECT rep,
-        |    list_transform(range(1, greatest(len(toks) - 2, 1) + 1),
-        |      s -> array_to_string(toks[s:s+2], ' ')) AS shingles
-        |  FROM (SELECT rep, regexp_extract_all(text, '\S+') AS toks FROM dt)
-        |  WHERE len(toks) > 0
-        |), p AS (
-        |  SELECT rep,
-        |    list_transform(range(0, 64), i ->
-        |      list_min(list_transform(xs, x -> (pa[i+1] * x + pb[i+1]) % 2305843009213693951))) AS sig
-        |  FROM (SELECT rep,
-        |          list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS xs
-        |        FROM sh), params
-        |)
-        |, bb AS (
-        |  -- banded buckets exactly as the engine shuffles them: "some band
-        |  -- slice equal" becomes a band-bucket equi-join, never all-pairs
-        |  SELECT rep, CAST(t.b AS INT) AS band,
-        |    array_to_string(sig[CAST(t.b*8+1 AS INT):CAST(t.b*8+8 AS INT)], ',') AS bkey
-        |  FROM p CROSS JOIN range(0, 8) t(b)
-        |), cand AS (
-        |  SELECT DISTINCT a.rep AS rep_a, b.rep AS rep_b
-        |  FROM bb a JOIN bb b
-        |    ON a.band = b.band AND a.bkey = b.bkey AND a.rep < b.rep
-        |), rp AS (
-        |  SELECT c.rep_a, c.rep_b,
-        |    round(len(list_filter(range(0, 64), i -> pa.sig[i+1] = pb.sig[i+1])) / 64.0, 4) AS est_jaccard
-        |  FROM cand c JOIN p pa ON pa.rep = c.rep_a JOIN p pb ON pb.rep = c.rep_b
-        |  WHERE round(len(list_filter(range(0, 64), i -> pa.sig[i+1] = pb.sig[i+1])) / 64.0, 4) >= 0.5
-        |)
-        |SELECT id_a, id_b, est_jaccard FROM (
-        |  SELECT least(ia.doc_id, ib.doc_id) AS id_a,
-        |    greatest(ia.doc_id, ib.doc_id) AS id_b, r.est_jaccard
-        |  FROM rp r JOIN ids ia ON ia.rep = r.rep_a JOIN ids ib ON ib.rep = r.rep_b
-        |  UNION ALL
-        |  SELECT a.doc_id, b.doc_id, 1.0 AS est_jaccard
-        |  FROM ids a JOIN ids b ON a.rep = b.rep AND a.doc_id < b.doc_id
-        |  WHERE a.rep IN (SELECT rep FROM p)
-        |) ORDER BY id_a, id_b""".stripMargin,
-
-    "q20_embed_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_vec
-        |  FROM embeddings WHERE vec_id < 20
-        |), c AS (
-        |  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS c_vec
-        |  FROM embeddings
-        |), s AS (
-        |  SELECT query_id, neighbor_id,
-        |    round(list_dot_product(q_vec, c_vec)
-        |      / (sqrt(list_dot_product(q_vec, q_vec)) * sqrt(list_dot_product(c_vec, c_vec))), 6) AS cos
-        |  FROM q, c WHERE query_id <> neighbor_id
-        |)
-        |SELECT query_id, neighbor_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s
-        |QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // SRP ANN: hyperplane components are md5-derived multiples of 2^-10
-    // (Similarity.hyperplanes), so DuckDB recomputes the exact sign buckets;
-    // the radius-1 multi-probe is expressed as hamming(bucket_q, bucket_c)<=1
-    "q21_embed_ann_srp" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), b AS (
-        |  SELECT vec_id, v,
-        |    list_sum(list_transform(range(0, 8), p ->
-        |      CASE WHEN list_sum(list_transform(range(0, 64), d ->
-        |          ((('0x' || substr(md5('srp_42_' || p || '_' || d), 1, 15))::BIGINT % 2048 - 1024)
-        |            / 1024.0) * v[CAST(d AS INT) + 1])) >= 0
-        |      THEN 1::BIGINT << (7 - CAST(p AS INT)) ELSE 0 END))::BIGINT AS bucket
-        |  FROM e
-        |), s AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_dot_product(q.v, c.v)
-        |      / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-        |  FROM b q JOIN b c
-        |    ON bit_count(xor(q.bucket, c.bucket)) <= 1 AND q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 20
-        |)
-        |SELECT query_id, neighbor_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s
-        |QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q23_media_manifest" ->
-      """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-        | sha256(text) AS sha256_hex
-        |FROM documents ORDER BY doc_id""".stripMargin
-  ) ++ Map(
-    "q22_embed_centroids" ->
-      """WITH e AS (
-        | SELECT label,
-        |  CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
-        |  CAST(unnest(embedding) AS DOUBLE) AS component
-        | FROM embeddings
-        |)
-        |SELECT label, pos, round(avg(component), 6) AS centroid
-        |FROM e GROUP BY label, pos ORDER BY label, pos""".stripMargin,
-
-    "q24_storage_snapshot" -> storageOracleSql,
-    "q25_storage_compact" -> storageOracleSql,
-    // the point variant restricts the identical snapshot to the 20 lowest
-    // user_ids ≡ 0 (mod 7) — the keys the Spark side probes
-    "q139_point_lookup" ->
-      (storageOracleSql.stripSuffix("ORDER BY u.user_id") +
-        "WHERE u.user_id % 7 = 0 ORDER BY u.user_id LIMIT 20"),
-
-    "q27_customers_without_orders" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q28_customer_order_stats" ->
-      """WITH agg AS (
-        |  SELECT o_custkey, count(*) AS n_orders, round(sum(o_totalprice), 2) AS spend
-        |  FROM orders GROUP BY o_custkey
-        |)
-        |SELECT c_custkey,
-        |  coalesce(n_orders, 0) AS n_orders,
-        |  coalesce(spend, 0.0) AS spend
-        |FROM customer LEFT JOIN agg ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q29_pivot_events" ->
-      """SELECT user_id,
-        |  count(*) FILTER (WHERE event_type = 'click') AS click,
-        |  count(*) FILTER (WHERE event_type = 'view') AS view,
-        |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        |  count(*) FILTER (WHERE event_type = 'error') AS error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q32_dup_clusters" -> (jaccardClusterCore +
-      """
-        |SELECT doc_id, cluster_id, cluster_id = doc_id AS keep
-        |FROM clustered ORDER BY doc_id""".stripMargin),
-
-    "q19_simhash_fingerprints" ->
-      """SELECT doc_id,
-        | list_sum(list_transform(range(0, 60), i ->
-        |   CASE WHEN coalesce(list_sum(list_transform(regexp_extract_all(text, '\S+'),
-        |          tok -> CASE WHEN ((('0x' || substr(md5(tok), 1, 15))::BIGINT >> i) & 1) = 1
-        |                 THEN 1 ELSE -1 END)), 0) >= 0
-        |        THEN (1::BIGINT << (59 - i::INT)) ELSE 0 END))::BIGINT AS simhash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q26_media_pipeline" ->
-      """SELECT doc_id,
-        | octet_length(encode(text)) AS n_bytes,
-        | (('0x' || substr(md5(text), 1, 15))::BIGINT % 960 + 64) AS width,
-        | ((('0x' || substr(md5(text), 1, 15))::BIGINT >> 16) % 960 + 64) AS height,
-        | 4::BIGINT AS n_frames,
-        | 8::BIGINT AS feat_dim,
-        | round(list_sum(list_transform(range(0, 8),
-        |   i -> ((('0x' || substr(md5(i::VARCHAR || text), 1, 15))::BIGINT % 2048 - 1024)
-        |         / 1024.0))), 6) AS feat_checksum
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q34_asof_join" ->
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderdate, o_orderkey, o_totalprice
-        |  FROM orders
-        |  QUALIFY row_number() OVER (PARTITION BY o_custkey, o_orderdate
-        |    ORDER BY o_orderkey DESC) = 1
-        |)
-        |SELECT e.event_id, e.user_id, e.ts, o.o_orderkey,
-        |  round(o.o_totalprice, 2) AS o_totalprice
-        |FROM events e ASOF LEFT JOIN o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q35_interval_join" ->
-      """WITH w AS (SELECT DISTINCT date_trunc('day', ts) AS w_start FROM events)
-        |SELECT e.event_id, w.w_start
-        |FROM events e JOIN w
-        |  ON e.ts >= w.w_start AND e.ts < w.w_start + INTERVAL 36 HOUR
-        |ORDER BY e.event_id, w.w_start""".stripMargin,
-
-    "q36_embed_neardup" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), s AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    round(list_dot_product(a.v, b.v)
-        |      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-        |)
-        |SELECT id_a, id_b, cos FROM s WHERE cos >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q37_skew_join" ->
-      """SELECT c_mktsegment, count(*) AS n_events,
-        |  round(sum(value), 2) AS total_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q38_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000
-        |  < CASE WHEN lang = 'en' THEN 2000 ELSE 5000 END
-        |ORDER BY doc_id""".stripMargin,
-
-    "q39_bpe_tokens" -> bpeTokenizeOracle,
-
-    "q40_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q41_range_window" ->
-      """SELECT event_id, user_id,
-        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |    RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW), 6) AS sum_10m
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q42_cube_sales" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  count(*) AS n_orders,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    // IVF: the whole pipeline — seeded init (first 8 vectors by id), two
-    // Lloyd rounds (argmin assign, per-dim mean update, empty-cell
-    // fallback), 2-probe search, exact cosine rerank — unrolled in SQL.
-    // Distances/means are double in both engines; an assignment flip would
-    // need two centroid distances within ~1e-13, never observed.
-    "q33_embed_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), c0 AS (
-        |  SELECT list(v ORDER BY vec_id) AS cs FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)
-        |), a1 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c0)
-        |), u1 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a1)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c1 AS (
-        |  SELECT list(coalesce(u1.cent, c0.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c0 LEFT JOIN u1 ON u1.cell = t.i
-        |  GROUP BY c0.cs
-        |), a2 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c1)
-        |), u2 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a2)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c2 AS (
-        |  SELECT list(coalesce(u2.cent, c1.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c1 LEFT JOIN u2 ON u2.cell = t.i
-        |  GROUP BY c1.cs
-        |), idx AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c2)
-        |), probe AS (
-        |  SELECT vec_id, v, cell FROM (
-        |    SELECT q.vec_id, q.v, t.i AS cell,
-        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |        list_sum(list_transform(range(0, 64),
-        |          d -> (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1])
-        |             * (q.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1]))), t.i) AS rn
-        |    FROM (SELECT vec_id, v FROM e WHERE vec_id < 20) q
-        |    CROSS JOIN range(0, 8) t(i) CROSS JOIN c2)
-        |  WHERE rn <= 2
-        |), s AS (
-        |  SELECT p.vec_id AS query_id, i.vec_id AS neighbor_id,
-        |    round(list_dot_product(p.v, i.v)
-        |      / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(i.v, i.v))), 6) AS cos
-        |  FROM probe p JOIN idx i ON p.cell = i.cell AND p.vec_id <> i.vec_id
-        |)
-        |SELECT query_id, neighbor_id, cos,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q31_approx_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        |  true AS approx_within_5pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // BM25: corpus stats from exact integer sums (identical in any engine);
-    // idf rounded to 6 decimals on both sides so libm-vs-JVM ln ulps cannot
-    // surface; term order in the score sum is fixed left-to-right
-    "q43_bm25" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks FROM documents
-        |), s AS (
-        |  SELECT count(*) AS n, CAST(sum(len(toks)) AS BIGINT) AS total,
-        |    sum(CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END) AS df0,
-        |    sum(CASE WHEN list_contains(toks, 'window') THEN 1 ELSE 0 END) AS df1,
-        |    sum(CASE WHEN list_contains(toks, 'join') THEN 1 ELSE 0 END) AS df2
-        |  FROM d
-        |)
-        |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  round(
-        |    round(ln((n - df0 + 0.5) / (df0 + 0.5) + 1), 6) * tf0 * 2.2
-        |      / (tf0 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n))))
-        |  + round(ln((n - df1 + 0.5) / (df1 + 0.5) + 1), 6) * tf1 * 2.2
-        |      / (tf1 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n))))
-        |  + round(ln((n - df2 + 0.5) / (df2 + 0.5) + 1), 6) * tf2 * 2.2
-        |      / (tf2 + 1.2 * (0.25 + 0.75 * (CAST(len(toks) AS DOUBLE) / (CAST(total AS DOUBLE) / n)))), 4) AS bm25
-        |FROM (
-        |  SELECT doc_id, toks,
-        |    CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf0,
-        |    CAST(len(list_filter(toks, x -> x = 'window')) AS DOUBLE) AS tf1,
-        |    CAST(len(list_filter(toks, x -> x = 'join')) AS DOUBLE) AS tf2
-        |  FROM d), s
-        |ORDER BY doc_id""".stripMargin,
-
-    // PQ training replayed in SQL: per-subspace slices, first-8 init, one
-    // Lloyd round (argmin assign / per-dim mean / empty-cell fallback),
-    // final integer codes — exact-match (no float output at all)
-    "q45_pq_codes" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), sub AS (
-        |  SELECT vec_id, CAST(t.j AS INT) AS j,
-        |    v[CAST(t.j*16+1 AS INT):CAST(t.j*16+16 AS INT)] AS sv
-        |  FROM e CROSS JOIN range(0, 4) t(j)
-        |), c0 AS (
-        |  SELECT j, list(sv ORDER BY vec_id) AS cs
-        |  FROM (SELECT vec_id, j, sv FROM sub
-        |        QUALIFY row_number() OVER (PARTITION BY j ORDER BY vec_id) <= 8)
-        |  GROUP BY j
-        |), a1 AS (
-        |  SELECT vec_id, j, sv, list_position(d, list_min(d)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, sub.j AS j, sv,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM sub JOIN c0 ON sub.j = c0.j)
-        |), u1 AS (
-        |  SELECT j, cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT j, cell, pos, avg(x) AS m
-        |    FROM (SELECT j, cell, generate_subscripts(sv, 1) AS pos, unnest(sv) AS x FROM a1)
-        |    GROUP BY j, cell, pos)
-        |  GROUP BY j, cell
-        |), c1 AS (
-        |  SELECT g.j, list(coalesce(u1.cent, c0.cs[CAST(g.c AS INT)+1]) ORDER BY g.c) AS cs
-        |  FROM (SELECT CAST(t.j AS INT) AS j, CAST(t2.c AS INT) AS c
-        |        FROM range(0, 4) t(j) CROSS JOIN range(0, 8) t2(c)) g
-        |  JOIN c0 ON c0.j = g.j
-        |  LEFT JOIN u1 ON u1.j = g.j AND u1.cell = g.c
-        |  GROUP BY g.j
-        |), codes AS (
-        |  SELECT vec_id, j, list_position(d, list_min(d)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, sub.j AS j,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM sub JOIN c1 ON sub.j = c1.j)
-        |)
-        |SELECT vec_id,
-        |  CAST(max(CASE WHEN j = 0 THEN cell END) AS BIGINT) AS code_0,
-        |  CAST(max(CASE WHEN j = 1 THEN cell END) AS BIGINT) AS code_1,
-        |  CAST(max(CASE WHEN j = 2 THEN cell END) AS BIGINT) AS code_2,
-        |  CAST(max(CASE WHEN j = 3 THEN cell END) AS BIGINT) AS code_3
-        |FROM codes GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    // ADC search over the q45 model: per-query subspace distance tables,
-    // score = 4 table lookups summed left-to-right, rank asc + id tie-break
-    "q46_pq_adc" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), sub AS (
-        |  SELECT vec_id, CAST(t.j AS INT) AS j,
-        |    v[CAST(t.j*16+1 AS INT):CAST(t.j*16+16 AS INT)] AS sv
-        |  FROM e CROSS JOIN range(0, 4) t(j)
-        |), c0 AS (
-        |  SELECT j, list(sv ORDER BY vec_id) AS cs
-        |  FROM (SELECT vec_id, j, sv FROM sub
-        |        QUALIFY row_number() OVER (PARTITION BY j ORDER BY vec_id) <= 8)
-        |  GROUP BY j
-        |), a1 AS (
-        |  SELECT vec_id, j, sv, list_position(d, list_min(d)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, sub.j AS j, sv,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM sub JOIN c0 ON sub.j = c0.j)
-        |), u1 AS (
-        |  SELECT j, cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT j, cell, pos, avg(x) AS m
-        |    FROM (SELECT j, cell, generate_subscripts(sv, 1) AS pos, unnest(sv) AS x FROM a1)
-        |    GROUP BY j, cell, pos)
-        |  GROUP BY j, cell
-        |), c1 AS (
-        |  SELECT g.j, list(coalesce(u1.cent, c0.cs[CAST(g.c AS INT)+1]) ORDER BY g.c) AS cs
-        |  FROM (SELECT CAST(t.j AS INT) AS j, CAST(t2.c AS INT) AS c
-        |        FROM range(0, 4) t(j) CROSS JOIN range(0, 8) t2(c)) g
-        |  JOIN c0 ON c0.j = g.j
-        |  LEFT JOIN u1 ON u1.j = g.j AND u1.cell = g.c
-        |  GROUP BY g.j
-        |), codes AS (
-        |  SELECT vec_id, j, list_position(d, list_min(d)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, sub.j AS j,
-        |      list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |        (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1]) * (sv[CAST(i AS INT)+1] - c[CAST(i AS INT)+1])))) AS d
-        |    FROM sub JOIN c1 ON sub.j = c1.j)
-        |), wide AS (
-        |  SELECT vec_id AS neighbor_id,
-        |    CAST(max(CASE WHEN j = 0 THEN cell END) AS INT) AS k0,
-        |    CAST(max(CASE WHEN j = 1 THEN cell END) AS INT) AS k1,
-        |    CAST(max(CASE WHEN j = 2 THEN cell END) AS INT) AS k2,
-        |    CAST(max(CASE WHEN j = 3 THEN cell END) AS INT) AS k3
-        |  FROM codes GROUP BY vec_id
-        |), tq AS (
-        |  SELECT q.vec_id AS query_id, c1.j,
-        |    list_transform(cs, c -> list_sum(list_transform(range(0, 16), i ->
-        |      (q.v[CAST(c1.j*16 AS INT) + CAST(i AS INT) + 1] - c[CAST(i AS INT)+1])
-        |      * (q.v[CAST(c1.j*16 AS INT) + CAST(i AS INT) + 1] - c[CAST(i AS INT)+1])))) AS tab
-        |  FROM (SELECT vec_id, v FROM e WHERE vec_id < 20) q CROSS JOIN c1
-        |), tw AS (
-        |  SELECT query_id,
-        |    max(CASE WHEN j = 0 THEN tab END) AS t0,
-        |    max(CASE WHEN j = 1 THEN tab END) AS t1,
-        |    max(CASE WHEN j = 2 THEN tab END) AS t2,
-        |    max(CASE WHEN j = 3 THEN tab END) AS t3
-        |  FROM tq GROUP BY query_id
-        |), s AS (
-        |  SELECT query_id, neighbor_id,
-        |    round(t0[k0+1] + t1[k1+1] + t2[k2+1] + t3[k3+1], 6) AS adc_dist
-        |  FROM tw CROSS JOIN wide WHERE query_id <> neighbor_id
-        |)
-        |SELECT query_id, neighbor_id, adc_dist,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC) AS BIGINT) AS rank
-        |FROM s QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q44_repetition" ->
-      """SELECT doc_id,
-        |  round(CAST(len(list_distinct(toks)) AS DOUBLE) / greatest(len(toks), 1), 4) AS distinct_ratio,
-        |  round(CAST(coalesce(list_max(list_transform(list_distinct(toks),
-        |      t -> len(list_filter(toks, x -> x = t)))), 0) AS DOUBLE)
-        |    / greatest(len(toks), 1), 4) AS top_token_frac,
-        |  round(CAST(coalesce(list_max(list_transform(list_distinct(bg),
-        |      t -> len(list_filter(bg, x -> x = t)))), 0) AS DOUBLE)
-        |    / greatest(len(bg), 1), 4) AS top_bigram_frac
-        |FROM (
-        |  SELECT doc_id, toks,
-        |    list_transform(range(1, greatest(len(toks) - 1, 1) + 1),
-        |      i -> array_to_string(toks[i:i+1], ' ')) AS bg
-        |  FROM (SELECT doc_id, regexp_extract_all(text, '\S+') AS toks FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q47_bloom_join" ->
-      """SELECT date_trunc('month', o_orderdate) AS month,
-        |  count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-
-    "q48_scd2" ->
-      """WITH ordered AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), ch AS (
-        |  SELECT user_id, ts, event_id, event_type FROM ordered
-        |  WHERE prev IS DISTINCT FROM event_type
-        |)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  coalesce(lead(ts) OVER w, TIMESTAMP '2200-01-01') AS valid_to,
-        |  lead(ts) OVER w IS NULL AS is_current,
-        |  CAST(row_number() OVER w AS BIGINT) AS version
-        |FROM ch
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin,
-
-    "q49_zorder_key" -> (
-      """WITH b AS (
-        |  SELECT event_id,
-        |    user_id % 256 AS zx,
-        |    least(greatest(CAST(floor((value - 0.0) / 512.0 * 256.0) AS BIGINT), 0), 255) AS zy
-        |  FROM events
-        |)
-        |SELECT event_id, zx, zy, """.stripMargin +
-        graft.operators.Layout.mortonKeySql(Seq("zx", "zy"), 8) +
-        " AS zkey FROM b ORDER BY event_id"),
-
-    "q50_gopher_filter" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    len(regexp_extract_all(text, '\S+')) AS n_words,
-        |    round(CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 4) AS mean_word_len,
-        |    round(CAST(len(regexp_extract_all(text, '#|\.\.\.|…')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) AS symbol_ratio,
-        |    round(CAST(len(regexp_extract_all(text, '(?m)^[ \t]*[-*•]')) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1), 6) AS bullet_frac,
-        |    round(CAST(len(regexp_extract_all(text, '(?m)(\.\.\.|…)$')) AS DOUBLE)
-        |      / greatest(len(string_split(text, chr(10))), 1), 6) AS ellipsis_frac,
-        |    round(CAST(len(regexp_extract_all(text, '\S*\p{L}\S*')) AS DOUBLE)
-        |      / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) AS alpha_frac,
-        |    (CASE WHEN regexp_matches(lower(text), '\bthe\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bbe\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bto\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bof\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\band\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bthat\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bhave\b') THEN 1 ELSE 0 END
-        |     + CASE WHEN regexp_matches(lower(text), '\bwith\b') THEN 1 ELSE 0 END
-        |    )::BIGINT AS n_stopwords
-        |  FROM documents
-        |)
-        |SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
-        |  ellipsis_frac, alpha_frac, n_stopwords,
-        |  (n_words >= 50 AND n_words <= 100000
-        |   AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND symbol_ratio <= 0.1
-        |   AND bullet_frac <= 0.9
-        |   AND ellipsis_frac <= 0.3
-        |   AND alpha_frac >= 0.8
-        |   AND n_stopwords >= 2) AS pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // idf rounded to 6 decimals BEFORE the tf multiply on both sides, so the
-    // ranking doubles are bit-identical despite libm-vs-JVM ln differences
-    "q51_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS term FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
-        |), wdf AS (
-        |  SELECT doc_id, term, tf, count(*) OVER (PARTITION BY term) AS df FROM tf
-        |), n AS (SELECT count(*) AS n FROM documents)
-        |SELECT doc_id, term, tf, df,
-        |  round(CAST(tf AS DOUBLE) * round(ln(CAST(n AS DOUBLE) / CAST(df AS DOUBLE)), 6), 6) AS score,
-        |  CAST(row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY round(CAST(tf AS DOUBLE) * round(ln(CAST(n AS DOUBLE) / CAST(df AS DOUBLE)), 6), 6) DESC,
-        |      term ASC) AS BIGINT) AS rank
-        |FROM wdf, n
-        |QUALIFY rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    "q52_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |         ELSE list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-        |           i -> array_to_string(t[i:i+2], ' ')))
-        |    END AS grams
-        |  FROM toks
-        |), bench AS (
-        |  SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 10
-        |), ex AS (
-        |  SELECT doc_id, unnest(grams) AS gram FROM g
-        |), hits AS (
-        |  SELECT ex.doc_id, count(*) AS n_hits
-        |  FROM ex JOIN bench USING (gram) GROUP BY ex.doc_id
-        |)
-        |SELECT g.doc_id, CAST(len(grams) AS BIGINT) AS n_grams,
-        |  coalesce(h.n_hits, 0) AS n_hits,
-        |  coalesce(h.n_hits, 0) > 0 AS contaminated
-        |FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    "q53_capped_per_key" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id
-        |  ORDER BY ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT,
-        |    CAST(event_id AS VARCHAR)) <= 5
-        |ORDER BY event_id""".stripMargin,
-
-    "q54_profile" ->
-      """WITH p AS (
-        |  SELECT 'o_orderkey' AS col_name, count(*) AS n_rows,
-        |    count(*) - count(o_orderkey) AS n_nulls,
-        |    count(DISTINCT o_orderkey) AS n_distinct,
-        |    CAST(min(o_orderkey) AS VARCHAR) AS min_value,
-        |    CAST(max(o_orderkey) AS VARCHAR) AS max_value
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
-        |    count(DISTINCT o_custkey),
-        |    CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-        |    count(DISTINCT o_orderstatus),
-        |    CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-        |    count(DISTINCT o_orderpriority),
-        |    CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR)
-        |  FROM orders
-        |)
-        |SELECT * FROM p ORDER BY col_name""".stripMargin,
-
-    // weight = the q15 quality score, recomputed; membership = md5 bucket
-    "q55_weighted_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10000
-        |  < round(round((least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      + greatest(1.0 - round(CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / greatest(length(text), 1), 6) * 5.0, 0.0)
-        |      + least(round(CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|of|to|in|is|it|that)\b')) AS DOUBLE) / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) * 4.0, 1.0)
-        |     ) / 3.0, 6) * 10000)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q56_packing" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    CAST(coalesce(len(regexp_extract_all(text, '\S+')), 0) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(sum(n_tokens) OVER w - n_tokens AS BIGINT) AS start_offset,
-        |  CAST(floor((sum(n_tokens) OVER w - n_tokens) / 512.0) AS BIGINT) AS chunk_id,
-        |  ((sum(n_tokens) OVER w - n_tokens) % 512 + n_tokens) > 512 AS spans_boundary
-        |FROM t
-        |WINDOW w AS (PARTITION BY lang ORDER BY doc_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q57_equidepth_bins" ->
-      """WITH b AS (
-        |  SELECT [round(quantile_cont(value, 0.25), 6),
-        |          round(quantile_cont(value, 0.50), 6),
-        |          round(quantile_cont(value, 0.75), 6)] AS bs
-        |  FROM events
-        |)
-        |SELECT event_id, value,
-        |  CAST(len(list_filter(bs, x -> x < value)) AS BIGINT) AS bin
-        |FROM events, b
-        |ORDER BY event_id""".stripMargin,
-
-    // sum(BIGINT) is HUGEINT in DuckDB — cast back; avg spelled as an
-    // explicit exact-sum / count division so both engines round the same
-    // double
-    "q58_json_extract" ->
-      """SELECT event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  round(CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS DOUBLE) / count(*), 6) AS avg_k,
-        |  min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q59_chunk_tokens" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), st AS (
-        |  SELECT doc_id, t, unnest(range(0, greatest(len(t), 0), 24)) AS tok_start
-        |  FROM toks WHERE len(t) > 0
-        |)
-        |SELECT doc_id, CAST(tok_start // 24 AS BIGINT) AS chunk_ix,
-        |  CAST(tok_start AS BIGINT) AS tok_start,
-        |  CAST(len(t[tok_start + 1 : tok_start + 32]) AS BIGINT) AS n_tokens,
-        |  array_to_string(t[tok_start + 1 : tok_start + 32], ' ') AS chunk_text
-        |FROM st ORDER BY doc_id, chunk_ix""".stripMargin,
-
-    "q60_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm_text,
-        |  CAST(length(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS BIGINT) AS n_norm,
-        |  CAST(length(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g'))) AS BIGINT) AS n_aggr,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g'))) AS aggr_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // mirrors the Spark hash-internal pipeline on gram STRINGS: per-doc
-    // distinct 8-token windows, shared iff seen in >= 2 docs
-    "q61_substring_dup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS t FROM documents
-        |), g AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) = 0 THEN []::VARCHAR[]
-        |         ELSE list_distinct(list_transform(range(1, greatest(len(t) - 7, 1) + 1),
-        |           i -> array_to_string(t[i:i+7], ' ')))
-        |    END AS grams
-        |  FROM toks
-        |), ex AS (
-        |  SELECT doc_id, unnest(grams) AS gram FROM g
-        |), sh AS (
-        |  SELECT gram FROM ex GROUP BY gram HAVING count(*) >= 2
-        |), cnt AS (
-        |  SELECT ex.doc_id, count(*) AS n_shared
-        |  FROM ex JOIN sh USING (gram) GROUP BY ex.doc_id
-        |)
-        |SELECT g.doc_id, CAST(len(grams) AS BIGINT) AS n_windows,
-        |  coalesce(cnt.n_shared, 0) AS n_shared,
-        |  round(coalesce(cnt.n_shared, 0) / greatest(len(grams), 1), 6) AS dup_frac,
-        |  round(coalesce(cnt.n_shared, 0) / greatest(len(grams), 1), 6) >= 0.25 AS flagged
-        |FROM g LEFT JOIN cnt ON g.doc_id = cnt.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-
-    // same synthesized contact line; RE2-compatible patterns mirror the
-    // Spark side verbatim ('g' flag: DuckDB replaces first match only by
-    // default, Spark replaces all)
-    "q62_pii_redact" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 40) || ' contact u' || CAST(doc_id AS VARCHAR)
-        |      || '@example.com via 10.1.' || CAST(doc_id % 200 AS VARCHAR)
-        |      || '.7 call +1 555-00' || CAST(doc_id % 90 + 10 AS VARCHAR) AS synth
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(synth, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(synth, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(synth, '\+\d[\d .-]{7,}\d')) AS BIGINT) AS n_phones,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(synth, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\+\d[\d .-]{7,}\d', '<PHONE>', 'g') AS redacted
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // median/MAD spelled with the same arithmetic shape as the Spark side
-    // so the rounded z doubles agree bit-for-bit
-    "q63_outliers" ->
-      """WITH med AS (
-        |  SELECT event_type, median(value) AS m FROM events GROUP BY event_type
-        |), mad AS (
-        |  SELECT e.event_type, median(abs(e.value - med.m)) AS d
-        |  FROM events e JOIN med USING (event_type) GROUP BY e.event_type
-        |)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN mad.d = 0 THEN NULL
-        |       ELSE round(abs(e.value - med.m) / (1.4826 * mad.d), 6) END AS robust_z,
-        |  coalesce(CASE WHEN mad.d = 0 THEN NULL
-        |       ELSE round(abs(e.value - med.m) / (1.4826 * mad.d), 6) END > 3.0,
-        |    false) AS outlier
-        |FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q64_vocabulary" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(text, '\S+')) AS term FROM documents
-        |), tf AS (
-        |  SELECT term, count(*) AS n FROM tok GROUP BY term
-        |), tot AS (
-        |  SELECT CAST(sum(n) AS DOUBLE) AS total FROM tf
-        |)
-        |SELECT term, n, CAST(row_number() OVER o AS BIGINT) AS rank,
-        |  round(CAST(sum(n) OVER (ORDER BY n DESC, term ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / total, 6) AS cum_frac
-        |FROM tf, tot
-        |WINDOW o AS (ORDER BY n DESC, term ASC)
-        |QUALIFY rank <= 100
-        |ORDER BY rank""".stripMargin,
-
-    // scale = min(n_s / w_s); caps = max(floor(w_s * scale), 1); fill by
-    // the same md5 rank as the Spark side
-    "q65_mixture_sample" ->
-      """WITH w AS (
-        |  SELECT * FROM (VALUES ('en', 2.0), ('de', 1.0), ('fr', 1.0)) AS t(lang, wt)
-        |), c AS (
-        |  -- DOUBLE, not the VALUES literal's DECIMAL: the Spark side's
-        |  -- scale/caps are IEEE double arithmetic
-        |  SELECT d.lang, CAST(w.wt AS DOUBLE) AS wt, count(*) AS n
-        |  FROM documents d JOIN w USING (lang) GROUP BY d.lang, w.wt
-        |), sc AS (
-        |  SELECT min(n / wt) AS scale FROM c
-        |), caps AS (
-        |  SELECT lang, greatest(CAST(floor(wt * scale) AS BIGINT), 1) AS cap
-        |  FROM c, sc
-        |)
-        |SELECT doc_id, d.lang FROM documents d JOIN caps USING (lang)
-        |QUALIFY row_number() OVER (PARTITION BY d.lang
-        |  ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |    CAST(doc_id AS VARCHAR)) <= cap
-        |ORDER BY doc_id""".stripMargin,
-
-    "q66_snapshot_diff" ->
-      """WITH b AS (
-        |  SELECT user_id, event_id, event_type FROM events
-        |  WHERE ts < TIMESTAMP '2024-01-15 00:00:00'
-        |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-        |), a AS (
-        |  SELECT user_id, event_id, event_type FROM events
-        |  WHERE ts < TIMESTAMP '2024-01-25 00:00:00'
-        |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-        |)
-        |SELECT coalesce(b.user_id, a.user_id) AS user_id,
-        |  b.event_id AS event_id_before, a.event_id AS event_id_after,
-        |  b.event_type AS event_type_before, a.event_type AS event_type_after,
-        |  CASE WHEN b.user_id IS NULL THEN 'added'
-        |       WHEN a.user_id IS NULL THEN 'removed'
-        |       WHEN (b.event_id IS DISTINCT FROM a.event_id)
-        |         OR (b.event_type IS DISTINCT FROM a.event_type) THEN 'changed'
-        |  END AS change_type
-        |FROM b FULL OUTER JOIN a USING (user_id)
-        |WHERE CASE WHEN b.user_id IS NULL THEN 'added'
-        |       WHEN a.user_id IS NULL THEN 'removed'
-        |       WHEN (b.event_id IS DISTINCT FROM a.event_id)
-        |         OR (b.event_type IS DISTINCT FROM a.event_type) THEN 'changed'
-        |  END IS NOT NULL
-        |ORDER BY user_id""".stripMargin,
-
-    "q30_value_percentiles" ->
-      """SELECT event_type,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.9), 6) AS p90,
-        |  round(min(value), 6) AS vmin,
-        |  round(max(value), 6) AS vmax
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // SemDeDup: same unrolled deterministic k-means as q33 (seeded init,
-    // two Lloyd rounds), then within-cell earlier-row cosine test
-    "q67_semdedup" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), c0 AS (
-        |  SELECT list(v ORDER BY vec_id) AS cs FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)
-        |), a1 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c0)
-        |), u1 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a1)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c1 AS (
-        |  SELECT list(coalesce(u1.cent, c0.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c0 LEFT JOIN u1 ON u1.cell = t.i
-        |  GROUP BY c0.cs
-        |), a2 AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c1)
-        |), u2 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(x) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a2)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c2 AS (
-        |  SELECT list(coalesce(u2.cent, c1.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 8) t(i) CROSS JOIN c1 LEFT JOIN u2 ON u2.cell = t.i
-        |  GROUP BY c1.cs
-        |), idx AS (
-        |  SELECT vec_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT vec_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM e, c2)
-        |), dups AS (
-        |  SELECT b.vec_id AS vec_id, min(a.vec_id) AS dup_of
-        |  FROM idx a JOIN idx b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.3
-        |  GROUP BY b.vec_id
-        |)
-        |SELECT i.vec_id, CAST(i.cell AS BIGINT) AS cell,
-        |  coalesce(d.dup_of, -1) AS dup_of,
-        |  d.dup_of IS NULL AS keep
-        |FROM idx i LEFT JOIN dups d USING (vec_id)
-        |ORDER BY i.vec_id""".stripMargin,
-
-    "q68_histogram" ->
-      """WITH b AS (
-        |  SELECT CASE WHEN value < 0.0 THEN 0
-        |              WHEN value >= 500.0 THEN 21
-        |              ELSE least(CAST(floor((value - 0.0) / 25.0) + 1 AS BIGINT), 20) END AS bin,
-        |    value
-        |  FROM events WHERE value IS NOT NULL
-        |), c AS (
-        |  SELECT bin, count(*) AS n,
-        |    round(min(value), 6) AS bin_min, round(max(value), 6) AS bin_max
-        |  FROM b GROUP BY bin
-        |)
-        |SELECT t.i AS bin, coalesce(c.n, 0) AS n,
-        |  coalesce(c.bin_min, -1.0) AS bin_min,
-        |  coalesce(c.bin_max, -1.0) AS bin_max
-        |FROM range(0, 22) t(i) LEFT JOIN c ON c.bin = t.i
-        |ORDER BY bin""".stripMargin,
-
-    // cumulative bucket bounds: train < 8000, val < 9000, test = rest
-    "q69_split_assign" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 < 8000 THEN 'train'
-        |       WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 < 9000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q70_fuzzy_dups" ->
-      """WITH tok0 AS (
-        |  SELECT p_partkey, p_name,
-        |    unnest(list_distinct(string_split_regex(lower(p_name), '\s+'))) AS t
-        |  FROM part
-        |), hot AS (
-        |  SELECT t FROM (
-        |    SELECT t, count(DISTINCT p_name) AS c FROM tok0
-        |    WHERE len(t) > 0 GROUP BY t
-        |  ) WHERE c > 1000
-        |), tok AS (
-        |  SELECT * FROM tok0
-        |  WHERE len(t) > 0 AND t NOT IN (SELECT t FROM hot)
-        |), cand AS (
-        |  SELECT DISTINCT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    a.p_name AS n1, b.p_name AS n2
-        |  FROM tok a JOIN tok b ON a.t = b.t AND a.p_partkey < b.p_partkey
-        |)
-        |SELECT id_a, id_b, CAST(levenshtein(n1, n2) AS BIGINT) AS dist
-        |FROM cand WHERE levenshtein(n1, n2) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // q70's oracle over the per-name 3 smallest ids only — the id-level
-    // blocked join is then bounded by 3x distinct names, which keeps the
-    // oracle replayable at sf1 (the unbounded q70 oracle needs ~1e9
-    // levenshtein calls there). Hot-token counts are over DISTINCT names,
-    // identical to q70 (capping ids never removes a name entirely).
-    "q147_fuzzy_dups_bounded" ->
-      """WITH ranked AS (
-        |  SELECT p_partkey, p_name,
-        |    row_number() OVER (PARTITION BY p_name ORDER BY p_partkey) AS rk
-        |  FROM part WHERE p_name IS NOT NULL
-        |), capped_ids AS (
-        |  SELECT p_partkey, p_name FROM ranked WHERE rk <= 3
-        |), tok0 AS (
-        |  SELECT p_partkey, p_name,
-        |    unnest(list_distinct(string_split_regex(lower(p_name), '\s+'))) AS t
-        |  FROM capped_ids
-        |), hot AS (
-        |  SELECT t FROM (
-        |    SELECT t, count(DISTINCT p_name) AS c FROM tok0
-        |    WHERE len(t) > 0 GROUP BY t
-        |  ) WHERE c > 1000
-        |), tok AS (
-        |  SELECT * FROM tok0
-        |  WHERE len(t) > 0 AND t NOT IN (SELECT t FROM hot)
-        |), cand AS (
-        |  SELECT DISTINCT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    a.p_name AS n1, b.p_name AS n2
-        |  FROM tok a JOIN tok b ON a.t = b.t AND a.p_partkey < b.p_partkey
-        |)
-        |SELECT id_a, id_b, CAST(levenshtein(n1, n2) AS BIGINT) AS dist
-        |FROM cand WHERE levenshtein(n1, n2) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Gumbel top-k replay: the noise uniform is (h+0.5)/2^20 with h the
-    // first 5 hex digits of md5 — an exact binary rational, so both
-    // engines compute identical doubles; selection happens on unrounded
-    // keys, the output rounds for the float compare
-    "q148_gumbel_sample" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, n_chars,
-        |    ln(n_chars::DOUBLE) +
-        |    -ln(-ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 5))::BIGINT + 0.5)
-        |            / 1048576.0)) AS k
-        |  FROM documents
-        |), top AS (
-        |  SELECT doc_id, n_chars, k FROM keyed
-        |  ORDER BY k DESC, doc_id::VARCHAR LIMIT 100
-        |)
-        |SELECT doc_id, n_chars, round(k, 6) AS gumbel_key
-        |FROM top ORDER BY doc_id""".stripMargin,
-
-    // DuckDB's native ASOF JOIN over the identically-generated weekly grid:
-    // first tick = span start rounded UP to a multiple of 7 days (epoch-
-    // aligned), generate_series is stop-inclusive like Spark's sequence()
-    "q149_locf_resample" ->
-      """WITH obs AS (
-        |  SELECT user_id, ts, round(max(value), 6) AS v
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-        |), bounds AS (
-        |  SELECT user_id,
-        |    make_timestamp(((epoch_us(min(ts)) + 604799999999) // 604800000000)
-        |      * 604800000000) AS first_tick,
-        |    max(ts) AS tmax
-        |  FROM obs GROUP BY user_id
-        |), grid AS (
-        |  SELECT user_id,
-        |    unnest(generate_series(first_tick, tmax, INTERVAL 7 DAY)) AS tick
-        |  FROM bounds WHERE first_tick <= tmax
-        |)
-        |SELECT g.user_id, g.tick, o.ts AS obs_ts, o.v AS value
-        |FROM grid g ASOF JOIN obs o
-        |  ON g.user_id = o.user_id AND g.tick >= o.ts
-        |ORDER BY g.user_id, g.tick""".stripMargin,
-
-    // the oracle never decodes an image: constant-gray cells reduce the
-    // real pixel pHash to the cell-value formula (bit k set iff v_k * 60 >
-    // sum over the doc's 60 cells), and the dims are the synthesis
-    // constants — Spark's side must round-trip real BMP bytes to match
-    "q150_real_image_phash" ->
-      """WITH cells AS (
-        |  SELECT d.doc_id, k.k,
-        |    ('0x' || substr(md5(d.doc_id::VARCHAR || '_cell_' || k.k::VARCHAR),
-        |      1, 15))::BIGINT % 256 AS v
-        |  FROM documents d,
-        |    (SELECT CAST(unnest(generate_series(0, 59)) AS INT) AS k) k
-        |), tot AS (
-        |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS s FROM cells GROUP BY doc_id
-        |)
-        |SELECT c.doc_id,
-        |  CAST(60 AS BIGINT) AS width, CAST(60 AS BIGINT) AS height,
-        |  CAST(3 AS INT) AS channels,
-        |  CAST(sum(CASE WHEN c.v * 60 > t.s THEN (1::BIGINT << c.k)
-        |    ELSE 0 END) AS BIGINT) AS phash
-        |FROM cells c JOIN tot t USING (doc_id)
-        |GROUP BY c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-
-    // the oracle never parses a WAV: the all-integer profile reduces to
-    // the deterministic sample formula — Spark must round-trip real RIFF
-    // bytes through the JDK encoder+decoder to match
-    "q151_audio_profile" ->
-      """WITH seeds AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || '_wav'), 1, 15))::BIGINT
-        |      % 65536 AS seed
-        |  FROM documents
-        |), samples AS (
-        |  SELECT doc_id, g.i, ((seed + g.i * 2657) % 65536) - 32768 AS s
-        |  FROM seeds,
-        |    (SELECT CAST(unnest(generate_series(0, 1999)) AS BIGINT) AS i) g
-        |), lagged AS (
-        |  SELECT doc_id, i, s,
-        |    lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        |  FROM samples
-        |)
-        |SELECT doc_id,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(1 AS INT) AS channels,
-        |  CAST(2000 AS BIGINT) AS n_samples,
-        |  CAST(sum(s * s) AS BIGINT) AS sum_sq,
-        |  CAST(sum(CASE WHEN i > 0 AND ((s < 0) <> (prev < 0)) THEN 1
-        |    ELSE 0 END) AS BIGINT) AS zero_crossings,
-        |  CAST(max(abs(s)) AS INT) AS peak_abs
-        |FROM lagged
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // sampled frames replay from the cell formula: total = 4 + doc % 3
-    // (always > 3 samples, so the evenly-spaced k*total//3 branch applies
-    // uniformly); per sampled frame the q150 blockhash reduction
-    "q152_gif_frame_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(4 + doc_id % 3 AS INT) AS total FROM documents
-        |), picks AS (
-        |  SELECT doc_id, total, CAST((k.k * total) // 3 AS INT) AS frame_idx
-        |  FROM d, (SELECT CAST(unnest(generate_series(0, 2)) AS INT) AS k) k
-        |), cells AS (
-        |  SELECT p.doc_id, p.total, p.frame_idx, c.k,
-        |    ('0x' || substr(md5(p.doc_id::VARCHAR || '_f' ||
-        |      p.frame_idx::VARCHAR || '_c' || c.k::VARCHAR), 1, 15))::BIGINT
-        |      % 256 AS v
-        |  FROM picks p,
-        |    (SELECT CAST(unnest(generate_series(0, 59)) AS INT) AS k) c
-        |), tot AS (
-        |  SELECT doc_id, frame_idx, CAST(sum(v) AS BIGINT) AS s
-        |  FROM cells GROUP BY doc_id, frame_idx
-        |)
-        |SELECT c.doc_id, c.frame_idx, c.total AS n_frames,
-        |  CAST(sum(CASE WHEN c.v * 60 > t.s THEN (1::BIGINT << c.k)
-        |    ELSE 0 END) AS BIGINT) AS phash
-        |FROM cells c JOIN tot t USING (doc_id, frame_idx)
-        |GROUP BY c.doc_id, c.frame_idx, c.total
-        |ORDER BY c.doc_id, c.frame_idx""".stripMargin,
-
-    // the oracle never touches a compressed byte: codec from the id
-    // parity, byte count and md5 from the plain text
-    "q153_compressed_ingest" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'gzip' ELSE 'zstd' END AS codec,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS text_md5
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // two rows per doc from the plain columns: the warcinfo preamble and
-    // the response record carrying the text
-    "q154_warc_ingest" ->
-      """SELECT doc_id, rec_idx, warc_type, target_uri, content_length, body_md5
-        |FROM (
-        |  SELECT doc_id, CAST(0 AS INT) AS rec_idx,
-        |    'warcinfo' AS warc_type, '' AS target_uri,
-        |    CAST(12 AS BIGINT) AS content_length,
-        |    md5('engine=graft') AS body_md5
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, CAST(1 AS INT) AS rec_idx,
-        |    'response' AS warc_type,
-        |    'https://example.org/doc/' || doc_id::VARCHAR AS target_uri,
-        |    CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
-        |    md5(text) AS body_md5
-        |  FROM documents
-        |)
-        |ORDER BY doc_id, rec_idx""".stripMargin,
-
-    // three decoders deep, one plain-columns oracle: if gunzip, the
-    // byte-preserving String hop, or the WARC body slice drifted by one
-    // byte, content_length or body_md5 would mismatch
-    "q155_crawl_pipeline" ->
-      """SELECT doc_id,
-        |  'https://example.org/doc/' || doc_id::VARCHAR AS target_uri,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
-        |  md5(text) AS body_md5
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // margin mining: cosines held as integer micro-units (round(cos*1e6) as
-    // BIGINT) so the top-4 neighbourhood sums are order-free exact integer
-    // sums and the margin is a fixed expression tree over exact integers —
-    // bit-identical here and in Spark; rank replay = cos_i DESC, id ASC
-    "q156_margin_mine" ->
-      """WITH x AS (
-        |  SELECT vec_id AS x_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 150
-        |), y AS (
-        |  SELECT vec_id AS y_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id >= 150 AND vec_id < 300
-        |), s AS (
-        |  SELECT x_id, y_id,
-        |    CAST(round(round(list_dot_product(x.v, y.v)
-        |      / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6)
-        |      * 1000000.0) AS BIGINT) AS cos_i
-        |  FROM x, y
-        |), f AS (
-        |  SELECT x_id, y_id, cos_i,
-        |    row_number() OVER (PARTITION BY x_id ORDER BY cos_i DESC, y_id ASC) AS r
-        |  FROM s
-        |), fa AS (
-        |  SELECT x_id,
-        |    max(CASE WHEN r = 1 THEN y_id END) AS best_y,
-        |    max(CASE WHEN r = 1 THEN cos_i END) AS best_cos,
-        |    sum(cos_i) AS sum_f, count(*) AS k_f
-        |  FROM f WHERE r <= 4 GROUP BY x_id
-        |), b AS (
-        |  SELECT x_id, y_id, cos_i,
-        |    row_number() OVER (PARTITION BY y_id ORDER BY cos_i DESC, x_id ASC) AS r
-        |  FROM s
-        |), ba AS (
-        |  SELECT y_id,
-        |    max(CASE WHEN r = 1 THEN x_id END) AS best_x,
-        |    sum(cos_i) AS sum_b, count(*) AS k_b
-        |  FROM b WHERE r <= 4 GROUP BY y_id
-        |), p AS (
-        |  SELECT fa.x_id, ba.y_id, fa.best_cos AS cos_i,
-        |    CAST(fa.sum_f AS DOUBLE) / fa.k_f + CAST(ba.sum_b AS DOUBLE) / ba.k_b AS den
-        |  FROM fa JOIN ba ON fa.best_y = ba.y_id AND ba.best_x = fa.x_id
-        |)
-        |SELECT x_id, y_id, cos_i / 1000000.0 AS cos,
-        |  round(2.0 * cos_i / den, 6) AS margin
-        |FROM p
-        |WHERE den > 0 AND round(2.0 * cos_i / den, 6) >= 1.02
-        |ORDER BY x_id""".stripMargin,
-
-    // upsampling mixture: counts -> anchor scale -> per-source (full
-    // epochs, fractional micro-units) all recomputed relationally; the
-    // fractional epoch replays as the md5 bucket of 'doc_id#epoch'
-    "q160_mixture_upsample" ->
-      """WITH counts AS (
-        |  SELECT lang, count(*) AS n FROM documents GROUP BY lang
-        |), w(lang, wt) AS (VALUES
-        |  ('en', 0.25), ('de', 0.25), ('fr', 0.25), ('zh', 0.25)
-        |), present AS (
-        |  SELECT w.lang, wt, n FROM w JOIN counts ON w.lang = counts.lang
-        |  WHERE n > 0
-        |), sc AS (
-        |  SELECT max(n / wt) AS scale FROM present
-        |), rr AS (
-        |  SELECT lang,
-        |    CAST(floor(least(wt * scale / n, 4.0)) AS BIGINT) AS f,
-        |    CAST(round((least(wt * scale / n, 4.0)
-        |      - floor(least(wt * scale / n, 4.0))) * 1000000) AS BIGINT) AS frac
-        |  FROM present, sc
-        |), rep AS (
-        |  SELECT d.doc_id, d.lang, CAST(t.i AS BIGINT) AS epoch, rr.f, rr.frac
-        |  FROM documents d JOIN rr ON d.lang = rr.lang
-        |  CROSS JOIN range(0, 5) t(i)
-        |  WHERE t.i <= rr.f
-        |)
-        |SELECT doc_id, lang, epoch FROM rep
-        |WHERE epoch < f OR
-        |  ('0x' || substr(md5(coalesce(CAST(doc_id AS VARCHAR), chr(0) || 'graft_null')
-        |    || '#' || CAST(epoch AS VARCHAR)), 1, 15))::BIGINT % 1000000 < frac
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    // persisted sparse index: the oracle never sees the audit table — it
-    // replays the LIVE corpus state (docs < 500, first 50 re-ingested with
-    // an appended token) through the q157 BM25 SQL; PK-replace, postings
-    // storage and contribution re-derivation must all be right to match
-    "q159_sparse_index_retrieval" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id < 50 THEN text || ' spark' ELSE text END AS text
-        |  FROM documents WHERE doc_id < 500
-        |), q(query_id, qtext) AS (VALUES
-        |  (1, 'spark window join'),
-        |  (2, 'data quality pipeline'),
-        |  (3, 'the and of')
-        |), dd AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS dl
-        |  FROM base
-        |), st AS (
-        |  SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS total FROM dd
-        |), p AS (
-        |  SELECT term, doc_id, count(*) AS tf, max(dl) AS dl
-        |  FROM (SELECT doc_id, dl, unnest(toks) AS term FROM dd)
-        |  GROUP BY term, doc_id
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM p GROUP BY term
-        |), qt AS (
-        |  SELECT DISTINCT query_id, unnest(regexp_extract_all(qtext, '\S+')) AS term FROM q
-        |), qd AS (
-        |  SELECT query_id, qt.term,
-        |    round(ln((n - df + 0.5) / (df + 0.5) + 1), 6) AS idf, n, total
-        |  FROM qt JOIN df ON qt.term = df.term, st
-        |), c AS (
-        |  SELECT query_id, doc_id,
-        |    CAST(round(round(idf * CAST(tf AS DOUBLE) * 2.2
-        |      / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-        |        * (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))), 6)
-        |      * 1000000.0) AS BIGINT) AS ci
-        |  FROM p JOIN qd ON p.term = qd.term
-        |), s AS (
-        |  SELECT query_id, doc_id, CAST(sum(ci) AS BIGINT) AS si
-        |  FROM c GROUP BY query_id, doc_id
-        |), r AS (
-        |  SELECT query_id, doc_id, CAST(si AS DOUBLE) / 1000000.0 AS score,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY si DESC, doc_id ASC) AS rank
-        |  FROM s
-        |)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
-        |  doc_id, score
-        |FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // celled margin mining: Lloyd rounds unrolled (q33's idiom — seed =
-    // first 4 Y-vectors by id, assign/mean/empty-cell-coalesce twice),
-    // probes replay as row_number(dist, cell) <= 2, then q156's exact
-    // integer-micro-unit margin tail over the candidate pairs only
-    "q158_margin_mine_celled" ->
-      """WITH x AS (
-        |  SELECT vec_id AS x_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 150
-        |), y AS (
-        |  SELECT vec_id AS y_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id >= 150 AND vec_id < 300
-        |), c0 AS (
-        |  SELECT list(v ORDER BY y_id) AS cs
-        |  FROM (SELECT y_id, v FROM y ORDER BY y_id LIMIT 4)
-        |), a1 AS (
-        |  SELECT y_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT y_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM y, c0)
-        |), u1 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(xx) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS xx FROM a1)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c1 AS (
-        |  SELECT list(coalesce(u1.cent, c0.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 4) t(i) CROSS JOIN c0 LEFT JOIN u1 ON u1.cell = t.i
-        |  GROUP BY c0.cs
-        |), a2 AS (
-        |  SELECT y_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT y_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM y, c1)
-        |), u2 AS (
-        |  SELECT cell, list(m ORDER BY pos) AS cent
-        |  FROM (
-        |    SELECT cell, pos, avg(xx) AS m
-        |    FROM (SELECT cell, generate_subscripts(v, 1) AS pos, unnest(v) AS xx FROM a2)
-        |    GROUP BY cell, pos)
-        |  GROUP BY cell
-        |), c2 AS (
-        |  SELECT list(coalesce(u2.cent, c1.cs[CAST(t.i AS INT)+1]) ORDER BY t.i) AS cs
-        |  FROM range(0, 4) t(i) CROSS JOIN c1 LEFT JOIN u2 ON u2.cell = t.i
-        |  GROUP BY c1.cs
-        |), ycell AS (
-        |  SELECT y_id, v, list_position(dists, list_min(dists)) - 1 AS cell
-        |  FROM (
-        |    SELECT y_id, v,
-        |      list_transform(cs, cent -> list_sum(list_transform(range(0, 64),
-        |        d -> (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1]) * (v[CAST(d AS INT)+1] - cent[CAST(d AS INT)+1])))) AS dists
-        |    FROM y, c2)
-        |), probe AS (
-        |  SELECT x_id, v, cell FROM (
-        |    SELECT x.x_id, x.v, t.i AS cell,
-        |      row_number() OVER (PARTITION BY x.x_id ORDER BY
-        |        list_sum(list_transform(range(0, 64),
-        |          d -> (x.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1])
-        |             * (x.v[CAST(d AS INT)+1] - cs[CAST(t.i AS INT)+1][CAST(d AS INT)+1]))), t.i) AS rn
-        |    FROM x CROSS JOIN range(0, 4) t(i) CROSS JOIN c2)
-        |  WHERE rn <= 2
-        |), s AS (
-        |  SELECT p.x_id, yc.y_id,
-        |    CAST(round(round(list_dot_product(p.v, yc.v)
-        |      / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(yc.v, yc.v))), 6)
-        |      * 1000000.0) AS BIGINT) AS cos_i
-        |  FROM probe p JOIN ycell yc ON p.cell = yc.cell
-        |), f AS (
-        |  SELECT x_id, y_id, cos_i,
-        |    row_number() OVER (PARTITION BY x_id ORDER BY cos_i DESC, y_id ASC) AS r
-        |  FROM s
-        |), fa AS (
-        |  SELECT x_id,
-        |    max(CASE WHEN r = 1 THEN y_id END) AS best_y,
-        |    max(CASE WHEN r = 1 THEN cos_i END) AS best_cos,
-        |    sum(cos_i) AS sum_f, count(*) AS k_f
-        |  FROM f WHERE r <= 4 GROUP BY x_id
-        |), b AS (
-        |  SELECT x_id, y_id, cos_i,
-        |    row_number() OVER (PARTITION BY y_id ORDER BY cos_i DESC, x_id ASC) AS r
-        |  FROM s
-        |), ba AS (
-        |  SELECT y_id,
-        |    max(CASE WHEN r = 1 THEN x_id END) AS best_x,
-        |    sum(cos_i) AS sum_b, count(*) AS k_b
-        |  FROM b WHERE r <= 4 GROUP BY y_id
-        |), p2 AS (
-        |  SELECT fa.x_id, ba.y_id, fa.best_cos AS cos_i,
-        |    CAST(fa.sum_f AS DOUBLE) / fa.k_f + CAST(ba.sum_b AS DOUBLE) / ba.k_b AS den
-        |  FROM fa JOIN ba ON fa.best_y = ba.y_id AND ba.best_x = fa.x_id
-        |)
-        |SELECT x_id, y_id, cos_i / 1000000.0 AS cos,
-        |  round(2.0 * cos_i / den, 6) AS margin
-        |FROM p2
-        |WHERE den > 0 AND round(2.0 * cos_i / den, 6) >= 1.0
-        |ORDER BY x_id""".stripMargin,
-
-    // BM25 retrieval: idf rounds to 6 in-DAG, each term contribution
-    // rounds to 6 and sums as integer micro-units (order-free), ranks
-    // replay as row_number(si DESC, doc_id ASC)
-    "q157_bm25_retrieval" ->
-      """WITH q(query_id, qtext) AS (VALUES
-        |  (1, 'spark window join'),
-        |  (2, 'data quality pipeline'),
-        |  (3, 'the and of')
-        |), dd AS (
-        |  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS dl
-        |  FROM documents
-        |), st AS (
-        |  SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS total FROM dd
-        |), p AS (
-        |  SELECT term, doc_id, count(*) AS tf, max(dl) AS dl
-        |  FROM (SELECT doc_id, dl, unnest(toks) AS term FROM dd)
-        |  GROUP BY term, doc_id
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM p GROUP BY term
-        |), qt AS (
-        |  SELECT DISTINCT query_id, unnest(regexp_extract_all(qtext, '\S+')) AS term FROM q
-        |), qd AS (
-        |  SELECT query_id, qt.term,
-        |    round(ln((n - df + 0.5) / (df + 0.5) + 1), 6) AS idf, n, total
-        |  FROM qt JOIN df ON qt.term = df.term, st
-        |), c AS (
-        |  SELECT query_id, doc_id,
-        |    CAST(round(round(idf * CAST(tf AS DOUBLE) * 2.2
-        |      / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-        |        * (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / n)))), 6)
-        |      * 1000000.0) AS BIGINT) AS ci
-        |  FROM p JOIN qd ON p.term = qd.term
-        |), s AS (
-        |  SELECT query_id, doc_id, CAST(sum(ci) AS BIGINT) AS si
-        |  FROM c GROUP BY query_id, doc_id
-        |), r AS (
-        |  SELECT query_id, doc_id, CAST(si AS DOUBLE) / 1000000.0 AS score,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY si DESC, doc_id ASC) AS rank
-        |  FROM s
-        |)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
-        |  doc_id, score
-        |FROM r WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-
-    // prior-window stats by self-subtraction from a RANGE ... CURRENT ROW
-    // frame; explicit (sumsq - n*mean^2)/(n-1) variance, rounded z
-    "q71_rolling_z" ->
-      """WITH w AS (
-        |  SELECT event_id, user_id, value AS v,
-        |    count(value) OVER win - 1 AS n,
-        |    sum(value) OVER win - value AS s,
-        |    sum(value * value) OVER win - value * value AS ss
-        |  FROM events
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |    RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-        |), z AS (
-        |  SELECT event_id, user_id, n, s / n AS mean,
-        |    sqrt(greatest((ss - n * (s / n) * (s / n)) / (n - 1), 0.0)) AS std, v
-        |  FROM w WHERE n >= 5
-        |)
-        |SELECT event_id, user_id, n AS n_prior,
-        |  round(mean, 4) AS mean_prior, round((v - mean) / std, 4) AS z
-        |FROM z
-        |WHERE std > 1e-9 AND abs(round((v - mean) / std, 4)) > 3.0
-        |ORDER BY event_id""".stripMargin,
-
-    // quantile_cont matches Spark's exact `percentile` interpolation
-    "q72_winsorize" ->
-      """WITH b AS (
-        |  SELECT event_type,
-        |    round(quantile_cont(value, 0.05), 6) AS lo,
-        |    round(quantile_cont(value, 0.95), 6) AS hi
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT event_id, e.event_type,
-        |  round(least(greatest(value, lo), hi), 6) AS value_w,
-        |  (value < lo OR value > hi) AS clipped
-        |FROM events e JOIN b USING (event_type)
-        |ORDER BY event_id""".stripMargin,
-
-    // 3 unrolled power iterations; all literals cast to DOUBLE so DuckDB's
-    // default DECIMAL parsing cannot change the arithmetic
-    "q74_pagerank" ->
-      """WITH e AS (
-        |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |         's' || CAST(l_suppkey AS VARCHAR) AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), v AS (
-        |  SELECT src AS vertex FROM e UNION SELECT dst FROM e
-        |), nn AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n FROM v
-        |), deg AS (
-        |  SELECT src, count(*) AS deg FROM e GROUP BY src
-        |), base AS (
-        |  SELECT vertex, deg FROM v LEFT JOIN deg ON vertex = deg.src
-        |), s0 AS (
-        |  SELECT vertex, deg, round(CAST(1.0 AS DOUBLE) / n, 9) AS pr FROM base, nn
-        |), c1 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s0 JOIN e ON s0.vertex = e.src GROUP BY dst
-        |), s1 AS (
-        |  SELECT b.vertex, b.deg,
-        |    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n
-        |      + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c1 ON b.vertex = c1.dst, nn
-        |), c2 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s1 JOIN e ON s1.vertex = e.src GROUP BY dst
-        |), s2 AS (
-        |  SELECT b.vertex, b.deg,
-        |    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n
-        |      + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c2 ON b.vertex = c2.dst, nn
-        |), c3 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s2 JOIN e ON s2.vertex = e.src GROUP BY dst
-        |), s3 AS (
-        |  SELECT b.vertex, b.deg,
-        |    round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n
-        |      + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c3 ON b.vertex = c3.dst, nn
-        |)
-        |SELECT vertex, round(pr, 6) AS pagerank FROM s3 ORDER BY vertex""".stripMargin,
-
-    // adjacent pairs via list_zip against the tail slice (padding row
-    // filtered); PMI from exact integer counts, rounded before ranking
-    "q89_url_canonicalize" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    'HTTPS://WWW.' || upper(substr(source, 1, 1)) || substr(source, 2)
-        |      || '.Example.COM:443/docs/' || CAST(doc_id % 7 AS VARCHAR) || '/page/'
-        |      || CASE WHEN doc_id % 2 = 0
-        |           THEN '?id=' || CAST(doc_id AS VARCHAR) || '&utm_source=feed&ref=abc&keep=1'
-        |           ELSE '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) END
-        |      || '#frag' AS url
-        |  FROM documents
-        |), parts AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS auth,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS pth,
-        |    regexp_extract(url, '\?([^#]*)', 1) AS qry
-        |  FROM raw
-        |), norm AS (
-        |  SELECT doc_id, scheme,
-        |    regexp_replace(lower(regexp_replace(auth, ':[0-9]+$', '')), '^www\.', '') AS host,
-        |    regexp_extract(auth, ':([0-9]+)$', 1) AS prt,
-        |    regexp_replace(pth, '/+$', '') AS cpth,
-        |    regexp_replace(
-        |      regexp_replace(qry, '&(?:utm_[A-Za-z0-9_]*|gclid|fbclid|ref)=[^&]*', '', 'g'),
-        |      '^(?:utm_[A-Za-z0-9_]*|gclid|fbclid|ref)=[^&]*&?', '') AS cqry
-        |  FROM parts
-        |)
-        |SELECT doc_id,
-        |  scheme || '://' || host
-        |    || CASE WHEN prt <> '' AND NOT (scheme = 'https' AND prt = '443')
-        |              AND NOT (scheme = 'http' AND prt = '80')
-        |         THEN ':' || prt ELSE '' END
-        |    || cpth
-        |    || CASE WHEN cqry <> '' THEN '?' || cqry ELSE '' END AS canonical_url,
-        |  CASE WHEN host LIKE '%.%'
-        |       THEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) ELSE host END AS domain
-        |FROM norm ORDER BY doc_id""".stripMargin,
-
-    "q93_shard_manifest" ->
-      """WITH n AS (SELECT count(*) AS cnt FROM documents),
-        |a AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |      % CAST(greatest((cnt + 127) // 128, 1) AS BIGINT) AS shard,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM documents, n
-        |)
-        |SELECT shard, count(*) AS n_docs, bit_xor(h) AS content_xor,
-        |  min(doc_id) AS min_key, max(doc_id) AS max_key
-        |FROM a GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q92_corpus_overlap" ->
-      """WITH params AS (
-        |  SELECT
-        |    list_transform(range(0, 64), i ->
-        |      (('0x' || substr(md5('minhash_a_' || i), 1, 8))::BIGINT % 536870912) * 2 + 1) AS pa,
-        |    list_transform(range(0, 64), i ->
-        |      ('0x' || substr(md5('minhash_b_' || i), 1, 8))::BIGINT) AS pb
-        |), sh AS (
-        |  SELECT source,
-        |    list_transform(range(1, greatest(len(toks) - 2, 1) + 1),
-        |      s -> array_to_string(toks[s:s+2], ' ')) AS shingles
-        |  FROM (SELECT source, regexp_extract_all(text, '\S+') AS toks FROM documents)
-        |  WHERE len(toks) > 0
-        |), p AS (
-        |  SELECT source,
-        |    list_transform(range(0, 64), i ->
-        |      list_min(list_transform(xs, x -> (pa[i+1] * x + pb[i+1]) % 2305843009213693951))) AS sig
-        |  FROM (SELECT source,
-        |          list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT) AS xs
-        |        FROM sh), params
-        |), comp AS (
-        |  SELECT source, t.i AS i, min(sig[CAST(t.i AS INT) + 1]) AS h
-        |  FROM p CROSS JOIN range(0, 64) t(i)
-        |  GROUP BY source, t.i
-        |), gsig AS (
-        |  SELECT source, list(h ORDER BY i) AS sig FROM comp GROUP BY source
-        |)
-        |SELECT a.source AS group_a, b.source AS group_b,
-        |  round(len(list_filter(range(0, 64), i -> a.sig[i+1] = b.sig[i+1])) / 64.0, 4) AS est_jaccard
-        |FROM gsig a JOIN gsig b ON a.source < b.source
-        |ORDER BY group_a, group_b""".stripMargin,
-
-    "q91_embed_decontaminate" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |), ev AS (
-        |  SELECT vec_id AS eid, v AS evec FROM e WHERE vec_id % 200 = 0
-        |), c AS (
-        |  SELECT vec_id, v FROM e WHERE vec_id % 200 <> 0
-        |), scored AS (
-        |  SELECT c.vec_id, ev.eid,
-        |    round(list_dot_product(c.v, ev.evec)
-        |      / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(ev.evec, ev.evec))), 6) AS cos
-        |  FROM c CROSS JOIN ev
-        |), mx AS (
-        |  SELECT vec_id, max(cos) AS mc FROM scored GROUP BY vec_id
-        |)
-        |SELECT s.vec_id, mx.mc AS max_eval_cos,
-        |  max(s.eid) AS matched_eval_id,
-        |  mx.mc >= 0.3 AS contaminated
-        |FROM scored s JOIN mx USING (vec_id) WHERE s.cos = mx.mc
-        |GROUP BY s.vec_id, mx.mc ORDER BY s.vec_id""".stripMargin,
-
-    "q90_paragraph_dedup" ->
-      """WITH synth AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 60) || chr(10) || chr(10) || 'NAV ' || source
-        |      || chr(10) || chr(10) || substr(text, 1, 60) || chr(10) || chr(10)
-        |      || substr(text, 61, 80) || chr(10) || chr(10) || 'NAV ' || source AS text
-        |  FROM documents
-        |), paras AS (
-        |  SELECT doc_id, unnest(arr) AS para,
-        |    CAST(unnest(range(1, len(arr) + 1)) AS BIGINT) AS pos
-        |  FROM (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS arr FROM synth)
-        |), firsts AS (
-        |  SELECT doc_id, para, min(pos) AS pos FROM paras GROUP BY doc_id, para
-        |)
-        |SELECT doc_id,
-        |  string_agg(para, chr(10) || chr(10) ORDER BY pos) AS text
-        |FROM firsts GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q88_collocations" ->
-      """WITH t AS (
-        |  SELECT regexp_extract_all(lower(text), '\S+') AS arr FROM documents
-        |), u AS (
-        |  SELECT tok, count(*) AS n FROM (SELECT unnest(arr) AS tok FROM t) GROUP BY tok
-        |), n1 AS (
-        |  SELECT CAST(sum(n) AS DOUBLE) AS n1 FROM u
-        |), pairs AS (
-        |  SELECT z[1] AS a, z[2] AS b
-        |  FROM (SELECT unnest(list_zip(arr, arr[2:])) AS z FROM t)
-        |  WHERE z[2] IS NOT NULL
-        |), bi AS (
-        |  SELECT a, b, count(*) AS n_ab FROM pairs GROUP BY a, b
-        |  HAVING count(*) >= 5
-        |), n2 AS (
-        |  SELECT CAST(sum(greatest(len(arr) - 1, 0)) AS DOUBLE) AS n2 FROM t
-        |), scored AS (
-        |  SELECT bi.a, bi.b, bi.n_ab,
-        |    round(ln((n_ab / n2) / ((ua.n / n1) * (ub.n / n1))), 6) AS pmi
-        |  FROM bi JOIN u ua ON bi.a = ua.tok JOIN u ub ON bi.b = ub.tok, n1, n2
-        |)
-        |SELECT a, b, n_ab, pmi,
-        |  CAST(row_number() OVER (ORDER BY pmi DESC, a ASC, b ASC) AS BIGINT) AS rank
-        |FROM scored QUALIFY rank <= 50 ORDER BY rank""".stripMargin,
-
-    // first-occurrence cascade: each stage's time = min ts of its type
-    // strictly after the previous stage's time
-    "q87_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(CASE WHEN event_type = 'signup' THEN ts END) AS t1
-        |  FROM events GROUP BY user_id
-        |), s2 AS (
-        |  SELECT e.user_id, first(t1) AS t1,
-        |    min(CASE WHEN event_type = 'click' AND ts > t1 THEN ts END) AS t2
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id GROUP BY e.user_id
-        |), s3 AS (
-        |  SELECT e.user_id, first(t1) AS t1, first(t2) AS t2,
-        |    min(CASE WHEN event_type = 'purchase' AND ts > t2 THEN ts END) AS t3
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id GROUP BY e.user_id
-        |)
-        |SELECT (CASE WHEN t1 IS NULL THEN 0 ELSE 1 END
-        |      + CASE WHEN t2 IS NULL THEN 0 ELSE 1 END
-        |      + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END) AS stages_reached,
-        |  count(*) AS n_users
-        |FROM s3 GROUP BY 1 ORDER BY stages_reached""".stripMargin,
-
-    // q74's unroll with seed-restricted teleport: restart mass lands only
-    // on the three seed customers, both in init and every round
-    "q86_personalized_pagerank" ->
-      """WITH e AS (
-        |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |         's' || CAST(l_suppkey AS VARCHAR) AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), v AS (
-        |  SELECT src AS vertex FROM e UNION SELECT dst FROM e
-        |), deg AS (
-        |  SELECT src, count(*) AS deg FROM e GROUP BY src
-        |), base AS (
-        |  SELECT vertex, deg,
-        |    CASE WHEN vertex IN ('c1', 'c2', 'c3')
-        |         THEN (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / 3
-        |         ELSE CAST(0.0 AS DOUBLE) END AS tp
-        |  FROM v LEFT JOIN deg ON vertex = deg.src
-        |), s0 AS (
-        |  SELECT vertex, deg, tp,
-        |    CASE WHEN vertex IN ('c1', 'c2', 'c3')
-        |         THEN round(CAST(1.0 AS DOUBLE) / 3, 9) ELSE CAST(0.0 AS DOUBLE)
-        |    END AS pr
-        |  FROM base
-        |), c1 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s0 JOIN e ON s0.vertex = e.src GROUP BY dst
-        |), s1 AS (
-        |  SELECT b.vertex, b.deg, b.tp,
-        |    round(b.tp + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c1 ON b.vertex = c1.dst
-        |), c2 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s1 JOIN e ON s1.vertex = e.src GROUP BY dst
-        |), s2 AS (
-        |  SELECT b.vertex, b.deg, b.tp,
-        |    round(b.tp + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c2 ON b.vertex = c2.dst
-        |), c3 AS (
-        |  SELECT dst, sum(pr / deg) AS m FROM s2 JOIN e ON s2.vertex = e.src GROUP BY dst
-        |), s3 AS (
-        |  SELECT b.vertex, b.deg, b.tp,
-        |    round(b.tp + CAST(0.85 AS DOUBLE) * coalesce(m, CAST(0.0 AS DOUBLE)), 9) AS pr
-        |  FROM base b LEFT JOIN c3 ON b.vertex = c3.dst
-        |)
-        |SELECT vertex, round(pr, 6) AS pagerank FROM s3 ORDER BY vertex""".stripMargin,
-
-    "q85_strip_boilerplate" ->
-      """WITH ml AS (
-        |  SELECT doc_id, source,
-        |    'NAV BAR' || chr(10) || text || chr(10) || 'COPYRIGHT ' || source
-        |      || CASE WHEN doc_id % 2 = 0 THEN chr(10) || 'PROMO' ELSE '' END AS t
-        |  FROM documents
-        |), lines AS (
-        |  SELECT doc_id, source,
-        |    generate_subscripts(string_split(t, chr(10)), 1) AS pos,
-        |    unnest(string_split(t, chr(10))) AS line
-        |  FROM ml
-        |), gd AS (
-        |  SELECT source, count(DISTINCT doc_id) AS docs FROM ml GROUP BY source
-        |), lc AS (
-        |  SELECT source, line, count(DISTINCT doc_id) AS in_docs
-        |  FROM lines GROUP BY source, line
-        |), boiler AS (
-        |  SELECT lc.source, lc.line FROM lc JOIN gd ON lc.source = gd.source
-        |  WHERE docs >= 5 AND CAST(in_docs AS DOUBLE) > CAST(docs AS DOUBLE) * 0.5
-        |), kept AS (
-        |  SELECT l.doc_id, l.source, l.pos, l.line
-        |  FROM lines l LEFT JOIN boiler b
-        |    ON l.source = b.source AND l.line = b.line
-        |  WHERE b.line IS NULL
-        |), reb AS (
-        |  SELECT doc_id, source, string_agg(line, chr(10) ORDER BY pos) AS t
-        |  FROM kept GROUP BY doc_id, source
-        |)
-        |SELECT m.doc_id, m.source, md5(coalesce(r.t, '')) AS clean_md5,
-        |  CAST(len(string_split(coalesce(r.t, ''), chr(10))) AS BIGINT) AS n_lines
-        |FROM ml m LEFT JOIN reb r ON m.doc_id = r.doc_id AND m.source = r.source
-        |ORDER BY m.doc_id""".stripMargin,
-
-    "q83_histogram_by" ->
-      """WITH b AS (
-        |  SELECT event_type AS grp,
-        |    CASE WHEN value < 0.0 THEN 0
-        |         WHEN value >= 500.0 THEN 11
-        |         ELSE least(CAST(floor((value - 0.0) / 50.0) + 1 AS BIGINT), 10) END AS bin
-        |  FROM events WHERE value IS NOT NULL
-        |), c AS (
-        |  SELECT grp, bin, count(*) AS n FROM b GROUP BY grp, bin
-        |), spine AS (
-        |  SELECT DISTINCT event_type AS grp FROM events
-        |)
-        |SELECT s.grp AS "group", t.i AS bin, coalesce(c.n, 0) AS n
-        |FROM spine s CROSS JOIN range(0, 12) t(i)
-        |LEFT JOIN c ON c.grp = s.grp AND c.bin = t.i
-        |ORDER BY "group", bin""".stripMargin,
-
-    // observed joint cells only: p(x,y) > 0 implies both marginals > 0
-    "q84_mutual_info" ->
-      """WITH j AS (
-        |  SELECT event_type AS x, CAST(user_id % 10 AS VARCHAR) AS y,
-        |    count(*) AS nxy
-        |  FROM events GROUP BY 1, 2
-        |), nx AS (SELECT x, sum(nxy) AS nx FROM j GROUP BY x
-        |), ny AS (SELECT y, sum(nxy) AS ny FROM j GROUP BY y
-        |), t AS (SELECT CAST(sum(nxy) AS DOUBLE) AS n FROM j
-        |), hx AS (SELECT -sum((nxy / n) * ln(nx / n)) AS hx FROM j JOIN nx USING (x), t
-        |), hy AS (SELECT -sum((nxy / n) * ln(ny / n)) AS hy FROM j JOIN ny USING (y), t
-        |), mi AS (
-        |  SELECT sum((nxy / n) * ln(nxy * n / (nx * ny))) AS mi
-        |  FROM j JOIN nx USING (x) JOIN ny USING (y), t
-        |)
-        |SELECT CAST(t.n AS BIGINT) AS n, round(mi.mi, 6) AS mi,
-        |  CASE WHEN hx > 1e-12 AND hy > 1e-12
-        |       THEN round(mi.mi / sqrt(hx * hy), 6) ELSE -1.0 END AS nmi
-        |FROM t, hx, hy, mi""".stripMargin,
-
-    "q82_correlations" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS DOUBLE) AS a, CAST(value AS DOUBLE) AS b,
-        |    CAST(epoch_us(ts) AS DOUBLE) AS c
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL
-        |), s AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    sum(a) AS sa, sum(b) AS sb, sum(c) AS sc,
-        |    sum(a*a) AS qa, sum(b*b) AS qb, sum(c*c) AS qc,
-        |    sum(a*b) AS xab, sum(a*c) AS xac, sum(b*c) AS xbc
-        |  FROM e
-        |)
-        |SELECT * FROM (
-        |  SELECT 'user_id' AS col_a, 'value' AS col_b, CAST(n AS BIGINT) AS n,
-        |    round((n*xab - sa*sb) / (sqrt(n*qa - sa*sa) * sqrt(n*qb - sb*sb)), 4) AS corr
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'user_id', 'ts_us', CAST(n AS BIGINT),
-        |    round((n*xac - sa*sc) / (sqrt(n*qa - sa*sa) * sqrt(n*qc - sc*sc)), 4)
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'value', 'ts_us', CAST(n AS BIGINT),
-        |    round((n*xbc - sb*sc) / (sqrt(n*qb - sb*sb) * sqrt(n*qc - sc*sc)), 4)
-        |  FROM s
-        |) ORDER BY col_a, col_b""".stripMargin,
-
-    // quality formula replayed from q15; fingerprint from q14; HUGEINT sum
-    // cast back to BIGINT (DuckDB sum(BIGINT) widens)
-    "q81_curation_report" ->
-      """WITH per AS (
-        |  SELECT source,
-        |    len(regexp_extract_all(text, '\S+')) AS toks,
-        |    round((least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      + greatest(1.0 - round(CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS DOUBLE) / greatest(length(text), 1), 6) * 5.0, 0.0)
-        |      + least(round(CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|of|to|in|is|it|that)\b')) AS DOUBLE) / greatest(len(regexp_extract_all(text, '\S+')), 1), 6) * 4.0, 1.0)
-        |     ) / 3.0, 6) AS q,
-        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents
-        |)
-        |SELECT source, count(*) AS docs,
-        |  CAST(sum(toks) AS BIGINT) AS total_tokens,
-        |  round(avg(toks), 4) AS mean_tokens,
-        |  round(avg(q), 4) AS mean_quality,
-        |  round(1.0 - CAST(count(DISTINCT fp) AS DOUBLE) / count(*), 4) AS exact_dup_rate
-        |FROM per GROUP BY source ORDER BY source""".stripMargin,
-
-    "q80_token_entropy" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS t
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, t, count(*) AS c FROM tok GROUP BY doc_id, t
-        |), n AS (
-        |  SELECT doc_id, CAST(sum(c) AS DOUBLE) AS n FROM c GROUP BY doc_id
-        |), h AS (
-        |  SELECT c.doc_id, round(-sum((c.c / n.n) * ln(c.c / n.n)), 4) AS token_entropy
-        |  FROM c JOIN n ON c.doc_id = n.doc_id GROUP BY c.doc_id
-        |)
-        |SELECT d.doc_id, coalesce(h.token_entropy, 0.0) AS token_entropy
-        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // same regexp pipeline as TextFunctions.stripHtml, 'g' option per pass
-    "q79_strip_html" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    '<html><head><style>p{color:red}</style></head><body onload="f()"><p>'
-        |    || text ||
-        |    '</p><br>&amp;lt;<script>var x = 1 < 2;</script><!-- tail --></body></html>' AS t
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(
-        |      regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |        regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-        |          '(?is)<script\b[^>]*>.*?</script\s*>', ' ', 'g'),
-        |          '(?is)<style\b[^>]*>.*?</style\s*>', ' ', 'g'),
-        |          '(?s)<!--.*?-->', ' ', 'g'),
-        |          '(?s)<[^>]*>', ' ', 'g'),
-        |          '&lt;', '<', 'g'),
-        |          '&gt;', '>', 'g'),
-        |          '&quot;', '"', 'g'),
-        |          '&#39;', CHR(39), 'g'),
-        |          '&amp;', '&', 'g'),
-        |      '\s+', ' ', 'g')) AS stripped
-        |  FROM h
-        |)
-        |SELECT doc_id, md5(stripped) AS stripped_md5,
-        |  CAST(length(stripped) AS BIGINT) AS n_chars
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Laplace smoothing over the union vocabulary: p = (n + 1) / (N + V)
-    "q77_category_drift" ->
-      """WITH a AS (
-        |  SELECT event_type AS category, count(*) AS n_a FROM events
-        |  WHERE ts < TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1
-        |), b AS (
-        |  SELECT event_type AS category, count(*) AS n_b FROM events
-        |  WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1
-        |), j AS (
-        |  SELECT coalesce(a.category, b.category) AS category,
-        |    coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        |  FROM a FULL OUTER JOIN b ON a.category = b.category
-        |), t AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS v, CAST(sum(n_a) AS DOUBLE) AS na,
-        |    CAST(sum(n_b) AS DOUBLE) AS nb
-        |  FROM j
-        |)
-        |SELECT category, n_a, n_b,
-        |  round((n_a + 1) / (na + v), 6) AS p_a,
-        |  round((n_b + 1) / (nb + v), 6) AS p_b,
-        |  round(((n_a + 1) / (na + v)) * ln(((n_a + 1) / (na + v)) / ((n_b + 1) / (nb + v))), 6) AS kl_ab_term,
-        |  round(((n_b + 1) / (nb + v)) * ln(((n_b + 1) / (nb + v)) / ((n_a + 1) / (na + v))), 6) AS kl_ba_term,
-        |  round((((n_a + 1) / (na + v)) - ((n_b + 1) / (nb + v)))
-        |    * ln(((n_a + 1) / (na + v)) / ((n_b + 1) / (nb + v))), 6) AS psi_term
-        |FROM j, t ORDER BY category""".stripMargin,
-
-    "q78_token_drift" ->
-      """WITH ta AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS category
-        |  FROM documents WHERE lang = 'en'
-        |), tb AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS category
-        |  FROM documents WHERE lang = 'de'
-        |), a AS (
-        |  SELECT category, count(*) AS n_a FROM ta GROUP BY 1
-        |), b AS (
-        |  SELECT category, count(*) AS n_b FROM tb GROUP BY 1
-        |), j AS (
-        |  SELECT coalesce(a.category, b.category) AS category,
-        |    coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-        |  FROM a FULL OUTER JOIN b ON a.category = b.category
-        |), t AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS v, CAST(sum(n_a) AS DOUBLE) AS na,
-        |    CAST(sum(n_b) AS DOUBLE) AS nb
-        |  FROM j
-        |), p AS (
-        |  SELECT (n_a + 1) / (na + v) AS pa, (n_b + 1) / (nb + v) AS pb
-        |  FROM j, t
-        |)
-        |SELECT
-        |  round(sum(pa * ln(pa / pb)), 6) AS kl_ab,
-        |  round(sum(pb * ln(pb / pa)), 6) AS kl_ba,
-        |  round(sum(pa * ln(pa / ((pa + pb) / 2)) / 2 + pb * ln(pb / ((pa + pb) / 2)) / 2), 6) AS js,
-        |  round(sum((pa - pb) * ln(pa / pb)), 6) AS psi
-        |FROM p""".stripMargin,
-
-    // plane component(p,d) = (md5_60("srp_42_p_d") % 2048 - 1024) / 1024 —
-    // the same formula Similarity.hyperplanes uses (see q21)
-    "q76_random_projection" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |)
-        |SELECT vec_id, CAST(t.p AS BIGINT) AS pos,
-        |  round(list_sum(list_transform(range(0, 64), d ->
-        |    (((('0x' || substr(md5('srp_42_' || t.p || '_' || d), 1, 15))::BIGINT % 2048)
-        |      - 1024) / 1024.0) * v[CAST(d AS INT) + 1])), 6) AS component
-        |FROM e CROSS JOIN range(0, 8) t(p)
-        |ORDER BY vec_id, pos""".stripMargin,
-
-    "q75_sample_exact_k" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang FROM documents
-        |  ORDER BY ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT,
-        |    CAST(doc_id AS VARCHAR)
-        |  LIMIT 100
-        |) ORDER BY doc_id""".stripMargin,
-
-    "q73_unigram_surprisal" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS term
-        |  FROM documents
-        |), vocab AS (
-        |  SELECT term, count(*) AS c FROM tok GROUP BY term
-        |), tot AS (
-        |  SELECT CAST(sum(c) AS DOUBLE) AS n FROM vocab
-        |), s AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    round(avg(-ln(c / n)), 4) AS avg_surprisal
-        |  FROM tok JOIN vocab USING (term), tot GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(s.n_tokens, 0) AS n_tokens,
-        |  coalesce(s.avg_surprisal, -1.0) AS avg_surprisal
-        |FROM documents d LEFT JOIN s USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q94_paragraph_dup_ratio" ->
-      """WITH synth AS (
-        |  SELECT doc_id,
-        |    substr(text, 1, 60) || chr(10) || chr(10) || 'NAV ' || source
-        |      || chr(10) || chr(10) || substr(text, 1, 60) || chr(10) || chr(10)
-        |      || substr(text, 61, 80) || chr(10) || chr(10) || 'NAV ' || source AS text
-        |  FROM documents
-        |), paras AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split(text, chr(10) || chr(10))) AS para
-        |  FROM synth
-        |), occ AS (
-        |  SELECT para, count(*) AS nd FROM paras GROUP BY para
-        |)
-        |SELECT p.doc_id, count(*) AS n_paras,
-        |  CAST(sum(CASE WHEN o.nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
-        |  round(CAST(sum(CASE WHEN o.nd > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / count(*), 4) AS dup_ratio
-        |FROM paras p JOIN occ o USING (para)
-        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-
-    "q95_bigram_surprisal" ->
-      """WITH tok AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS t FROM documents
-        |), big AS (
-        |  SELECT doc_id, unnest(list_zip(t[1:len(t)-1], t[2:len(t)])) AS z
-        |  FROM tok WHERE len(t) >= 2
-        |), b2 AS (
-        |  SELECT doc_id, z[1] AS a, z[2] AS b FROM big
-        |), lm AS (
-        |  SELECT a, b, count(*) AS c_ab FROM b2 GROUP BY a, b
-        |), ctx AS (
-        |  SELECT a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM lm GROUP BY a
-        |), v AS (
-        |  SELECT CAST(count(DISTINCT tk) AS DOUBLE) AS vs
-        |  FROM (SELECT unnest(t) AS tk FROM tok)
-        |), prof AS (
-        |  SELECT doc_id, a, b, count(*) AS cnt FROM b2 GROUP BY doc_id, a, b
-        |), s AS (
-        |  SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-        |    round(sum(cnt * -ln((c_ab + 1.0) / (c_a + 1.0 * vs)))
-        |      / sum(cnt), 4) AS avg_surprisal
-        |  FROM prof JOIN lm USING (a, b) JOIN ctx USING (a), v GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(s.n_bigrams, 0) AS n_bigrams,
-        |  coalesce(s.avg_surprisal, -1.0) AS avg_surprisal
-        |FROM documents d LEFT JOIN s USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q97_canonical_docs" -> (jaccardClusterCore +
-      """
-        |SELECT c.doc_id, c.cluster_id, d.n_chars AS quality,
-        |  (row_number() OVER (PARTITION BY c.cluster_id
-        |     ORDER BY d.n_chars DESC, c.doc_id ASC)) = 1 AS is_canonical
-        |FROM clustered c JOIN documents d ON d.doc_id = c.doc_id
-        |ORDER BY c.doc_id""".stripMargin),
-
-    "q101_count_min" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '\S+')) AS t FROM documents
-        |), exact AS (
-        |  SELECT t, count(*) AS exact_count FROM tok GROUP BY t
-        |), cells AS (
-        |  SELECT t, d.range AS d,
-        |    ('0x' || substr(md5('cm_' || d.range || '_' || t), 1, 8))::BIGINT % 32 AS b
-        |  FROM tok, range(0, 4) d
-        |), sk AS (
-        |  SELECT d, b, count(*) AS c FROM cells GROUP BY d, b
-        |), qb AS (
-        |  SELECT t, d.range AS d,
-        |    ('0x' || substr(md5('cm_' || d.range || '_' || t), 1, 8))::BIGINT % 32 AS b
-        |  FROM exact, range(0, 4) d
-        |), est AS (
-        |  SELECT t, CAST(min(coalesce(c, 0)) AS BIGINT) AS cm_estimate
-        |  FROM qb LEFT JOIN sk USING (d, b) GROUP BY t
-        |)
-        |SELECT e.t AS token, exact_count, cm_estimate,
-        |  cm_estimate >= exact_count AS one_sided_ok
-        |FROM exact e JOIN est USING (t) ORDER BY token""".stripMargin,
-
-    "q100_chunk_version_diff" ->
-      """WITH v2 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'EDIT v2 ' || text ELSE text END AS text
-        |  FROM documents
-        |), b1 AS (
-        |  SELECT doc_id, text,
-        |    list_concat(list_concat([1::BIGINT],
-        |      list_filter(range(2, greatest(len(text) - 8 + 1, 1) + 1), p ->
-        |        list_reduce(
-        |          list_prepend(0::BIGINT, list_transform(range(0, 8), j ->
-        |            ascii(substr(text, CAST(p + j AS INT), 1))::BIGINT)),
-        |          (h, c) -> (h * 257 + c) % 2147483647) % 64 = 0)),
-        |      [len(text) + 1::BIGINT]) AS bounds
-        |  FROM documents
-        |), h1 AS (
-        |  SELECT DISTINCT doc_id,
-        |    ('0x' || substr(md5(substr(text, CAST(p[1] AS INT),
-        |      CAST(p[2] - p[1] AS INT))), 1, 15))::BIGINT AS chunk_hash
-        |  FROM (
-        |    SELECT doc_id, text,
-        |      unnest(list_zip(bounds[1:len(bounds)-1], bounds[2:len(bounds)])) AS p
-        |    FROM b1
-        |  ) WHERE p[2] > p[1]
-        |), b2 AS (
-        |  SELECT doc_id, text,
-        |    list_concat(list_concat([1::BIGINT],
-        |      list_filter(range(2, greatest(len(text) - 8 + 1, 1) + 1), p ->
-        |        list_reduce(
-        |          list_prepend(0::BIGINT, list_transform(range(0, 8), j ->
-        |            ascii(substr(text, CAST(p + j AS INT), 1))::BIGINT)),
-        |          (h, c) -> (h * 257 + c) % 2147483647) % 64 = 0)),
-        |      [len(text) + 1::BIGINT]) AS bounds
-        |  FROM v2
-        |), c2 AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(substr(text, CAST(p[1] AS INT),
-        |      CAST(p[2] - p[1] AS INT))), 1, 15))::BIGINT AS chunk_hash
-        |  FROM (
-        |    SELECT doc_id, text,
-        |      unnest(list_zip(bounds[1:len(bounds)-1], bounds[2:len(bounds)])) AS p
-        |    FROM b2
-        |  ) WHERE p[2] > p[1]
-        |)
-        |SELECT c2.doc_id, count(*) AS n_chunks_v2,
-        |  CAST(sum(CASE WHEN h1.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_shared,
-        |  round(CAST(sum(CASE WHEN h1.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / count(*), 4) AS share_ratio
-        |FROM c2 LEFT JOIN h1
-        |  ON c2.doc_id = h1.doc_id AND c2.chunk_hash = h1.chunk_hash
-        |GROUP BY c2.doc_id ORDER BY c2.doc_id""".stripMargin,
-
-    "q99_cdc_chunks" ->
-      """WITH b AS (
-        |  SELECT doc_id, text,
-        |    list_concat(list_concat([1::BIGINT],
-        |      list_filter(range(2, greatest(len(text) - 8 + 1, 1) + 1), p ->
-        |        list_reduce(
-        |          list_prepend(0::BIGINT, list_transform(range(0, 8), j ->
-        |            ascii(substr(text, CAST(p + j AS INT), 1))::BIGINT)),
-        |          (h, c) -> (h * 257 + c) % 2147483647) % 64 = 0)),
-        |      [len(text) + 1::BIGINT]) AS bounds
-        |  FROM documents
-        |), ch AS (
-        |  SELECT doc_id, text,
-        |    unnest(list_zip(bounds[1:len(bounds)-1], bounds[2:len(bounds)])) AS p,
-        |    CAST(unnest(range(1, len(bounds))) AS BIGINT) AS ci
-        |  FROM b
-        |)
-        |SELECT doc_id, ci - 1 AS chunk_idx,
-        |  CAST(p[1] AS BIGINT) AS chunk_start, CAST(p[2] AS BIGINT) AS chunk_end,
-        |  ('0x' || substr(md5(substr(text, CAST(p[1] AS INT),
-        |    CAST(p[2] - p[1] AS INT))), 1, 15))::BIGINT AS chunk_hash
-        |FROM ch WHERE p[2] > p[1]
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q98_calibrated_quality" ->
-      """SELECT doc_id, source, n_chars,
-        |  round(percent_rank() OVER (PARTITION BY source
-        |    ORDER BY n_chars ASC, doc_id ASC), 6) AS calibrated
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q96_code_signals" ->
-      """WITH synth AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN
-        |      'def f_' || doc_id::VARCHAR || '(x) {' || chr(10)
-        |        || '    return x + ' || doc_id::VARCHAR || ';' || chr(10)
-        |        || '    }' || chr(10) || substr(text, 1, 40)
-        |    ELSE text END AS text
-        |  FROM documents
-        |), sig AS (
-        |  SELECT doc_id,
-        |    round(len(regexp_extract_all(text, '[{}\[\]()<>;=]'))
-        |      / greatest(len(text), 1)::DOUBLE, 4) AS punct_density,
-        |    round(len(regexp_extract_all(text, ';'))
-        |      / greatest(len(list_filter(string_split(text, chr(10)),
-        |          l -> len(l) > 0)), 1)::DOUBLE, 4) AS semis_per_line,
-        |    round(len(list_filter(list_filter(string_split(text, chr(10)),
-        |          l -> len(l) > 0), l -> regexp_matches(l, '^(    |\t)')))
-        |      / greatest(len(list_filter(string_split(text, chr(10)),
-        |          l -> len(l) > 0)), 1)::DOUBLE, 4) AS indent_frac
-        |  FROM synth
-        |)
-        |SELECT doc_id, punct_density, semis_per_line, indent_frac,
-        |  (punct_density > 0.01 OR semis_per_line > 0.5 OR indent_frac > 0.2)
-        |    AS is_code
-        |FROM sig ORDER BY doc_id""".stripMargin
-  )
-
-  private val storageOracleSql: String =
-    """WITH b1 AS (
-      |  SELECT user_id, min(event_id) AS ref_event, 'signup' AS src
-      |  FROM events WHERE event_type = 'signup' GROUP BY user_id
-      |), b2 AS (
-      |  SELECT user_id, event_id AS ref_event, 'purchase' AS src
-      |  FROM events WHERE event_type = 'purchase'
-      |  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-      |), all_u AS (
-      |  SELECT user_id FROM b1 UNION SELECT user_id FROM b2
-      |)
-      |SELECT u.user_id,
-      |  coalesce(b2.ref_event, b1.ref_event) AS ref_event,
-      |  coalesce(b2.src, b1.src) AS src
-      |FROM all_u u
-      |LEFT JOIN b1 ON u.user_id = b1.user_id
-      |LEFT JOIN b2 ON u.user_id = b2.user_id
-      |ORDER BY u.user_id""".stripMargin
 }

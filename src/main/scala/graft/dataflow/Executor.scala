@@ -1,6 +1,6 @@
 package graft.dataflow
 
-import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue}
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
@@ -37,42 +37,10 @@ trait FlowExecutor[C <: FlowContext] {
   def execute[S <: DataFlow[S, C]](flow: S, errorOnUnexecutedActions: Boolean = true): (Seq[FlowAction[C]], S)
 }
 
-/** Single-threaded executor: run one ready action at a time, in priority
-  * order. Reference: SequentialScheduler.scala:14-46. */
-class SequentialExecutor[C <: FlowContext](
-    priority: PriorityStrategies.Strategy[C] = PriorityStrategies.asInFlow[C])
-  extends FlowExecutor[C] {
-
-  def execute[S <: DataFlow[S, C]](flow: S, errorOnUnexecutedActions: Boolean = true): (Seq[FlowAction[C]], S) = {
-    val prepared = flow.prepareForExecution().get
-    var current = prepared
-    var progressed = true
-    while (progressed && current.actions.nonEmpty) {
-      priority(current.nextRunnable()).headOption match {
-        case None => progressed = false
-        case Some(action) =>
-          val inputs = current.inputs.filterLabels(action.inputLabels)
-          current.context.reportActionStarted(action)
-          action.performAction(inputs, current.context) match {
-            case Success(outputs) =>
-              current.context.reportActionFinished(action)
-              current = current.executed(action, outputs)
-            case Failure(e) =>
-              throw new FlowException(s"Action [${action.description}] failed", e)
-          }
-      }
-    }
-    if (errorOnUnexecutedActions && current.actions.nonEmpty)
-      throw new FlowException(
-        s"Flow finished with ${current.actions.size} unexecuted actions: " +
-          current.actions.map(_.description).mkString("; "))
-    val finalized = current.finaliseExecution().get
-    (finalized.state.executedActions, finalized)
-  }
-}
-
-/** Parallel executor: independent DAG branches run concurrently on named
-  * execution pools, each pool a fixed thread pool. Completion flows back
+/** The flow executor: independent DAG branches run concurrently on named
+  * execution pools, each pool a fixed thread pool. `maxParallelActions = 1`
+  * with [[PriorityStrategies.asInFlow]] runs one ready action at a time in
+  * flow order (the reference's SequentialScheduler). Completion flows back
   * through a blocking queue; failures fail fast (no new scheduling, running
   * actions drain). Reference semantics: ParallelActionScheduler.scala:50-130.
   *
@@ -121,14 +89,16 @@ class ParallelExecutor[C <: FlowContext](
           val ctx = current.context
           poolService(pool).submit(new Runnable {
             def run(): Unit = {
-              ctx.setPoolIntoContext(pool)
-              ctx.reportActionStarted(action)
-              // catch Throwable, not just NonFatal: a fatal error (OOM,
-              // StackOverflow) that escaped Try would drop the Done message
-              // and leave the scheduler spinning on `running.nonEmpty` forever
+              // every submitted action posts exactly one Done: the context
+              // hooks run inside the same catch as the action, and Throwable
+              // (not just NonFatal) is caught, because a lost Done leaves the
+              // scheduler blocked on `queue.take()` forever
               val result =
-                try Try(action.performAction(inputs, ctx)).flatten
-                catch { case t: Throwable => Failure(t) }
+                try {
+                  ctx.setPoolIntoContext(pool)
+                  ctx.reportActionStarted(action)
+                  Try(action.performAction(inputs, ctx)).flatten
+                } catch { case t: Throwable => Failure(t) }
               queue.put(Done(action, result))
             }
           })
@@ -139,21 +109,19 @@ class ParallelExecutor[C <: FlowContext](
     try {
       scheduleReady()
       while (running.nonEmpty) {
-        val done = queue.poll(1, TimeUnit.MINUTES)
-        if (done != null) {
-          running -= done.action.guid
-          runningPerPool(current.poolOf(done.action)) -= 1
-          done.result match {
-            case Success(outputs) if failure.isEmpty =>
-              current.context.reportActionFinished(done.action)
-              // `executed` (and its temp-view hook) runs on this scheduler
-              // thread — never concurrently — so flow state stays consistent.
-              current = current.executed(done.action, outputs)
-              scheduleReady()
-            case Failure(e) if failure.isEmpty =>
-              failure = Some(new FlowException(s"Action [${done.action.description}] failed", e))
-            case _ => () // draining after failure
-          }
+        val done = queue.take()
+        running -= done.action.guid
+        runningPerPool(current.poolOf(done.action)) -= 1
+        done.result match {
+          case Success(outputs) if failure.isEmpty =>
+            current.context.reportActionFinished(done.action)
+            // `executed` (and its temp-view hook) runs on this scheduler
+            // thread — never concurrently — so flow state stays consistent.
+            current = current.executed(done.action, outputs)
+            scheduleReady()
+          case Failure(e) if failure.isEmpty =>
+            failure = Some(new FlowException(s"Action [${done.action.description}] failed", e))
+          case _ => () // draining after failure
         }
       }
     } finally {

@@ -153,6 +153,7 @@ object Graft {
   def sparkExecutor(maxParallelActions: Int = 20): ParallelExecutor[SparkFlowContext] =
     new ParallelExecutor[SparkFlowContext](maxParallelActions)
 
-  def sequentialExecutor: SequentialExecutor[SparkFlowContext] =
-    new SequentialExecutor[SparkFlowContext]()
+  /** One ready action at a time, in flow order. */
+  def sequentialExecutor: FlowExecutor[SparkFlowContext] =
+    new ParallelExecutor[SparkFlowContext](1, priority = PriorityStrategies.asInFlow)
 }

@@ -111,7 +111,7 @@ object Bpe {
     * one per merge — the difference between a production tokenizer train
     * and 32k driver round-trips.
     *
-    * SCALING LIMIT (measured, tools/BpeProbe at >=1k merges): rounds are
+    * SCALING LIMIT (measured at >=1k merges, COVERAGE.md): rounds are
     * inherently SEQUENTIAL — each argmax depends on the previous batch's
     * counts — so wall time is (rounds x per-round latency), and per-round
     * latency is dominated by driver job scheduling on a vocab-sized cached
@@ -253,9 +253,8 @@ object Bpe {
     * merge's `count` field never lies about retained mass); a merge can
     * differ from full-corpus training only where the dropped tail's mass
     * would have changed an argmax outcome — i.e. where two candidate pairs
-    * sit within tail-mass of each other. BpeProbe's `SPARK_GRAFT_BPE_FLOOR`
-    * mode measures that merge-table delta at several floors on the gate
-    * corpus; COVERAGE records the table. `minCount = 1` (the default) is
+    * sit within tail-mass of each other. COVERAGE.md records that
+    * merge-table delta, measured at several floors on the gate corpus. `minCount = 1` (the default) is
     * full exact training, cap-guarded as before. */
   def learnBpeLocalFromCounts(counts: DataFrame, numMerges: Int,
       minCount: Long = 1L,

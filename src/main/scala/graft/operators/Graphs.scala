@@ -168,14 +168,9 @@ object Graphs {
       setup: (DataFrame, Long) => (DataFrame, Column, Column), iterations: Int,
       damping: Double, iterScale: Int, scale: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    def ph[A](label: String)(f: => A): A =
-      if (sys.env.contains("SPARK_GRAFT_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[graphs] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-      } else f
     val sel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-    val e = ph("materialize edges")(Materialize(sel)) // reused every iteration
+    val e = Materialize(sel) // reused every iteration
     // vertex set AND out-degrees in ONE aggregation: both edge endpoints
     // flow into a single map-combined groupBy (src endpoints count toward
     // the degree, dst endpoints only assert existence) — replaces a
@@ -186,7 +181,7 @@ object Graphs {
       .agg(sum(col("c")).as("_deg0"))
       .withColumn("deg", when(col("_deg0") > 0, col("_deg0"))) // dangling -> null
       .drop("_deg0")
-      .transform(df => ph("materialize base")(Materialize(df)))
+      .transform(Materialize.apply)
 
     // Broadcast gate sized in estimated BYTES, not rows: a 5M-vertex relation
     // with wide string keys is hundreds of MB and would OOM the driver if
@@ -198,8 +193,8 @@ object Graphs {
     // Past the cap (a real web graph) the shuffled join is the correct plan
     // and nothing changes. The same aggregation carries the vertex count to
     // `setup` (pageRank's 1/n init) — one sizing job, not two.
-    val sizing = ph("sizing agg")(base0.agg(count(lit(1)).as("n"), coalesce(
-      sum(octet_length(col("vertex").cast("string")).cast("long")), lit(0L)).as("kb")).head)
+    val sizing = base0.agg(count(lit(1)).as("n"), coalesce(
+      sum(octet_length(col("vertex").cast("string")).cast("long")), lit(0L)).as("kb")).head
     val estBytes = sizing.getLong(1) + sizing.getLong(0) * 32L
     val broadcastScores = estBytes <= 256L * 1024 * 1024
 
@@ -242,16 +237,15 @@ object Graphs {
         // plan's analysis+codegen dominates) and steady-state (2.3s vs
         // 2.7s), and it keeps every broadcast collection O(|V|) with
         // constant-size plans at any iteration count.
-        val m = ph(s"materialize round $it")(Materialize(scores))
+        val m = Materialize(scores)
         if (prevMat != null) Materialize.release(prevMat)
         prevMat = m
         scores = m
       }
       it += 1
     }
-    val out = ph("final materialize")(
-      scores.select(col("vertex"), round(col("pr"), scale).as("pagerank"))
-        .transform(Materialize.apply))
+    val out = scores.select(col("vertex"), round(col("pr"), scale).as("pagerank"))
+      .transform(Materialize.apply)
     Materialize.release(e); Materialize.release(base)
     if (prevMat != null) Materialize.release(prevMat)
     out

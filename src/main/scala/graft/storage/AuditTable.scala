@@ -181,15 +181,17 @@ class AuditTable(
     // so snapshot pruning is row-level only (allBetween prunes by region)
     readRegions(readableRegions).map { df =>
       val filtered = df.where(col(AuditColumn) <= lit(ts))
-      if (info.primaryKeys.isEmpty) filtered
-      else {
-        val w = Window.partitionBy(info.primaryKeys.map(col): _*)
-          .orderBy(col(AuditColumn).desc)
-        filtered.withColumn("_de_rn", row_number().over(w))
-          .where(col("_de_rn") === 1)
-          .drop("_de_rn")
-      }
+      if (info.primaryKeys.isEmpty) filtered else latestPerKey(filtered)
     }
+  }
+
+  /** One row per primary key: the one with the latest `_de_last_updated`. */
+  private def latestPerKey(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(info.primaryKeys.map(col): _*)
+      .orderBy(col(AuditColumn).desc)
+    df.withColumn("_de_rn", row_number().over(w))
+      .where(col("_de_rn") === 1)
+      .drop("_de_rn")
   }
 
   // -------------------------------------------------- PK bloom sidecars ---
@@ -299,12 +301,7 @@ class AuditTable(
         val keyed = df.where(keys.map(k =>
           info.primaryKeys.zip(probe(k)).map { case (c, v) => col(c) <=> v }
             .reduce(_ && _)).reduce(_ || _))
-        val filtered = keyed.where(col(AuditColumn) <= lit(ts))
-        val w = Window.partitionBy(info.primaryKeys.map(col): _*)
-          .orderBy(col(AuditColumn).desc)
-        filtered.withColumn("_de_rn", row_number().over(w))
-          .where(col("_de_rn") === 1)
-          .drop("_de_rn")
+        latestPerKey(keyed.where(col(AuditColumn) <= lit(ts)))
       }
     }
   }
@@ -373,12 +370,7 @@ class AuditTable(
       throw new StorageException(s"No data found for regions of [$tableName]"))
     val deduped =
       if (info.retainHistory || info.primaryKeys.isEmpty) merged
-      else {
-        val w = Window.partitionBy(info.primaryKeys.map(col): _*)
-          .orderBy(col(AuditColumn).desc)
-        merged.withColumn("_de_rn", row_number().over(w))
-          .where(col("_de_rn") === 1).drop("_de_rn")
-      }
+      else latestPerKey(merged)
 
     val totalRows = toMerge.map(_.count).sum
     // size from the PRE-dedup merged scan: same schema (dedup only drops

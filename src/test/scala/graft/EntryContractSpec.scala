@@ -31,6 +31,13 @@ class EntryContractSpec extends AnyFunSpec with Matchers {
     }
   }
 
+  it("the registry rejects a query name declared twice") {
+    val q = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](
+      graft.gate.GateQuery.registry(Seq(q), Seq(q.copy(oracleSql = "SELECT 1"))))
+    e.getMessage should include(q.name)
+  }
+
   it("query names are driver-safe (filesystem + JSON key friendly)") {
     SparkEntry.queries.keys.foreach { k =>
       k should fullyMatch regex "[A-Za-z0-9_]+"

@@ -63,7 +63,7 @@ class PlanSpec extends SparkTestBase with Matchers {
   it("q34 rides the native sort-merge as-of exec (r14)") {
     // r14: q34 switched from the union-carry-forward composition to
     // AsOfJoinExec after a same-output shape race at sf1 (1.8s vs 2.7s
-    // warm — tools/AsofShapeProbe). One exchange + sort per side, O(1)
+    // warm — COVERAGE.md, r14). One exchange + sort per side, O(1)
     // merge state; never a generic join's row explosion on skew.
     val p = plan("q34_asof_join")
     p should include("AsOfJoin")

@@ -30,7 +30,7 @@ class DagPropertySpec extends AnyFunSpec with Matchers {
         }
         withClue(s"seed=$seed n=$n: ") {
           flow.isValidFlowDAG.isSuccess shouldBe true
-          val (executed, done) = new SequentialExecutor[FlowContext]().execute(flow)
+          val (executed, done) = new ParallelExecutor[FlowContext](1, priority = PriorityStrategies.asInFlow).execute(flow)
           executed.size shouldBe n
           done.actions shouldBe empty
         }
@@ -77,7 +77,7 @@ class DagPropertySpec extends AnyFunSpec with Matchers {
           else fl.addAction(producer(s"l$x"))
         }
         withClue(s"seed=$seed n=$n tagged=${tagged.size}: ") {
-          val (executed, done) = new SequentialExecutor[FlowContext]().execute(flow)
+          val (executed, done) = new ParallelExecutor[FlowContext](1, priority = PriorityStrategies.asInFlow).execute(flow)
           executed.size shouldBe (if (tagged.isEmpty) n else n + 1)
           done.actions shouldBe empty
           if (tagged.nonEmpty) {

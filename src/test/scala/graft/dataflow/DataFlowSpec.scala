@@ -227,7 +227,7 @@ class ExecutorSpec extends AnyFunSpec with Matchers {
 
   it("sequential executor runs a diamond to completion") {
     val (flow, _) = diamond
-    val (executed, finalFlow) = new SequentialExecutor[FlowContext]().execute(flow)
+    val (executed, finalFlow) = new ParallelExecutor[FlowContext](1, priority = PriorityStrategies.asInFlow).execute(flow)
     executed.size shouldBe 4
     finalFlow.inputs.get[String]("j") shouldBe "v-l|v-r"
   }
@@ -265,7 +265,7 @@ class ExecutorSpec extends AnyFunSpec with Matchers {
     val emptyProducer = new TestAction(List.empty, List("e"))(_ => Seq(None))
     val consumer = TestAction.mapper("e", "out")(identity)
     val flow = SimpleDataFlow.empty.addAction(emptyProducer).addAction(consumer)
-    val e = intercept[FlowException](new SequentialExecutor[FlowContext]().execute(flow))
+    val e = intercept[FlowException](new ParallelExecutor[FlowContext](1, priority = PriorityStrategies.asInFlow).execute(flow))
     e.getMessage should include("unexecuted")
   }
 

@@ -13,7 +13,7 @@ Replication contract:
   exactly the kind of massive boilerplate duplication a real crawl corpus
   has (and 10x-duplicate key groups stress join skew);
 - pyarrow read/write with the SOURCE schema preserved exactly — the events
-  table's ns-unit timestamps MUST survive (SparkEntry.events reads them via
+  table's ns-unit timestamps MUST survive (graft.gate.events reads them via
   nanosAsLong + div 1000; a duckdb rewrite would silently downgrade to us).
 
 STRIDE = 10_000_000 clears every source id (max is lineitem o_orderkey
