@@ -7,8 +7,7 @@ import scala.reflect.runtime.{universe => ru}
 
 import graft.configuration.ConfigParser
 import graft.dataflow.FlowException
-import graft.dataflow.spark.{Graft, SparkDataFlow, SparkFlowContext}
-import graft.dataflow.ParallelExecutor
+import graft.dataflow.spark.{Graft, SparkDataFlow}
 
 /** Sandboxed environment conventions: data under
   * `{uri}/data/{environment}/{project}/{branch}` and a database named
@@ -133,7 +132,7 @@ abstract class GraftApp[E <: Env: ru.TypeTag](maxParallelActions: Int = 20)
 
   protected def runWithEnv(spark: SparkSession, env: E): Unit = {
     val built = flow(Graft.sparkFlow(spark, s"${env.basePath}/.tmp"), env)
-    new ParallelExecutor[SparkFlowContext](maxParallelActions).execute(built)
+    Graft.sparkExecutor(maxParallelActions).execute(built)
   }
 }
 
@@ -186,6 +185,6 @@ object MultiAppRunner {
       substitutes(name) = if (withDeps.actions.size > before) Seq(name) else depApps
       withDeps
     }
-    new ParallelExecutor[SparkFlowContext](maxParallelActions).execute(combined)
+    Graft.sparkExecutor(maxParallelActions).execute(combined)
   }
 }

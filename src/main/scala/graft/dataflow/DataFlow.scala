@@ -1,7 +1,6 @@
 package graft.dataflow
 
-import scala.annotation.tailrec
-import scala.util.{Failure, Success, Try}
+import scala.util.{Success, Try}
 
 /** Immutable DAG of named actions over labelled entities.
   *
@@ -17,10 +16,7 @@ final case class FlowState[C <: FlowContext](
     actions: Seq[FlowAction[C]],
     tagState: TagState,
     schedulingMeta: SchedulingMeta,
-    executedActions: Seq[FlowAction[C]]) {
-
-  def pendingGuids: Set[String] = actions.map(_.guid).toSet
-}
+    executedActions: Seq[FlowAction[C]])
 
 object FlowState {
   def empty[C <: FlowContext]: FlowState[C] =
@@ -32,12 +28,6 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
   def state: FlowState[C]
   def context: C
   protected def withState(s: FlowState[C]): Self
-
-  /** Extensions that get a chance to rewrite the flow before execution
-    * (commit expansion, cache planning, data-quality interceptors). Keyed so
-    * an extension can replace itself. */
-  def extensions: Map[String, FlowExtension[Self, C]]
-  protected def withExtensions(e: Map[String, FlowExtension[Self, C]]): Self
 
   def inputs: FlowEntities = state.inputs
   def actions: Seq[FlowAction[C]] = state.actions
@@ -185,27 +175,9 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
 
   // ----------------------------------------------------------- validation ---
 
-  /** Runs the extension fix-point then validates the DAG. Concrete flows add
-    * environment prep (temp folders) on top. */
-  def prepareForExecution(maxIterations: Int = 10): Try[Self] =
-    runExtensionFixPoint(maxIterations).flatMap(_.isValidFlowDAG)
-
-  private def runExtensionFixPoint(maxIterations: Int): Try[Self] = Try {
-    @tailrec
-    def loop(flow: Self, remaining: Int): Self = {
-      if (flow.extensions.isEmpty) flow
-      else if (remaining <= 0)
-        throw new FlowException(
-          s"Flow extensions did not stabilise after $maxIterations iterations: " +
-            flow.extensions.keys.mkString(", "))
-      else {
-        val (key, ext) = flow.extensions.minBy { case (k, e) => (e.ordering, k) }
-        val cleared = flow.withExtensions(flow.extensions - key)
-        loop(ext.preExecutionManipulation(cleared), remaining - 1)
-      }
-    }
-    loop(self, maxIterations)
-  }
+  /** Validates the DAG. Concrete flows rewrite the flow first (commits,
+    * caches) and add environment prep (temp folders) on top. */
+  def prepareForExecution(): Try[Self] = isValidFlowDAG
 
   /** Post-run cleanup hook. */
   def finaliseExecution(): Try[Self] = Success(self)
@@ -290,28 +262,4 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
 
     byGuid.keys.foreach(g => if (color(g) == WHITE) visit(g, Nil))
   }
-}
-
-/** Pre-execution flow rewriter (commit expansion, cache planning, …). Must
-  * converge: an extension that re-adds itself every round trips the fix-point
-  * iteration cap. */
-trait FlowExtension[Self <: DataFlow[Self, C], C <: FlowContext] {
-  def identifier: String
-
-  /** Fix-point application order (lower runs first). Extensions that ADD
-    * actions (commit staging) must run before extensions whose decisions
-    * depend on the final action set (cache elision counts consumers) —
-    * otherwise a label reused only via commit staging looks single-consumer
-    * and its planned cache is wrongly elided. */
-  def ordering: Int = 50
-
-  def preExecutionManipulation(flow: Self): Self
-
-  /** Combine with a same-identifier extension when two flows are merged
-    * (`++`). Extensions that accumulate state (commits, cache requests) must
-    * union it here; the default refuses rather than silently dropping one
-    * side's registrations. */
-  def merge(other: FlowExtension[Self, C]): FlowExtension[Self, C] =
-    throw new FlowException(
-      s"Cannot merge flows: both registered extension [$identifier] and it defines no merge rule")
 }

@@ -25,13 +25,14 @@ final case class SparkFlowContext(spark: SparkSession, tempFolder: Option[Path] 
     * operator maps a slow stage back to the flow step that issued it. */
   override def reportActionStarted(action: graft.dataflow.FlowAction[_]): Unit =
     spark.sparkContext.setJobDescription(s"graft: ${action.description}")
-
-  override def reportActionFinished(action: graft.dataflow.FlowAction[_]): Unit = ()
 }
 
 /** Concrete Spark flow. Adds to the generic DAG:
-  *   - temp-folder lifecycle (delete+mkdirs on prepare, delete on finalise,
-  *     reference SparkDataFlow.scala:88-122),
+  *   - two rewrites at prepare time, commit expansion ([[CommitPlan]]) then
+  *     cache planning ([[CachePlan]]),
+  *   - temp-folder lifecycle (delete+mkdirs on prepare, delete on finalise
+  *     unless `removeTempAfterExecution` is off, reference
+  *     SparkDataFlow.scala:88-122),
   *   - temp-view registration for labels consumed by `sql` actions, done in
   *     the scheduler thread inside `executed` (reference
   *     SparkDataFlow.scala:76-86),
@@ -40,21 +41,15 @@ final case class SparkFlowContext(spark: SparkSession, tempFolder: Option[Path] 
 final case class SparkDataFlow(
     state: FlowState[SparkFlowContext],
     context: SparkFlowContext,
-    sqlTables: Set[String],
-    extensions: Map[String, FlowExtension[SparkDataFlow, SparkFlowContext]],
-    removeTempAfterExecution: Boolean)
+    sqlTables: Set[String] = Set.empty,
+    commitPlan: CommitPlan = CommitPlan(),
+    cachePlan: CachePlan = CachePlan(),
+    removeTempAfterExecution: Boolean = true)
   extends DataFlow[SparkDataFlow, SparkFlowContext] {
 
   def spark: SparkSession = context.spark
 
   protected def withState(s: FlowState[SparkFlowContext]): SparkDataFlow = copy(state = s)
-
-  protected def withExtensions(
-      e: Map[String, FlowExtension[SparkDataFlow, SparkFlowContext]]): SparkDataFlow =
-    copy(extensions = e)
-
-  def addExtension(ext: FlowExtension[SparkDataFlow, SparkFlowContext]): SparkDataFlow =
-    copy(extensions = extensions + (ext.identifier -> ext))
 
   /** Mark labels as needed by SQL actions (registered as temp views when
     * produced). Label must parse as a table identifier. */
@@ -78,25 +73,27 @@ final case class SparkDataFlow(
     this
   }
 
-  override def prepareForExecution(maxIterations: Int = 10): Try[SparkDataFlow] =
-    Try(FlowConfigurationExtension.applyEnabled(this))
-      .flatMap(_.prepareAfterConfExtensions(maxIterations))
-
-  private def prepareAfterConfExtensions(maxIterations: Int): Try[SparkDataFlow] =
-    super.prepareForExecution(maxIterations).map { flow =>
-      flow.context.tempFolder.foreach { tmp =>
-        val fs = flow.context.fileSystem
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        fs.mkdirs(tmp)
-      }
-      // inputs present at build time may also feed sql actions
-      flow.inputs.entities.foreach {
-        case (label, Some(ds: Dataset[_])) if flow.sqlTables.contains(label) =>
-          ds.createOrReplaceTempView(label)
-        case _ => ()
-      }
-      flow
+  /** Expands commits first, so that cache elision counts the readers the
+    * staging actions add; then applies caches; then validates the DAG and
+    * prepares the temp folder. Both plans are spent by the rewrite, so
+    * preparing a prepared flow again adds no action. */
+  override def prepareForExecution(): Try[SparkDataFlow] = Try {
+    val (expanded, committed) = commitPlan.expand(this)
+    cachePlan.applyTo(expanded, committed)
+  }.flatMap(_.isValidFlowDAG).map { flow =>
+    flow.context.tempFolder.foreach { tmp =>
+      val fs = flow.context.fileSystem
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+      fs.mkdirs(tmp)
     }
+    // inputs present at build time may also feed sql actions
+    flow.inputs.entities.foreach {
+      case (label, Some(ds: Dataset[_])) if flow.sqlTables.contains(label) =>
+        ds.createOrReplaceTempView(label)
+      case _ => ()
+    }
+    flow
+  }
 
   override def finaliseExecution(): Try[SparkDataFlow] = {
     if (removeTempAfterExecution)
@@ -105,7 +102,7 @@ final case class SparkDataFlow(
   }
 
   /** Merge two flows built on the same session: union of inputs, actions,
-    * tags, pools and sql tables. */
+    * tags, pools, sql tables, commits and caches. */
   def ++(other: SparkDataFlow): SparkDataFlow = {
     val dupLabels = state.actions.flatMap(_.outputLabels)
       .intersect(other.state.actions.flatMap(_.outputLabels))
@@ -123,11 +120,8 @@ final case class SparkDataFlow(
           state.schedulingMeta.actionStates ++ other.state.schedulingMeta.actionStates),
         executedActions = state.executedActions ++ other.state.executedActions),
       sqlTables = sqlTables ++ other.sqlTables,
-      // same-identifier extensions are merged (union of commits/pushes/cache
-      // requests), never silently overwritten by the right-hand flow
-      extensions = other.extensions.foldLeft(extensions) { case (acc, (id, ext)) =>
-        acc + (id -> acc.get(id).map(_.merge(ext)).getOrElse(ext))
-      })
+      commitPlan = commitPlan.merge(other.commitPlan),
+      cachePlan = cachePlan.merge(other.cachePlan))
   }
 }
 
@@ -141,14 +135,7 @@ object Graft {
     sparkFlow(spark, Some(new Path(tempFolder)))
 
   def sparkFlow(spark: SparkSession, tempFolder: Option[Path]): SparkDataFlow =
-    SparkDataFlow(
-      FlowState.empty[SparkFlowContext],
-      SparkFlowContext(spark, tempFolder),
-      Set.empty,
-      Map.empty,
-      removeTempAfterExecution =
-        spark.conf.getOption("spark.graft.dataflow.removeTempAfterExecution")
-          .forall(_.toBoolean))
+    SparkDataFlow(FlowState.empty[SparkFlowContext], SparkFlowContext(spark, tempFolder))
 
   def sparkExecutor(maxParallelActions: Int = 20): ParallelExecutor[SparkFlowContext] =
     new ParallelExecutor[SparkFlowContext](maxParallelActions)

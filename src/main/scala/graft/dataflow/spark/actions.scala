@@ -435,12 +435,23 @@ object actions {
         })
       }
 
+    /** Cache interceptor: [[interceptLabel]] once per label. A label whose
+      * producer already carries a cache wrapper is left as it is, and the
+      * wrapped label is recorded in the flow's [[CachePlan]]. */
+    private def cacheLabel(label: String, kind: String)(
+        rewrite: (Dataset[_], SparkFlowContext) => Dataset[_]): SparkDataFlow =
+      if (flow.cachePlan.wrapped(label)) flow
+      else {
+        val cached = interceptLabel(label, kind)(rewrite)
+        cached.copy(cachePlan = cached.cachePlan.copy(wrapped = cached.cachePlan.wrapped + label))
+      }
+
     /** Checkpoint the label to the flow temp folder as parquet and replace
       * the in-flight dataset with the re-opened copy: cuts lineage, safe for
       * cross-thread reuse. Reference: SparkInterceptors.scala:48-65. */
     def cacheAsParquet(labels: String*): SparkDataFlow =
       labels.foldLeft(flow) { (fl, label) =>
-        new SparkFlowOps(fl).interceptLabel(label, "cacheAsParquet") { (ds, ctx) =>
+        new SparkFlowOps(fl).cacheLabel(label, "cacheAsParquet") { (ds, ctx) =>
           val tmpRoot = ctx.tempFolder.getOrElse(
             throw new FlowException("cacheAsParquet needs a flow temp folder"))
           val path = new Path(tmpRoot, label).toString
@@ -465,7 +476,7 @@ object actions {
       if (partitions.isEmpty)
         throw new FlowException("cacheAsPartitionedParquet needs at least one partition column")
       labels.foldLeft(flow) { (fl, label) =>
-        new SparkFlowOps(fl).interceptLabel(label, "cacheAsPartitionedParquet") { (ds, ctx) =>
+        new SparkFlowOps(fl).cacheLabel(label, "cacheAsPartitionedParquet") { (ds, ctx) =>
           val tmpRoot = ctx.tempFolder.getOrElse(
             throw new FlowException("cacheAsPartitionedParquet needs a flow temp folder"))
           val path = new Path(tmpRoot, label)
@@ -505,7 +516,7 @@ object actions {
       * Reference: SparkInterceptors.scala:31-46. */
     def sparkCache(label: String,
         storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): SparkDataFlow =
-      interceptLabel(label, "sparkCache") { (ds, _) =>
+      cacheLabel(label, "sparkCache") { (ds, _) =>
         val cached = ds.persist(storageLevel)
         // count(), not isEmpty: isEmpty evaluates only the first
         // partition, leaving the rest uncached — parallel consumers

@@ -10,7 +10,7 @@ import graft.metastore.HadoopDBConnector
   *
   * `commit(name)(labels*)` registers labels under a commit name;
   * `push(name)(committer)` binds the committer. At prepare time the
-  * [[CommitExtension]] expands each commit into three tag-fenced phases —
+  * [[CommitPlan]] expands each commit into three tag-fenced phases —
   * stage (write every label to the flow temp folder), move (atomic renames
   * into the destination), finish (cleanup + metastore DDLs) — so the
   * scheduler cannot start moving before all staging succeeded.
@@ -30,19 +30,11 @@ trait DataCommitter {
   def validate(flow: SparkDataFlow, commitName: String, entries: Seq[CommitEntry]): Unit
 }
 
-final case class CommitExtension(
+final case class CommitPlan(
     commits: Map[String, Seq[CommitEntry]] = Map.empty,
-    pushes: Map[String, DataCommitter] = Map.empty)
-  extends FlowExtension[SparkDataFlow, SparkFlowContext] {
+    pushes: Map[String, DataCommitter] = Map.empty) {
 
-  val identifier: String = "commit"
-
-  // adds staging/move/finish actions — must run before cache elision counts
-  // consumers (see FlowExtension.ordering)
-  override def ordering: Int = 10
-
-  override def merge(other: FlowExtension[SparkDataFlow, SparkFlowContext]): CommitExtension = {
-    val that = other.asInstanceOf[CommitExtension]
+  def merge(that: CommitPlan): CommitPlan = {
     val dupLabels = for {
       name <- commits.keySet.intersect(that.commits.keySet).toSeq
       label <- commits(name).map(_.label).intersect(that.commits(name).map(_.label))
@@ -54,15 +46,21 @@ final case class CommitExtension(
     if (dupPushes.nonEmpty)
       throw new FlowException(
         s"Cannot merge flows: both bind a committer for: ${dupPushes.toSeq.sorted.mkString(", ")}")
-    CommitExtension(
+    CommitPlan(
       commits = that.commits.foldLeft(commits) { case (acc, (name, entries)) =>
         acc + (name -> (acc.getOrElse(name, Seq.empty) ++ entries))
       },
       pushes = pushes ++ that.pushes)
   }
 
-  def preExecutionManipulation(flow: SparkDataFlow): SparkDataFlow = {
-    val valid = commits.keySet.intersect(pushes.keySet)
+  /** Adds every commit's phases to `flow` and empties its commit plan, so a
+    * second preparation adds nothing. Also returns the committed labels
+    * that another action of `flow` reads: staging computes such a label a
+    * second time, so the cache step caches it as parquet and the upstream
+    * lineage runs once (reference CommitMetadataExtension.scala:56-58). A
+    * flow without a temp folder (custom committers that stage elsewhere)
+    * returns none. */
+  def expand(flow: SparkDataFlow): (SparkDataFlow, Seq[String]) = {
     val committedNotPushed = commits.keySet.diff(pushes.keySet)
     if (committedNotPushed.nonEmpty)
       throw new FlowException(
@@ -72,41 +70,15 @@ final case class CommitExtension(
       throw new FlowException(
         s"Pushes without commits: ${pushedNotCommitted.toSeq.sorted.mkString(", ")}")
 
-    // a committed label that another action also consumes is computed at
-    // least twice (staging + consumer); request a parquet cache for it so the
-    // upstream lineage runs once (reference CommitMetadataExtension.scala:56-58,
-    // `spark.graft.dataflow.cacheReusedCommittedLabels`, default true).
-    // Requests route through CachePlanExtension — its per-label request map
-    // dedupes against the user's own planned caches — and labels already
-    // wrapped by a direct cache interceptor are skipped (a second wrap would
-    // overwrite the parquet path it is reading from). No temp folder (custom
-    // committers that stage elsewhere) -> no caching.
-    val cacheReused = flow.spark.conf
-      .getOption("spark.graft.dataflow.cacheReusedCommittedLabels").forall(_.toBoolean) &&
-      flow.context.tempFolder.isDefined
-    val consumers = flow.actions.flatMap(_.inputLabels).groupBy(identity).view.mapValues(_.size)
-    val producers: Map[String, String] =
-      flow.actions.flatMap(a => a.outputLabels.map(_ -> a.actionName)).toMap
-    val withCaches =
-      if (!cacheReused) flow
-      else {
-        import caching._
-        // never override a request the user already planned for the label
-        // (e.g. sparkCachePlanned with a storage level) with our AsParquet(None)
-        val alreadyPlanned = flow.extensions.get("cachePlan")
-          .map(_.asInstanceOf[CachePlanExtension].requests.keySet)
-          .getOrElse(Set.empty[String])
-        valid.flatMap(commits(_).map(_.label)).toSeq.distinct.sorted
-          .filter { l =>
-            !alreadyPlanned.contains(l) &&
-              producers.get(l).exists(n =>
-                !n.startsWith("cacheAsParquet:") && !n.startsWith("sparkCache:")) &&
-              consumers.getOrElse(l, 0) >= 1
-          }
-          .foldLeft(flow)((fl, label) => fl.cacheAsParquetPlanned(label))
-      }
+    val produced = flow.actions.flatMap(_.outputLabels).toSet
+    val consumed = flow.actions.flatMap(_.inputLabels).toSet
+    val reused =
+      if (flow.context.tempFolder.isEmpty) Seq.empty
+      else commits.values.flatten.map(_.label).toSeq.distinct.sorted
+        .filter(l => produced(l) && consumed(l))
 
-    valid.toSeq.sorted.foldLeft(withCaches) { (fl, name) =>
+    val cleared = flow.copy(commitPlan = CommitPlan())
+    val expanded = commits.keys.toSeq.sorted.foldLeft(cleared) { (fl, name) =>
       val entries = commits(name)
       val committer = pushes(name)
       committer.validate(fl, name, entries)
@@ -128,6 +100,7 @@ final case class CommitExtension(
         phase(staged, s"commit-move-$name", stageTag)(committer.move(name, entries, _))
       phase(moved, s"commit-finish-$name", moveTag)(committer.finish(name, entries, _))._1
     }
+    (expanded, reused)
   }
 }
 
@@ -135,28 +108,24 @@ object commit {
 
   implicit class CommitOps(val flow: SparkDataFlow) extends AnyVal {
 
-    private def extension: CommitExtension =
-      flow.extensions.get("commit").map(_.asInstanceOf[CommitExtension])
-        .getOrElse(CommitExtension())
-
     /** Register labels for transactional publish under `commitName`. */
     def commit(commitName: String,
         partitions: Option[Either[Seq[String], Int]] = None)(labels: String*): SparkDataFlow = {
-      val ext = extension
-      val existing = ext.commits.getOrElse(commitName, Seq.empty)
+      val plan = flow.commitPlan
+      val existing = plan.commits.getOrElse(commitName, Seq.empty)
       val dup = existing.map(_.label).intersect(labels)
       if (dup.nonEmpty)
         throw new FlowException(s"Labels already committed under [$commitName]: ${dup.mkString(", ")}")
-      flow.addExtension(ext.copy(commits = ext.commits +
+      flow.copy(commitPlan = plan.copy(commits = plan.commits +
         (commitName -> (existing ++ labels.map(CommitEntry(_, partitions))))))
     }
 
     /** Bind the committer that will publish `commitName`. */
     def push(commitName: String)(committer: DataCommitter): SparkDataFlow = {
-      val ext = extension
-      if (ext.pushes.contains(commitName))
+      val plan = flow.commitPlan
+      if (plan.pushes.contains(commitName))
         throw new FlowException(s"Commit [$commitName] already has a committer")
-      flow.addExtension(ext.copy(pushes = ext.pushes + (commitName -> committer)))
+      flow.copy(commitPlan = plan.copy(pushes = plan.pushes + (commitName -> committer)))
     }
   }
 }

@@ -6,14 +6,10 @@ import org.scalatest.matchers.should.Matchers
 import scala.util.{Success, Try}
 
 /** Minimal non-Spark flow for DAG-semantics tests. */
-final case class SimpleDataFlow(
-    state: FlowState[FlowContext],
-    extensions: Map[String, FlowExtension[SimpleDataFlow, FlowContext]] = Map.empty)
+final case class SimpleDataFlow(state: FlowState[FlowContext])
   extends DataFlow[SimpleDataFlow, FlowContext] {
   def context: FlowContext = EmptyFlowContext
   protected def withState(s: FlowState[FlowContext]): SimpleDataFlow = copy(state = s)
-  protected def withExtensions(e: Map[String, FlowExtension[SimpleDataFlow, FlowContext]]): SimpleDataFlow =
-    copy(extensions = e)
 }
 
 object SimpleDataFlow {
@@ -197,19 +193,6 @@ class DataFlowSpec extends AnyFunSpec with Matchers {
       val replacement = flow.actions.head
       replacement.guid should not be p.guid
       flow.state.tagState.forAction(replacement.guid).tags shouldBe Set("t")
-    }
-  }
-
-  describe("extensions") {
-    it("runs the fix-point and fails if it never stabilises") {
-      object Restless extends FlowExtension[SimpleDataFlow, FlowContext] {
-        val identifier = "restless"
-        def preExecutionManipulation(flow: SimpleDataFlow): SimpleDataFlow =
-          flow.copy(extensions = flow.extensions + (identifier -> this))
-      }
-      val flow = SimpleDataFlow.empty.addAction(TestAction.producer("a", "1"))
-        .copy(extensions = Map("restless" -> Restless))
-      flow.prepareForExecution().failed.get.getMessage should include("stabilise")
     }
   }
 }

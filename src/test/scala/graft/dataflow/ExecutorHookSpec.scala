@@ -10,12 +10,9 @@ import scala.concurrent.duration._
 /** A test flow over a caller-chosen context. */
 private final case class HookFlow(
     context: FlowContext,
-    state: FlowState[FlowContext] = FlowState.empty[FlowContext],
-    extensions: Map[String, FlowExtension[HookFlow, FlowContext]] = Map.empty)
+    state: FlowState[FlowContext] = FlowState.empty[FlowContext])
   extends DataFlow[HookFlow, FlowContext] {
   protected def withState(s: FlowState[FlowContext]): HookFlow = copy(state = s)
-  protected def withExtensions(e: Map[String, FlowExtension[HookFlow, FlowContext]]): HookFlow =
-    copy(extensions = e)
 }
 
 /** A flow context whose hooks throw: the executor must fail the flow with a

@@ -203,7 +203,7 @@ class SparkFlowSpec extends SparkTestBase with Matchers {
       seen.get() shouldBe 5
     }
 
-    it("++ merges same-identifier extensions instead of overwriting them") {
+    it("++ merges both flows' commits") {
       import graft.dataflow.spark.commit._
       val left = Graft.sparkFlow(spark, s"$tmpDir/merge-tmp")
         .openFileParquet(s"${sf()}/region.parquet", "region")
@@ -215,9 +215,8 @@ class SparkFlowSpec extends SparkTestBase with Matchers {
         .push("pub2")(ParquetDataCommitter(s"$tmpDir/merge-out"))
 
       val merged = left ++ right
-      val ext = merged.extensions("commit").asInstanceOf[CommitExtension]
-      ext.commits.keySet shouldBe Set("pub", "pub2") // right flow's commit survives
-      ext.pushes.keySet shouldBe Set("pub", "pub2")
+      merged.commitPlan.commits.keySet shouldBe Set("pub", "pub2") // right flow's commit survives
+      merged.commitPlan.pushes.keySet shouldBe Set("pub", "pub2")
 
       // both publishes actually run after the merge
       val (_, _) = executor.execute(merged)
