@@ -35,8 +35,12 @@ trait DataFlow[Self <: DataFlow[Self, C], C <: FlowContext] { self: Self =>
   // ------------------------------------------------------------- building ---
 
   def addAction[A <: FlowAction[C]](action: A): Self = {
-    require(action.outputLabels.nonEmpty || action.inputLabels.nonEmpty,
-      s"Action [${action.actionName}] must have at least one input or output label")
+    // an action without labels is ordered by tags alone: it needs a tag
+    // dependency, or nothing would place it in the DAG
+    require(action.outputLabels.nonEmpty || action.inputLabels.nonEmpty ||
+      state.tagState.activeDependsOnTags.nonEmpty,
+      s"Action [${action.actionName}] must have at least one input or output label, " +
+        "or be added under a tag dependency")
     val known = state.actions.flatMap(_.outputLabels).toSet ++ state.inputs.labels
     action.outputLabels.foreach { l =>
       if (l.isEmpty) throw new FlowException(s"Action [${action.actionName}] has an empty output label")

@@ -181,8 +181,11 @@ final case class ParquetDataCommitter(
       }))
     }
 
+  // move and cleanup read the staged paths, not the labels: they declare no
+  // input labels and wait for the previous phase through its tag alone, so
+  // staging is the only reader a commit adds to a label
   def move(commitName: String, entries: Seq[CommitEntry], flow: SparkDataFlow): SparkDataFlow =
-    flow.addAction(new SparkAction(entries.map(_.label).toList, List.empty, s"commitMove:$commitName")({ (_, ctx) =>
+    flow.addAction(new SparkAction(List.empty, List.empty, s"commitMove:$commitName")({ (_, ctx) =>
       val fs = ctx.fileSystem
       // all renames first; DDLs only after every label landed
       val moved = entries.map { entry =>
@@ -209,7 +212,7 @@ final case class ParquetDataCommitter(
   def finish(commitName: String, entries: Seq[CommitEntry], flow: SparkDataFlow): SparkDataFlow =
     (snapshotFolder, cleanupNumberOfFoldersToKeep) match {
       case (Some(_), Some(keep)) =>
-        flow.addAction(new SparkAction(entries.map(_.label).toList, List.empty,
+        flow.addAction(new SparkAction(List.empty, List.empty,
           s"commitCleanup:$commitName")({ (_, ctx) =>
           val fs = ctx.fileSystem
           entries.foreach { entry =>

@@ -26,13 +26,13 @@ import org.apache.spark.sql.functions._
   * correctness).
   *
   * `spark.graft.collapse.force` = `always` | `never` overrides the gate —
-  * the lever ScaleProbe's duplication-factor sweep and the equivalence
-  * specs use to pin both branches on the same data.
+  * the lever the equivalence specs use to pin both branches on the same
+  * data. Any other value throws.
   */
 private[graft] object CollapseGate {
 
-  /** Measured crossover (ScaleProbe duplication sweep at 5000 rows,
-    * COVERAGE table): the direct path still wins at 10% duplicate rows
+  /** Measured crossover (round-12 duplication sweep at 5000 rows, COVERAGE
+    * table): the direct path still wins at 10% duplicate rows
     * (22.0s vs 26.9s warm) and the collapse wins by 30% (17.2 vs 19.7);
     * the break-even sits near ~20%. 0.15 keeps a margin on the collapse
     * side — the asymmetric risk: taking the direct path at duplication d
@@ -48,7 +48,9 @@ private[graft] object CollapseGate {
     withCk.sparkSession.conf.getOption("spark.graft.collapse.force") match {
       case Some("always") => true
       case Some("never") => false
-      case _ =>
+      case Some(other) => throw new IllegalArgumentException(
+        s"spark.graft.collapse.force=$other; allowed: always, never (unset: the gate decides)")
+      case None =>
         // TWO cheap single-distinct jobs, never one multi-distinct: mixing
         // countDistinct with other aggregates plans an Expand that
         // multiplies the signature frame (measured 1.8s vs 0.3s on 5000

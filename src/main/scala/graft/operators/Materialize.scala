@@ -21,20 +21,27 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object Materialize {
 
-  def apply(df: DataFrame): DataFrame =
+  /** True in persist mode; unset means `localCheckpoint`, any other value
+    * throws. */
+  private def persistMode(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("spark.graft.materialize.mode") match {
-      case Some("persist") =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        p.count() // force now: reused branches must not race the first fill
-        p
-      case _ => df.localCheckpoint(true)
+      case None | Some("localCheckpoint") => false
+      case Some("persist") => true
+      case Some(other) => throw new IllegalArgumentException(
+        s"spark.graft.materialize.mode=$other; allowed: localCheckpoint, persist")
     }
+
+  def apply(df: DataFrame): DataFrame =
+    if (persistMode(df)) {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK_2)
+      p.count() // force now: reused branches must not race the first fill
+      p
+    } else df.localCheckpoint(true)
 
   /** Drop a materialization produced by [[apply]] once superseded.
     * Iterative operators MUST call this on each round's predecessor in
     * persist mode or replicated cache entries accumulate per iteration;
     * no-op in localCheckpoint mode (blocks free on GC). */
   def release(df: DataFrame): Unit =
-    if (df.sparkSession.conf.getOption("spark.graft.materialize.mode").contains("persist"))
-      df.unpersist()
+    if (persistMode(df)) df.unpersist()
 }

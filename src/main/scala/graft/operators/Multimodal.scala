@@ -77,7 +77,8 @@ object Multimodal {
     * so a decode stage neither starves parallelism nor OOMs executors.
     * Returns the repartitioned frame (range-partitioned by size bucket).
     *
-    * Sizing (MediaScaleProbe, warm local[32]): decode cost is per-PIXEL,
+    * Sizing (COVERAGE media throughput table, rounds 10–11, warm
+    * local[32]): decode cost is per-PIXEL,
     * not per-payload — ~1 MP JPEGs decode+hash at ~17 payloads/s/core
     * (≈540/s on 32 cores) vs ~480/s/core for tiny 60×60 containers. At the
     * default 128 MiB/partition a crawl of ~150 KB megapixel JPEGs packs

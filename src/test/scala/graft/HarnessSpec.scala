@@ -4,7 +4,7 @@ import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
 /** The one query selector Bench (SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP),
-  * Verify (3rd/4th args) and PlanSnap (prefix args) share. Pure: no session. */
+  * Verify (3rd/4th args) and PlanDump (3rd arg) share. Pure: no session. */
 class HarnessSpec extends AnyFunSpec with Matchers {
 
   private val names = Seq("q70_fuzzy_dups", "q01_pricing_summary",

@@ -110,6 +110,20 @@ class DataFlowSpec extends AnyFunSpec with Matchers {
       flow.executed(writer, Seq(Some("x"))).nextRunnable().map(_.guid) shouldBe Seq(reader.guid)
     }
 
+    it("accepts an action without labels only under a tag dependency") {
+      val writer = TestAction.producer("w", "written")
+      val cleanup = new TestAction(List.empty, List.empty)(_ => Seq.empty)
+      intercept[IllegalArgumentException](SimpleDataFlow.empty.addAction(cleanup))
+        .getMessage should include("tag dependency")
+      intercept[IllegalArgumentException](
+        SimpleDataFlow.empty.tag("writes")(_.addAction(cleanup)))
+      val flow = SimpleDataFlow.empty.tag("writes")(_.addAction(writer))
+        .tagDependency("writes")(_.addAction(cleanup))
+      flow.isValidFlowDAG shouldBe a[Success[_]]
+      flow.nextRunnable().map(_.guid) shouldBe Seq(writer.guid)
+      flow.executed(writer, Seq(Some("x"))).nextRunnable().map(_.guid) shouldBe Seq(cleanup.guid)
+    }
+
     it("rejects dependencies on tags nobody carries") {
       val flow = SimpleDataFlow.empty
         .tagDependency("nope")(_.addAction(TestAction.producer("a", "1")))

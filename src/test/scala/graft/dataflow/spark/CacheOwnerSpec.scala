@@ -80,4 +80,22 @@ class CacheOwnerSpec extends SparkTestBase with Matchers {
       spark.read.parquet(s"$root/published/reused").count() shouldBe 5
     }
   }
+
+  describe("commit phases") {
+    it("a planned cache on a committed label that only staging reads is elided") {
+      val root = s"$tmpDir/only-committed"
+      val flow = Graft.sparkFlow(spark, s"$root/tmp")
+        .openFileParquet(s"${sf()}/region.parquet", "region")
+        .transform("region")("only_committed")(_.withColumn("x", lit(1)))
+        .cacheAsParquetPlanned("only_committed")
+        .commit("pub")("only_committed")
+        .push("pub")(ParquetDataCommitter(s"$root/published"))
+      val prepared = flow.prepareForExecution().get
+      wrappers(prepared, "only_committed") shouldBe empty
+      prepared.actions.filter(_.actionName.startsWith("commitMove")).map(_.inputLabels) shouldBe
+        Seq(Nil)
+      Graft.sparkExecutor(4).execute(flow)
+      spark.read.parquet(s"$root/published/only_committed").count() shouldBe 5
+    }
+  }
 }

@@ -192,6 +192,12 @@ class OperatorsSpec extends SparkTestBase with Matchers {
         persisted shouldBe default
         persisted shouldBe Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
       } finally spark.conf.unset("spark.graft.materialize.mode")
+      // an unknown mode fails instead of silently meaning localCheckpoint
+      spark.conf.set("spark.graft.materialize.mode", "Persist")
+      try intercept[IllegalArgumentException](Graphs.connectedComponents(edges, "a", "b"))
+        .getMessage should (include("spark.graft.materialize.mode") and
+          include("localCheckpoint, persist"))
+      finally spark.conf.unset("spark.graft.materialize.mode")
     }
   }
 
@@ -558,6 +564,11 @@ class OperatorsSpec extends SparkTestBase with Matchers {
       finally spark.conf.unset("spark.graft.collapse.force")
       spark.conf.set("spark.graft.collapse.force", "always")
       try collapseWorthIt(unique, col("id"), col("ck")) shouldBe true
+      finally spark.conf.unset("spark.graft.collapse.force")
+      // an unknown value fails instead of silently meaning "let the gate decide"
+      spark.conf.set("spark.graft.collapse.force", "Never")
+      try intercept[IllegalArgumentException](collapseWorthIt(dup, col("id"), col("ck")))
+        .getMessage should (include("spark.graft.collapse.force") and include("always, never"))
       finally spark.conf.unset("spark.graft.collapse.force")
     }
   }

@@ -5,10 +5,10 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 
 /** Flattens an executed plan through AQE's wrappers. `TreeNode.collect`
   * does not descend into `AdaptiveSparkPlanExec.executedPlan` or
-  * `QueryStageExec.plan` (they are fields, not children), so anything that
-  * inspects a post-execution plan — metric readers, exchange-byte probes,
-  * plan-shape assertions — needs this traversal. One shared definition so
-  * a Spark upgrade that changes stage wrapping is fixed in one place. */
+  * `QueryStageExec.plan` (they are fields, not children), so a spec that
+  * reads metrics or asserts shapes on a post-execution plan needs this
+  * traversal. One shared definition so a Spark upgrade that changes stage
+  * wrapping is fixed in one place. */
 object PlanWalk {
   def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
