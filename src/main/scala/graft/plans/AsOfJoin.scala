@@ -89,7 +89,7 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
   * conversion Spark performs for its own joins (spec-pinned).
   *
   * Inject engine-wide via `spark.sql.extensions=graft.sql.GraftExtensions`
-  * or per-session through [[AsOf.ensureStrategy]]. */
+  * or per-session through [[graft.sql.functions.ensureRegistered]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoinPlan =>
@@ -380,14 +380,6 @@ case class BroadcastAsOfJoinExec(left: SparkPlan, right: SparkPlan,
 /** User-facing entry point. */
 object AsOf {
 
-  /** Idempotently make the session able to plan [[AsOfJoinPlan]]. */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    NativeJoinPushdown.ensureRule(spark)
-  }
-
   /** As-of left join: every left row plus the right columns of the
     * latest right row at-or-before it (`direction = "backward"`, default)
     * or the earliest at-or-after it (`"forward"`), per
@@ -424,7 +416,7 @@ object AsOf {
       right.columns.exists(rc => spark.sessionState.conf.resolver(lc, rc)))
     require(overlap.isEmpty,
       s"as-of output would carry ambiguous column names: ${overlap.mkString(", ")}")
-    ensureStrategy(spark)
+    graft.sql.functions.ensureRegistered(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def resolve(plan: LogicalPlan, name: String): Attribute =

@@ -90,18 +90,6 @@ private[plans] object NativeJoinTime {
   }
 }
 
-/** Per-EXECUTOR cache of probe tables derived from a broadcast relation.
-  * IdentityBroadcastMode ships raw rows, so without this every task of the
-  * fact side re-hashes and re-sorts the same dimension rows into the same
-  * per-key tables — O(|R| log |R|) × tasks of pure waste (Spark's own BHJ
-  * avoids it with a transforming BroadcastMode). Keyed on
-  * (broadcast id, plan node id): same broadcast probed by two different
-  * execs builds two tables. `computeIfAbsent` gives per-key locking, so
-  * one task builds while the rest of that exec's tasks wait, and unrelated
-  * builds proceed in parallel. Crude bound: past `MaxEntries` the cache
-  * clears — the fallback cost is exactly the per-task rebuild this cache
-  * removes, and the broadcast's own row array (the big part) lives in
-  * Spark's block manager regardless. */
 /** Per-key time-sorted probe tables for the broadcast regimes — package
   * level so [[BroadcastTableCache]] values type-check across tasks. */
 private[plans] final class AsOfKeyTable(val times: Array[Any],
@@ -109,6 +97,20 @@ private[plans] final class AsOfKeyTable(val times: Array[Any],
 private[plans] final class IntervalKeyTable(val starts: Array[Any],
     val ends: Array[Any], val rows: Array[InternalRow])
 
+/** Per-EXECUTOR cache of probe tables derived from a broadcast relation.
+  * IdentityBroadcastMode ships raw rows, so without this every task of the
+  * fact side re-hashes and re-sorts the same dimension rows into the same
+  * per-key tables — O(|R| log |R|) × tasks of pure waste (Spark's own BHJ
+  * avoids it with a transforming BroadcastMode). Keyed on
+  * (broadcast id, plan node id): same broadcast probed by two different
+  * execs builds two tables. `compute` gives per-key locking, so one task
+  * builds while the rest of that exec's tasks wait, and unrelated builds
+  * proceed in parallel. Bound: once the map holds more than `MaxEntries`,
+  * the next lookup evicts entry by entry — entries the GC already cleared
+  * first, then arbitrary ones — until `MaxEntries` remain. An evicted
+  * table costs exactly the per-task rebuild this cache removes, and the
+  * broadcast's own row array (the big part) lives in Spark's block
+  * manager regardless. */
 private[plans] object BroadcastTableCache {
   private val MaxEntries = 16
   // Soft values: the probe tables' rows point into the broadcast's row
@@ -213,7 +215,7 @@ case class IntervalJoinPlan(left: LogicalPlan, right: LogicalPlan,
   * under the interval side carries real stats, flipping an initial SMJ to
   * broadcast mid-query (spec-pinned). Injected by
   * `graft.sql.GraftExtensions`, or per-session via
-  * [[IntervalJoin.ensureStrategy]]. */
+  * [[graft.sql.functions.ensureRegistered]]. */
 object IntervalJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case IntervalJoinPlan(l, r, lk, rk, t, s, e, hint) =>
@@ -482,14 +484,6 @@ case class BroadcastIntervalJoinExec(left: SparkPlan, right: SparkPlan,
 /** User-facing entry point, mirroring [[AsOf]]. */
 object IntervalJoin {
 
-  /** Idempotently make the session able to plan [[IntervalJoinPlan]]. */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
-    NativeJoinPushdown.ensureRule(spark)
-  }
-
   /** Keyed interval inner join: each `points` row paired with every
     * `intervals` row of the same key whose [start, end) contains its
     * `pointTsCol`. Column names must be disjoint between the two sides
@@ -514,7 +508,7 @@ object IntervalJoin {
       intervals.columns.exists(ic => spark.sessionState.conf.resolver(pc, ic)))
     require(overlap.isEmpty,
       s"interval-join output would carry ambiguous column names: ${overlap.mkString(", ")}")
-    ensureStrategy(spark)
+    graft.sql.functions.ensureRegistered(spark)
     val lPlan = points.queryExecution.analyzed
     val rPlan = intervals.queryExecution.analyzed
     def resolve(plan: LogicalPlan, name: String): Attribute =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -54,17 +53,6 @@ object NativeJoinPushdown extends Rule[LogicalPlan] with PredicateHelper {
           right = guard(j.right, rightOnly))
         rest.reduceOption(And).map(Filter(_, pushed)).getOrElse(pushed)
       }
-  }
-
-  /** Idempotently add both native-join rules to a session that isn't
-    * running with `spark.sql.extensions=graft.sql.GraftExtensions`. */
-  def ensureRule(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(NativeJoinPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NativeJoinPushdown
-    if (!spark.experimental.extraOptimizations.contains(NativeJoinColumnPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NativeJoinColumnPruning
   }
 }
 

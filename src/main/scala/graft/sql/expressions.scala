@@ -2,10 +2,14 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expression: cosine similarity of two `array<double>`
@@ -43,9 +47,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // a null ELEMENT yields a null result (the zip_with twin's semantics)
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val r = ctx.freshName("r")
+      s"""
+         |java.lang.Double $r = graft.sql.CosineSimilarity.compute($x, $y);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
+       """.stripMargin
+    })
+}
+
+object CosineSimilarity {
+  /** Interpreted + generated code share this loop; null when any element
+    * pair holds a null. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     // loud dim-drift contract (same as the IVF probes): silently truncating
     // to the shorter vector would score a drifted embedding as a perfect
@@ -64,36 +82,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     val denom = math.sqrt(nx) * math.sqrt(ny)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "graft_cosine: vector dims differ (" + $n + " vs " + $y.numElements() + ")");
-         |}
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $xi = $x.getDouble($i);
-         |  double $yi = $y.getDouble($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |if (!${ev.isNull}) {
-         |  double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |  ${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-         |}
-       """.stripMargin
-    })
 }
 
 /** Native Catalyst expression: Jaccard similarity of two SORTED
@@ -128,12 +116,36 @@ case class SortedArrayJaccardGE(first: Expression, second: Expression, third: Ex
       newFirst: Expression, newSecond: Expression, newThird: Expression): SortedArrayJaccardGE =
     copy(first = newFirst, second = newSecond, third = newThird)
 
-  override def nullSafeEval(a: Any, b: Any, t: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any, t: Any): Any =
+    SortedArrayJaccardGE.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      t.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y, t) => s"graft.sql.SortedArrayJaccardGE.compute($x, $y, $t)")
+}
+
+object SortedArrayJaccardGE {
+  /** Interpreted + generated code share this sorted merge. */
+  def compute(x: ArrayData, y: ArrayData, threshold: Double): Double = {
     val na = x.numElements(); val nb = y.numElements()
-    val tt = t.asInstanceOf[Double] - 0.00005
+    val tt = threshold - 0.00005
     val need = math.ceil(tt * (na + nb) / (1.0 + tt)).toInt
+    val inter = SortedMerge.intersect(x, y, need)
+    if (inter < 0) -1.0
+    else {
+      val union = na + nb - inter
+      if (union == 0) 1.0 else math.round(inter.toDouble / union * 10000).toDouble / 10000.0
+    }
+  }
+}
+
+/** The sorted-merge intersection behind [[SortedArrayJaccardGE]] and
+  * [[SortedArrayContainGE]]. */
+private[sql] object SortedMerge {
+  /** |x ∩ y| of two sorted-ascending distinct long arrays, or -1 as soon
+    * as the elements left provably cannot bring it to `need`. */
+  def intersect(x: ArrayData, y: ArrayData, need: Int): Int = {
+    val na = x.numElements(); val nb = y.numElements()
     var i = 0; var j = 0; var inter = 0
     var viable = true
     while (viable && i < na && j < nb) {
@@ -143,42 +155,8 @@ case class SortedArrayJaccardGE(first: Expression, second: Expression, third: Ex
       else j += 1
       viable = inter + math.min(na - i, nb - j) >= need
     }
-    if (!viable) -1.0
-    else {
-      val union = na + nb - inter
-      if (union == 0) 1.0 else math.round(inter.toDouble / union * 10000).toDouble / 10000.0
-    }
+    if (viable) inter else -1
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y, t) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val tt = ctx.freshName("tt"); val need = ctx.freshName("need")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter"); val viable = ctx.freshName("viable")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      val union = ctx.freshName("union")
-      s"""
-         |int $na = $x.numElements(); int $nb = $y.numElements();
-         |double $tt = $t - 0.00005;
-         |int $need = (int) java.lang.Math.ceil($tt * ($na + $nb) / (1.0 + $tt));
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |boolean $viable = true;
-         |while ($viable && $i < $na && $j < $nb) {
-         |  long $xv = $x.getLong($i); long $yv = $y.getLong($j);
-         |  if ($xv == $yv) { $inter++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |  $viable = $inter + java.lang.Math.min($na - $i, $nb - $j) >= $need;
-         |}
-         |if (!$viable) {
-         |  ${ev.value} = -1.0;
-         |} else {
-         |  int $union = $na + $nb - $inter;
-         |  ${ev.value} = ($union == 0) ? 1.0
-         |    : java.lang.Math.round((double) $inter / $union * 10000.0) / 10000.0;
-         |}
-       """.stripMargin
-    })
 }
 
 /** Native Catalyst expression: thresholded CONTAINMENT |X∩Y| / |X| of two
@@ -210,51 +188,23 @@ case class SortedArrayContainGE(first: Expression, second: Expression, third: Ex
       newFirst: Expression, newSecond: Expression, newThird: Expression): SortedArrayContainGE =
     copy(first = newFirst, second = newSecond, third = newThird)
 
-  override def nullSafeEval(a: Any, b: Any, t: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val na = x.numElements(); val nb = y.numElements()
-    val need = math.ceil((t.asInstanceOf[Double] - 0.00005) * na).toInt
-    var i = 0; var j = 0; var inter = 0
-    var viable = true
-    while (viable && i < na && j < nb) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv == yv) { inter += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-      viable = inter + math.min(na - i, nb - j) >= need
-    }
-    if (!viable) -1.0
+  override def nullSafeEval(a: Any, b: Any, t: Any): Any =
+    SortedArrayContainGE.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      t.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y, t) => s"graft.sql.SortedArrayContainGE.compute($x, $y, $t)")
+}
+
+object SortedArrayContainGE {
+  /** Interpreted + generated code share this sorted merge. */
+  def compute(x: ArrayData, y: ArrayData, threshold: Double): Double = {
+    val na = x.numElements()
+    val inter = SortedMerge.intersect(x, y, math.ceil((threshold - 0.00005) * na).toInt)
+    if (inter < 0) -1.0
     else if (na == 0) 1.0
     else math.round(inter.toDouble / na * 10000).toDouble / 10000.0
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y, t) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val need = ctx.freshName("need")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter"); val viable = ctx.freshName("viable")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $na = $x.numElements(); int $nb = $y.numElements();
-         |int $need = (int) java.lang.Math.ceil(($t - 0.00005) * $na);
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |boolean $viable = true;
-         |while ($viable && $i < $na && $j < $nb) {
-         |  long $xv = $x.getLong($i); long $yv = $y.getLong($j);
-         |  if ($xv == $yv) { $inter++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |  $viable = $inter + java.lang.Math.min($na - $i, $nb - $j) >= $need;
-         |}
-         |if (!$viable) {
-         |  ${ev.value} = -1.0;
-         |} else {
-         |  ${ev.value} = ($na == 0) ? 1.0
-         |    : java.lang.Math.round((double) $inter / $na * 10000.0) / 10000.0;
-         |}
-       """.stripMargin
-    })
 }
 
 /** Native Catalyst expression: content-defined-chunking boundary positions
@@ -763,11 +713,9 @@ object SimHash60 {
   * via [[functions.ensureRegistered]]. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    functions.descriptors.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.NativeJoinPushdown)
-    ext.injectOptimizerRule(_ => graft.plans.NativeJoinColumnPruning)
+    functions.table.foreach(ext.injectFunction)
+    functions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    functions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
@@ -813,8 +761,21 @@ case class CellAssign(vector: Expression, table: Expression)
   @transient private lazy val cents: Array[Array[Double]] =
     FoldableTable.materialise(table, "graft_cell_assign")
 
-  override def nullSafeEval(a: Any, unused: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, unused: Any): Any =
+    CellAssign.compute(a.asInstanceOf[ArrayData], cents)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the table child is foldable: pre-materialise it and reference the
+    // double[][] directly; the generated code never touches the literal
+    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
+    nullSafeCodeGen(ctx, ev, (v, _) =>
+      s"${ev.value} = graft.sql.CellAssign.compute($v, $centsRef);")
+  }
+}
+
+object CellAssign {
+  /** Interpreted + generated code share this loop. */
+  def compute(v: ArrayData, cents: Array[Array[Double]]): Int = {
     val n = v.numElements()
     var best = 0
     var bestD = Double.MaxValue
@@ -828,36 +789,6 @@ case class CellAssign(vector: Expression, table: Expression)
       ci += 1
     }
     best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the table child is foldable: pre-materialise it and reference the
-    // double[][] directly; the generated code never touches the literal
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, (v, _) => {
-      val n = ctx.freshName("n")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val ci = ctx.freshName("ci")
-      val cent = ctx.freshName("cent")
-      val d = ctx.freshName("d")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = $v.numElements();
-         |int $best = 0; double $bestD = Double.MAX_VALUE;
-         |for (int $ci = 0; $ci < $centsRef.length; $ci++) {
-         |  double[] $cent = $centsRef[$ci];
-         |  double $d = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $v.getDouble($i) - $cent[$i];
-         |    $d += $x * $x;
-         |  }
-         |  if ($d < $bestD) { $bestD = $d; $best = $ci; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
   }
 }
 
@@ -925,9 +856,6 @@ case class SubvecAssign(vector: Expression, table: Expression,
   }
 }
 
-/** Shared materialisation of a FOLDABLE `array<array<double>>` child into
-  * a `double[][]` — one definition behind CellAssign / SubvecAssign /
-  * CentroidSub (the three copies had to be kept in sync by hand). */
 /** Native Catalyst expression: per-set counts of maximal ASCII word runs
   * of `text` that exactly equal a member of each FOLDABLE word set —
   * `graft_word_sets_count(text, array<array<string>>) -> array<bigint>`.
@@ -1403,6 +1331,9 @@ object GopherCounts {
   }
 }
 
+/** Shared materialisation of a FOLDABLE `array<array<double>>` child into
+  * a `double[][]` — one definition behind CellAssign / SubvecAssign /
+  * CentroidSub (the three copies had to be kept in sync by hand). */
 private[sql] object FoldableTable {
   def materialise(table: Expression, fn: String): Array[Array[Double]] = {
     val ad = table.eval(null)
@@ -1714,179 +1645,67 @@ object Md5Prefix64 {
 
 object functions {
 
-  private[sql] val cosineDescriptor = (
-    new FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
+  /** The one table of native SQL functions: each `graft_*` name, its arity
+    * and its expression's constructor. [[GraftExtensions]] injects it and
+    * [[ensureRegistered]] registers it. */
+  private[graft] val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_cosine", 2)(c => CosineSimilarity(c(0), c(1))),
+    fn("graft_jaccard_ge", 3)(c => SortedArrayJaccardGE(c(0), c(1), c(2))),
+    fn("graft_cdc_bounds", 5)(c => CdcBounds(c(0), c(1), c(2), c(3), c(4))),
+    fn("graft_bpe_merge", 3)(c => BpeMergePass(c(0), c(1), c(2))),
+    fn("graft_bpe_encode", 2)(c => BpeEncode(c(0), c(1))),
+    fn("graft_gopher_counts", 1)(c => GopherCounts(c(0))),
+    fn("graft_int8_quant", 3)(c => Int8Quant(c(0), c(1), c(2))),
+    fn("graft_matvec", 2)(c => MatVec(c(0), c(1))),
+    fn("graft_cm_buckets", 3)(c => CmBuckets(c(0), c(1), c(2))),
+    fn("graft_md5_prefix64", 2)(c => Md5Prefix64(c(0), c(1))),
+    fn("graft_winnow", 3)(c => WinnowFingerprints(c(0), c(1), c(2))),
+    fn("graft_simhash60", 1)(c => SimHash60(c(0))),
+    fn("graft_topk", 3)(c => TopKPairs(c(0), c(1), c(2))),
+    fn("graft_kmv", 2)(c => KmvSketch(c(0), c(1))),
+    fn("graft_contain_ge", 3)(c => SortedArrayContainGE(c(0), c(1), c(2))),
+    fn("graft_cell_assign", 2)(c => CellAssign(c(0), c(1))),
+    fn("graft_subvec_assign", 4)(c => SubvecAssign(c(0), c(1), c(2), c(3))),
+    fn("graft_centroid_sub", 3)(c => CentroidSub(c(0), c(1), c(2))),
+    fn("graft_gramian", 1)(c => GramianMoments(c(0))),
+    fn("graft_word_sets_count", 2)(c => WordSetsCount(c(0), c(1))))
+
+  /** One table row; the builder rejects any other argument count. */
+  private def fn[E <: Expression](name: String, arity: Int)(make: Seq[Expression] => E)(
+      implicit cls: scala.reflect.ClassTag[E]): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
+    new FunctionIdentifier(name),
+    new ExpressionInfo(cls.runtimeClass.getName, name),
     (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_cosine expects exactly 2 arguments")
-      CosineSimilarity(children.head, children(1))
+      require(children.size == arity,
+        s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}")
+      make(children)
     })
 
-  private[sql] val jaccardDescriptor = (
-    new FunctionIdentifier("graft_jaccard_ge"),
-    new ExpressionInfo(classOf[SortedArrayJaccardGE].getName, "graft_jaccard_ge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_jaccard_ge expects exactly 3 arguments")
-      SortedArrayJaccardGE(children.head, children(1), children(2))
-    })
+  /** The planner strategies and optimizer rules of the native joins. */
+  private[graft] val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.AsOfJoinStrategy, graft.plans.IntervalJoinStrategy)
+  private[graft] val rules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.NativeJoinPushdown, graft.plans.NativeJoinColumnPruning)
 
-  private[sql] val cdcDescriptor = (
-    new FunctionIdentifier("graft_cdc_bounds"),
-    new ExpressionInfo(classOf[CdcBounds].getName, "graft_cdc_bounds"),
-    (children: Seq[Expression]) => {
-      require(children.size == 5, "graft_cdc_bounds expects exactly 5 arguments")
-      CdcBounds(children.head, children(1), children(2), children(3), children(4))
-    })
-
-  private[sql] val bpeMergeDescriptor = (
-    new FunctionIdentifier("graft_bpe_merge"),
-    new ExpressionInfo(classOf[BpeMergePass].getName, "graft_bpe_merge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_bpe_merge expects exactly 3 arguments")
-      BpeMergePass(children.head, children(1), children(2))
-    })
-
-  private[sql] val bpeEncodeDescriptor = (
-    new FunctionIdentifier("graft_bpe_encode"),
-    new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe_encode"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_bpe_encode expects exactly 2 arguments")
-      BpeEncode(children.head, children(1))
-    })
-
-  private[sql] val winnowDescriptor = (
-    new FunctionIdentifier("graft_winnow"),
-    new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_winnow expects exactly 3 arguments")
-      WinnowFingerprints(children.head, children(1), children(2))
-    })
-
-  private[sql] val simHashDescriptor = (
-    new FunctionIdentifier("graft_simhash60"),
-    new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_simhash60 expects exactly 1 argument")
-      SimHash60(children.head)
-    })
-
-  private[sql] val topKDescriptor = (
-    new FunctionIdentifier("graft_topk"),
-    new ExpressionInfo(classOf[TopKPairs].getName, "graft_topk"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_topk expects exactly 3 arguments")
-      TopKPairs(children.head, children(1), children(2))
-    })
-
-  private[sql] val containDescriptor = (
-    new FunctionIdentifier("graft_contain_ge"),
-    new ExpressionInfo(classOf[SortedArrayContainGE].getName, "graft_contain_ge"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_contain_ge expects exactly 3 arguments")
-      SortedArrayContainGE(children.head, children(1), children(2))
-    })
-
-  private[sql] val kmvDescriptor = (
-    new FunctionIdentifier("graft_kmv"),
-    new ExpressionInfo(classOf[KmvSketch].getName, "graft_kmv"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_kmv expects exactly 2 arguments")
-      KmvSketch(children.head, children(1))
-    })
-
-  private[sql] val cellAssignDescriptor = (
-    new FunctionIdentifier("graft_cell_assign"),
-    new ExpressionInfo(classOf[CellAssign].getName, "graft_cell_assign"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_cell_assign expects exactly 2 arguments")
-      CellAssign(children.head, children(1))
-    })
-
-  private[sql] val subvecAssignDescriptor = (
-    new FunctionIdentifier("graft_subvec_assign"),
-    new ExpressionInfo(classOf[SubvecAssign].getName, "graft_subvec_assign"),
-    (children: Seq[Expression]) => {
-      require(children.size == 4, "graft_subvec_assign expects exactly 4 arguments")
-      SubvecAssign(children.head, children(1), children(2), children(3))
-    })
-
-  private[sql] val centroidSubDescriptor = (
-    new FunctionIdentifier("graft_centroid_sub"),
-    new ExpressionInfo(classOf[CentroidSub].getName, "graft_centroid_sub"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_centroid_sub expects exactly 3 arguments")
-      CentroidSub(children.head, children(1), children(2))
-    })
-
-  private[sql] val gramianDescriptor = (
-    new FunctionIdentifier("graft_gramian"),
-    new ExpressionInfo(classOf[GramianMoments].getName, "graft_gramian"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_gramian expects exactly 1 argument")
-      GramianMoments(children.head)
-    })
-
-  private[sql] val wordSetsDescriptor = (
-    new FunctionIdentifier("graft_word_sets_count"),
-    new ExpressionInfo(classOf[WordSetsCount].getName, "graft_word_sets_count"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_word_sets_count expects exactly 2 arguments")
-      WordSetsCount(children.head, children(1))
-    })
-
-  private[sql] val matVecDescriptor = (
-    new FunctionIdentifier("graft_matvec"),
-    new ExpressionInfo(classOf[MatVec].getName, "graft_matvec"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_matvec expects exactly 2 arguments")
-      MatVec(children.head, children(1))
-    })
-
-  private[sql] val int8QuantDescriptor = (
-    new FunctionIdentifier("graft_int8_quant"),
-    new ExpressionInfo(classOf[Int8Quant].getName, "graft_int8_quant"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_int8_quant expects exactly 3 arguments")
-      Int8Quant(children.head, children(1), children(2))
-    })
-
-  private[sql] val gopherCountsDescriptor = (
-    new FunctionIdentifier("graft_gopher_counts"),
-    new ExpressionInfo(classOf[GopherCounts].getName, "graft_gopher_counts"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "graft_gopher_counts expects exactly 1 argument")
-      GopherCounts(children.head)
-    })
-
-  private[sql] val cmBucketsDescriptor = (
-    new FunctionIdentifier("graft_cm_buckets"),
-    new ExpressionInfo(classOf[CmBuckets].getName, "graft_cm_buckets"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "graft_cm_buckets expects exactly 3 arguments")
-      CmBuckets(children.head, children(1), children(2))
-    })
-
-  private[sql] val md5Prefix64Descriptor = (
-    new FunctionIdentifier("graft_md5_prefix64"),
-    new ExpressionInfo(classOf[Md5Prefix64].getName, "graft_md5_prefix64"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "graft_md5_prefix64 expects exactly 2 arguments")
-      Md5Prefix64(children.head, children(1))
-    })
-
-  private[sql] val descriptors =
-    Seq(cosineDescriptor, jaccardDescriptor, cdcDescriptor, bpeMergeDescriptor,
-      bpeEncodeDescriptor, gopherCountsDescriptor, int8QuantDescriptor,
-      matVecDescriptor, cmBucketsDescriptor, md5Prefix64Descriptor,
-      winnowDescriptor, simHashDescriptor, topKDescriptor, kmvDescriptor,
-      containDescriptor, cellAssignDescriptor, subvecAssignDescriptor,
-      centroidSubDescriptor, gramianDescriptor, wordSetsDescriptor)
-
-  /** Idempotently register the functions in an existing session. */
+  /** Idempotently install the whole native set in an existing session:
+    * the function table, both join strategies and both join rules — the
+    * set `spark.sql.extensions=graft.sql.GraftExtensions` installs. The
+    * read-modify-write of the session's strategy and rule lists runs under
+    * the session's lock, so concurrent callers on one session never drop
+    * each other's additions. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    descriptors.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    val experimental = spark.experimental
+    experimental.synchronized {
+      val registry = spark.sessionState.functionRegistry
+      table.foreach { case (id, info, builder) =>
+        if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+      }
+      val newStrategies = strategies.filterNot(experimental.extraStrategies.contains)
+      if (newStrategies.nonEmpty)
+        experimental.extraStrategies = experimental.extraStrategies ++ newStrategies
+      val newRules = rules.filterNot(experimental.extraOptimizations.contains)
+      if (newRules.nonEmpty)
+        experimental.extraOptimizations = experimental.extraOptimizations ++ newRules
     }
   }
 

@@ -3,8 +3,9 @@
 # src/main lines, src/main lines that are neither blank nor comment,
 # src/main files, files defining a `main`, SparkSession.builder sites in
 # programs (src/main plus any file with a `main`; the specs' shared test
-# session is not a program), distinct SPARK_GRAFT_* env names and distinct
-# "spark.graft.*" conf keys. Run from anywhere: tools/surface_counts.sh
+# session is not a program), distinct SPARK_GRAFT_* env names, distinct
+# "spark.graft.*" conf keys and graft_* SQL functions (rows of the function
+# table in graft.sql.functions). Run from anywhere: tools/surface_counts.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
 count() { printf '%-28s %s\n' "$1" "$2"; }
@@ -23,3 +24,4 @@ count "files with def main(" "$(grep -rl --include='*.scala' 'def main(' src | w
 count "SparkSession.builder sites" "$(cat $programs | grep -o 'SparkSession\.builder' | wc -l)"
 count "SPARK_GRAFT_* env names" "$(grep -rhoE --include='*.scala' 'SPARK_GRAFT_[A-Z0-9_]+' src | sort -u | wc -l)"
 count "spark.graft.* conf keys" "$(grep -rhoE --include='*.scala' '"spark\.graft\.[A-Za-z0-9_.]+"' src | sort -u | wc -l)"
+count "graft_* SQL functions" "$(grep -cE '^[[:space:]]*fn\("graft_' src/main/scala/graft/sql/expressions.scala)"
