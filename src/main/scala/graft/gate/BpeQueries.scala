@@ -6,18 +6,19 @@ import org.apache.spark.sql.functions._
 object BpeQueries {
   lazy val queries: Seq[GateQuery] = Seq(
     // tokenization with a LEARNED subword table: train 8 BPE merges on the
-    // corpus (operators.Bpe.learnBpe — vocab-sized iteration frame, 1-row
-    // driver argmax per merge), then tokenize every document via the final
-    // symbolized vocab (one equi-join + map-combined rollup; the merge fold
-    // never re-runs over the corpus). Oracle unrolls the identical 8
+    // corpus (operators.Bpe.learnBpe — one word count, then the driver
+    // trainer while the word table fits), then tokenize every document via
+    // the final symbolized vocab (one equi-join + map-combined rollup; the
+    // merge fold never re-runs over the corpus). Oracle unrolls the identical 8
     // training iterations in DuckDB list SQL and joins the same way.
     GateQuery("q39_bpe_tokens", (s, dir) => {
       import graft.operators.Bpe
       val docs = t(s, dir, "documents")
       val (_, vocab) = Bpe.learnBpe(docs, col("text"), numMerges = 8)
       // the returned frame joins the vocab lazily, AFTER this body exits —
-      // swap learnBpe's persist for a localCheckpoint (blocks free on GC)
-      // so the session never accumulates unreleasable cache entries
+      // swap learnBpe's frame (persisted when it came from distributed
+      // rounds) for a localCheckpoint (blocks free on GC) so the session
+      // never accumulates unreleasable cache entries
       val flat = vocab.localCheckpoint(true)
       vocab.unpersist()
       // no floor on this train => nothing is OOV; keep the pre-round-13
@@ -51,9 +52,9 @@ object BpeQueries {
       bpeOovOracle),
 
     // BPE merge LEARNING (the training half of a subword tokenizer): 8
-    // iterations of map-combined adjacent-pair counting over the vocab-sized
-    // word frame + a 1-row driver argmax each — driver state is the 8-entry
-    // merge list. Deterministic tie-break (count DESC, lhs ASC, rhs ASC);
+    // iterations of adjacent-pair counting over the vocab-sized word table
+    // + an argmax each, on the driver while the table fits, as Spark rounds
+    // past the cap. Deterministic tie-break (count DESC, lhs ASC, rhs ASC);
     // the oracle replays the same iterations with relational run-parity
     // greedy merge application (operators.Bpe.learnBpe)
     GateQuery("q102_bpe_learn", (s, dir) => {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed byte-pair-encoding merge LEARNING (the training half of a
@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
   *    merge list itself (numMerges entries), nothing corpus-sized;
   *  - merge application is a narrow per-row fold (`aggregate` HOF) over the
   *    vocab frame — no shuffle. The frame is persisted per iteration and the
-  *    previous one released, so lineage stays one-deep across iterations.
+  *    previous one released, so lineage stays one-deep across iterations;
+  *  - when the word table fits on the driver (the common case: even a
+  *    large corpus has a few million distinct words), [[learnBpe]] skips
+  *    those rounds and trains the same merges locally after the one count.
   *
   * Greedy application semantics (both here and in the DuckDB oracle): the
   * winning pair merges left-to-right, non-overlapping — a symbol consumed by
@@ -41,7 +44,11 @@ object Bpe {
     * that won its iteration. */
   final case class Merge(left: String, right: String, count: Long)
 
-  /** Rounds between lineage truncations in [[learnBpe]] — see the
+  /** Distinct words at or under which the word table is trained on the
+    * driver: [[learnBpe]]'s switch and [[learnBpeLocal]]'s default cap. */
+  private val MaxLocalWords = 2000000L
+
+  /** Rounds between lineage truncations in [[learnBpeRounds]] — see the
     * localCheckpoint note there. */
   private val LineageCutEvery = 6
 
@@ -89,11 +96,21 @@ object Bpe {
     * at numMerges entries) and the final vocab frame (word, cnt, syms) —
     * i.e. every distinct corpus word already tokenised with the full merge
     * table, which makes corpus application a plain equi-join (see
-    * [[tokenizeWithVocab]]). The returned frame is left persisted because
-    * callers immediately consume it; release with `.unpersist()` when done.
+    * [[tokenizeWithVocab]]).
     *
-    * `maxBatch` > 1 learns up to that many merges per Spark round while
-    * staying EXACTLY sequential-equivalent: candidates are taken in the
+    * The word counts are materialized once and counted. At or under
+    * `MaxLocalWords` distinct words (the cap [[learnBpeLocal]] enforces) they
+    * are collected and the exact driver trainer runs, with no per-round
+    * Spark job; the vocab frame is then a local relation built from the
+    * trained state, and `.unpersist()` on it is a no-op. Above the cap
+    * [[learnBpeRounds]] runs the distributed rounds on the same
+    * materialized counts, so the corpus is scanned once either way; that
+    * frame is left persisted because callers immediately consume it —
+    * release it with `.unpersist()` when done. Both paths learn the same
+    * merges and the same vocab (spec-pinned).
+    *
+    * `maxBatch` > 1 learns up to that many merges per distributed round
+    * while staying EXACTLY sequential-equivalent: candidates are taken in the
     * global (count DESC, left, right) order, the batch is the maximal
     * CONSECUTIVE prefix whose {left, right, merged} symbol sets are
     * pairwise disjoint (disjoint merges can't change each other's counts,
@@ -109,30 +126,45 @@ object Bpe {
     * adversarial input degrades to one-merge rounds, never to divergence.
     * Learning a 32k vocab thus runs ~32k/maxBatch Spark rounds instead of
     * one per merge — the difference between a production tokenizer train
-    * and 32k driver round-trips.
+    * and 32k driver round-trips. The driver trainer ignores `maxBatch`.
     *
-    * SCALING LIMIT (measured at >=1k merges, COVERAGE.md): rounds are
+    * SCALING (measured at >=1k merges, COVERAGE.md): distributed rounds are
     * inherently SEQUENTIAL — each argmax depends on the previous batch's
-    * counts — so wall time is (rounds x per-round latency), and per-round
-    * latency is dominated by driver job scheduling on a vocab-sized cached
-    * frame, not data volume (~0.3 s/merge warm). For production vocab
-    * sizes use [[learnBpeLocal]]: one distributed word-count pass, then
-    * the exact incremental algorithm on the driver — merge-for-merge
-    * identical (spec-pinned) at ~0.002-0.006 s/merge measured, i.e. a
-    * full train in seconds-to-minutes. THIS path remains for vocabularies
-    * too large to collect (beyond learnBpeLocal's maxDistinctWords cap),
-    * where per-round Spark aggregation is the only exact option. */
+    * counts — so their wall time is (rounds x per-round latency), and
+    * per-round latency is dominated by driver job scheduling on a
+    * vocab-sized cached frame, not data volume (~0.3 s/merge warm). The
+    * driver trainer runs the exact incremental algorithm at ~0.002-0.006
+    * s/merge measured, i.e. a full train in seconds-to-minutes, which is
+    * why it is the default wherever the word table fits. The distributed
+    * rounds remain for vocabularies too large to collect, where per-round
+    * Spark aggregation is the only exact option. */
   def learnBpe(docs: DataFrame, text: Column, numMerges: Int,
       maxBatch: Int = 16): (Seq[Merge], DataFrame) = {
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
+    val counts = Materialize(wordCounts(docs, text))
+    Materialize.collectIfAtMost(counts, MaxLocalWords) match {
+      case Some(rows) =>
+        Materialize.release(counts)
+        trainLocal(docs.sparkSession, rows, numMerges)
+      case None =>
+        val learned = learnBpeRounds(counts, numMerges, maxBatch)
+        Materialize.release(counts)
+        learned
+    }
+  }
+
+  /** [[learnBpe]]'s distributed rounds over a (word, cnt) count frame: one
+    * Spark job per round, whatever the vocabulary size. */
+  private[graft] def learnBpeRounds(counts: DataFrame, numMerges: Int,
+      maxBatch: Int = 16): (Seq[Merge], DataFrame) = {
     // One Spark job per ROUND: the candidate scan over pairCounts(vocab) is
     // also what materialises vocab's cache (persist is lazy), so no explicit
     // count() pass is needed. The PREVIOUS frame stays persisted until the
     // job that reads it has run — unpersisting earlier would force the new
-    // frame to recompute its whole fold lineage from the parquet scan.
+    // frame to recompute its whole fold lineage from the counts.
     // Peak cached state: two vocab-sized frames, independent of numMerges.
-    graft.sql.functions.ensureRegistered(docs.sparkSession)
-    var vocab = wordCounts(docs, text)
+    graft.sql.functions.ensureRegistered(counts.sparkSession)
+    var vocab = counts
       .withColumn("syms", charSyms(col("word")))
       .persist()
     var prev: DataFrame = null
@@ -220,19 +252,20 @@ object Bpe {
     * how production tokenizer trainers work, re-expressed on a
     * Spark-aggregated word profile.
     *
-    * EXACTLY the same merges as [[learnBpe]] (spec-pinned): same word
-    * pattern, same greedy left-to-right non-overlapping pass, same
-    * (count DESC, left ASC, right ASC) argmax tie-break. Guarded by
-    * `maxDistinctWords` — beyond it the word table does not belong on the
-    * driver and the caller should use [[learnBpe]] (which never collects
-    * words) or pre-prune the long tail (min-count filters change BPE
-    * semantics, so that is the caller's call, not a silent default).
+    * EXACTLY the same merges as the distributed rounds ([[learnBpeRounds]],
+    * spec-pinned): same word pattern, same greedy left-to-right
+    * non-overlapping pass, same (count DESC, left ASC, right ASC) argmax
+    * tie-break. Guarded by `maxDistinctWords` — beyond it the word table
+    * does not belong on the driver and the caller should use [[learnBpe]]
+    * (which runs the distributed rounds past the cap) or pre-prune the
+    * long tail (min-count filters change BPE semantics, so that is the
+    * caller's call, not a silent default).
     *
-    * Returns the merge list and the final (word, cnt, syms) vocab frame,
-    * parallelized back from the trained state and persisted, matching the
-    * [[learnBpe]] contract. */
+    * Returns the merge list and the final (word, cnt, syms) vocab frame, a
+    * local relation built from the trained state (`.unpersist()` on it is a
+    * no-op, as for [[learnBpe]]'s driver path). */
   def learnBpeLocal(docs: DataFrame, text: Column, numMerges: Int,
-      maxDistinctWords: Long = 2000000L,
+      maxDistinctWords: Long = MaxLocalWords,
       minCount: Long = 1L): (Seq[Merge], DataFrame) =
     learnBpeLocalFromCounts(wordCounts(docs, text), numMerges,
       minCount, maxDistinctWords)
@@ -258,21 +291,28 @@ object Bpe {
     * full exact training, cap-guarded as before. */
   def learnBpeLocalFromCounts(counts: DataFrame, numMerges: Int,
       minCount: Long = 1L,
-      maxDistinctWords: Long = 2000000L): (Seq[Merge], DataFrame) = {
+      maxDistinctWords: Long = MaxLocalWords): (Seq[Merge], DataFrame) = {
     require(minCount >= 1L, "minCount must be >= 1")
-    val spark = counts.sparkSession
-    val wc =
-      if (minCount <= 1L) counts
-      else counts.where(col("cnt") >= minCount)
-    val n = wc.count()
-    require(n <= maxDistinctWords,
-      s"$n distinct words exceed maxDistinctWords=$maxDistinctWords — the " +
+    val wc = Materialize(
+      (if (minCount <= 1L) counts else counts.where(col("cnt") >= minCount))
+        .select(col("word").cast("string"), col("cnt").cast("long")))
+    val collected = Materialize.collectIfAtMost(wc, maxDistinctWords)
+    Materialize.release(wc)
+    require(collected.isDefined,
+      s"more than maxDistinctWords=$maxDistinctWords distinct words — the " +
         "word table does not belong on the driver at this size; use " +
         "learnBpe (distributed rounds), raise minCount (standard tokenizer-" +
         "trainer truncation; see scaladoc for the exactness contract), or " +
         "raise the cap deliberately")
-    val collected = wc.select(col("word").cast("string"), col("cnt").cast("long"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    trainLocal(counts.sparkSession, collected.get, numMerges)
+  }
+
+  /** The exact incremental trainer behind [[learnBpeLocal]] and
+    * [[learnBpe]], over collected (word: string, cnt: long) rows. Returns
+    * the merges and the (word, cnt, syms) vocab as a local relation. */
+  private def trainLocal(spark: SparkSession, rows: Array[Row],
+      numMerges: Int): (Seq[Merge], DataFrame) = {
+    val collected = rows.map(r => (r.getString(0), r.getLong(1)))
 
     // mutable training state: per-word symbol arrays + global pair counts +
     // a lazy-invalidation heap (an entry is valid iff its count equals the
@@ -396,8 +436,7 @@ object Bpe {
     import spark.implicits._
     val vocab = collected.zip(words)
       .map { case ((word, cnt), w) => (word, cnt, w.syms.toSeq) }
-      .toSeq.toDF("word", "cnt", "syms").persist()
-    vocab.count(): Unit
+      .toSeq.toDF("word", "cnt", "syms")
     (merges.result(), vocab)
   }
 

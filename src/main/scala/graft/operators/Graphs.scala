@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Graph-shaped post-processing for dedup pipelines.
   *
@@ -14,13 +17,23 @@ import org.apache.spark.sql.functions._
   * O(log diameter) rounds instead of O(diameter) — a 2^30-diameter chain
   * (beyond any real corpus) finishes inside the default iteration budget.
   *
-  * Every round materialises through [[Materialize]] (localCheckpoint by
+  * Small graphs never reach those rounds: [[connectedComponentsAuto]],
+  * [[pageRank]] and [[personalizedPageRank]] materialise the edge list,
+  * count it, and at or under `DriverEdgeLimit` edges collect it and run
+  * the same exact algorithm on the driver, with no per-round Spark job
+  * ([[Materialize.collectIfAtMost]]). Above the cap every round of the
+  * distributed loop materialises through [[Materialize]] (localCheckpoint by
   * default: bounded lineage, no leaked cache entries; replicated persist
   * via `spark.graft.materialize.mode=persist` when executors can be lost);
   * iteration state is one narrow (vertex, component) frame shuffled on the
   * vertex id.
   */
 object Graphs {
+
+  /** Edge count at or under which the graph operators collect the edge list
+    * and iterate on the driver: a million edges is tens of MB of driver
+    * memory, and per-round Spark jobs cost more than the arithmetic. */
+  private val DriverEdgeLimit = 1000000L
 
   /** Connected components over an undirected edge list.
     *
@@ -96,15 +109,14 @@ object Graphs {
     * distributed pointer-jumping loop runs unchanged. Both paths produce
     * identical labels (component = min reachable vertex id). */
   def connectedComponentsAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      driverEdgeLimit: Long = 1000000L, maxIterations: Int = 25): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+      driverEdgeLimit: Long = DriverEdgeLimit, maxIterations: Int = 25): DataFrame = {
     val sel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val integral = sel.schema.fields.forall(f =>
       Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
     if (!integral) return connectedComponents(edges, srcCol, dstCol, maxIterations)
     val mat = Materialize(sel)
-    val result =
-      if (mat.count() <= driverEdgeLimit) {
+    val result = Materialize.collectIfAtMost(mat, driverEdgeLimit) match {
+      case Some(rows) =>
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         val verts = scala.collection.mutable.HashSet.empty[Long]
         def find(x: Long): Long = {
@@ -114,7 +126,7 @@ object Graphs {
           while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
           r
         }
-        mat.collect().foreach { row =>
+        rows.foreach { row =>
           if (!row.isNullAt(0) && !row.isNullAt(1)) {
             val (a, b) = (row.getAs[Number](0).longValue(), row.getAs[Number](1).longValue())
             verts += a; verts += b
@@ -130,7 +142,8 @@ object Graphs {
         labels.toDF("vertex", "component")
           .select(col("vertex").cast(sel.schema("src").dataType),
             col("component").cast(sel.schema("src").dataType))
-      } else connectedComponents(mat, "src", "dst", maxIterations)
+      case None => connectedComponents(mat, "src", "dst", maxIterations)
+    }
     Materialize.release(mat)
     result
   }
@@ -149,28 +162,128 @@ object Graphs {
     * (dangling redistribution would add a global barrier per round).
     * Multi-edges count multiplicity (a src with two edges to the same dst
     * sends it double weight); pre-`distinct` the edges to change that.
+    * Edges with a null endpoint are dropped.
     *
-    * Scale shape per iteration: one shuffle joining scores to edges on src
-    * (out-degree pre-attached), one map-combined aggregation by dst. The
-    * score relation is |V|-sized; edges never re-shuffle once bucketed.
-    * Output: (vertex, pagerank) over ALL vertices, including dangling ones.
+    * Scale shape: at or under `DriverEdgeLimit` edges whose endpoints share
+    * one integral or string type, the rounds run on the driver over the
+    * collected edge list, with no per-round Spark job. Otherwise each
+    * iteration is one shuffle joining scores to edges on src (out-degree
+    * pre-attached) and one map-combined aggregation by dst; the score
+    * relation is |V|-sized and edges never re-shuffle once bucketed.
+    * Output: (vertex, pagerank) over ALL vertices, including dangling ones,
+    * with the input's vertex type.
     */
-  /** Shared power-iteration core: materialized edges + (vertex, deg) base.
-    * `setup` sees the MATERIALIZED base plus its already-computed vertex
-    * count (the sizing aggregation below produces it anyway — a separate
-    * `base.count()` job would re-scan for a number we have) and returns
-    * (possibly-augmented base, initial-score expression, per-round teleport
-    * expression). An augmented base (extra per-vertex columns, e.g. a
-    * precomputed seed teleport weight) is re-materialized ONCE so its
-    * expressions are physically stored instead of re-evaluated inside every
-    * iteration's projection and re-analyzed in every round's growing plan. */
-  private def powerIterate(edges: DataFrame, srcCol: String, dstCol: String,
-      setup: (DataFrame, Long) => (DataFrame, Column, Column), iterations: Int,
-      damping: Double, iterScale: Int, scale: Int): DataFrame = {
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      iterations: Int = 3, damping: Double = 0.85,
+      iterScale: Int = 9, scale: Int = 6): DataFrame =
+    powerIterate(edges, srcCol, dstCol, None, iterations, damping, iterScale, scale)
+
+  /** Personalized PageRank: teleport mass restarts ONLY at the `seeds`
+    * (compared on the vertex's string form), so scores measure proximity
+    * to the seed set — the trust/quality-propagation variant ("rank pages
+    * by closeness to hand-vetted domains"). Same determinism contract and
+    * scale shape as [[pageRank]]: fixed iterations, per-round rounding,
+    * dangling leak. */
+  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Seq[String], iterations: Int = 3, damping: Double = 0.85,
+      iterScale: Int = 9, scale: Int = 6): DataFrame = {
+    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
+    powerIterate(edges, srcCol, dstCol, Some(seeds), iterations, damping, iterScale, scale)
+  }
+
+  /** Spark's `round` on a double: HALF_UP on the double's decimal string;
+    * NaN and the infinities pass through. */
+  private def roundHalfUp(d: Double, scale: Int): Double =
+    if (d.isNaN || d.isInfinite) d
+    else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Vertex types whose collected values (boxed integers, `String`) are
+    * equal on the driver exactly when Spark's grouping puts them together. */
+  private val driverVertexTypes: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType, StringType)
+
+  /** Shared core of [[pageRank]] (`seeds` None: teleport to every vertex)
+    * and [[personalizedPageRank]] (teleport to the seeds only). Null
+    * endpoints are dropped and the edge list is materialized once. At or
+    * under `driverEdgeLimit` edges whose endpoints share one type in
+    * `driverVertexTypes`, [[powerIterateLocal]] runs the rounds on the
+    * driver; otherwise [[powerIterateDistributed]] runs them on the same
+    * materialized edges. `driverEdgeLimit = 0` forces the distributed
+    * rounds on any non-empty graph (a negative one on any graph), which is
+    * how the specs pin the two paths to identical rows. */
+  private[graft] def powerIterate(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[Seq[String]], iterations: Int, damping: Double, iterScale: Int,
+      scale: Int, driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val sel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     val e = Materialize(sel) // reused every iteration
+    val vertexType = sel.schema("src").dataType
+    val collected =
+      if (vertexType == sel.schema("dst").dataType && driverVertexTypes(vertexType))
+        Materialize.collectIfAtMost(e, driverEdgeLimit)
+      else None
+    collected match {
+      case Some(rows) =>
+        Materialize.release(e)
+        powerIterateLocal(edges.sparkSession, rows, vertexType, seeds,
+          iterations, damping, iterScale, scale)
+      case None =>
+        powerIterateDistributed(e, seeds, iterations, damping, iterScale, scale)
+    }
+  }
+
+  /** [[powerIterate]]'s rounds in plain Scala over the collected (src, dst)
+    * rows, with the distributed rounds' arithmetic: out-degrees count
+    * multi-edges and self-loops, each round sums pr/deg per destination
+    * (dangling vertices send nothing), and `teleport + damping * in_mass`
+    * is rounded to `iterScale` decimals. Only the order inside each
+    * destination's sum can differ, and the per-round rounding absorbs it.
+    * Vertices keep their collected values, so the output keeps the vertex
+    * type and the seed test sees the same string form as Spark's cast. */
+  private def powerIterateLocal(spark: SparkSession, rows: Array[Row], vertexType: DataType,
+      seeds: Option[Seq[String]], iterations: Int, damping: Double, iterScale: Int,
+      scale: Int): DataFrame = {
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val verts = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def vertexId(v: Any): Int = index.getOrElseUpdate(v, { verts += v; verts.length - 1 })
+    val src = rows.map(r => vertexId(r.get(0)))
+    val dst = rows.map(r => vertexId(r.get(1)))
+    val n = verts.length
+    val deg = new Array[Long](n)
+    src.foreach(s => deg(s) += 1)
+
+    val (init, teleport) = seeds match {
+      case None =>
+        require(n > 0, "pageRank over an empty edge list (no non-null vertices)")
+        (Array.fill(n)(roundHalfUp(1.0 / n, iterScale)), Array.fill(n)((1 - damping) / n))
+      case Some(s) =>
+        val seedSet = s.toSet
+        val tp = verts.map(v => if (seedSet(v.toString)) (1 - damping) / s.size else 0.0).toArray
+        val seedInit = roundHalfUp(1.0 / s.size, iterScale)
+        (tp.map(t => if (t > 0.0) seedInit else 0.0), tp)
+    }
+    var pr = init
+    for (_ <- 0 until iterations) {
+      val inMass = new Array[Double](n)
+      var k = 0
+      while (k < src.length) {
+        val s = src(k)
+        if (pr(s) != 0.0) inMass(dst(k)) += pr(s) / deg(s)
+        k += 1
+      }
+      pr = Array.tabulate(n)(v => roundHalfUp(teleport(v) + damping * inMass(v), iterScale))
+    }
+    val out = Seq.tabulate(n)(v => Row(verts(v), roundHalfUp(pr(v), scale)))
+    spark.createDataFrame(out.asJava, StructType(Seq(
+      StructField("vertex", vertexType), StructField("pagerank", DoubleType))))
+  }
+
+  /** [[powerIterate]]'s rounds as Spark jobs over the materialized edges `e`
+    * (src, dst). One aggregation yields the vertex set with out-degrees;
+    * personalized runs store their per-vertex teleport weight in it. */
+  private def powerIterateDistributed(e: DataFrame, seeds: Option[Seq[String]],
+      iterations: Int, damping: Double, iterScale: Int, scale: Int): DataFrame = {
     // vertex set AND out-degrees in ONE aggregation: both edge endpoints
     // flow into a single map-combined groupBy (src endpoints count toward
     // the degree, dst endpoints only assert existence) — replaces a
@@ -191,16 +304,28 @@ object Graphs {
     // instead of shuffling the edge relation through a sort-merge join every
     // round — per-iteration work becomes map-side join + map-combined agg.
     // Past the cap (a real web graph) the shuffled join is the correct plan
-    // and nothing changes. The same aggregation carries the vertex count to
-    // `setup` (pageRank's 1/n init) — one sizing job, not two.
+    // and nothing changes. The same aggregation carries the vertex count
+    // for pageRank's 1/n init — one sizing job, not two.
     val sizing = base0.agg(count(lit(1)).as("n"), coalesce(
       sum(octet_length(col("vertex").cast("string")).cast("long")), lit(0L)).as("kb")).head
     val estBytes = sizing.getLong(1) + sizing.getLong(0) * 32L
     val broadcastScores = estBytes <= 256L * 1024 * 1024
 
-    val (aug, initExpr, teleport) = setup(base0, sizing.getLong(0))
-    val base = if (aug eq base0) base0 else {
-      val m = Materialize(aug); Materialize.release(base0); m
+    val (base, initExpr, teleport) = seeds match {
+      case None =>
+        val n = sizing.getLong(0).toDouble
+        require(n > 0, "pageRank over an empty edge list (no non-null vertices)")
+        (base0, lit(roundHalfUp(1.0 / n, iterScale)), lit((1 - damping) / n))
+      case Some(s) =>
+        // the seed test is evaluated ONCE into a stored per-vertex teleport
+        // column, not re-evaluated in every iteration's projection and
+        // re-analyzed in every round's growing plan
+        val aug = Materialize(base0.withColumn("_tp",
+          when(col("vertex").cast("string").isin(s: _*), lit((1 - damping) / s.size))
+            .otherwise(lit(0.0))))
+        Materialize.release(base0)
+        (aug, when(col("_tp") > 0.0, lit(roundHalfUp(1.0 / s.size, iterScale)))
+          .otherwise(lit(0.0)), col("_tp"))
     }
     var scores = base.withColumn("pr", initExpr)
     var prevMat: DataFrame = null
@@ -249,45 +374,6 @@ object Graphs {
     Materialize.release(e); Materialize.release(base)
     if (prevMat != null) Materialize.release(prevMat)
     out
-  }
-
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, damping: Double = 0.85,
-      iterScale: Int = 9, scale: Int = 6): DataFrame =
-    powerIterate(edges, srcCol, dstCol,
-      setup = { (base, nVerts) =>
-        val n = nVerts.toDouble // from the core's sizing aggregation
-        require(n > 0, "pageRank over an empty edge list (no non-null vertices)")
-        val initVal = BigDecimal(1.0 / n)
-          .setScale(iterScale, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (base, lit(initVal), lit((1 - damping) / n))
-      },
-      iterations, damping, iterScale, scale)
-
-  /** Personalized PageRank: teleport mass restarts ONLY at the `seeds`
-    * (compared on the vertex's string form), so scores measure proximity
-    * to the seed set — the trust/quality-propagation variant ("rank pages
-    * by closeness to hand-vetted domains"). Same determinism contract as
-    * [[pageRank]]: fixed iterations, per-round rounding, dangling leak. */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: Seq[String], iterations: Int = 3, damping: Double = 0.85,
-      iterScale: Int = 9, scale: Int = 6): DataFrame = {
-    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
-    val isSeed = col("vertex").cast("string").isin(seeds: _*)
-    val seedInit = BigDecimal(1.0 / seeds.size)
-      .setScale(iterScale, BigDecimal.RoundingMode.HALF_UP).toDouble
-    powerIterate(edges, srcCol, dstCol,
-      // the seed test is evaluated ONCE into a stored per-vertex teleport
-      // column (powerIterate re-materializes the augmented base), not
-      // re-evaluated in every iteration's projection
-      setup = (base, _) => {
-        val aug = base.withColumn("_tp",
-          when(isSeed, lit((1 - damping) / seeds.size)).otherwise(lit(0.0)))
-        (aug,
-          when(col("_tp") > 0.0, lit(seedInit)).otherwise(lit(0.0)),
-          col("_tp"))
-      },
-      iterations, damping, iterScale, scale)
   }
 
   /** Dedup clusters from a document frame + near-dup pair frame: every doc

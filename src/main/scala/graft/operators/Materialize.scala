@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager materialization point for operators that reuse an intermediate
@@ -44,4 +44,13 @@ private[graft] object Materialize {
     * no-op in localCheckpoint mode (blocks free on GC). */
   def release(df: DataFrame): Unit =
     if (persistMode(df)) df.unpersist()
+
+  /** The small-state switch of the iterative operators: count `df`, a frame
+    * from [[apply]], and collect it only when it holds at most `limit` rows,
+    * so the caller can run its loop on the driver with no per-round Spark
+    * job. Both actions read the stored blocks; the count is one job over
+    * them, with no aggregation shuffle. None above the cap: the caller keeps
+    * the distributed path, on the same `df`. */
+  def collectIfAtMost(df: DataFrame, limit: Long): Option[Array[Row]] =
+    if (df.queryExecution.toRdd.count() <= limit) Some(df.collect()) else None
 }

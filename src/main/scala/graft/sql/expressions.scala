@@ -336,8 +336,12 @@ case class BpeMergePass(first: Expression, second: Expression, third: Expression
         s"graft_bpe_merge expects (array<string>, string, string), got $other")
     }
 
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StringType, containsNull = false)
+  // a null symbol passes through (see compute): the result may hold a null
+  // exactly when the input array may
+  override def dataType: DataType = first.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(StringType, containsNull)
+    case _ => ArrayType(StringType, containsNull = true)
+  }
 
   override def prettyName: String = "graft_bpe_merge"
 

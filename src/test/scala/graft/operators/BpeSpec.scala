@@ -159,10 +159,13 @@ class BpeSpec extends SparkTestBase with Matchers {
       "every engine everywhere ever evening seven even",
       "inner dinner thinner winner sinner in inn inning",
       "lowest lower lowly low slowest slower slow").toDF("text")
-    val (seq, vs) = Bpe.learnBpe(docs, col("text"), numMerges = 24, maxBatch = 1)
+    // learnBpe would train this small corpus on the driver, where maxBatch
+    // plays no part: call the distributed rounds directly
+    val counts = Bpe.wordCounts(docs, col("text"))
+    val (seq, vs) = Bpe.learnBpeRounds(counts, numMerges = 24, maxBatch = 1)
     vs.unpersist()
     for (batch <- Seq(4, 16)) {
-      val (bat, vb) = Bpe.learnBpe(docs, col("text"), numMerges = 24, maxBatch = batch)
+      val (bat, vb) = Bpe.learnBpeRounds(counts, numMerges = 24, maxBatch = batch)
       withClue(s"maxBatch=$batch: ") {
         bat.map(m => (m.left, m.right, m.count)) shouldBe
           seq.map(m => (m.left, m.right, m.count))
@@ -173,10 +176,13 @@ class BpeSpec extends SparkTestBase with Matchers {
 
   it("driver-local training is merge-for-merge and vocab-identical to the distributed rounds") {
     // the 32k-vocab production path: one distributed word-count pass, then
-    // exact incremental BPE on the driver — must reproduce learnBpe's
-    // merges (same argmax tie-break, same greedy pass) AND the same final
-    // word -> syms table, on a corpus that exercises conflicts, runs and
-    // ties. Includes the real sf0.001 documents slice for non-toy shape.
+    // exact incremental BPE on the driver — must reproduce the distributed
+    // rounds' merges (same argmax tie-break, same greedy pass) AND the same
+    // final word -> syms table, on a corpus that exercises conflicts, runs
+    // and ties. Includes the real sf0.001 documents slice for non-toy shape
+    // and seeded corpora over a small alphabet (long runs, many ties).
+    // learnBpe itself trains small corpora on the driver, so the reference
+    // side calls the rounds directly, and learnBpe must equal both.
     val toy = Seq(
       "the quick brown fox jumps over the lazy dog",
       "the threadbare theme there then they the the",
@@ -185,20 +191,29 @@ class BpeSpec extends SparkTestBase with Matchers {
       "lowest lower lowly low slowest slower slow").toDF("text")
     val real = spark.read.parquet(s"${sf()}/documents.parquet")
       .limit(200).select(col("text"))
-    for ((docs, nm, label) <- Seq((toy, 30, "toy"), (real, 120, "sf0.001"))) {
-      val (dist, vd) = Bpe.learnBpe(docs, col("text"), numMerges = nm)
+    val generated = Seq(11, 12, 13).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val alphabet = 2 + rnd.nextInt(4)
+      val docs = Seq.fill(20)(Seq.fill(1 + rnd.nextInt(10))(
+        Seq.fill(1 + rnd.nextInt(9))(('a' + rnd.nextInt(alphabet)).toChar).mkString)
+        .mkString(" ")).toDF("text")
+      (docs, 40, s"generated seed $seed")
+    }
+    def table(v: org.apache.spark.sql.DataFrame) =
+      v.select($"word", $"cnt", $"syms").as[(String, Long, Seq[String])]
+        .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    for ((docs, nm, label) <- Seq((toy, 30, "toy"), (real, 120, "sf0.001")) ++ generated) {
+      val (dist, vd) = Bpe.learnBpeRounds(Bpe.wordCounts(docs, col("text")), numMerges = nm)
       val (local, vl) = Bpe.learnBpeLocal(docs, col("text"), numMerges = nm)
-      withClue(s"$label merges: ") {
-        local.map(m => (m.left, m.right, m.count)) shouldBe
-          dist.map(m => (m.left, m.right, m.count))
+      val (auto, va) = Bpe.learnBpe(docs, col("text"), numMerges = nm)
+      for ((name, merges, vocab) <- Seq(("learnBpeLocal", local, vl), ("learnBpe", auto, va))) {
+        withClue(s"$label $name merges: ") {
+          merges.map(m => (m.left, m.right, m.count)) shouldBe
+            dist.map(m => (m.left, m.right, m.count))
+        }
+        withClue(s"$label $name vocab: ") { table(vocab) shouldBe table(vd) }
       }
-      withClue(s"$label vocab: ") {
-        vl.select($"word", $"cnt", $"syms").as[(String, Long, Seq[String])]
-          .collect().map(r => r._1 -> (r._2, r._3)).toMap shouldBe
-          vd.select($"word", $"cnt", $"syms").as[(String, Long, Seq[String])]
-            .collect().map(r => r._1 -> (r._2, r._3)).toMap
-      }
-      vd.unpersist(); vl.unpersist()
+      vd.unpersist(); vl.unpersist(); va.unpersist()
     }
   }
 
@@ -244,7 +259,8 @@ class BpeSpec extends SparkTestBase with Matchers {
     // count Spark jobs as a round proxy: each round runs exactly one
     // candidate-collect job; sequential 12 merges = 12 collects
     val docs = Seq("ab ab cd cd ef ef gh gh ij ij kl kl").toDF("text")
-    val (bat, vb) = Bpe.learnBpe(docs, col("text"), numMerges = 6, maxBatch = 8)
+    val (bat, vb) = Bpe.learnBpeRounds(Bpe.wordCounts(docs, col("text")),
+      numMerges = 6, maxBatch = 8)
     vb.unpersist()
     // all six pairs are symbol-disjoint with EQUAL counts: one batch takes
     // them all (tau guard keeps equal-count disjoint prefixes intact only

@@ -44,7 +44,12 @@ class KernelCodegenParitySpec extends SparkTestBase with Matchers {
       "théé wörds_1 x́the 𝐀x ... ...", Seq("a", "a", "b", "b"),
       "cabcab", d(1, 1, 1, 1), Seq(1f, 1f, 1f, 1f), d(0, 0, 0, 0), d(2, 2, 2, 2),
       1, 0L, Array[Byte](-1, 0)),
-    Row(4, null, null, null, null, null, null, null, null, null, null, null, null, null, null))
+    Row(4, null, null, null, null, null, null, null, null, null, null, null, null, null, null),
+    // a null symbol passes through graft_bpe_merge, so its result type
+    // must admit null elements
+    Row(5, d(1, 2, 3), d(3, 2, 1), Seq(1L, 2L, 3L, 5L), Seq(2L, 3L, 5L, 8L),
+      "a", Seq("a", null, "b", "a", "b"), "ab", d(0.5, 1, -1, 2), Seq(0.5f, 1f, -1f, 2f),
+      d(0, 0, -1, 0), d(1, 2, 1, 0), 2, 1L, Array[Byte](1)))
 
   private val cents = "array(array(0D, 0D, 0D, 0D), array(1D, 1D, 1D, 1D), array(1D, 1D, 1D, 1D))"
   private val planes = "array(array(1D, 2D, 3D, 4D), array(-1D, 0D, 0.5D, 2D))"
