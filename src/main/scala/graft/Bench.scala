@@ -1,84 +1,121 @@
 package graft
-import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
+import scala.util.{Failure, Success, Try}
 import Harness.{dropStrayBlocks, runFully}
 
 object Bench {
+
+  /** Passes over the suite. Each query reports the median of its samples: a
+    * first execution pays JIT, GC and class-loading costs that later ones do
+    * not, and the median keeps one such sample, or one burst of machine load,
+    * out of the row without a second, conditional measurement path. */
+  val Passes = 5
+
+  private def short(name: String): String = name.takeWhile(_ != '_')
+  private def r3(v: Double): String = f"$v%.3f"
+
+  /** The middle sample (the upper of the two middle ones for an even count). */
+  private def median(samples: Seq[Double]): Double = samples.sorted.apply(samples.length / 2)
+
+  /** One Bench run reduced to what its record reports.
+    *
+    * @param times      per query, the median of its samples, or -1 when any
+    *                   pass failed
+    * @param failedCause per failed query, the exception class of its failure
+    * @param overRef    short names of the queries over 2x their reference
+    */
+  final case class Summary(times: Seq[(String, Double)], failedCause: Seq[(String, String)],
+      canaryFirst: Double, canaryLast: Double, canaryRatio: Double, canaryVsRef: Double,
+      contended: Boolean, overRef: Seq[String]) {
+
+    /** The one-line `"metric"` record, query names shortened to `qNN`. */
+    def record(commit: String, sfDir: String): String = {
+      def str(s: String) = "\"" + s + "\""
+      // 1 ms resolution and qNN keys keep the line inside the last ~2 KB of
+      // output that a caller keeps; -1 failure sentinels do not count in total
+      val qs = times.map { case (k, v) => str(short(k)) + ":" + r3(v) }.mkString("{", ",", "}")
+      val total = times.map(_._2).filter(_ >= 0).sum
+      val failed = failedCause.map(p => str(short(p._1))).mkString("[", ",", "]")
+      val causes = failedCause.map { case (k, c) => str(short(k)) + ":" + str(c) }
+        .mkString("{", ",", "}")
+      // at most 16 names (the count ships in full), so a long regression list
+      // never pushes the verdict fields behind it out of that window
+      val over = overRef.take(16).map(str).mkString("[", ",", "]")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":$Passes,"queries":$qs,"failed":$failed,"failed_cause":$causes,"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRef.size},"over_ref_2x":$over,"commit":"$commit","sf":"$sfDir"}"""
+    }
+  }
+
+  /** Reduces a run's samples to its summary.
+    *
+    * @param samples per query in suite order, its samples in pass order; a
+    *                query's list ends at its first failure
+    * @param canaryFirst the canary timed after pass 1
+    * @param canaryLast  the canary timed after the last pass
+    * @param refTimes   per short query name, its cross-round reference time
+    */
+  def summarize(samples: Seq[(String, Seq[Try[Double]])], canaryFirst: Try[Double],
+      canaryLast: Try[Double], refTimes: Map[String, Double]): Summary = {
+    val failedCause = samples.flatMap { case (name, s) =>
+      s.collectFirst { case Failure(e) => name -> e.getClass.getName }
+    }
+    val times = samples.map { case (name, s) =>
+      name -> (if (s.exists(_.isFailure)) -1.0 else median(s.map(_.get)))
+    }
+    val (first, last) = (canaryFirst.getOrElse(-1.0), canaryLast.getOrElse(-1.0))
+    // ratio (last/first) catches load that changed between pass 1 and the
+    // end of the run, in either direction; vs_ref (the best canary time over
+    // its cross-round reference) catches a uniformly loaded machine, which
+    // leaves the ratio at ~1. A dead canary keeps the run loudly contended
+    val ratio = if (first > 0 && last > 0) last / first else -1.0
+    val dead = first <= 0 && last <= 0
+    val best = Seq(first, last).filter(_ > 0)
+    val vsRef = refTimes.get(short(canaryName)).filter(ref => ref > 0 && !dead)
+      .map(best.min / _).getOrElse(-1.0)
+    val contended = dead || (ratio > 0 && (ratio > 1.5 || ratio < 1.0 / 1.5)) || vsRef > 2.0
+    // over 2x the cross-round reference; the 0.75 s floor keeps sub-second
+    // scheduler jitter out. On a clean run this names real regressions, on a
+    // contended one what the next clean run must re-measure
+    val overRef = times.collect {
+      case (name, sec) if sec > 0.75 && refTimes.get(short(name)).exists(sec > 2 * _) => short(name)
+    }.sorted
+    Summary(times, failedCause, first, last, ratio, vsRef, contended, overRef)
+  }
+
+  /** Fixed canary, timed after the first pass and after the last: the same
+    * query on the same data must cost the same at both ends of passes 2 to 5,
+    * so a drifting ratio means the machine changed under the run. */
+  val canaryName = "q01_pricing_summary"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
 
-    // Steady-state measurement: touch every table and exercise the scan /
-    // shuffle / window / codegen machinery once before timing, so the first
-    // measured query doesn't absorb JVM + session initialisation.
-    // best-effort: a missing table must not abort the whole benchmark — the
-    // affected query will just report -1 like any other failure
-    scala.util.Try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { tn =>
-        // full-scan count, not limit(100): the first query otherwise absorbs
-        // the cold columnar-read + codegen cost of the big tables
-        scala.util.Try(spark.read.parquet(s"$sfDir/$tn.parquet").count())
-      }
-      // warm the FULL first-query code path, executed exactly as the timed
-      // queries are (toRdd, not count — count prunes the aggregate
-      // projections whose codegen is the expensive part): a Q1-shaped
-      // filter + group-by with decimal sum/avg over the real lineitem scan.
-      // r7 measured q01 at ~2.5x its steady-state time because the range-
-      // based warmup never compiled a decimal hash aggregate over parquet
-      scala.util.Try {
-        // same EXPRESSION SHAPES as q01 (decimal(28,8) sums with round,
-        // rounded avgs, timestamp-filtered scan) on a different slice so it
-        // compiles q01's codegen classes without pre-running q01 itself.
-        // Two passes: the first triggers C2 compilation of the generated
-        // hash-aggregate loop, the second runs after it has (mostly)
-        // finished — one pass still left ~1s of in-flight JIT on the first
-        // timed query
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        def dsum(c: org.apache.spark.sql.Column) =
-          round(sum(c.cast("decimal(28,8)")).cast("double"), 2)
-        for (_ <- 1 to 2)
-          runFully(li.filter(col("l_shipdate") <= lit("1995-01-01").cast("timestamp"))
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(dsum(col("l_quantity")).as("a"),
-              dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("b"),
-              dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-                * (lit(1.0) + col("l_tax"))).as("c"),
-              round(avg(col("l_quantity")), 4).as("d"), count(lit(1)).as("e"))
-            .orderBy(col("l_returnflag")))
-      }
-      runFully(spark.range(10000).select((col("id") % 7).as("k"), col("id").as("v"))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("k")).orderBy(col("v"))))
-        .where(col("rn") === 1))
-      // persisted-ANN gate indexes (q134–q136) build here, outside the timed
-      // region, so those rows measure SEARCH cost — probe + ADC / re-rank —
-      // not k-means training + encode (round-8 verdict: build dominated).
-      // A swallowed failure would silently revert those rows to timing the
-      // build — say so instead
-      scala.util.Try(SparkEntry.prewarmPersistedIndexes(spark, sfDir)).failed
-        .foreach(e => System.err.println(
-          s"WARN prewarmPersistedIndexes failed (${e.getMessage}); " +
-            "q134-q136 will time index build + search"))
-      // media payload frames (q150–q155) synthesize + persist here so the
-      // timed rows measure scan + decode, not payload encoding (round-10
-      // verdict: q151 was dominated by WAV-writer synthesis)
-      scala.util.Try(SparkEntry.prewarmMediaFrames(spark, sfDir)).failed
-        .foreach(e => System.err.println(
-          s"WARN prewarmMediaFrames failed (${e.getMessage}); " +
-            "q150-q155 will time synthesis + decode"))
-    }
+    // persisted-ANN gate indexes (q134–q136) build here, outside the timed
+    // region, so those rows measure SEARCH cost — probe + ADC / re-rank —
+    // not k-means training + encode (round-8 verdict: build dominated).
+    // A swallowed failure would silently revert those rows to timing the
+    // build — say so instead
+    Try(SparkEntry.prewarmPersistedIndexes(spark, sfDir)).failed
+      .foreach(e => System.err.println(
+        s"WARN prewarmPersistedIndexes failed (${e.getMessage}); " +
+          "q134-q136 will time index build + search"))
+    // media payload frames (q150–q155) synthesize + persist here so the
+    // timed rows measure scan + decode, not payload encoding (round-10
+    // verdict: q151 was dominated by WAV-writer synthesis)
+    Try(SparkEntry.prewarmMediaFrames(spark, sfDir)).failed
+      .foreach(e => System.err.println(
+        s"WARN prewarmMediaFrames failed (${e.getMessage}); " +
+          "q150-q155 will time synthesis + decode"))
 
     // Cross-round reference (round-12 verdict item 1): per-query times from
-    // the PREVIOUS round's clean artifact, keyed by short qNN name. The
-    // round-11 driver artifact proved the same-run median floor cannot catch
-    // a UNIFORMLY loaded machine (contention inflates the median too, so the
-    // 5x-median floor rises with the noise it should detect) — an absolute
-    // cross-round anchor can. Loaded from SPARK_GRAFT_BENCH_REF, else
-    // tools/bench_ref_<sf-basename>.json; missing file -> empty map (the
-    // median rule below still applies).
+    // earlier clean runs, keyed by short qNN name — an absolute anchor that
+    // catches a UNIFORMLY loaded machine, which inflates every same-run
+    // statistic along with the noise it should detect. Loaded from
+    // SPARK_GRAFT_BENCH_REF, else tools/bench_ref_<sf-basename>.json; a
+    // missing file gives an empty map.
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
       s"tools/bench_ref_${new java.io.File(sfDir).getName}.json")
-    val refTimes: Map[String, Double] = scala.util.Try {
+    val refTimes: Map[String, Double] = Try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(refPath)), java.nio.charset.StandardCharsets.UTF_8)
       """"(q\d+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
@@ -92,164 +129,53 @@ object Bench {
     // bounded twin q147 stays) the same way the sf1 correctness sweep does
     val selected = Harness.select(SparkEntry.queries.keys,
       sys.env.get("SPARK_GRAFT_ONLY"), sys.env.get("SPARK_GRAFT_SKIP"))
-    // Fixed canary, timed first and last (round-12 verdict item 1): the same
-    // query on the same data must cost the same at both ends of the suite —
-    // a drifting ratio means the MACHINE changed under us mid-run, and a
-    // canary far above its cross-round reference means the whole run sat on
-    // a loaded machine (the failure mode the r11 driver artifact could not
-    // flag about itself).
-    val canaryName = "q01_pricing_summary"
-    // One timed execution on a block-clean JVM. Failures really do report -1
-    // (not their time-to-crash: a 30s OOM must not masquerade as a valid 30s
-    // measurement in the artifact); the exception class is kept per query
-    // for the record's `failed_cause`
-    val failCause = scala.collection.mutable.Map[String, String]()
-    def timeQuery(name: String): Double = {
+
+    // One timed execution on a block-clean JVM. A failure is a Failure, not
+    // its time-to-crash: a 30 s OOM must not pass for a 30 s measurement.
+    // Throwable, not only NonFatal: an OutOfMemoryError fails its row, not
+    // the whole run
+    def timeQuery(name: String): Try[Double] = {
       val t0 = System.nanoTime()
-      val ok = try { runFully(SparkEntry.queries(name)(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          failCause(name) = e.getClass.getName
-          false
-        }
+      val run = try Success(runFully(SparkEntry.queries(name)(spark, sfDir)))
+        catch { case e: Throwable => Failure(e) }
       val sec = (System.nanoTime() - t0) / 1e9
+      run.failed.foreach(e =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}"))
       dropStrayBlocks(spark)
-      if (ok) sec else -1.0
+      run.map(_ => sec)
     }
-    // The canary runs once untimed first: after the warm-up above it still
-    // took ~2x its last pass at sf0.01 (0.83 s vs 0.39 s on 4 cores), which
-    // read as a contended run on an idle machine. A failure here is left to
-    // the timed pass to record
-    scala.util.Try(runFully(SparkEntry.queries(canaryName)(spark, sfDir)))
+    // The canary runs once untimed first, so its first timed run does not
+    // carry the session's cold start. A failure here is left to the timed
+    // runs to record
+    Try(runFully(SparkEntry.queries(canaryName)(spark, sfDir)))
     dropStrayBlocks(spark)
-    val canaryFirst = timeQuery(canaryName)
 
-    val results = selected.map(name => name -> timeQuery(name))
-
-    // Contention-proofing (round-9 verdict: the artifact showed q110 at
-    // 3.2x its true cost from in-JVM interference — JIT/GC spillover from
-    // neighbouring queries — and a judge had to re-measure by hand to
-    // clear the phantom regression). Any first-pass outlier (over
-    // max(5x suite median, 2s), slowest first, capped) is re-timed
-    // serially AFTER everything else on a hot, block-clean JVM; the
-    // headline per-query number takes the MIN of the two passes (a query
-    // cannot honestly be faster than its best clean run), and both values
-    // ship in a `retimed` field so the correction is auditable.
-    val firstPass = results.toMap
-    val sortedTimes = results.map(_._2).filter(_ >= 0).sorted
-    val median =
-      if (sortedTimes.isEmpty) 0.0 else sortedTimes(sortedTimes.length / 2)
-    val outlierFloor = math.max(5 * median, 2.0)
-    def short(k: String): String = k.takeWhile(_ != '_')
-    // Two retime triggers (round-12 verdict item 1): the same-run median
-    // floor (catches a lone in-JVM outlier) AND the cross-round reference
-    // (catches uniform machine load, which inflates the median itself —
-    // any query over 2x its previous-round clean time gets a second look;
-    // the 0.75s absolute floor keeps sub-second scheduler jitter out).
-    def overRef(name: String, sec: Double): Boolean =
-      refTimes.get(short(name)).exists(ref => sec > 2 * ref && sec > 0.75)
-    val retimed: Map[String, Double] = results
-      .filter { case (name, sec) => sec > outlierFloor || overRef(name, sec) }
-      .sortBy { case (name, sec) =>
-        // most-suspicious first: ratio to reference when known, else time
-        -refTimes.get(short(name)).map(sec / _).getOrElse(sec)
-      }
-      .take(24) // bounded: re-times are ~the suite tail's cost, and the
-                // one-line JSON must stay inside the driver's capture window
-      .flatMap { case (name, _) =>
-        // The retime slot sits at the end of the suite and inherits its
-        // heap/GC debris — in round 10 that made 2 of 3 retimes SLOWER than
-        // their contended first pass, so a retime could clear a phantom but
-        // never confirm a real cost. Clear the slot first: full GC, then a
-        // throwaway warm-up execution of the same query (faults pages back
-        // in, re-JITs anything deoptimised) whose blocks are dropped before
-        // the timed run.
-        System.gc()
-        scala.util.Try(runFully(SparkEntry.queries(name)(spark, sfDir)))
-        dropStrayBlocks(spark)
-        // a FAILED rerun must not produce a bogus fast time for min() to
-        // pick — only successful re-executions count
-        Some(name -> timeQuery(name)).filter(_._2 >= 0)
-      }.toMap
-    val finalTimes = results.map { case (name, first) =>
-      name -> retimed.get(name).map(math.min(first, _)).getOrElse(first)
+    val samples = selected.map(_ -> ArrayBuffer.empty[Try[Double]]).toMap
+    // a query that failed is not run again: its row reads -1 either way
+    def pass(): Unit = selected.foreach { name =>
+      if (!samples(name).exists(_.isFailure)) samples(name) += timeQuery(name)
     }
-    // A retime that is still materially slower than its contended first pass
-    // (after GC + warm-up) means THIS retime slot could not produce a clean
-    // measurement — the pair is shipped but flagged so a reader doesn't take
-    // the slow value as confirmation of a real cost.
-    val retimeUnreliable = retimed.collect {
-      case (name, sec) if sec > 1.5 * firstPass(name) => name
-    }.toSeq.sorted
-
-    // Compact per-query entries: the driver captures only the last ~2KB of
-    // output, and round 5's 9-decimal doubles + full names overflowed that
-    // window (the artifact's tail truncated q01–q38). 1ms resolution is below
-    // run-to-run noise, and the qNN prefix (the driver contract's own key
-    // style: {"q1":sec,…}) keeps 101 entries comfortably inside the capture.
-    def r3(v: Double): String = f"$v%.3f"
-    val qs = finalTimes.map { case (k, v) => "\"" + short(k) + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val rt = retimed.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + short(k) + "\":[" + r3(firstPass(k)) + "," + r3(v) + "]"
-    }.mkString("{", ",", "}")
-    // -1 failure sentinels stay visible per-query but must not subtract
-    // from the headline total
-    val total = finalTimes.map(_._2).filter(_ >= 0).sum
-    val failed = finalTimes.filter(_._2 < 0).map(p => "\"" + short(p._1) + "\"")
-      .mkString("[", ",", "]")
-    val failedCause = finalTimes.filter(_._2 < 0)
-      .map(p => "\"" + short(p._1) + "\":\"" + failCause(p._1) + "\"")
-      .mkString("{", ",", "}")
-    val unrel = retimeUnreliable.map(k => "\"" + short(k) + "\"").mkString("[", ",", "]")
-
-    // Canary close-out + verdict on the artifact's own trustworthiness.
-    // ratio (last/first) catches load that CHANGED during the run in either
-    // direction; vs_ref (best canary pass over the previous round's clean
-    // time) catches a UNIFORMLY loaded machine, which leaves ratio at ~1.
+    pass()
+    val canaryFirst = timeQuery(canaryName)
+    (2 to Passes).foreach(_ => pass())
     val canaryLast = timeQuery(canaryName)
-    val canaryRatio =
-      if (canaryFirst > 0 && canaryLast > 0) canaryLast / canaryFirst else -1.0
-    // -1.0 when NEITHER canary pass succeeded (ADVICE r12: Double.MaxValue
-    // would otherwise leak through the division as a ~1.7e308 artifact
-    // value); the canaryDead flag below keeps that case loudly contended
-    val canaryDead = canaryFirst <= 0 && canaryLast <= 0
-    val canaryVsRef = refTimes.get(short(canaryName))
-      .filter(_ > 0)
-      .filter(_ => !canaryDead)
-      .map(ref => math.min(
-        if (canaryFirst > 0) canaryFirst else Double.MaxValue,
-        if (canaryLast > 0) canaryLast else Double.MaxValue) / ref)
-      .getOrElse(-1.0)
-    val contended = canaryDead ||
-      (canaryRatio > 0 && (canaryRatio > 1.5 || canaryRatio < 1.0 / 1.5)) ||
-      canaryVsRef > 2.0
-    // queries STILL over 2x their cross-round reference after retiming —
-    // on a clean run this names real regressions; on a contended run
-    // (flag above) it names what the next clean run must re-measure
-    val overRefNames = finalTimes
-      .filter { case (name, sec) => sec > 0 && overRef(name, sec) }
-      .map(p => short(p._1)).sorted
-    // bounded to 16 names (the count ships in full): the driver keeps only
-    // the last ~2KB of output and the verdict fields behind this list must
-    // never be pushed out of that window by a long regression list
-    val overRefFinal = overRefNames.take(16)
-      .map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    val commit = sys.env.get("SPARK_GRAFT_COMMIT").orElse(scala.util.Try {
+
+    val summary = summarize(selected.map(n => n -> samples(n).toSeq),
+      canaryFirst, canaryLast, refTimes)
+    val commit = Try {
       val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
         .redirectErrorStream(true).start()
       val out = new String(p.getInputStream.readAllBytes,
         java.nio.charset.StandardCharsets.UTF_8).trim
-      p.waitFor(); if (out.matches("[0-9a-f]{6,40}")) Some(out) else None
-    }.toOption.flatten).getOrElse("unknown")
-
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$rt,"retime_unreliable":$unrel,"failed":$failed,"failed_cause":$failedCause,"canary":{"first":${r3(canaryFirst)},"last":${r3(canaryLast)},"ratio":${r3(canaryRatio)},"vs_ref":${r3(canaryVsRef)}},"contended":$contended,"over_ref_2x_n":${overRefNames.size},"over_ref_2x":$overRefFinal,"commit":"$commit","sf":"$sfDir"}"""
+      p.waitFor(); Some(out).filter(_.matches("[0-9a-f]{6,40}"))
+    }.toOption.flatten.getOrElse("unknown")
+    val json = summary.record(commit, sfDir)
     println(json)
     // the SAME line to a file (round-12 verdict item 8): the driver's 2KB
     // stdout tail truncates the per-query map, so downstream consumers
     // (finalize script, judge) read the full artifact from here. Name keyed
     // by the sf directory's basename: tools/last_bench_sf0.1.json etc.
-    scala.util.Try {
+    Try {
       val sfName = new java.io.File(sfDir).getName
       val out = java.nio.file.Paths.get("tools", s"last_bench_$sfName.json")
       java.nio.file.Files.createDirectories(out.getParent)

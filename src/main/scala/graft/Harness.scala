@@ -8,7 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Harness {
 
   /** Local cores: `SPARK_GRAFT_CPUS`, default 32. */
-  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A `SPARK_GRAFT_CPUS` value: absent means 32; anything but an integer
+    * >= 1 is rejected here, before it can reach Spark as a bad master URL. */
+  def parseCpus(value: Option[String]): Int = value.fold(32) { v =>
+    v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'"))
+  }
 
   /** `local[cpus]` session with the timed conf. */
   def session(cpus: Int = Harness.cpus): SparkSession = {

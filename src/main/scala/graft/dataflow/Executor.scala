@@ -21,12 +21,6 @@ object PriorityStrategies {
     val (mids, loaders) = rest.partition(_.inputLabels.nonEmpty)
     writers ++ mids ++ loaders
   }
-
-  /** Loaders first (maximise early source parallelism). */
-  def preferLoaders[C <: FlowContext]: Strategy[C] = { actions =>
-    val (loaders, rest) = actions.partition(_.inputLabels.isEmpty)
-    loaders ++ rest
-  }
 }
 
 /** Drives a flow to completion.
@@ -114,7 +108,6 @@ class ParallelExecutor[C <: FlowContext](
         runningPerPool(current.poolOf(done.action)) -= 1
         done.result match {
           case Success(outputs) if failure.isEmpty =>
-            current.context.reportActionFinished(done.action)
             // `executed` (and its temp-view hook) runs on this scheduler
             // thread — never concurrently — so flow state stays consistent.
             current = current.executed(done.action, outputs)

@@ -21,7 +21,6 @@ object core {
 trait FlowContext {
   def setPoolIntoContext(poolName: String): Unit = ()
   def reportActionStarted(action: FlowAction[_]): Unit = ()
-  def reportActionFinished(action: FlowAction[_]): Unit = ()
 }
 
 object EmptyFlowContext extends FlowContext

@@ -4,7 +4,8 @@ import org.scalatest.funspec.AnyFunSpec
 import org.scalatest.matchers.should.Matchers
 
 /** The one query selector Bench (SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP),
-  * Verify (3rd/4th args) and PlanDump (3rd arg) share. Pure: no session. */
+  * Verify (3rd/4th args) and PlanDump (3rd arg) share, and the
+  * SPARK_GRAFT_CPUS parse every session uses. Pure: no session. */
 class HarnessSpec extends AnyFunSpec with Matchers {
 
   private val names = Seq("q70_fuzzy_dups", "q01_pricing_summary",
@@ -38,6 +39,22 @@ class HarnessSpec extends AnyFunSpec with Matchers {
     it("returns nothing when no name matches") {
       Harness.select(names, Some("q999_"), None) shouldBe empty
       Harness.select(Seq.empty, None, None) shouldBe empty
+    }
+  }
+
+  describe("Harness.parseCpus") {
+    it("reads 32 when SPARK_GRAFT_CPUS is unset, else the integer given") {
+      Harness.parseCpus(None) shouldBe 32
+      Harness.parseCpus(Some("1")) shouldBe 1
+      Harness.parseCpus(Some("4")) shouldBe 4
+    }
+
+    it("rejects anything but an integer >= 1, naming the variable and the value") {
+      for (bad <- Seq("abc", "0", "-1", "", " 4", "2.5", "2147483648")) {
+        val e = the[IllegalArgumentException] thrownBy Harness.parseCpus(Some(bad))
+        e.getMessage should include("SPARK_GRAFT_CPUS")
+        e.getMessage should include(s"'$bad'")
+      }
     }
   }
 }

@@ -22,7 +22,6 @@ if ! git diff --quiet || ! git diff --cached --quiet; then
   exit 1
 fi
 COMMIT="$(git rev-parse --short HEAD)"
-export SPARK_GRAFT_COMMIT="$COMMIT"
 echo "[finalize] round $RND at commit $COMMIT"
 
 # 1. correctness gate at sf0.01 (the driver's contract)
@@ -62,7 +61,7 @@ run_bench() { # $1 = env assignments (string), $2 = out prefix
   exit 1
 }
 
-# 2. sf0.1 bench (Bench stamps SPARK_GRAFT_COMMIT into its JSON line)
+# 2. sf0.1 bench (Bench stamps `git rev-parse --short HEAD` into its JSON line)
 run_bench "SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1" "/tmp/bench_sf01_r$RND"
 
 # 3. sf1 bench (q70 skipped by design: output-quadratic; twin q147 is swept)

@@ -16,11 +16,18 @@ measured improvement can lower it. Raising a reference (e.g. after a
 deliberate semantic change that legitimately costs more) is a judge-reviewed
 manual edit, not something a finalize pass can do by accident.
 
+The refs ratchet from per-query MEDIANS: each graft.Bench row is the median
+of its samples over several passes, and its record says how many in "n".
+A record without "n" is a single-pass artifact from before medians; its
+cold first passes and warm retimes are not comparable with medians, so it
+is refused and can never lower the bar.
+
 Refuses contended bench artifacts: a loaded-machine pass must never touch
 the bar in either direction.
 
 Usage: update_bench_refs.py <bench_json> <ref_json>
-  bench_json: a graft.Bench output line/file (has "queries" and "contended")
+  bench_json: a graft.Bench output line/file (has "n", "queries" and
+              "contended")
   ref_json:   tools/bench_ref_<sf>.json to update in place
 """
 import json
@@ -39,6 +46,11 @@ def load_bench(path):
 def main():
     bench_path, ref_path = sys.argv[1], sys.argv[2]
     bench = load_bench(bench_path)
+    if "n" not in bench:
+        raise SystemExit(
+            f"{bench_path} has no \"n\" field — a single-pass artifact from "
+            "before per-query medians must not move the bar that medians are "
+            "compared to")
     if bench.get("contended"):
         raise SystemExit(
             f"{bench_path} is flagged contended — a loaded-machine pass "
