@@ -37,6 +37,8 @@ object ConfigParser {
 
   final class RetryingPropertyProvider(inner: PropertyProvider,
       timeoutMs: Long = 10000L, retries: Int = 3) extends PropertyProvider {
+    require(timeoutMs >= 1 && retries >= 0,
+      s"need timeoutMs >= 1 and retries >= 0, got $timeoutMs and $retries")
     def get(key: String): Option[String] = {
       var attempt = 0
       var last: Throwable = null
@@ -62,6 +64,21 @@ object ConfigParser {
     * (`CONFIG_PROPERTY_PROVIDER_BUILDER_MODULES`,
     * waimak-core/.../configuration/CaseClassConfigParser.scala:33-40). */
   val BuilderModulesKey = "spark.graft.config.propertyProviderBuilderModules"
+
+  /** The value of conf `key` through `parse`: absent means `default`; a
+    * value `parse` rejects throws, naming the key and the value (a negative
+    * retry count would otherwise fail every lookup without calling the
+    * provider). */
+  def setting[A](key: String, value: Option[String], default: A,
+      expected: String)(parse: String => Option[A]): A =
+    value.fold(default)(v => parse(v).getOrElse(throw new IllegalArgumentException(
+      s"$key must be $expected, got '$v'")))
+
+  def timeoutMs(value: Option[String]): Long =
+    setting(TimeoutKey, value, 10000L, "an integer >= 1")(_.toLongOption.filter(_ >= 1))
+
+  def retries(value: Option[String]): Int =
+    setting(RetriesKey, value, 3, "an integer >= 0")(_.toIntOption.filter(_ >= 0))
 
   /** Reflectively load the builder OBJECTS named in [[BuilderModulesKey]]
     * (e.g. `graft.configuration.DatabricksSecretsPropertyProviderBuilder`). */
@@ -89,15 +106,15 @@ object ConfigParser {
       additional: Map[String, String] = Map.empty,
       separator: String = ",",
       extraProviders: Seq[PropertyProvider] = Seq.empty): A = {
-    val timeoutMs = spark.conf.getOption(TimeoutKey).map(_.toLong).getOrElse(10000L)
-    val retries = spark.conf.getOption(RetriesKey).map(_.toInt).getOrElse(3)
+    val timeout = timeoutMs(spark.conf.getOption(TimeoutKey))
+    val tries = retries(spark.conf.getOption(RetriesKey))
     val configured = buildersFromConf(spark).map(_.getPropertyProvider(spark))
     val providers: Seq[PropertyProvider] = Seq(
       new PropertyProvider {
         def get(key: String): Option[String] = spark.conf.getOption(key)
       },
       MapPropertyProvider(additional)) ++
-      (extraProviders ++ configured).map(new RetryingPropertyProvider(_, timeoutMs, retries))
+      (extraProviders ++ configured).map(new RetryingPropertyProvider(_, timeout, tries))
     parse[A](k => providers.view.flatMap(_.get(k)).headOption, prefix, separator)
   }
 

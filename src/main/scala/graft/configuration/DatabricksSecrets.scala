@@ -44,6 +44,10 @@ object DatabricksSecretsPropertyProviderBuilder extends PropertyProviderBuilder 
   val ReplaceSpecialCharactersKey =
     "spark.graft.config.databricksReplaceSpecialCharactersInKey"
 
+  def replaceSpecialCharacters(value: Option[String]): Boolean =
+    ConfigParser.setting(ReplaceSpecialCharactersKey, value, true, "true or false")(
+      _.toBooleanOption)
+
   /** Injection point for tests / non-Databricks runtimes. */
   @volatile var clientOverride: Option[SecretScopeClient] = None
 
@@ -85,8 +89,7 @@ object DatabricksSecretsPropertyProviderBuilder extends PropertyProviderBuilder 
   }
 
   override def getPropertyProvider(spark: SparkSession): ConfigParser.PropertyProvider = {
-    val sanitize = spark.conf.getOption(ReplaceSpecialCharactersKey)
-      .forall(_.toBoolean) // default true
+    val sanitize = replaceSpecialCharacters(spark.conf.getOption(ReplaceSpecialCharactersKey))
     val confScopes = spark.conf.getOption(ScopesKey)
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
     new ConfigParser.PropertyProvider {

@@ -251,72 +251,31 @@ object Dedup {
     // materialise the signature stage once for its consumers (see
     // Materialize for the localCheckpoint-vs-replicated-persist trade)
     val signed = minHashSignatures(docs, idCol, textCol, bands, rowsPerBand, shingleWords)
-    // DISTINCT-CONTENT COLLAPSE (round 11, mirrors ngramJaccardPairs): rows
-    // with identical SIGNATURES are interchangeable — they band together in
-    // every band and estimate 1.0 against each other, identical values
-    // against everyone else. Banding + candidate join + verify run over one
-    // member per signature class; within-class pairs emit at 1.0;
-    // cross-class pairs expand back to ids. Output bit-identical to the
-    // all-rows formulation, candidate work scales with distinct content.
-    // Class key = two-seed xxhash64 of the signature (content identity, not
-    // a min-id representative — unique even under duplicate input ids;
+    // collapse class key (CollapseGate): rows with identical SIGNATURES band
+    // together in every band and estimate exactly 1.0 (k/k) against each
+    // other. Key = two-seed xxhash64 of the signature (content identity,
+    // not a min-id representative — unique even under duplicate input ids;
     // collision ~2^-128, beyond the 32-bit-per-shingle identity the
     // signature itself rides on).
     val ck = struct(
       xxhash64(col("sig")).as("k1"), xxhash64(lit(1L), col("sig")).as("k2"))
     val withCk = signed.withColumn("ck", ck).transform(Materialize.apply)
-    // duplication gate (round 12): on a low-duplication corpus the collapse
-    // stages cost more than they save — run the row-level form directly
-    // (bit-identical: the gate only takes this branch when ids are unique,
-    // and identical signatures estimate exactly 1.0 = k/k either way)
-    if (!CollapseGate.collapseWorthIt(withCk, col("doc_id"), col("ck"))) {
-      val banded = bandBuckets(withCk.select(col("doc_id"), col("sig")),
-        bands, rowsPerBand)
-      val candidates = banded.as("a")
+    def pairsOf(rows: DataFrame, key: String): DataFrame = {
+      val sigs = rows.select(col(key).as("doc_id"), col("sig"))
+      val banded = bandBuckets(sigs, bands, rowsPerBand)
+      banded.as("a")
         .join(banded.as("b"), Seq("band", "bucket"))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .where(col("id_a") < col("id_b"))
         .dropDuplicates("id_a", "id_b")
-      val sigs = withCk.select(col("doc_id"), col("sig"))
-      return candidates
         .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
         .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
         .withColumn("est_jaccard", estimatedJaccard(col("sig_a"), col("sig_b")))
         .where(col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     }
-    val classes = withCk.dropDuplicates("ck").select(col("ck"), col("sig"))
-    val banded = bandBuckets(classes.select(col("ck").as("doc_id"), col("sig")),
-      bands, rowsPerBand)
-
-    val candidates = banded.as("a")
-      .join(banded.as("b"), Seq("band", "bucket"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    val classPairs = candidates
-      .join(classes.select(col("ck").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(classes.select(col("ck").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard", estimatedJaccard(col("sig_a"), col("sig_b")))
-      .where(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
-
-    val ids = withCk.select(col("doc_id"), col("ck"))
-    val cross = classPairs
-      .join(ids.select(col("ck").as("id_a"), col("doc_id").as("__da")), "id_a")
-      .join(ids.select(col("ck").as("id_b"), col("doc_id").as("__db")), "id_b")
-      .select(least(col("__da"), col("__db")).as("id_a"),
-        greatest(col("__da"), col("__db")).as("id_b"), col("est_jaccard"))
-      // duplicate input ids carrying DIFFERENT content: the naive form
-      // never self-pairs an id (id_a < id_b), so neither may the expansion
-      .where(col("id_a") =!= col("id_b"))
-    // identical signatures estimate exactly 1.0 (round-4 of k/k)
-    val twins = ids.select(col("ck"), col("doc_id").as("id_a"))
-      .join(ids.select(col("ck"), col("doc_id").as("id_b")), "ck")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard"))
-    if (threshold <= 1.0) cross.unionByName(twins) else cross
+    CollapseGate.pairs(withCk, "doc_id", "ck", "est_jaccard")(pairsOf,
+      _.select(col("ck"), lit(1.0).as("est_jaccard")).where(lit(1.0) >= threshold))
   }
 
   /** The signature stage of [[minHashLshPairs]] on its own: (doc_id, sig).
@@ -449,18 +408,12 @@ object Dedup {
     * strings); the verify stage is then a linear merge over two sorted long
     * arrays instead of per-pair hash-set construction over strings.
     *
-    * DISTINCT-CONTENT COLLAPSE (round 11; same trick that took fuzzy
-    * matching from 68s to 1s): crawl corpora are massively
-    * boilerplate-duplicated, and rows sharing a (block, gram-set)
-    * equivalence class are interchangeable to the verify function — any
-    * two of them score Jaccard exactly 1.0 against each other and
-    * identical values against everyone else. So the quadratic verify
-    * stage runs over one REPRESENTATIVE per class, within-class pairs
-    * emit directly at 1.0, and cross-class pairs expand back to ids via
-    * two hash joins. Output is bit-identical to the naive self-join while
-    * verify work scales with distinct-CONTENT block occupancy: on the
-    * 10x-replicated sf1 corpus (every doc x10 byte-identical) this is a
-    * ~100x candidate-work cut. */
+    * Verify work scales with distinct-CONTENT block occupancy through the
+    * [[CollapseGate]] collapse: crawl corpora are massively
+    * boilerplate-duplicated (every sf1 doc x10 byte-identical: a ~100x
+    * candidate-work cut), and rows sharing a (block, gram-set) class score
+    * Jaccard exactly 1.0 against each other and identical values against
+    * everyone else. */
   def ngramJaccardPairs(
       docs: DataFrame,
       idCol: String,
@@ -480,43 +433,13 @@ object Dedup {
     val ck = struct(
       xxhash64(col("block"), col("grams")).as("k1"),
       xxhash64(lit(1L), col("block"), col("grams")).as("k2"))
-    val withCk = prepped.withColumn("ck", ck)
-      .transform(Materialize.apply) // classes leg + two expansion legs read it
-    // duplication gate (round 12): skip the collapse on a low-duplication
-    // corpus — the row-level verify is bit-identical when ids are unique
-    // (identical gram sets verify to exactly 1.0 through the same
-    // graft_jaccard_ge merge the class path reuses)
-    if (!CollapseGate.collapseWorthIt(withCk, col("doc_id"), col("ck")))
-      return verifiedPairs(
-        withCk.select(col("block"), col("doc_id").as("id_a"), col("grams").as("g_a")),
-        withCk.select(col("block"), col("doc_id").as("id_b"), col("grams").as("g_b")),
-        col("id_a") < col("id_b"), threshold)
-    // one arbitrary member per class — all members carry identical
-    // (block, grams), which is all the verify stage reads
-    val classes = withCk.dropDuplicates("ck")
-    val a = classes.select(col("block"), col("ck").as("id_a"), col("grams").as("g_a"))
-    val b = classes.select(col("block"), col("ck").as("id_b"), col("grams").as("g_b"))
-    val classPairs = verifiedPairs(a, b, col("id_a") < col("id_b"), threshold)
-    val ids = withCk.select(col("doc_id"), col("ck"))
-    // cross-class pairs expand to every member combination; least/greatest
-    // restores the id_a < id_b output contract, and duplicate input ids
-    // carrying DIFFERENT content must not self-pair (the naive form's
-    // id_a < id_b never pairs an id with itself)
-    val cross = classPairs
-      .join(ids.select(col("ck").as("id_a"), col("doc_id").as("__da")), "id_a")
-      .join(ids.select(col("ck").as("id_b"), col("doc_id").as("__db")), "id_b")
-      .select(least(col("__da"), col("__db")).as("id_a"),
-        greatest(col("__da"), col("__db")).as("id_b"), col("jaccard"))
-      .where(col("id_a") =!= col("id_b"))
-    // within-class pairs: gram sets equal, Jaccard exactly 1.0 (what the
-    // naive verify returns for them) — id-only self-join per class
-    val twins = ids.select(col("ck"), col("doc_id").as("id_a"))
-      .join(ids.select(col("ck"), col("doc_id").as("id_b")), "ck")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    // a threshold above 1.0 excludes even identical texts in the naive
-    // formulation — keep that corner exact
-    if (threshold <= 1.0) cross.unionByName(twins) else cross
+    val withCk = prepped.withColumn("ck", ck).transform(Materialize.apply)
+    def side(rows: DataFrame, key: String, s: String) =
+      rows.select(col("block"), col(key).as(s"id_$s"), col("grams").as(s"g_$s"))
+    CollapseGate.pairs(withCk, "doc_id", "ck", "jaccard")(
+      (rows, key) => verifiedPairs(side(rows, key, "a"), side(rows, key, "b"),
+        col("id_a") < col("id_b"), threshold),
+      _.select(col("ck"), lit(1.0).as("jaccard")).where(lit(1.0) >= threshold))
   }
 
   /** Directional near-CONTAINMENT pairs: (contained, container) where at
@@ -973,83 +896,31 @@ object Dedup {
     * equi-join is LOSSLESS at the default threshold and never all-pairs —
     * candidate work scales with bucket sizes, not corpus². */
   def fingerprintPairs(hashed: DataFrame, maxHamming: Int = 3): DataFrame = {
-    // DISTINCT-CONTENT COLLAPSE (round 11, mirrors ngramJaccardPairs): the
-    // fingerprint fully determines both the quadrant blocking and the
-    // hamming distance, so rows sharing `sh` are interchangeable —
-    // blocking + candidate join + verify run over one member per distinct
-    // fingerprint, with `sh` ITSELF as the (exact, 64-bit) class key;
-    // within-class pairs reuse the SAME hamming expression on the class
-    // fingerprint (0 for non-null sh, null-sh classes drop exactly as the
-    // naive join's null keys do); cross-class pairs expand back to ids.
-    // Output identical to the naive quadrant join for unique doc_ids;
-    // under DUPLICATE ids carrying different fingerprints the naive form's
-    // dropDuplicates(id_a,id_b) kept one arbitrary (sh_a,sh_b) per id pair
-    // while this form deterministically emits one row per qualifying class
-    // pair — strictly more deterministic and complete (spec pins both
-    // (1,2,0) and (1,2,8)). Candidate work scales with distinct
-    // fingerprints.
+    // the fingerprint fully determines both the quadrant blocking and the
+    // hamming distance, so `sh` ITSELF is the exact 64-bit collapse class
+    // key (CollapseGate); a null-sh class drops exactly as the row-level
+    // join's null keys do
     val withCk = hashed.select(col("doc_id"), col("sh"))
       .transform(Materialize.apply)
-    // (keyCols..., quad, qval) — one row per 15-bit block of each input row
-    def quadExplode(d: DataFrame, keep: Seq[String]): DataFrame = d
-      .withColumn("q0", col("sh").bitwiseAND(lit(0x7FFFL)))
-      .withColumn("q1", shiftrightunsigned(col("sh"), 15).bitwiseAND(lit(0x7FFFL)))
-      .withColumn("q2", shiftrightunsigned(col("sh"), 30).bitwiseAND(lit(0x7FFFL)))
-      .withColumn("q3", shiftrightunsigned(col("sh"), 45).bitwiseAND(lit(0x7FFFL)))
-      .select(
-        keep.map(col) :+
-          explode(array(
-            struct(lit(0).as("quad"), col("q0").as("qval")),
-            struct(lit(1).as("quad"), col("q1").as("qval")),
-            struct(lit(2).as("quad"), col("q2").as("qval")),
-            struct(lit(3).as("quad"), col("q3").as("qval")))).as("q"): _*)
-      .select(keep.map(col) :+ col("q.quad") :+ col("q.qval"): _*)
-    // duplication gate (round 12): skip the collapse on a low-duplication
-    // corpus — with unique ids (gate-guaranteed) each id pair carries a
-    // single (sh_a, sh_b), so the row-level dropDuplicates is deterministic
-    // and the output matches the class form bit-for-bit
-    if (!CollapseGate.collapseWorthIt(withCk, col("doc_id"), col("sh"))) {
-      val rq = quadExplode(withCk, Seq("doc_id", "sh"))
-      val ra = rq.select(col("quad"), col("qval"),
-        col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val rb = rq.select(col("quad"), col("qval"),
-        col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      return ra.join(rb, Seq("quad", "qval"))
+    def pairsOf(rows: DataFrame, key: String): DataFrame = {
+      // one row per 15-bit block of each input row
+      val quads = rows.select(col(key).as("id"), col("sh"),
+          explode(array((0 until 4).map(q => struct(lit(q).as("quad"),
+            shiftrightunsigned(col("sh"), 15 * q).bitwiseAND(lit(0x7FFFL)).as("qval"))): _*))
+            .as("q"))
+        .select(col("id"), col("sh"), col("q.quad"), col("q.qval"))
+      def side(s: String) = quads.select(col("quad"), col("qval"),
+        col("id").as(s"id_$s"), col("sh").as(s"sh_$s"))
+      side("a").join(side("b"), Seq("quad", "qval"))
         .where(col("id_a") < col("id_b"))
         .dropDuplicates("id_a", "id_b")
         .withColumn("hamming", hamming64(col("sh_a"), col("sh_b")))
         .where(col("hamming") <= maxHamming)
         .select("id_a", "id_b", "hamming")
     }
-    val reps = withCk.dropDuplicates("sh")
-    val withQuads = quadExplode(reps, Seq("sh"))
-
-    val a = withQuads.select(col("quad"), col("qval"), col("sh").as("sh_a"))
-    val b = withQuads.select(col("quad"), col("qval"), col("sh").as("sh_b"))
-    val classPairs = a.join(b, Seq("quad", "qval"))
-      .where(col("sh_a") < col("sh_b"))
-      .dropDuplicates("sh_a", "sh_b")
-      .withColumn("hamming", hamming64(col("sh_a"), col("sh_b")))
-      .where(col("hamming") <= maxHamming)
-      .select("sh_a", "sh_b", "hamming")
-
-    val ids = withCk.select(col("doc_id"), col("sh"))
-    val cross = classPairs
-      .join(ids.select(col("sh").as("sh_a"), col("doc_id").as("__da")), "sh_a")
-      .join(ids.select(col("sh").as("sh_b"), col("doc_id").as("__db")), "sh_b")
-      .select(least(col("__da"), col("__db")).as("id_a"),
-        greatest(col("__da"), col("__db")).as("id_b"), col("hamming"))
-      // duplicate input ids carrying DIFFERENT content: the naive form
-      // never self-pairs an id (id_a < id_b), so neither may the expansion
-      .where(col("id_a") =!= col("id_b"))
-    val twins = reps
-      .select(col("sh"), hamming64(col("sh"), col("sh")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .join(ids.select(col("sh"), col("doc_id").as("id_a")), "sh")
-      .join(ids.select(col("sh"), col("doc_id").as("id_b")), "sh")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    cross.unionByName(twins)
+    CollapseGate.pairs(withCk, "doc_id", "sh", "hamming")(pairsOf,
+      _.select(col("sh"), hamming64(col("sh"), col("sh")).as("hamming"))
+        .where(col("hamming") <= maxHamming))
   }
 
   /** Winnowing fingerprints per document (MOSS — Schleimer et al. 2003),

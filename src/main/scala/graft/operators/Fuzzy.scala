@@ -76,28 +76,15 @@ object Fuzzy {
     // materialized: three consumers (both tokenized join sides + the
     // self-expansion) would otherwise each re-run the distinct shuffle
     val names = Materialize(ids.select("name").distinct())
-    val pairs = namePairs(names, maxDist, maxTokenFreq)
-
-    // cross-name expansion: every id of name_a against every id of name_b
-    val cross = pairs
-      .join(ids.select(col("name").as("name_a"), col("__fid").as("ia")), Seq("name_a"))
-      .join(ids.select(col("name").as("name_b"), col("__fid").as("ib")), Seq("name_b"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        col("dist").cast("long").as("dist"))
-
-    // same-name expansion: a duplicated string pairs with itself (dist 0)
-    // iff it carries at least one surviving blocking token
+    // the distinct string is the class key: name pairs expand to id pairs
+    // (CollapseGate.expand), and a duplicated string pairs with itself
+    // (dist 0) iff it carries at least one surviving blocking token
     val selfBlocked = capped(tokenized(names, "a"), maxTokenFreq)
       .select(col("name_a").as("name")).distinct()
-    val withTok = ids.join(selfBlocked, Seq("name"))
-    val same = withTok.select(col("name"), col("__fid").as("ia"))
-      .join(withTok.select(col("name"), col("__fid").as("ib")), Seq("name"))
-      .where(col("ia") < col("ib"))
-      .select(col("ia").as("id_a"), col("ib").as("id_b"),
-        lit(0L).as("dist"))
-
-    cross.unionByName(same)
+    CollapseGate.expand(
+      namePairs(names, maxDist, maxTokenFreq).select(col("name_a").as("id_a"),
+        col("name_b").as("id_b"), col("dist").cast("long").as("dist")),
+      ids, "__fid", "name", "dist", selfBlocked.select(col("name"), lit(0L).as("dist")))
   }
 
   /** [[fuzzyDupPairs]] with BOUNDED output: only the `maxIdsPerName`

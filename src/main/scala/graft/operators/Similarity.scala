@@ -713,58 +713,28 @@ object Similarity {
     val spark = df.sparkSession
     val prepped = df.select(blockCol.as("block"), col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    // DISTINCT-CONTENT COLLAPSE (round 11, mirrors Dedup.ngramJaccardPairs):
-    // cosine depends only on the vectors, so rows sharing a (block, vector)
-    // class are interchangeable — the quadratic scoring runs over one
-    // member per class, within-class pairs reuse the SAME nativeCosine
-    // expression on the class vector (so rounding/NaN corners match the
-    // naive self-join bit-for-bit), cross-class pairs expand back to ids.
-    // Class key = two-seed xxhash64 over (block, vector) — content
-    // identity, NOT a min-id representative (not unique under duplicate
-    // input ids); collision ~2^-128 per class pair. Embedding corpora
-    // deduplicate heavily (re-crawled pages embed identically): the sf1
-    // slope run measured the naive form at 38x on a 10x-duplicated corpus.
+    // collapse class key (CollapseGate) = two-seed xxhash64 over (block,
+    // vector): cosine depends only on the vectors. Content identity, NOT a
+    // min-id representative (not unique under duplicate input ids);
+    // collision ~2^-128 per class pair. Within-class pairs score through the
+    // SAME nativeCosine expression on the class vector, so rounding and NaN
+    // corners match the row-level join. Embedding corpora deduplicate
+    // heavily (re-crawled pages embed identically): the sf1 slope run
+    // measured the row-level form at 38x on a 10x-duplicated corpus.
     val ck = struct(
       xxhash64(col("block"), col("v")).as("k1"),
       xxhash64(lit(1L), col("block"), col("v")).as("k2"))
     val withCk = prepped.withColumn("ck", ck).transform(Materialize.apply)
-    // duplication gate (round 12): skip the collapse on a low-duplication
-    // corpus — bit-identical when ids are unique (gate-guaranteed); the
-    // row-level form scores through the SAME nativeCosine expression
-    if (!CollapseGate.collapseWorthIt(withCk, col("id"), col("ck"))) {
-      val ra = withCk.select(col("block"), col("id").as("id_a"), col("v").as("v_a"))
-      val rb = withCk.select(col("block"), col("id").as("id_b"), col("v").as("v_b"))
-      return ra.join(rb, Seq("block"))
+    def side(rows: DataFrame, key: String, s: String) =
+      rows.select(col("block"), col(key).as(s"id_$s"), col("v").as(s"v_$s"))
+    CollapseGate.pairs(withCk, "id", "ck", "cos")(
+      (rows, key) => side(rows, key, "a").join(side(rows, key, "b"), Seq("block"))
         .where(col("id_a") < col("id_b"))
         .withColumn("cos", nativeCosine(spark, col("v_a"), col("v_b"), scale))
         .where(col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    }
-    val classes = withCk.dropDuplicates("ck")
-    val a = classes.select(col("block"), col("ck").as("id_a"), col("v").as("v_a"))
-    val b = classes.select(col("block"), col("ck").as("id_b"), col("v").as("v_b"))
-    val classPairs = a.join(b, Seq("block"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cos", nativeCosine(spark, col("v_a"), col("v_b"), scale))
-      .where(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-    val ids = withCk.select(col("id"), col("ck"))
-    val cross = classPairs
-      .join(ids.select(col("ck").as("id_a"), col("id").as("__ia")), "id_a")
-      .join(ids.select(col("ck").as("id_b"), col("id").as("__ib")), "id_b")
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("cos"))
-      // duplicate input ids carrying DIFFERENT content: the naive form
-      // never self-pairs an id (id_a < id_b), so neither may the expansion
-      .where(col("id_a") =!= col("id_b"))
-    val twins = classes
-      .select(col("ck"), nativeCosine(spark, col("v"), col("v"), scale).as("cos"))
-      .where(col("cos") >= threshold)
-      .join(ids.select(col("ck"), col("id").as("id_a")), "ck")
-      .join(ids.select(col("ck"), col("id").as("id_b")), "ck")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("cos"))
-    cross.unionByName(twins)
+        .select("id_a", "id_b", "cos"),
+      _.select(col("ck"), nativeCosine(spark, col("v"), col("v"), scale).as("cos"))
+        .where(col("cos") >= threshold))
   }
 
   /** Random-projection dimensionality reduction (Johnson–Lindenstrauss):

@@ -39,6 +39,8 @@ class AuditTable(
 
   import AuditTable._
 
+  checkMeta(info)
+
   private var modified = false
 
   def tableName: String = info.tableName
@@ -474,6 +476,17 @@ object AuditTable {
   val PkBloomKey = "pkBloom"
   /** `meta` key overriding the sidecar false-positive rate (default 0.01). */
   val PkBloomFppKey = "pkBloomFpp"
+
+  /** Rejects a `meta` value the bloom sidecars would only fail on after an
+    * append's region is already live (a retry would then duplicate it). */
+  private def checkMeta(info: AuditTableInfo): Unit = {
+    def bad(key: String, v: String, expected: String) = throw new StorageException(
+      s"Table [${info.tableName}]: meta $key=$v; expected $expected")
+    info.meta.get(PkBloomKey).filterNot(v => v.equalsIgnoreCase("true") ||
+      v.equalsIgnoreCase("false")).foreach(bad(PkBloomKey, _, "true or false"))
+    info.meta.get(PkBloomFppKey).filterNot(_.toDoubleOption.exists(p => p > 0.0 && p < 1.0))
+      .foreach(bad(PkBloomFppKey, _, "a number strictly between 0 and 1"))
+  }
 }
 
 /** Pluggable compaction output sizing (reference StorageActions.scala:265-323). */

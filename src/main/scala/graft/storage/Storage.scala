@@ -36,9 +36,11 @@ object Storage {
               s"${existing.retainHistory} vs requested ${info.retainHistory}")
         openTable(spark, basePath, info.tableName, includeHot).get
       case None =>
+        // the handle checks `meta` before anything is written
+        val table = new AuditTable(info, Seq.empty, base, ops, spark, includeHot)
         ops.fs.mkdirs(tablePath)
         ops.writeTableInfo(tablePath, info)
-        new AuditTable(info, Seq.empty, base, ops, spark, includeHot)
+        table
     }
   }
 

@@ -56,6 +56,12 @@ class FuzzySpec extends SparkTestBase with Matchers {
         Set(1L -> 2L, 3L -> 4L)
     }
 
+    it("a duplicate id carrying two near spellings never pairs with itself") {
+      val df = Seq((1L, "acme corp"), (1L, "acme corq"), (2L, "zeta thing"))
+        .toDF("id", "name")
+      Fuzzy.fuzzyDupPairs(df, "id", "name", maxDist = 2).count() shouldBe 0L
+    }
+
     it("blocking is case-insensitive and whitespace-robust") {
       val df = Seq((1L, "Red  Widget"), (2L, "red widgit")).toDF("id", "name")
       val out = Fuzzy.fuzzyDupPairs(df, "id", "name", maxDist = 4)

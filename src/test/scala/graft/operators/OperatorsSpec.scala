@@ -450,6 +450,16 @@ class OperatorsSpec extends SparkTestBase with Matchers {
         .as[(Long, Long, Long)].collect().toSeq
       fps.filter(p => p._1 == p._2) shouldBe empty
       fps.map(p => (p._1, p._2, p._3)).sorted shouldBe Seq((1L, 2L, 0L), (1L, 2L, 8L))
+
+      Dedup.minHashLshPairs(docs, "doc_id", "text", threshold = 0.1)
+        .as[(Long, Long, Double)].collect().filter(p => p._1 == p._2) shouldBe empty
+      Similarity.cosineNearDupPairs(Seq(
+          (1L, Seq(1.0, 0.0), "x"), (1L, Seq(1.0, 0.1), "x"), (2L, Seq(1.0, 0.0), "x"))
+          .toDF("id", "v", "label"), "id", "v", col("label"), threshold = 0.5)
+        .as[(Long, Long, Double)].collect().filter(p => p._1 == p._2) shouldBe empty
+      Fuzzy.fuzzyDupPairs(Seq((1L, "acme corp"), (1L, "acme corq"), (2L, "acme corp"))
+          .toDF("id", "name"), "id", "name", maxDist = 2)
+        .as[(Long, Long, Long)].collect().filter(p => p._1 == p._2) shouldBe empty
     }
 
     it("fingerprintPairs equals a local brute-force over a 4x-duplicated fingerprint frame") {
@@ -501,10 +511,8 @@ class OperatorsSpec extends SparkTestBase with Matchers {
       // SOME byte-identical duplicates, near-dups and a null — the regime
       // where the gate's decision could go either way and must never
       // change the output
-      def forced[A](mode: String)(f: => A): A = {
-        spark.conf.set("spark.graft.collapse.force", mode)
-        try f finally spark.conf.unset("spark.graft.collapse.force")
-      }
+      def forced[A](mode: String)(f: => A): A =
+        CollapseGate.forced.withValue(Some(mode == "always"))(f)
       val docs = spark.read.parquet(s"${sf("sf0.01")}/documents.parquet")
         .filter(col("doc_id") < 150).select($"doc_id", $"text")
         .unionByName( // planted exact dups under FRESH unique ids
@@ -558,18 +566,58 @@ class OperatorsSpec extends SparkTestBase with Matchers {
         .map { case (id, i) => (id, s"content_$i") }.toDF("id", "c")
         .withColumn("ck", xxhash64(col("c")))
       collapseWorthIt(dupIds, col("id"), col("ck")) shouldBe true
-      // conf override wins in both directions
-      spark.conf.set("spark.graft.collapse.force", "never")
-      try collapseWorthIt(dup, col("id"), col("ck")) shouldBe false
-      finally spark.conf.unset("spark.graft.collapse.force")
-      spark.conf.set("spark.graft.collapse.force", "always")
-      try collapseWorthIt(unique, col("id"), col("ck")) shouldBe true
-      finally spark.conf.unset("spark.graft.collapse.force")
-      // an unknown value fails instead of silently meaning "let the gate decide"
-      spark.conf.set("spark.graft.collapse.force", "Never")
-      try intercept[IllegalArgumentException](collapseWorthIt(dup, col("id"), col("ck")))
-        .getMessage should (include("spark.graft.collapse.force") and include("always, never"))
-      finally spark.conf.unset("spark.graft.collapse.force")
+      // the test seam wins in both directions
+      CollapseGate.forced.withValue(Some(false)) {
+        collapseWorthIt(dup, col("id"), col("ck")) shouldBe false
+      }
+      CollapseGate.forced.withValue(Some(true)) {
+        collapseWorthIt(unique, col("id"), col("ck")) shouldBe true
+      }
+    }
+
+    it("both gate branches agree on generated frames: planted duplicates, nulls, " +
+        "thresholds at and above 1.0") {
+      val vocab = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+      def both[A](f: => A): (A, A) = (CollapseGate.forced.withValue(Some(false))(f),
+        CollapseGate.forced.withValue(Some(true))(f))
+      var nonEmpty = 0
+      for (seed <- 1 to 3) {
+        val rnd = new scala.util.Random(seed)
+        val threshold = seed match { case 1 => 1.0; case 2 => 1.5; case _ => 0.3 }
+        // unique ids 1..n; about a third of the rows repeat an earlier
+        // row's content (planted exact duplicates); id 1000 holds a null
+        def planted[A](base: Seq[A]): Seq[(Long, A)] =
+          (base ++ Seq.fill(base.size / 3)(base(rnd.nextInt(base.size))))
+            .zipWithIndex.map { case (c, i) => (i + 1L, c) }
+        def agree[A](what: String, r: (Set[A], Set[A]),
+            vacuous: Boolean = threshold > 1.0): Unit =
+          withClue(s"seed=$seed threshold=$threshold $what: ") {
+            r._1 shouldBe r._2
+            if (vacuous) r._1 shouldBe empty
+            nonEmpty += r._1.size
+          }
+        val docs = (planted(Seq.fill(24)(Seq.fill(4 + rnd.nextInt(6))(
+            vocab(rnd.nextInt(vocab.size))).mkString(" "))) :+ (1000L, null: String))
+          .toDF("doc_id", "text")
+        agree("ngramJaccardPairs", both(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+          Seq((col("doc_id") % 2).as("b")), 3, threshold).as[(Long, Long, Double)].collect().toSet))
+        agree("minHashLshPairs", both(Dedup.minHashLshPairs(docs, "doc_id", "text",
+          threshold = threshold).as[(Long, Long, Double)].collect().toSet))
+        val bases = Seq.fill(5)(rnd.nextLong())
+        val fps = (planted(Seq.fill(20)((0 until rnd.nextInt(4)).foldLeft(
+              bases(rnd.nextInt(bases.size)))((x, _) => x ^ (1L << rnd.nextInt(64)))))
+            .map { case (i, sh) => (i, Option(sh)) } :+ (1000L, None))
+          .toDF("doc_id", "sh")
+        agree("fingerprintPairs", both(Dedup.fingerprintPairs(fps,
+          maxHamming = 3 * (seed - 1)).as[(Long, Long, Long)].collect().toSet), vacuous = false)
+        val vecs = (planted(Seq.fill(20)((Option(Seq(1.0 + rnd.nextInt(2)) ++
+              Seq.fill(3)(rnd.nextInt(3).toDouble)), if (rnd.nextBoolean()) "x" else "y")))
+            .map { case (i, (v, l)) => (i, v, l) } :+ ((1000L, None, "x")))
+          .toDF("id", "v", "label")
+        agree("cosineNearDupPairs", both(Similarity.cosineNearDupPairs(vecs, "id", "v",
+          col("label"), threshold).as[(Long, Long, Double)].collect().toSet))
+      }
+      nonEmpty should be > 0
     }
   }
 

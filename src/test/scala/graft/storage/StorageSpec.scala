@@ -194,6 +194,25 @@ class StorageSpec extends SparkTestBase with Matchers {
       t8.regionsForPointLookup(Seq(ghost)) shouldBe empty
     }
 
+    it("rejects an invalid pkBloom or pkBloomFpp before any region is written") {
+      val bad = Seq(AuditTable.PkBloomFppKey -> "abc", AuditTable.PkBloomFppKey -> "1.5",
+        AuditTable.PkBloomFppKey -> "0", AuditTable.PkBloomKey -> "yes")
+      for (((key, value), i) <- bad.zipWithIndex) {
+        val name = s"bad_bloom_meta_$i"
+        val e = intercept[StorageException] {
+          Storage.getOrCreateTable(spark, tmpDir, AuditTableInfo(name, Seq("id"),
+              Map(AuditTable.PkBloomKey -> "true", key -> value), retainHistory = true))
+            .append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), None,
+              ts("2024-01-01 00:00:00"))
+        }
+        e.getMessage should (include(name) and include(key) and include(value))
+        // nothing was published, so a retry cannot duplicate data
+        new java.io.File(s"$tmpDir/$name/${AuditTable.TypeColumn}=${AuditTable.HotType}")
+          .exists shouldBe false
+        Storage.openTable(spark, tmpDir, name) shouldBe None
+      }
+    }
+
     it("point lookups find keys probed with a NARROWER type than the PK column") {
       // the sidecar hashes the parquet column's TYPE (bigint here); an Int
       // probe hashed as an int literal diverges and silently prunes the

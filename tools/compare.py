@@ -8,14 +8,20 @@ import pyarrow as pa, pyarrow.parquet as pq
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-if len(sys.argv) > 3:  # local iteration: only compare these name prefixes
-    pres = sys.argv[3].split(",")
-    oracle = {k: v for k, v in oracle.items() if any(k.startswith(p) for p in pres)}
-if len(sys.argv) > 4:  # large-scale replays: skip these name prefixes
-    # (e.g. q70 at sf1: the oracle's raw id-level blocked join needs ~1e9
-    # single-node levenshtein calls — exact-compared at smaller sf instead)
-    skips = sys.argv[4].split(",")
-    oracle = {k: v for k, v in oracle.items() if not any(k.startswith(p) for p in skips)}
+# optional name-prefix filters, comma-separated, "-" for none (as Verify
+# reads them): argv[3] keeps only these prefixes (local iteration); argv[4]
+# skips these (large-scale replays, e.g. q70 at sf1: the oracle's raw
+# id-level blocked join needs ~1e9 single-node levenshtein calls — it is
+# exact-compared at smaller sf instead)
+def prefixes(i):
+    return sys.argv[i].split(",") if len(sys.argv) > i and sys.argv[i] != "-" else None
+keep, skips = prefixes(3), prefixes(4) or []
+oracle = {k: v for k, v in oracle.items()
+          if (keep is None or any(k.startswith(p) for p in keep))
+          and not any(k.startswith(p) for p in skips)}
+if not oracle:
+    sys.exit(f"no oracle query selected from {outdir}/oracle_sql.json "
+             f"(keep={keep}, skip={skips}); nothing was compared")
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"create view {t} as select * from '{sfdir}/{t}.parquet'")
