@@ -456,7 +456,8 @@ object actions {
             throw new FlowException("cacheAsParquet needs a flow temp folder"))
           val path = new Path(tmpRoot, label).toString
           ds.write.mode(SaveMode.Overwrite).parquet(path)
-          ctx.spark.read.parquet(path)
+          // the producer's schema: no footer-reading inference job
+          ctx.spark.read.schema(ds.schema).parquet(path)
         }
       }
 

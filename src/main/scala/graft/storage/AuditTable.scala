@@ -1,9 +1,10 @@
 package graft.storage
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
 
@@ -28,6 +29,10 @@ import java.sql.Timestamp
   *
   * Instances are one-shot for mutations (reference AuditTableFile.scala:222):
   * `append`/`compact` invalidate the handle; use the returned table.
+  *
+  * The handle carries the table's data [[schema]], recorded by the writes
+  * and kept in the `.regioninfo` cache, so every read opens the parquet
+  * files with it and starts no schema-inference job.
   */
 class AuditTable(
     val info: AuditTableInfo,
@@ -35,13 +40,15 @@ class AuditTable(
     val basePath: Path,
     ops: FileStorageOps,
     spark: SparkSession,
-    val includeHot: Boolean = true) {
+    val includeHot: Boolean = true,
+    recordedSchema: Option[StructType] = None) {
 
   import AuditTable._
 
   checkMeta(info)
 
   private var modified = false
+  private var knownSchema = recordedSchema
 
   def tableName: String = info.tableName
   def tablePath: Path = new Path(basePath, tableName)
@@ -76,6 +83,21 @@ class AuditTable(
   def getLatestTimestamp: Option[Timestamp] =
     activeRegions.map(_.maxLastUpdated).maxOption(Ordering.by((_: Timestamp).getTime))
 
+  /** The merged schema of every region's data columns (partition columns
+    * excluded, `_de_last_updated` included): the columns appended first
+    * come first, and every field is nullable. A handle built without one
+    * (and with regions) infers it once with a `mergeSchema` read and keeps
+    * it; a table without regions has the empty schema. */
+  def schema: StructType = synchronized {
+    knownSchema.getOrElse {
+      val inferred =
+        if (regions.isEmpty) new StructType()
+        else ops.openParquetMerged(tablePath).map(dataSchemaOf).getOrElse(new StructType())
+      knownSchema = Some(inferred)
+      inferred
+    }
+  }
+
   // -------------------------------------------------------------- append ---
 
   /** Append `ds` as one new hot region, stamping `_de_last_updated` from
@@ -109,13 +131,23 @@ class AuditTable(
             coalesce(col(c).cast("string"), lit("null"))))).otherwise(cast))
       case None => ds.toDF().withColumn(AuditColumn, lit(appendTimestamp))
     }
+    // merged before anything is staged: a column whose type conflicts with
+    // the table's would otherwise land as a region that fails every read
+    val merged =
+      try GraftSqlBridge.mergeSchemas(schema, stamped.schema,
+        spark.sessionState.conf.caseSensitiveAnalysis)
+      catch {
+        case scala.util.control.NonFatal(e) => throw new StorageException(
+          s"append to [$tableName]: its schema ${stamped.schema.simpleString} does not " +
+            s"merge with the table's ${schema.simpleString}: ${e.getMessage}", e)
+      }
     val region = nextRegionId
     val dest = s"$tableName/$TypeColumn=$HotType/$RegionColumn=$region"
     val (cnt, maxTs) = writeRegionWithStats(dest, stamped)
-    if (pkBloomEnabled) writeRegionBloom(HotType, region, cnt)
+    if (pkBloomEnabled) writeRegionBloom(HotType, region, cnt, merged)
     val newRegion = AuditTableRegionInfo(
       tableName, HotType, region, appendTimestamp, isDeprecated = false, cnt, maxTs)
-    reopened(regions :+ newRegion)
+    reopened(regions :+ newRegion, merged)
   }
 
   /** Write a region and collect its stats (count + max audit ts) from the
@@ -142,9 +174,10 @@ class AuditTable(
 
   // ------------------------------------------------------------- queries ---
 
-  /** Read all active regions as one DataFrame (partition-pruned to the
-    * region ids, schema-merged for evolution). */
-  private def readRegions(regs: Seq[AuditTableRegionInfo]): Option[DataFrame] = {
+  /** Read the given regions as one DataFrame (partition-pruned to the
+    * region ids, read with the table's [[schema]], so a column a region
+    * lacks reads as null). */
+  private[storage] def readRegions(regs: Seq[AuditTableRegionInfo]): Option[DataFrame] = {
     if (regs.isEmpty) None
     else {
       // Cross-process guard (round-12 verdict item 8): a region this handle
@@ -152,7 +185,7 @@ class AuditTable(
       // compaction in another process. Partition discovery would then just
       // not find the directory and the region-IN filter would silently
       // return a frame MISSING those rows — wrong data, no error. The
-      // existence check runs AFTER openParquet (round-13, ADVICE): file
+      // existence check runs AFTER the open (round-13, ADVICE): file
       // listing happens at DataFrame CONSTRUCTION, so ordering the check
       // after it closes the race completely — a region trashed before the
       // listing is caught here (it cannot reappear: region ids are never
@@ -161,7 +194,7 @@ class AuditTable(
       // FileNotFoundException. No silent-drop window remains. Cost: one
       // fs.exists per region — bounded, because keeping region counts low
       // is what compaction is FOR.
-      val opened = ops.openParquet(Seq(tablePath)).map { df =>
+      val opened = ops.openParquet(tablePath, schema).map { df =>
         df.where(col(RegionColumn).isin(regs.map(_.storeRegion): _*))
           .drop(TypeColumn, RegionColumn)
       }
@@ -221,8 +254,8 @@ class AuditTable(
     xxhash64(info.primaryKeys.map(col): _*)
 
   private def writeRegionBloom(storeType: String, region: String,
-      rowCount: Long): Unit = {
-    val df = ops.openParquet(Seq(regionPath(storeType, region)))
+      rowCount: Long, tableSchema: StructType): Unit = {
+    val df = ops.openParquet(regionPath(storeType, region), tableSchema)
       .getOrElse(return)
     val filter = df.select(pkHash.as("_graft_pk_hash"))
       .stat.bloomFilter("_graft_pk_hash", math.max(rowCount, 1L), pkBloomFpp)
@@ -277,11 +310,11 @@ class AuditTable(
     // ONE table open: the same frame supplies the PK schema for probe
     // hashing and, filtered to the surviving regions (RegionColumn is a
     // partition column, so the isin prunes at the scan), the data read —
-    // a second openParquet would re-list the whole table on the exact
+    // a second open would re-list the whole table on the exact
     // fast path the sidecars keep cheap. Created-but-never-appended tables
     // (only .table_info on disk) short-circuit like snapshot() does.
     if (readableRegions.isEmpty) None
-    else ops.openParquet(Seq(tablePath)).flatMap { raw =>
+    else ops.openParquet(tablePath, schema).flatMap { raw =>
       val pkTypes = info.primaryKeys.map(raw.schema(_).dataType)
       def probe(k: Seq[Any]): Seq[org.apache.spark.sql.Column] =
         k.zip(pkTypes).map { case (v, t) => lit(v).cast(t) }
@@ -407,7 +440,7 @@ class AuditTable(
     val newRegionId = nextRegionId
     val dest = s"$tableName/$TypeColumn=$ColdType/$RegionColumn=$newRegionId"
     val (cnt, maxTs) = writeRegionWithStats(dest, sized)
-    if (pkBloomEnabled) writeRegionBloom(ColdType, newRegionId, cnt)
+    if (pkBloomEnabled) writeRegionBloom(ColdType, newRegionId, cnt, schema)
     // CRASH-RECOVERY CONTRACT (round-13 verdict item 7; every point below
     // is executed by CrashRecoverySpec with an injected kill):
     //  - killed BEFORE the region publish ("publish.staged"): destination
@@ -447,15 +480,16 @@ class AuditTable(
       m.storeType == r.storeType && m.storeRegion == r.storeRegion))
     val newRegion = AuditTableRegionInfo(tableName, ColdType, newRegionId,
       compactTs, isDeprecated = false, cnt, maxTs)
-    reopened(survivors :+ newRegion)
+    reopened(survivors :+ newRegion, schema)
   }
 
-  private def reopened(newRegions: Seq[AuditTableRegionInfo]): AuditTable = {
+  private def reopened(newRegions: Seq[AuditTableRegionInfo],
+      newSchema: StructType): AuditTable = {
     // refresh the region cache so the next open of this table needs no
     // parquet scan; cleared-then-rewritten around the rewrite itself is not
     // needed because a stale cache is detected against the folder layout
-    ops.writeRegionInfoCache(basePath, tableName, newRegions)
-    new AuditTable(info, newRegions, basePath, ops, spark, includeHot)
+    ops.writeRegionInfoCache(basePath, tableName, newRegions, newSchema)
+    new AuditTable(info, newRegions, basePath, ops, spark, includeHot, Some(newSchema))
   }
 
   override def toString: String =
@@ -477,6 +511,10 @@ object AuditTable {
   /** `meta` key overriding the sidecar false-positive rate (default 0.01). */
   val PkBloomFppKey = "pkBloomFpp"
 
+  /** `df`'s schema without the partition columns of the folder layout. */
+  private[storage] def dataSchemaOf(df: DataFrame): StructType =
+    StructType(df.schema.filterNot(f => f.name == TypeColumn || f.name == RegionColumn))
+
   /** Rejects a `meta` value the bloom sidecars would only fail on after an
     * append's region is already live (a retry would then duplicate it). */
   private def checkMeta(info: AuditTableInfo): Unit = {
@@ -494,7 +532,10 @@ trait CompactionPartitioner {
   def numPartitions(df: DataFrame, totalRows: Long): Int
 }
 
-/** Sample rows, estimate mean in-memory size, target `bytesPerPartition`. */
+/** Sample rows, estimate mean in-memory size, target `bytesPerPartition`.
+  * Each row is estimated as its values only: a collected row also points at
+  * the frame's shared schema, which the estimator would otherwise walk
+  * again for every row (3.8x the values' size on a 17-column row). */
 final case class TotalBytesPartitioner(
     bytesPerPartition: Long = 250000000L, maxSampleRows: Int = 1000)
   extends CompactionPartitioner {
@@ -503,7 +544,8 @@ final case class TotalBytesPartitioner(
     val sample = df.limit(maxSampleRows).collect()
     val meanBytes =
       if (sample.isEmpty) 100.0
-      else sample.map(r => org.apache.spark.util.SizeEstimator.estimate(r).toDouble).sum / sample.length
+      else sample.map(r => org.apache.spark.util.SizeEstimator.estimate(
+        org.apache.spark.sql.Row.fromSeq(r.toSeq)).toDouble).sum / sample.length
     math.max(1, math.ceil(totalRows * meanBytes / bytesPerPartition).toInt)
   }
 }

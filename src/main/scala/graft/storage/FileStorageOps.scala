@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.io.{InputStreamReader, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
@@ -29,13 +30,16 @@ final case class AuditTableRegionInfo(
     maxLastUpdated: java.sql.Timestamp)
 
 /** Filesystem + parquet primitives for the storage layer: atomic folder
-  * moves via staging, mergeSchema multi-path opens, `.table_info`
-  * round-trip, Trash with age-based purge.
+  * moves via staging, parquet opens with a known schema (or, where none is
+  * recorded, a `mergeSchema` inference), `.table_info` and `.regioninfo`
+  * round-trips, Trash with age-based purge.
   *
   * All writes stage into `.tmp` then `rename` — O(1) and atomic on
   * HDFS-like filesystems, so readers never observe partial regions.
   */
 class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
+
+  import FileStorageOps.SchemaLine
 
   /** Resolved from the storage base path when given: a warehouse on a
     * non-default scheme (s3a:// under an hdfs:// default FS) otherwise
@@ -46,12 +50,18 @@ class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
     .map(_.getFileSystem(spark.sparkContext.hadoopConfiguration))
     .getOrElse(FileSystem.get(spark.sparkContext.hadoopConfiguration))
 
-  /** Open N region paths as one DataFrame with schema evolution. */
-  def openParquet(paths: Seq[Path]): Option[DataFrame] = {
-    val existing = paths.filter(fs.exists)
-    if (existing.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(existing.map(_.toString): _*))
-  }
+  /** Open `path` with a schema recorded by the writer: files are listed
+    * here, as for any parquet open, but no footer is read, so no Spark job
+    * starts. None when the folder does not exist. */
+  def openParquet(path: Path, schema: StructType): Option[DataFrame] =
+    if (!fs.exists(path)) None
+    else Some(spark.read.schema(schema).parquet(path.toString))
+
+  /** Open `path` inferring the union of its files' schemas: one Spark job
+    * reads every footer. For a table whose schema is not recorded. */
+  def openParquetMerged(path: Path): Option[DataFrame] =
+    if (!fs.exists(path)) None
+    else Some(spark.read.option("mergeSchema", "true").parquet(path.toString))
 
   /** Write parquet into `dest` atomically: stage under `<base>/.tmp`, then
     * move over. */
@@ -179,13 +189,16 @@ class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
 
   // -------------------------------------------------------- region cache ---
 
-  /** Persist region stats to `<base>/.regioninfo/<table>` so reopening a
-    * table needs no parquet scan over its regions (the reference keeps the
-    * same cache as a coalesce(1) parquet file — here it is a plain text
-    * file written through the FS API: zero Spark jobs on the mutation path,
-    * identical validation semantics). Written atomically via temp+rename. */
+  /** Persist region stats and the table's data schema to
+    * `<base>/.regioninfo/<table>` so reopening a table needs no parquet
+    * scan over its regions and reading it no footer scan (the reference
+    * keeps the region cache as a coalesce(1) parquet file — here it is a
+    * plain text file written through the FS API: zero Spark jobs on the
+    * mutation path, identical validation semantics). The first line is
+    * `schema|<json>`, then one `|`-separated line per region. Written
+    * atomically via temp+rename. */
   def writeRegionInfoCache(base: Path, tableName: String,
-      regions: Seq[AuditTableRegionInfo]): Unit = {
+      regions: Seq[AuditTableRegionInfo], schema: StructType): Unit = {
     val dir = new Path(base, ".regioninfo")
     fs.mkdirs(dir)
     // unique temp name: concurrent writers must not clobber each other's
@@ -193,11 +206,14 @@ class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
     val tmp = new Path(dir, s".$tableName.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
     val w = new OutputStreamWriter(out, StandardCharsets.UTF_8)
-    try regions.foreach { r =>
-      w.write(Seq(r.storeType, r.storeRegion, r.createdOn.getTime.toString,
-        r.isDeprecated.toString, r.count.toString, r.maxLastUpdated.getTime.toString)
-        .mkString("|"))
-      w.write("\n")
+    try {
+      w.write(s"$SchemaLine|${schema.json}\n")
+      regions.foreach { r =>
+        w.write(Seq(r.storeType, r.storeRegion, r.createdOn.getTime.toString,
+          r.isDeprecated.toString, r.count.toString, r.maxLastUpdated.getTime.toString)
+          .mkString("|"))
+        w.write("\n")
+      }
     } finally w.close()
     val dest = new Path(dir, tableName)
     if (fs.exists(dest)) fs.delete(dest, false)
@@ -211,19 +227,29 @@ class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
       scala.util.Try(fs.delete(tmp, false))
   }
 
-  def readRegionInfoCache(base: Path, tableName: String): Option[Seq[AuditTableRegionInfo]] = {
+  /** The cached regions and schema; None when the cache is missing,
+    * corrupt or of the older format without a schema line — each of which
+    * the caller rebuilds from a scan. */
+  def readRegionInfoCache(base: Path, tableName: String)
+      : Option[(Seq[AuditTableRegionInfo], StructType)] = {
     val p = new Path(base, s".regioninfo/$tableName")
     if (!fs.exists(p)) None
     else {
       val in = new java.io.BufferedReader(new InputStreamReader(fs.open(p), StandardCharsets.UTF_8))
       try {
-        val lines = Iterator.continually(in.readLine()).takeWhile(_ != null).toSeq
-        Some(lines.filter(_.nonEmpty).map { line =>
-          val f = line.split("\\|", -1)
-          AuditTableRegionInfo(tableName, f(0), f(1),
-            new java.sql.Timestamp(f(2).toLong), f(3).toBoolean, f(4).toLong,
-            new java.sql.Timestamp(f(5).toLong))
-        })
+        val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+          .filter(_.nonEmpty).toSeq
+        lines.headOption.filter(_.startsWith(s"$SchemaLine|")).map { head =>
+          val schema = DataType.fromJson(head.stripPrefix(s"$SchemaLine|"))
+            .asInstanceOf[StructType]
+          val regions = lines.tail.map { line =>
+            val f = line.split("\\|", -1)
+            AuditTableRegionInfo(tableName, f(0), f(1),
+              new java.sql.Timestamp(f(2).toLong), f(3).toBoolean, f(4).toLong,
+              new java.sql.Timestamp(f(5).toLong))
+          }
+          (regions, schema)
+        }
       } catch {
         case _: Exception => None // corrupt cache -> caller rebuilds from a scan
       } finally in.close()
@@ -268,6 +294,9 @@ class FileStorageOps(spark: SparkSession, fsBase: Option[Path] = None) {
 }
 
 object FileStorageOps {
+
+  /** Tag of the `.regioninfo` line holding the table's schema as JSON. */
+  private val SchemaLine = "schema"
 
   private val MicrosKey = "spark.sql.parquet.outputTimestampType"
   // per-session reentrancy state: (active writer count, conf value to restore)

@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
 
@@ -60,30 +61,34 @@ object Storage {
       ops.sweepStaleStaging(base, System.currentTimeMillis(), stagingMaxAgeMs)): Unit
     val tablePath = new Path(base, tableName)
     ops.readTableInfo(tablePath).map { info =>
-      new AuditTable(info, inferRegions(spark, ops, tablePath, tableName), base, ops, spark,
-        includeHot)
+      val (regions, schema) = inferRegions(ops, tablePath, tableName)
+      new AuditTable(info, regions, base, ops, spark, includeHot, schema)
     }
   }
 
-  /** Region inference: the `.regioninfo` cache is used when it matches the
-    * actual partition folder layout (every mutation refreshes it, so the
-    * usual open touches NO region data at all); a missing/stale/corrupt
-    * cache falls back to folder globs + one grouped parquet scan for counts
-    * and max audit timestamps, then rewrites the cache. Batched per table —
-    * at fleet scale callers page tables ~20 at a time (reference
+  /** Region and schema inference: the `.regioninfo` cache is used when it
+    * matches the actual partition folder layout (every mutation refreshes
+    * it, so the usual open touches NO region data at all and starts no
+    * Spark job); a missing/stale/corrupt/schema-less cache falls back to
+    * folder globs + one grouped `mergeSchema` parquet scan for counts, max
+    * audit timestamps and the schema, then rewrites the cache. The schema
+    * is None only for a table without regions. Batched per table — at
+    * fleet scale callers page tables ~20 at a time (reference
     * AuditTableFile.scala:295-421). */
-  private def inferRegions(spark: SparkSession, ops: FileStorageOps,
-      tablePath: Path, tableName: String): Seq[AuditTableRegionInfo] = {
+  private def inferRegions(ops: FileStorageOps, tablePath: Path, tableName: String)
+      : (Seq[AuditTableRegionInfo], Option[StructType]) = {
     import AuditTable._
     val typeDirs = ops.listDirs(tablePath).filter(_.getName.startsWith(s"$TypeColumn="))
     val regionDirs = typeDirs.flatMap(td => ops.listDirs(td).map(rd =>
       (td.getName.stripPrefix(s"$TypeColumn="), rd.getName.stripPrefix(s"$RegionColumn="))))
     val cached = ops.readRegionInfoCache(tablePath.getParent, tableName)
-      .filter(_.map(r => (r.storeType, r.storeRegion)).toSet == regionDirs.toSet)
-    cached.getOrElse {
-      if (regionDirs.isEmpty) Seq.empty
+      .filter(_._1.map(r => (r.storeType, r.storeRegion)).toSet == regionDirs.toSet)
+    cached.map { case (regions, schema) => (regions, Some(schema)) }.getOrElse {
+      if (regionDirs.isEmpty) (Seq.empty, None)
       else {
-        val stats = spark.read.parquet(tablePath.toString)
+        val raw = ops.openParquetMerged(tablePath).get // it holds the region dirs
+        val schema = dataSchemaOf(raw)
+        val stats = raw
           .groupBy(col(TypeColumn), col(RegionColumn))
           .agg(count(lit(1)).as("cnt"), max(col(AuditColumn)).as("maxts"))
           .collect()
@@ -96,8 +101,8 @@ object Storage {
         }.sortBy(_.storeRegion)
         // best-effort: a pure read must not fail because the cache could not
         // be refreshed (read-only FS, concurrent writers racing the rename)
-        scala.util.Try(ops.writeRegionInfoCache(tablePath.getParent, tableName, rebuilt))
-        rebuilt
+        scala.util.Try(ops.writeRegionInfoCache(tablePath.getParent, tableName, rebuilt, schema))
+        (rebuilt, Some(schema))
       }
     }
   }

@@ -93,6 +93,31 @@ class SparkFlowSpec extends SparkTestBase with Matchers {
       enriched.queryExecution.logical.toString.toLowerCase should include("parquet")
     }
 
+    it("cacheAsParquet keeps the producer's column names, types and order, also when empty") {
+      val produce = (nation: org.apache.spark.sql.DataFrame) => nation.select(
+        col("n_name"), col("n_nationkey"),
+        lit(1.5).cast("decimal(10,2)").as("amount"),
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("at"),
+        struct(col("n_regionkey").as("region"), upper(col("n_name")).as("upper")).as("nested"),
+        array(col("n_name")).as("names"))
+      val flow = Graft.sparkFlow(spark, s"$tmpDir/cache-schema-tmp")
+        .copy(removeTempAfterExecution = false)
+        .openFileParquet(s"${sf()}/nation.parquet", "nation")
+        .transform("nation")("shaped")(produce)
+        .transform("shaped")("none")(_.filter(lit(false)))
+        .cacheAsParquet("shaped", "none")
+      val (_, done) = executor.execute(flow)
+      val expected = produce(spark.read.parquet(s"${sf()}/nation.parquet"))
+        .schema.map(f => (f.name, f.dataType))
+      Seq("shaped", "none").foreach { label =>
+        val cached = done.inputs.get[org.apache.spark.sql.Dataset[_]](label)
+        cached.queryExecution.logical.toString.toLowerCase should include("parquet")
+        cached.schema.map(f => (f.name, f.dataType)) shouldBe expected
+      }
+      done.inputs.get[org.apache.spark.sql.Dataset[_]]("shaped").count() shouldBe 25
+      done.inputs.get[org.apache.spark.sql.Dataset[_]]("none").count() shouldBe 0
+    }
+
     it("cacheAsPartitionedParquet lays out the cache for downstream partition pruning") {
       val flow = Graft.sparkFlow(spark, s"$tmpDir/pcache-tmp")
         .copy(removeTempAfterExecution = false)

@@ -116,6 +116,18 @@ class StorageSpec extends SparkTestBase with Matchers {
       rows shouldBe Array((1L, "new"))
     }
 
+    it("TotalBytesPartitioner sizes from the rows' values, not their shared schema") {
+      val sample = spark.range(1000).select(col("id"),
+        (col("id") % 7).cast("int").as("qty"), (col("id") * 1.5).as("price"),
+        format_string("item-%06d", col("id")).as("name"),
+        lit(ts("2024-01-01 00:00:00")).as(AuditTable.AuditColumn))
+      // 208 B per row on a 64-bit JVM with compressed oops: 21 partitions
+      // of 10 MB for 1M rows. Estimating the collected rows themselves
+      // walked the shared schema for every row (896 B, 90 partitions).
+      TotalBytesPartitioner(bytesPerPartition = 10000000L)
+        .numPartitions(sample, totalRows = 1000000L) shouldBe 21
+    }
+
     it("z-orders the compacted region without changing its contents") {
       val t0 = mkTable("zcompact")
       val rnd = new scala.util.Random(5)
