@@ -83,6 +83,17 @@ object Binning {
         col("bin_min"), col("bin_max"))
   }
 
+  /** Equal-width bin in [1, nBins] of `v` over [lo, hi], values outside the
+    * range clamped into the edge bins; a degenerate range (hi <= lo) puts
+    * every value in bin 1. The histogram pass of [[approxQuantiles]] (whose
+    * range is the data's own) and the fixed-range streaming sketch
+    * ([[graft.streaming.Streaming.quantileSketchStream]]) both bin with it,
+    * so [[quantilesFromHistogram]] answers either one identically. */
+  private[graft] def clampedBin(v: Column, lo: Column, hi: Column, nBins: Int): Column =
+    when(hi > lo, greatest(least(floor((v - lo) / ((hi - lo) / nBins)).cast("long") + 1L,
+      lit(nBins.toLong)), lit(1L)))
+      .otherwise(1L)
+
   /** Mergeable histogram quantiles — the constant-state alternative to an
     * exact sort-based percentile at 100 TB: two map-combined passes (min/max
     * + per-bin counts), a bins-sized cumulative frame, and linear
@@ -105,11 +116,8 @@ object Binning {
     val v = col(valueCol).cast("double")
     val stats = df.agg(min(v).as("__lo"), max(v).as("__hi"),
       count(v).cast("long").as("__n"))
-    val wid = (col("__hi") - col("__lo")) / nBins
     val counts = df.where(v.isNotNull).crossJoin(broadcast(stats))
-      .select(when(col("__hi") > col("__lo"),
-        least(floor((v - col("__lo")) / wid).cast("long") + 1L, lit(nBins.toLong)))
-        .otherwise(1L).as("bin"))
+      .select(clampedBin(v, col("__lo"), col("__hi"), nBins).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("cnt"))
     // bins-sized frame: the single-partition running sum is over <= nBins rows
     val wcum = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))

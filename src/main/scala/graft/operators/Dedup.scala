@@ -637,12 +637,9 @@ object Dedup {
       benchTextCol: String,
       n: Int = 8,
       maxHits: Long = 0L): DataFrame = {
-    require(n > 0, "n must be positive")
-    val gh = gramHashUdf(n)
-    val benchGrams = benchmark
-      .select(explode(gh(col(benchTextCol))).as("_gh"))
-      .distinct()
+    val benchGrams = benchmarkGrams(benchmark, benchTextCol, n)
       .withColumn("_hit", lit(1L))
+    val gh = gramHashUdf(n)
     // ONE pass over the corpus: the doc's gram count rides along every
     // exploded row, the broadcast left join marks benchmark grams, and the
     // per-doc aggregation is map-combined — no second shingling, no
@@ -658,6 +655,16 @@ object Dedup {
       .agg(first(col("n_grams")).as("n_grams"),
         sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
       .withColumn("contaminated", col("n_hits") > maxHits)
+  }
+
+  /** The benchmark's distinct word-n-gram hashes (one `_gh` row each): the
+    * set both [[decontaminate]] and the streaming twin test documents
+    * against. `n` must be positive — at n <= 0 every window is the empty
+    * gram, so every document with a token would match. */
+  private[graft] def benchmarkGrams(benchmark: DataFrame, benchTextCol: String,
+      n: Int): DataFrame = {
+    require(n > 0, "n must be positive")
+    benchmark.select(explode(gramHashUdf(n)(col(benchTextCol))).as("_gh")).distinct()
   }
 
   /** Exact-substring duplication profile: for every document, how many of

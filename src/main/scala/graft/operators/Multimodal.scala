@@ -516,7 +516,9 @@ object Multimodal {
   }
 
   /** Image profiles for a (id, content) frame —
-    * (doc_id, width, height, channels, phash) in one decode per row. */
+    * (doc_id, width, height, channels, phash) in one decode per row. A
+    * stateless narrow map, so it runs unchanged on a streaming frame
+    * (StreamingSpec pins stream == batch, as for [[audioProfiles]]). */
   def imageProfiles(df: DataFrame, idCol: String, contentCol: String,
       gridX: Int = 10, gridY: Int = 6): DataFrame =
     decodePartitioned(df, idCol, contentCol, imageProfileKernel(gridX, gridY))(

@@ -626,7 +626,9 @@ object Ranking {
     * 10⁸ rows combine before the shuffle where a
     * `row_number().over(partitionBy(key))` window would drag them all
     * through one task. Deterministic total order: score DESC, id ASC.
-    * Output: key columns + (rank, score, id), rank 1-based. */
+    * Output: key columns + (rank, score, id), rank 1-based. Runs on a
+    * streaming frame in Complete output as a leaderboard whose state is at
+    * most k pairs per key. */
   def topKPerKey(df: DataFrame, keys: Seq[Column], score: Column, id: Column,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")

@@ -133,8 +133,7 @@ object Sampling {
     * [[mixtureSampleWithReplacement]]: per source, the full-epoch count
     * and the fractional-epoch keep threshold in integer micro-units.
     * Fit it on a batch profile, then [[applyMixtureRates]] applies it
-    * map-side to any frame — including a STREAMING one
-    * ([[graft.streaming.Streaming.mixtureUpsampleStream]]), where a live
+    * map-side to any frame — including a STREAMING one, where a live
     * count-based refit is impossible by construction. */
   def mixtureRates(df: DataFrame, sourceCol: String,
       weights: Map[String, Double], maxEpochs: Int = 4): DataFrame = {
@@ -161,7 +160,11 @@ object Sampling {
 
   /** Apply a [[mixtureRates]] recipe: broadcast rates join, bounded epoch
     * explode, hash-stable fractional draw — pure map-side (no shuffle, no
-    * state), so it runs unchanged over batch and streaming frames.
+    * state), so it runs unchanged over batch and streaming frames, and a
+    * stream's rows equal the batch rows over the same input (StreamingSpec
+    * pins it). Keep the recipe frozen on a stream: a live refit would let
+    * early batches decide membership differently than a replay, so refit
+    * per profile run and restart the stream with the new recipe.
     * Unweighted sources drop (inner join). */
   def applyMixtureRates(df: DataFrame, rates: DataFrame, sourceCol: String,
       key: Column): DataFrame = {

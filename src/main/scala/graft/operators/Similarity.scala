@@ -558,39 +558,13 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank").cast("long").as("rank"))
   }
 
-  /** IVF-style ANN: partition the corpus into `nLists` Voronoi cells around
-    * k-means centroids, then search only the `nProbe` cells nearest each
-    * query — the classic inverted-file index, here as pure DataFrame ops.
-    *
-    * Centroids are data-dependent but deterministic: seeded with the first
-    * `nLists` vectors by id order, refined by `lloydIters` Lloyd rounds
-    * (assignment = argmin over a broadcast centroid array; update = grouped
-    * per-dimension mean). Driver-side state is bounded at nLists x dim
-    * doubles — never corpus-sized.
-    */
-  /** Nearest-centroid assignment (strict-< argmin, first wins on ties).
-    * Kept as the reference implementation for the equality spec and the
-    * UDF-vs-expression probe; production paths use [[cellAssign]]. */
-  private[graft] def cellAssignUdf(cents: Array[Array[Double]]) =
-    udf { (v: Array[Double]) =>
-      var best = 0; var bestD = Double.MaxValue
-      var ci = 0
-      while (ci < cents.length) {
-        val cent = cents(ci); var d = 0.0; var i = 0
-        while (i < v.length) { val x = v(i) - cent(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = ci }
-        ci += 1
-      }
-      best
-    }
-
   /** Nearest-centroid assignment via the native codegen'd
     * [[graft.sql.CellAssign]] expression: the centroid table rides into the
     * generated code once as a double[][] reference and the vector is read
     * from ArrayData IN PLACE — the UDF pays a full Array[Double] copy per
     * row at the serialization boundary, pure overhead on a corpus-scale
-    * encode. Same strict-< argmin contract as [[cellAssignUdf]]
-    * (spec-pinned equal). */
+    * encode. Strict-< argmin, first wins on ties (CellAssignSpec pins it
+    * equal to a reference UDF). */
   private[graft] def cellAssign(spark: org.apache.spark.sql.SparkSession,
       cents: Array[Array[Double]])(v: Column): Column = {
     graft.sql.functions.ensureRegistered(spark)
@@ -658,6 +632,16 @@ object Similarity {
     centroids
   }
 
+  /** IVF-style ANN: partition the corpus into `nLists` Voronoi cells around
+    * k-means centroids, then search only the `nProbe` cells nearest each
+    * query — the classic inverted-file index, here as pure DataFrame ops.
+    *
+    * Centroids are data-dependent but deterministic: seeded with the first
+    * `nLists` vectors by id order, refined by `lloydIters` Lloyd rounds
+    * (assignment = argmin over a broadcast centroid array; update = grouped
+    * per-dimension mean). Driver-side state is bounded at nLists x dim
+    * doubles — never corpus-sized.
+    */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,

@@ -75,7 +75,9 @@ object Sketches {
     array((0 until depth).map(d => bucket(item, d, width, family)): _*)
 
   /** Build the sketch: one row per non-empty (cm_depth, cm_bucket) cell
-    * with its count. At most depth×width rows. */
+    * with its count. At most depth×width rows. On a streaming frame
+    * (Complete/Update output) the aggregation state is the sketch itself,
+    * so a heavy-hitter monitor stays bounded over an unbounded item domain. */
   def countMinSketch(items: DataFrame, itemCol: String,
       depth: Int = 4, width: Int = 1024,
       family: CmHashFamily = Md5Hash): DataFrame = {
@@ -254,7 +256,8 @@ object Sketches {
 
   /** Per-group KMV sketch over `item`: `groupCols` plus a sorted-ascending
     * `kmv` array of the k smallest distinct item hashes. Buffer state is k
-    * longs per group and combines map-side ([[graft.sql.KmvSketch]]). */
+    * longs per group and combines map-side ([[graft.sql.KmvSketch]]); on a
+    * streaming frame that buffer is the whole per-group state. */
   def kmvSketch(df: DataFrame, groupCols: Seq[Column], item: Column,
       k: Int, family: CmHashFamily = Md5Hash): DataFrame = {
     graft.sql.functions.ensureRegistered(df.sparkSession)

@@ -1,31 +1,33 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import java.sql.Timestamp
 
-/** Structured Streaming operators for the event model.
+import graft.operators.{AnnIndex, Binning, Dedup, DedupIndex, Drift, Materialize, Ranking, Trend}
+import graft.storage.{AuditTableInfo, Storage}
+
+/** Structured Streaming shapes for the event model.
   *
-  * The reference is batch-only (SURVEY.md §1.3); this module extends the
-  * engine with the streaming shapes a large ingest pipeline needs, built on
-  * watermarked event time so state is bounded on unbounded input:
-  *   - windowed aggregation (tumbling/sliding),
-  *   - streaming dedup by key,
-  *   - session windows via `flatMapGroupsWithState` (custom state + event-time
-  *     timeout), the streaming twin of the batch sessionization query.
+  * The reference is batch-only (SURVEY.md §1.3). Streaming here is a thin
+  * layer over the batch operators: a batch operator whose plan is legal on a
+  * streaming frame runs on one unchanged — `Multimodal.imageProfiles` and
+  * `audioProfiles`, `Sampling.applyMixtureRates`, `Sketches.countMinSketch`
+  * and `kmvSketch`, `Ranking.topKPerKey` — and StreamingSpec pins each
+  * against its batch result. This module holds only what a stream needs
+  * beyond that, built on watermarked event time so state is bounded on
+  * unbounded input:
+  *   - windowed aggregation, dedup and joins (a watermark or a window the
+  *     batch operator has no column for),
+  *   - per-key state via `flatMapGroupsWithState` (sessions, rolling
+  *     scores, LOCF ticks, packing offsets), where the batch twin's window
+  *     function is not expressible over an unbounded stream,
+  *   - `foreachBatch` sinks that run a batch operator per micro-batch
+  *     against storage or a static index, all through one skeleton.
   */
 object Streaming {
-
-  /** Read an events-shaped parquet folder as a stream (one-file-per-trigger
-    * default keeps local tests deterministic). */
-  def readEventStream(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(spark.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(path)
 
   /** Tumbling/sliding event-time counts per event type. Watermark bounds
     * state; slide == window gives tumbling semantics. */
@@ -328,22 +330,6 @@ object Streaming {
     l.join(r, keyCond && timeCond, joinType)
   }
 
-  /** Streaming media profiling twins. The batch kernels
-    * ([[graft.operators.Multimodal.imageProfileKernel]] /
-    * `audioProfileKernel`) are stateless narrow maps with per-partition
-    * codec init, so the SAME functions run on a streaming frame unchanged
-    * — append mode, no watermark, no stream-side shuffle. These aliases
-    * exist to name that contract; StreamingSpec pins bit-equality between
-    * a MemoryStream ingest and the batch path over identical payloads, so
-    * backfill and live ingest can never disagree on a profile. */
-  def imageProfileStream(media: DataFrame, idCol: String = "doc_id",
-      contentCol: String = "content"): DataFrame =
-    graft.operators.Multimodal.imageProfiles(media, idCol, contentCol)
-
-  def audioProfileStream(media: DataFrame, idCol: String = "doc_id",
-      contentCol: String = "content"): DataFrame =
-    graft.operators.Multimodal.audioProfiles(media, idCol, contentCol)
-
   /** Streaming content dedup: canonical md5 fingerprint per document, state
     * bounded by the watermark (`dropDuplicatesWithinWatermark`) — the
     * streaming twin of batch exact dedup, safe on unbounded input because
@@ -362,15 +348,15 @@ object Streaming {
     * by definition) and broadcast; each arriving doc is scored by one
     * in-row set-membership pass — completely stateless, no stream-side
     * shuffle, works in append mode with no watermark. The batch twin
-    * ([[graft.operators.Dedup.decontaminate]]) shares the same gram-hash
-    * function, so flags agree between backfill and live ingest. */
+    * ([[graft.operators.Dedup.decontaminate]]) shares the same benchmark
+    * gram set, gram-hash function and `n > 0` check, so flags agree between
+    * backfill and live ingest. The batch plan itself is not reused: its
+    * per-doc aggregation would be unbounded state on a stream. */
   def decontaminateStream(docs: DataFrame, textCol: String, benchmark: DataFrame,
       benchTextCol: String, n: Int = 8, maxHits: Long = 0L): DataFrame = {
-    import graft.operators.Dedup
+    val benchSet: Set[Long] = Dedup.benchmarkGrams(benchmark, benchTextCol, n)
+      .collect().map(_.getLong(0)).toSet
     val gh = Dedup.gramHashUdf(n)
-    val benchSet: Set[Long] = benchmark
-      .select(explode(gh(col(benchTextCol))).as("_gh"))
-      .distinct().collect().map(_.getLong(0)).toSet
     val bc = docs.sparkSession.sparkContext.broadcast(benchSet)
     val hitsUdf = udf { (ghs: Array[Long]) => ghs.count(bc.value.contains).toLong }
     docs
@@ -393,22 +379,12 @@ object Streaming {
     * never grows. The reference frame re-resolves per batch (a
     * metastore-backed snapshot picks up updates). */
   def driftMonitorStream(stream: DataFrame, reference: DataFrame,
-      cat: Column, outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Drift
-    val monitorBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
-      if (!batch.isEmpty) {
-        Drift.driftSummary(batch, reference, cat)
-          .withColumn("batch_id", lit(epochId))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
+      cat: Column, outPath: String, checkpoint: String): StreamingQuery =
+    eachNonEmptyBatch(stream, checkpoint) { (batch, epochId) =>
+      Drift.driftSummary(batch, reference, cat)
+        .withColumn("batch_id", lit(epochId))
+        .write.mode("append").parquet(outPath)
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(monitorBatch)
-      .start()
-  }
 
   /** Streaming BM25 retrieval serving: queries ARRIVE as a stream and are
     * answered against a STATIC pre-built inverted index
@@ -426,43 +402,20 @@ object Streaming {
     * serving loop runs forever on bounded memory. */
   def bm25ServeStream(queries: DataFrame, index: DataFrame,
       queryIdCol: String, queryTextCol: String, k: Int,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Materialize, Ranking}
+      outPath: String, checkpoint: String): StreamingQuery = {
     // materialize HERE, not by caller convention: a raw bm25Index frame
     // would re-tokenize the corpus every micro-batch (idempotent if the
     // caller already materialized — one extra pass at start, then shared)
     val idx = Materialize(index)
-    val serveBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
-      if (!batch.isEmpty) {
-        // one directory per epoch, OVERWRITE: foreachBatch is
-        // at-least-once, so a replayed epoch rewrites its own partition
-        // instead of appending duplicate result rows; readers of outPath
-        // get batch_id back as a partition column
-        Ranking.bm25Retrieve(idx, batch, queryIdCol, queryTextCol, k)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$epochId")
-        ()
-      }
+    eachNonEmptyBatch(queries, checkpoint) { (batch, epochId) =>
+      // one directory per epoch, OVERWRITE: foreachBatch is
+      // at-least-once, so a replayed epoch rewrites its own partition
+      // instead of appending duplicate result rows; readers of outPath
+      // get batch_id back as a partition column
+      Ranking.bm25Retrieve(idx, batch, queryIdCol, queryTextCol, k)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$epochId")
     }
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(serveBatch)
-      .start()
   }
-
-  /** Streaming upsampling mixture: apply a FROZEN replication recipe
-    * ([[graft.operators.Sampling.mixtureRates]], fit on a batch profile of
-    * the corpus) to documents as they ARRIVE — live ingest shapes the
-    * training mixture at the door instead of in a later batch pass. Pure
-    * map-side (broadcast rates join, bounded epoch explode, hash-stable
-    * fractional draw), zero state, so output rows are BIT-IDENTICAL to the
-    * batch twin over the same rows (spec-pinned). Rates are frozen by
-    * construction: a live count-based refit would let early batches decide
-    * membership differently than a replay — refit per day/profile run and
-    * restart the sink with the new recipe. */
-  def mixtureUpsampleStream(docs: DataFrame, rates: DataFrame,
-      sourceCol: String, key: Column): DataFrame =
-    graft.operators.Sampling.applyMixtureRates(docs, rates, sourceCol, key)
 
   /** Streaming embedding-space drift monitor: per event-time window, the
     * top principal axis of the arriving embeddings and its alignment with
@@ -515,42 +468,6 @@ object Streaming {
         col("_e._3").as("drift"))
   }
 
-  /** Streaming count-min sketch: the running depth×width frequency sketch
-    * of an unbounded item stream — the streaming twin of
-    * [[graft.operators.Sketches.countMinSketch]]. The aggregation STATE is
-    * the sketch itself (at most depth×width cells), never per-item, so a
-    * heavy-hitter monitor runs forever on bounded memory over an unbounded
-    * item domain. Run with Complete/Update output; estimate against any
-    * snapshot with [[graft.operators.Sketches.countMinEstimate]]. */
-  def countMinStream(items: DataFrame, itemCol: String,
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    items
-      .select(posexplode(graft.operators.Sketches.buckets(
-        org.apache.spark.sql.functions.col(itemCol), depth, width))
-        .as(Seq("cm_depth", "cm_bucket")))
-      .groupBy("cm_depth", "cm_bucket")
-      .agg(count(lit(1)).as("cm_count"))
-
-  /** Streaming KMV distinct sketch: the running k-minimum-values state of
-    * an unbounded item stream, per group — the streaming twin of
-    * [[graft.operators.Sketches.kmvSketch]]. The aggregation STATE is the
-    * k smallest distinct hashes (k longs per group, merged incrementally
-    * by the graft_kmv buffer), so a "distinct users/docs so far" monitor
-    * runs forever on bounded memory — and its snapshots intersect/union
-    * with batch sketches of historical corpora via
-    * [[graft.operators.Sketches.kmvMerge]] /
-    * [[graft.operators.Sketches.kmvIntersectEstimate]]. Run with
-    * Complete/Update output; read the estimate off any snapshot with
-    * [[graft.operators.Sketches.kmvEstimate]]. */
-  def kmvDistinctStream(items: DataFrame, groupCols: Seq[String],
-      itemCol: String, k: Int = 256): DataFrame = {
-    graft.sql.functions.ensureRegistered(items.sparkSession)
-    items.groupBy(groupCols.map(org.apache.spark.sql.functions.col): _*)
-      .agg(call_function("graft_kmv",
-        graft.operators.Sketches.kmvHash(
-          org.apache.spark.sql.functions.col(itemCol)), lit(k)).as("kmv"))
-  }
-
   /** Streaming histogram sketch over a FIXED reference range: the running
     * (bin, cnt) state of an unbounded value stream — the streaming twin of
     * [[graft.operators.Binning.approxQuantiles]]'s histogram pass.
@@ -564,32 +481,26 @@ object Streaming {
   def quantileSketchStream(points: DataFrame, valueCol: String,
       lo: Double, hi: Double, nBins: Int = 256): DataFrame = {
     require(nBins > 0, s"nBins must be > 0, got $nBins")
-    val v = org.apache.spark.sql.functions.col(valueCol).cast("double")
-    val bin =
-      if (lo < hi)
-        greatest(least(floor((v - lit(lo)) / lit((hi - lo) / nBins)).cast("long") + 1L,
-          lit(nBins.toLong)), lit(1L))
-      else lit(1L)
+    val v = col(valueCol).cast("double")
     points.where(v.isNotNull)
-      .groupBy(bin.as("bin"))
+      .groupBy(Binning.clampedBin(v, lit(lo), lit(hi), nBins).as("bin"))
       .agg(count(lit(1)).as("cnt"))
   }
 
   /** Streaming windowed trend monitor: per (event-time window, key) OLS
     * slope/intercept/R² of `y` against event-time — the streaming twin of
     * [[graft.operators.Trend.groupTrend]] ("is this metric drifting,
-    * per segment, right now?"). The aggregation state per group is the
-    * SAME six sufficient statistics the batch operator map-combines
-    * (n, Σx, Σy, Σx², Σy², Σxy) — O(1) per window×key however many events
-    * arrive — and the watermark expires windows, so the monitor runs
-    * forever on bounded memory. x is seconds since the window start:
-    * centered per-window, which both keeps the closed form numerically
-    * sound and makes slopes comparable across windows (units: y per
-    * second). */
+    * per segment, right now?"), which it calls with the window as one more
+    * group. The aggregation state per group is that operator's six
+    * sufficient statistics (n, Σx, Σy, Σx², Σy², Σxy) — O(1) per
+    * window×key however many events arrive — and the watermark expires
+    * windows, so the monitor runs forever on bounded memory. x is seconds
+    * since the window start: centered per-window, which both keeps the
+    * closed form numerically sound and makes slopes comparable across
+    * windows (units: y per second). */
   def trendMonitorStream(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, watermark: String = "10 minutes",
       windowDuration: String = "1 hour", scale: Int = 6): DataFrame = {
-    val y = col(valueCol).cast("double")
     // window + x materialized BEFORE the aggregation (an agg function may
     // not reference the window alias it groups by), so the six sums see x
     // as a plain input column
@@ -598,40 +509,9 @@ object Streaming {
       .withColumn("win", window(col(tsCol), windowDuration))
       .withColumn("_x", (unix_micros(col(tsCol)) - unix_micros(col("win.start")))
         .cast("double") / lit(1000000.0))
-    val x = col("_x")
-    val agg = pre.groupBy(col("win"), col(keyCol)).agg(
-      count(lit(1)).cast("long").as("n"),
-      sum(x).as("sx"), sum(y).as("sy"),
-      sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
-    val n = col("n").cast("double")
-    val det = n * col("sxx") - col("sx") * col("sx")
-    val dety = n * col("syy") - col("sy") * col("sy")
-    val cov = n * col("sxy") - col("sx") * col("sy")
-    val slope = cov / det
-    agg.select(
-      col("win.start").as("window_start"), col("win.end").as("window_end"),
-      col(keyCol), col("n"),
-      round(when(det > 0, slope), scale).as("slope"),
-      round(when(det > 0, (col("sy") - slope * col("sx")) / n), scale).as("intercept"),
-      round(when(det > 0 && dety > 0, (cov * cov) / (det * dety)), scale).as("r2"))
-  }
-
-  /** Streaming per-key top-k leaderboard: the bounded
-    * [[graft.sql.TopKPairs]] aggregate as streaming state — each key's
-    * state is AT MOST k (score, id) pairs no matter how many events ever
-    * arrive for it, so a "best items per category" monitor runs forever on
-    * bounded memory (the row_number-window formulation isn't even
-    * expressible over an unbounded stream). Run with Complete/Update
-    * output; explode `top` for (rank, score, id) rows. */
-  def topKStream(stream: DataFrame, keyCol: String, scoreCol: String,
-      idCol: String, k: Int): DataFrame = {
-    graft.sql.functions.ensureRegistered(stream.sparkSession)
-    stream
-      .groupBy(org.apache.spark.sql.functions.col(keyCol))
-      .agg(org.apache.spark.sql.functions.call_function("graft_topk",
-        org.apache.spark.sql.functions.col(scoreCol).cast("double"),
-        org.apache.spark.sql.functions.col(idCol).cast("long"),
-        lit(k)).as("top"))
+    Trend.groupTrend(pre, Seq(col("win"), col(keyCol)), col("_x"), col(valueCol), scale)
+      .select(col("win.start").as("window_start"), col("win.end").as("window_end"),
+        col(keyCol), col("n"), col("slope"), col("intercept"), col("r2"))
   }
 
   final case class PackInput(shard: String, order_key: Long, n_tokens: Long)
@@ -694,34 +574,18 @@ object Streaming {
   def writeToStorageStream(
       stream: DataFrame,
       basePath: String,
-      info: graft.storage.AuditTableInfo,
+      info: AuditTableInfo,
       checkpoint: String,
       lastUpdatedCol: Option[String] = None,
-      batchTimestamp: Long => java.sql.Timestamp =
-        _ => new java.sql.Timestamp(System.currentTimeMillis()))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val appendBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
-      // persist: the emptiness probe and the append both execute the batch
-      // plan, and upstream streaming transforms can be expensive
-      batch.persist()
-      try {
-        if (!batch.isEmpty) {
-          // re-open the table EVERY epoch: a handle cached across epochs
-          // goes stale the moment a maintenance job compacts the table,
-          // and its next region id would then collide with the compactor's
-          // freshly written region
-          graft.storage.Storage
-            .getOrCreateTable(batch.sparkSession, basePath, info)
-            .append(batch, lastUpdatedCol, batchTimestamp(epochId))
-          ()
-        }
-      } finally { batch.unpersist(); () }
+      batchTimestamp: Long => Timestamp = wallClock): StreamingQuery =
+    eachNonEmptyBatch(stream, checkpoint) { (batch, epochId) =>
+      // re-open the table EVERY epoch: a handle cached across epochs goes
+      // stale the moment a maintenance job compacts the table, and its next
+      // region id would then collide with the compactor's freshly written
+      // region
+      Storage.getOrCreateTable(batch.sparkSession, basePath, info)
+        .append(batch, lastUpdatedCol, batchTimestamp(epochId))
     }
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(appendBatch)
-      .start()
-  }
 
   /** The daily-crawl loop as a stream: every micro-batch of documents is
     * deduped against EVERYTHING INDEXED BEFORE IT (near-dup pairs handed to
@@ -747,32 +611,18 @@ object Streaming {
       docs: DataFrame, idCol: String, textCol: String,
       basePath: String, checkpoint: String,
       onPairs: (DataFrame, Long) => Unit,
-      tableName: String = graft.operators.DedupIndex.DefaultTableName,
+      tableName: String = DedupIndex.DefaultTableName,
       bands: Int = 8, rowsPerBand: Int = 8, shingleWords: Int = 3,
       threshold: Double = 0.5,
-      batchTimestamp: Long => java.sql.Timestamp =
-        _ => new java.sql.Timestamp(System.currentTimeMillis()))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.DedupIndex
-    val dedupBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
-      batch.persist()
-      try {
-        if (!batch.isEmpty) {
-          val table = DedupIndex.openOrCreate(batch.sparkSession, basePath, tableName)
-          val ts = batchTimestamp(epochId)
-          onPairs(DedupIndex.dedupAgainst(table, ts, batch, idCol, textCol,
-            bands, rowsPerBand, shingleWords, threshold), epochId)
-          DedupIndex.indexBatch(table, batch, idCol, textCol, ts,
-            bands, rowsPerBand, shingleWords)
-          ()
-        }
-      } finally { batch.unpersist(); () }
+      batchTimestamp: Long => Timestamp = wallClock): StreamingQuery =
+    eachNonEmptyBatch(docs, checkpoint) { (batch, epochId) =>
+      val table = DedupIndex.openOrCreate(batch.sparkSession, basePath, tableName)
+      val ts = batchTimestamp(epochId)
+      onPairs(DedupIndex.dedupAgainst(table, ts, batch, idCol, textCol,
+        bands, rowsPerBand, shingleWords, threshold), epochId)
+      DedupIndex.indexBatch(table, batch, idCol, textCol, ts,
+        bands, rowsPerBand, shingleWords)
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(dedupBatch)
-      .start()
-  }
 
   /** Streamed ANN-index maintenance — the ingest half of the persisted
     * IVF-PQ loop ([[graft.operators.AnnIndex]]) as a stream: each
@@ -786,23 +636,11 @@ object Streaming {
   def annIndexStream(
       vectors: DataFrame, basePath: String, checkpoint: String,
       idCol: String, vecCol: String,
-      batchTimestamp: Long => Timestamp =
-        _ => new Timestamp(System.currentTimeMillis()))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ingestBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
-      batch.persist()
-      try {
-        if (!batch.isEmpty) {
-          graft.operators.AnnIndex.appendVectorsPq(batch.sparkSession,
-            basePath, batch, idCol, vecCol, batchTimestamp(epochId))
-        }
-      } finally { batch.unpersist(); () }
+      batchTimestamp: Long => Timestamp = wallClock): StreamingQuery =
+    eachNonEmptyBatch(vectors, checkpoint) { (batch, epochId) =>
+      AnnIndex.appendVectorsPq(batch.sparkSession,
+        basePath, batch, idCol, vecCol, batchTimestamp(epochId))
     }
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(ingestBatch)
-      .start()
-  }
 
   /** Streamed as-of enrichment against a PERSISTED dimension — the
     * operational twin of the native batch as-of join ([[graft.plans.AsOf]])
@@ -827,42 +665,37 @@ object Streaming {
       pointKeys: Seq[String], dimKeys: Seq[String],
       pointTsCol: String, dimTsCol: String,
       direction: String = "backward", tolerance: Option[Long] = None,
-      batchTimestamp: Long => Timestamp =
-        _ => new Timestamp(System.currentTimeMillis()))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val enrichBatch: (DataFrame, Long) => Unit = { (batch, epochId) =>
+      batchTimestamp: Long => Timestamp = wallClock): StreamingQuery =
+    eachNonEmptyBatch(stream, checkpoint) { (batch, epochId) =>
+      val asOfTs = batchTimestamp(epochId)
+      val snap = Storage.openTable(batch.sparkSession, basePath, tableName)
+        .getOrElse(throw new IllegalStateException(
+          s"no audit table '$tableName' under $basePath — ingest the " +
+            "dimension before starting the enrichment stream"))
+        .snapshot(asOfTs)
+        .getOrElse(throw new IllegalStateException(
+          s"audit table '$tableName' has no data at $asOfTs"))
+      onBatch(graft.plans.AsOf.asOfJoin(batch, snap, pointKeys, dimKeys,
+        pointTsCol, dimTsCol, direction, tolerance), epochId)
+    }
+
+  private val wallClock: Long => Timestamp =
+    _ => new Timestamp(System.currentTimeMillis())
+
+  /** The one `foreachBatch` sink skeleton: run `act` on every non-empty
+    * micro-batch of `stream`, checkpointed at `checkpoint`. The batch is
+    * persisted around the call because the emptiness probe and `act` both
+    * execute its plan, and upstream streaming transforms can be expensive. */
+  private def eachNonEmptyBatch(stream: DataFrame, checkpoint: String)(
+      act: (DataFrame, Long) => Unit): StreamingQuery = {
+    val sink: (DataFrame, Long) => Unit = { (batch, epochId) =>
       batch.persist()
-      try {
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val asOfTs = batchTimestamp(epochId)
-          val snap = graft.storage.Storage.openTable(spark, basePath, tableName)
-            .getOrElse(throw new IllegalStateException(
-              s"no audit table '$tableName' under $basePath — ingest the " +
-                "dimension before starting the enrichment stream"))
-            .snapshot(asOfTs)
-            .getOrElse(throw new IllegalStateException(
-              s"audit table '$tableName' has no data at $asOfTs"))
-          onBatch(graft.plans.AsOf.asOfJoin(batch, snap, pointKeys, dimKeys,
-            pointTsCol, dimTsCol, direction, tolerance), epochId)
-        }
-      } finally { batch.unpersist(); () }
+      try { if (!batch.isEmpty) act(batch, epochId) }
+      finally batch.unpersist()
     }
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch(enrichBatch)
+      .foreachBatch(sink)
       .start()
   }
-
-  /** Start writing a streaming frame to parquet with checkpointing — the
-    * durable sink shape for production (exactly-once via checkpoint + file
-    * sink). Returns the running query. */
-  def writeParquetStream(df: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
 }

@@ -16,6 +16,21 @@ class CellAssignSpec extends SparkTestBase with Matchers {
 
   import spark.implicits._
 
+  /** Reference nearest-centroid assignment: strict-< argmin, first wins on
+    * ties. */
+  private def cellAssignUdf(cents: Array[Array[Double]]) =
+    udf { (v: Array[Double]) =>
+      var best = 0; var bestD = Double.MaxValue
+      var ci = 0
+      while (ci < cents.length) {
+        val cent = cents(ci); var d = 0.0; var i = 0
+        while (i < v.length) { val x = v(i) - cent(i); d += x * x; i += 1 }
+        if (d < bestD) { bestD = d; best = ci }
+        ci += 1
+      }
+      best
+    }
+
   it("equals the reference UDF on random vectors, ties included") {
     (1 to 20).foreach { seed =>
       val rnd = new Random(seed)
@@ -27,7 +42,7 @@ class CellAssignSpec extends SparkTestBase with Matchers {
       val df = rows.toDF("id", "v")
       val both = df.select(col("id"),
           Similarity.cellAssign(spark, cents)(col("v")).as("native"),
-          Similarity.cellAssignUdf(cents)(col("v")).as("ref"))
+          cellAssignUdf(cents)(col("v")).as("ref"))
         .collect()
       withClue(s"seed=$seed: ") {
         both.count(r => r.getInt(1) != r.getInt(2)) shouldBe 0

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, explode, lit}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.matchers.should.Matchers
 
@@ -51,13 +51,13 @@ class StreamingSpec extends SparkTestBase with Matchers {
       2L -> "junk".getBytes("UTF-8"))
 
     val imgIn = MemoryStream[(Long, Array[Byte])]
-    val imgQuery = Streaming.imageProfileStream(
-        imgIn.toDF().toDF("doc_id", "content"))
+    val imgQuery = Multimodal.imageProfiles(
+        imgIn.toDF().toDF("doc_id", "content"), "doc_id", "content")
       .writeStream.format("memory").queryName("img_profiles")
       .outputMode(OutputMode.Append()).start()
     val audIn = MemoryStream[(Long, Array[Byte])]
-    val audQuery = Streaming.audioProfileStream(
-        audIn.toDF().toDF("doc_id", "content"))
+    val audQuery = Multimodal.audioProfiles(
+        audIn.toDF().toDF("doc_id", "content"), "doc_id", "content")
       .writeStream.format("memory").queryName("aud_profiles")
       .outputMode(OutputMode.Append()).start()
     try {
@@ -188,11 +188,31 @@ class StreamingSpec extends SparkTestBase with Matchers {
     } finally query.stop()
   }
 
-  it("streaming count-min sketch equals the batch sketch over the same items") {
+  it("streaming decontamination rejects n <= 0 like the batch operator") {
+    // at n <= 0 every gram window is empty, so every document with a token
+    // would hash the empty gram and read as contaminated
     implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+    val bench = Seq((100L, "the quick brown fox runs")).toDF("bid", "btext")
+    val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    for (n <- Seq(0, -1)) {
+      an[IllegalArgumentException] should be thrownBy
+        Streaming.decontaminateStream(docs, "text", bench, "btext", n = n)
+      an[IllegalArgumentException] should be thrownBy
+        graft.operators.Dedup.decontaminate(
+          Seq((0L, "a b c")).toDF("doc_id", "text"), "doc_id", "text", bench, "btext", n = n)
+    }
+  }
+
+  it("streaming count-min sketch equals the batch sketch over the same items") {
+    // a fresh session has none of the graft_* functions registered: the
+    // batch operator must install what it calls on the stream's session
+    val fresh = spark.newSession()
+    fresh.sessionState.functionRegistry.listFunction().map(_.funcName) should
+      not contain "graft_cm_buckets"
+    implicit val sqlCtx = fresh.sqlContext
+    import fresh.implicits._
     val input = MemoryStream[String]
-    val query = Streaming.countMinStream(input.toDF().toDF("item"), "item",
+    val query = graft.operators.Sketches.countMinSketch(input.toDF().toDF("item"), "item",
         depth = 3, width = 8)
       .writeStream.format("memory").queryName("cm_out")
       .outputMode(OutputMode.Complete()).start()
@@ -201,7 +221,7 @@ class StreamingSpec extends SparkTestBase with Matchers {
       query.processAllAvailable()
       input.addData("c", "a", "b") // second micro-batch folds into the state
       query.processAllAvailable()
-      val streamed = spark.table("cm_out")
+      val streamed = fresh.table("cm_out")
         .as[(Int, Long, Long)].collect().toSeq.sorted
       val batch = graft.operators.Sketches.countMinSketch(
         Seq("a", "b", "a", "c", "a", "b").toDF("item"), "item",
@@ -210,7 +230,7 @@ class StreamingSpec extends SparkTestBase with Matchers {
       streamed shouldBe batch
       // and estimates from the streamed sketch honour the one-sided bound
       val est = graft.operators.Sketches.countMinEstimate(
-        Seq("a", "b", "c").toDF("item"), "item", spark.table("cm_out"),
+        Seq("a", "b", "c").toDF("item"), "item", fresh.table("cm_out"),
         depth = 3, width = 8)
         .as[(String, Long)].collect().toMap
       est("a") should be >= 3L
@@ -223,8 +243,8 @@ class StreamingSpec extends SparkTestBase with Matchers {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(String, Long)]
-    val query = Streaming.kmvDistinctStream(
-        input.toDF().toDF("g", "v"), Seq("g"), "v", k = 8)
+    val query = graft.operators.Sketches.kmvSketch(
+        input.toDF().toDF("g", "v"), Seq($"g"), $"v", k = 8)
       .writeStream.format("memory").queryName("kmv_out")
       .outputMode(OutputMode.Complete()).start()
     try {
@@ -331,8 +351,8 @@ class StreamingSpec extends SparkTestBase with Matchers {
     val events = (0 until 300).map(i =>
       (s"cat${i % 3}", (i * 53 % 211).toDouble, i.toLong))
     val input = MemoryStream[(String, Double, Long)]
-    val query = Streaming.topKStream(
-        input.toDF().toDF("key", "score", "id"), "key", "score", "id", k = 4)
+    val query = graft.operators.Ranking.topKPerKey(
+        input.toDF().toDF("key", "score", "id"), Seq($"key"), $"score", $"id", 4)
       .writeStream.format("memory").queryName("topk_out")
       .outputMode(OutputMode.Complete()).start()
     try {
@@ -341,8 +361,7 @@ class StreamingSpec extends SparkTestBase with Matchers {
       input.addData(events.drop(100): _*) // state stays <= k pairs per key
       query.processAllAvailable()
       val streamed = spark.table("topk_out")
-        .select($"key", explode($"top").as("r"))
-        .select($"key", $"r.score", $"r.id")
+        .select($"key", $"score", $"id")
         .as[(String, Double, Long)].collect().toSeq.sorted
       val batch = graft.operators.Ranking.topKPerKey(
         events.toDF("key", "score", "id"), Seq($"key"), $"score", $"id", 4)
@@ -376,6 +395,40 @@ class StreamingSpec extends SparkTestBase with Matchers {
     snap shouldBe Array((1L, "c"), (2L, "b")) // batch-2 state wins for user 1
     // two appended regions — one per non-empty micro-batch
     table.regions.length shouldBe 2
+  }
+
+  it("foreachBatch sinks skip empty micro-batches: no table, no region, no onBatch call") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.storage._
+    val base = s"$tmpDir/empty_batches"
+    val input = MemoryStream[(Long, Timestamp)]
+    // every micro-batch runs, and every one is empty
+    val empty = input.toDF().toDF("user_id", "t").where(lit(false))
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val checkpoints = Seq(s"$tmpDir/empty_storage_ckpt", s"$tmpDir/empty_asof_ckpt")
+    val queries = Seq(
+      Streaming.writeToStorageStream(empty, base,
+        AuditTableInfo("empty_state", Seq("user_id"), Map.empty, retainHistory = true),
+        checkpoint = checkpoints(0)),
+      // no "quotes" table exists, so a non-empty batch would fail the query
+      Streaming.asOfEnrichStream(empty, base, "quotes", checkpoints(1),
+        onBatch = (_, _) => calls.incrementAndGet(),
+        pointKeys = Seq("user_id"), dimKeys = Seq("q_user"),
+        pointTsCol = "t", dimTsCol = "q_ts"))
+    try {
+      input.addData((1L, ts("2024-01-01 10:00:00")))
+      queries.foreach(_.processAllAvailable())
+      input.addData((2L, ts("2024-01-01 11:00:00")))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    // both epochs ran and committed in each query
+    checkpoints.foreach { cp =>
+      new java.io.File(s"$cp/commits").list().filter(_.forall(_.isDigit))
+        .toSet shouldBe Set("0", "1")
+    }
+    calls.get shouldBe 0
+    new java.io.File(base).exists shouldBe false
+    Storage.openTable(spark, base, "empty_state") shouldBe None
   }
 
   it("as-of enrichment stream equals the batch as-of against each epoch's snapshot") {
@@ -1059,7 +1112,7 @@ class StreamingSpec extends SparkTestBase with Matchers {
     val rates = Sampling.mixtureRates(profile, "lang", weights, maxEpochs = 4)
       .localCheckpoint(true) // the frozen recipe
     val input = MemoryStream[(Long, String)]
-    val query = Streaming.mixtureUpsampleStream(
+    val query = Sampling.applyMixtureRates(
         input.toDF().toDF("doc_id", "lang"), rates, "lang", col("doc_id"))
       .writeStream.format("memory").queryName("mix_upsample")
       .outputMode(OutputMode.Append()).start()
